@@ -101,6 +101,19 @@ def test_dml_insert_update_delete(engine, spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == [1, 2, 4]
 
 
+def test_delete_keeps_rows_whose_predicate_is_null(engine):
+    """PG deletes only rows whose WHERE is true; a NULL predicate keeps
+    the row."""
+    engine.sql(
+        "CREATE TABLE del_null AS SELECT * FROM VALUES "
+        "(1, 10), (2, CAST(NULL AS INT)), (3, 1) AS t(id, x)"
+    )
+    n = engine.sql("DELETE FROM del_null WHERE x > 5").collect()[0].rows_affected
+    assert n == 1
+    ids = sorted(r.id for r in engine.sql("SELECT id FROM del_null").collect())
+    assert ids == [2, 3]
+
+
 def test_dml_merge_upsert(engine, spark, tmp_path):
     """MERGE = PG INSERT ... ON CONFLICT DO UPDATE (nodeModifyTable.c
     speculative insert) as a copy-on-write full-outer-join rewrite."""
@@ -534,6 +547,37 @@ def test_copy_to_from(engine, spark, tmp_path):
     ).collect()[0].rows_affected
     assert n == 2  # id=1 now appears twice after the re-load
     assert spark.read.parquet(q_dir).columns == ["id", "v"]
+
+
+def test_copy_csv_defaults_to_comma(engine, spark, tmp_path):
+    """COPY ... (FORMAT csv) defaults to a comma delimiter; text format
+    keeps the tab (commands/copy.c ProcessCopyOptions)."""
+    path = str(tmp_path / "copy_csv_t")
+    spark.createDataFrame([(1, "a")], "id int, s string").write.parquet(path)
+    engine.attach_parquet("copy_csv_t", path)
+
+    src = tmp_path / "in.csv"
+    src.write_text("2,b\n3,c\n")
+    engine.sql(f"COPY copy_csv_t FROM '{src}' WITH (FORMAT csv)").collect()
+    rows = engine.sql("SELECT id, s FROM copy_csv_t ORDER BY id").collect()
+    assert [(r.id, r.s) for r in rows] == [(1, "a"), (2, "b"), (3, "c")]
+
+    for fmt, sep in (("(FORMAT csv)", ","), ("", "\t")):
+        out_dir = tmp_path / f"out{len(fmt)}"
+        engine.sql(
+            f"COPY (SELECT id, s FROM copy_csv_t WHERE id = 1) TO '{out_dir}' {fmt}"
+        ).collect()
+        text = "".join(f.read_text() for f in out_dir.glob("part-*"))
+        assert text == f"1{sep}a\n"
+
+
+def test_command_tag_is_a_local_scan(engine):
+    """Driver-side result rows are an Arrow-backed LocalTableScan, not
+    a scan of a Python RDD."""
+    df = engine._tag(3)
+    plan = df._jdf.queryExecution().toString()
+    assert "ExistingRDD" not in plan and "LocalTableScan" in plan
+    assert df.collect()[0].rows_affected == 3
 
 
 def test_cluster_zorder_locality(engine, spark, tmp_path):

@@ -13,10 +13,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from warehouse_pg_spark.catalog import read_parquet_table
 from warehouse_pg_spark.queries.registry import table
 from warehouse_pg_spark.sources.partitioned import (
     range_partition_expr,
-    read_partitioned,
     write_partitioned,
 )
 
@@ -50,7 +50,7 @@ def test_range_partition_expr_numeric(spark):
 
 
 def test_static_partition_pruning(spark, sf_dir, orders_by_year):
-    df = read_partitioned(spark, orders_by_year).filter(F.col("o_year") == 1)
+    df = read_parquet_table(spark, orders_by_year).filter(F.col("o_year") == 1)
     plan = _plan(df)
     assert "PartitionFilters" in plan
     assert "o_year" in plan.split("PartitionFilters")[1].split("]")[0]
@@ -61,7 +61,7 @@ def test_static_partition_pruning(spark, sf_dir, orders_by_year):
 
 
 def test_dynamic_partition_pruning(spark, sf_dir, orders_by_year):
-    fact = read_partitioned(spark, orders_by_year)
+    fact = read_parquet_table(spark, orders_by_year)
     dim = spark.createDataFrame(
         [(0, "y95"), (2, "y97")], ["dim_year", "tag"]
     ).filter(F.col("tag") == "y97")
@@ -78,7 +78,7 @@ def test_dynamic_partition_pruning(spark, sf_dir, orders_by_year):
 def test_partition_values_cover_fixture_years(spark, sf_dir, orders_by_year):
     """Every order lands in exactly one partition; partition ids span
     the fixture's 1995-2001 order-date range."""
-    fact = read_partitioned(spark, orders_by_year)
+    fact = read_parquet_table(spark, orders_by_year)
     years = sorted(r.o_year for r in fact.select("o_year").distinct().collect())
     assert years == list(range(0, 7))
     orders = table(spark, sf_dir, "orders")

@@ -24,42 +24,49 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-# Driver-side schema cache: (path, mtime) -> (raw inferred schema,
-# needs nanosAsLong). A bare spark.read.parquet(path) runs a footer-
-# inference JOB on every call (~0.2 s of pure job roundtrip on the
-# bench box — measured r17); passing the schema explicitly skips it.
-# This caches METADATA only, never data or results — a warehouse
-# resolves schemas from its catalog, not by re-reading file footers
-# per query (reference: relcache, not per-query header reads). The
-# mtime in the key invalidates the entry if the file/dir is rewritten.
-_SCHEMA_CACHE: dict[tuple[str, float], tuple[object, bool]] = {}
-
-# Reader-DataFrame cache: (session id, path, mtime) -> analyzed reader
-# DataFrame (post type-normalization). One level up from the schema
-# cache, same relcache argument: even with an explicit schema,
-# spark.read.parquet re-resolves the relation (file-index listing +
-# analysis py4j round-trips, ~35 ms/call measured r18) on EVERY call,
-# and bench queries make ~35 table() calls per run. The cached object
-# is an immutable logical plan — executing it always scans the parquet
-# files; no data or results are ever cached, and a rewrite of the
-# files (new mtime) invalidates the entry.
-_READER_CACHE: dict[tuple[int, str, float], DataFrame] = {}
+# Relation cache (the reference's relcache): table path -> (session,
+# listing signature, footer schema, raw read schema, reader DataFrame),
+# one entry per path. A bare spark.read.parquet(path) re-lists the
+# files, re-analyzes the relation (~35 ms of py4j, measured r18) and
+# runs a footer-inference job. The cached reader is an immutable
+# logical plan: executing it always scans the parquet files, so no data
+# or results are cached. The entry is replaced when its reader belongs
+# to another SparkSession or when one walk of the table's tree gives a
+# different listing signature; a rewrite that keeps the footer schema
+# reuses the raw schema, so the new reader skips the inference job.
+_READER_CACHE: dict[str, tuple] = {}
 
 
-def _path_mtime(path: str) -> float:
-    try:
-        return os.path.getmtime(path)
-    except OSError:
-        return -1.0
+def data_files(path: str) -> list[tuple[str, os.stat_result]]:
+    """(path, stat) of every data file of a table: `path` itself when
+    it is a file, else every file under it that Spark's file index
+    lists — no hidden or `_`-prefixed names, but `k=v` partition
+    directories (`__part=1/`) are walked."""
+    if os.path.isfile(path):
+        return [(path, os.stat(path))]
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(
+            d for d in dirs
+            if not d.startswith(".") and (not d.startswith("_") or "=" in d)
+        )
+        for f in sorted(files):
+            if not f.startswith((".", "_")):
+                p = os.path.join(root, f)
+                out.append((p, os.stat(p)))
+    return out
 
 
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with physical-type normalization.
+    """The one read path for engine tables: spark.read.parquet behind
+    the relation cache, with physical-type normalization.
 
-    Parquet TIMESTAMP(NANOS) columns (fixture events.ts) are illegal to
-    Spark's reader — read them as long nanos and rebuild microsecond
+    Parquet TIMESTAMP(NANOS) columns are illegal to Spark's reader. The
+    footer of a data file decides which columns are nanosecond
+    timestamps; they are read as long nanos and rebuilt as microsecond
     timestamps (integer `div`: double division loses precision on
-    1.7e18-scale nanosecond epochs).
+    1.7e18-scale nanosecond epochs). A BIGINT column stays a BIGINT,
+    whatever its name.
 
     PG timestamps are tz-naive (reference:
     src/backend/utils/adt/timestamp.c); the engine's policy is that all
@@ -69,43 +76,43 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     the session TZ pinned to UTC the NTZ→LTZ cast is value-preserving,
     so normalize every timestamp_ntz column here, at the one read
     boundary every query goes through."""
-    rkey = (id(spark), path, _path_mtime(path))
-    cached = _READER_CACHE.get(rkey)
-    if cached is not None:
-        return cached
-    key = (path, _path_mtime(path))
-    hit = _SCHEMA_CACHE.get(key)
-    if hit is not None:
-        schema, needs_nanos = hit
-        if needs_nanos:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(schema).parquet(path)
+    files = data_files(path)
+    sig = (
+        max((st.st_mtime_ns for _, st in files), default=0),
+        len(files),
+        sum(st.st_size for _, st in files),
+    )
+    entry = _READER_CACHE.get(path)
+    if entry is not None and entry[0] is not spark:
+        entry = None
+    if entry is not None and entry[1] == sig:
+        return entry[4]
+    # imported here: Spark's Python workers import this module too
+    import pyarrow.parquet as pq
+
+    footer = pq.read_metadata(files[0][0]).schema if files else None
+    nanos = [
+        c.path for c in footer or ()
+        if "." not in c.path and "timeUnit=nanoseconds" in str(c.logical_type)
+    ]
+    if nanos:
+        # Spark also reads this conf when the scan runs: leave it set
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if entry is not None and footer is not None and footer.equals(entry[2]):
+        raw = spark.read.schema(entry[3]).parquet(path)
     else:
-        needs_nanos = False
-        try:
-            df = spark.read.parquet(path)
-            _ = df.schema
-        except Exception:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            needs_nanos = True
-            df = spark.read.parquet(path)
-        # a bigint 'ts' means the nanos legacy conf was (or already
-        # is) in force for this table — a cache-hit read in a fresh
-        # session must re-establish it before the footer is parsed
-        if dict(df.dtypes).get("ts") == "bigint":
-            needs_nanos = True
-        _SCHEMA_CACHE[key] = (df.schema, needs_nanos)
-    # Re-read under nanosAsLong leaves ns columns as bigint; detect the
-    # known shape (events.ts) generically: any *ts* bigint col whose
-    # values are ns-scale would be wrong to guess — only rebuild 'ts'.
-    if "ts" in df.columns and dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        raw = spark.read.parquet(path)
+    df = raw
+    if nanos:
+        df = df.withColumns(
+            {c: F.timestamp_micros(F.expr(f"`{c}` div 1000")) for c in nanos}
+        )
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if ntz_cols:
         df = df.withColumns(
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
         )
-    _READER_CACHE[rkey] = df
+    _READER_CACHE[path] = (spark, sig, footer, raw.schema, df)
     return df
 
 # The driver's fixture tables (TESTDATA.md).
@@ -226,17 +233,3 @@ class Catalog:
             name=name, path="", distribution=("hash", tuple(keys))
         )
         return self.spark.table(name)
-
-    def is_broadcastable(self, name: str) -> bool:
-        info = self.tables.get(name)
-        return bool(info and info.distribution[0] == "replicated")
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience: load all fixture tables as DataFrames keyed by name."""
-    out = {}
-    for name in FIXTURE_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            out[name] = read_parquet_table(spark, path)
-    return out

@@ -20,10 +20,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from warehouse_pg_spark import sql_dialect
-from warehouse_pg_spark.catalog import Catalog
+from warehouse_pg_spark.catalog import Catalog, data_files, read_parquet_table
 from warehouse_pg_spark.functions.pg import register_pg_functions
 from warehouse_pg_spark.operators.dml import ParquetTable
-from warehouse_pg_spark.session import SessionConfig, get_spark
+from warehouse_pg_spark.session import SessionConfig, get_spark, local_frame
 
 _DISTRIBUTED_BY_RE = re.compile(
     r"\s+DISTRIBUTED\s+BY\s*\(([^)]*)\)|\s+DISTRIBUTED\s+(RANDOMLY|REPLICATED)",
@@ -642,8 +642,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             f"Actual Rows: {n_rows}",
             f"Execution Time: {elapsed_ms:.3f} ms",
         ]
-        return self.spark.createDataFrame(
-            [(ln,) for ln in lines], "`QUERY PLAN` string"
+        return local_frame(
+            self.spark, [(ln,) for ln in lines], "`QUERY PLAN` string"
         )
 
     # --------------------------------------------------- CREATE FUNCTION
@@ -1485,8 +1485,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         ) and not m.group(1).lower().startswith("spark."):
             key = re.sub(r"\s+", " ", m.group(1).lower())
             if key == "all":
-                return self.spark.createDataFrame(
-                    sorted(self._gucs.items()), "name STRING, setting STRING"
+                return local_frame(
+                    self.spark, sorted(self._gucs.items()),
+                    "name STRING, setting STRING",
                 )
             if key in ("timezone", "time zone"):
                 val = self.spark.conf.get("spark.sql.session.timeZone")
@@ -1495,7 +1496,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 val = self._gucs.get(key)
                 if val is None:
                     raise KeyError(f'unrecognized configuration parameter "{key}"')
-            return self.spark.createDataFrame([(val,)], f"{key} STRING")
+            return local_frame(self.spark, [(val,)], f"{key} STRING")
         return None
 
     @staticmethod
@@ -1587,8 +1588,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             ("public", name, "spark", None, False, False, False)
             for name in sorted(self.catalog.tables)
         ]
-        self.spark.createDataFrame(
-            trows,
+        local_frame(
+            self.spark, trows,
             "schemaname string, tablename string, tableowner string, "
             "tablespace string, hasindexes boolean, hasrules boolean, "
             "hastriggers boolean",
@@ -1611,8 +1612,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                         "YES" if f.nullable else "NO",
                     )
                 )
-        self.spark.createDataFrame(
-            crows,
+        local_frame(
+            self.spark, crows,
             "table_catalog string, table_schema string, table_name string, "
             "column_name string, ordinal_position int, data_type string, "
             "is_nullable string",
@@ -1743,8 +1744,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         self.catalog.register_parquet(
             name, path, partition_cols=("__part",)
         )
-        n = self.spark.read.parquet(path).count()
-        return self._tag(n)
+        return self._tag(self.catalog.load(name).count())
 
     # ----------------------------------------------------------- SQL DML
     def _maybe_dml(self, text: str) -> DataFrame | None:
@@ -1963,10 +1963,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             name, select = m.group(1).split(".")[-1], m.group(2)
             df = self.spark.sql(select)
             self.create_table_from(name, df)
-            n = self.spark.read.parquet(
-                os.path.join(self.warehouse_dir, name)
-            ).count()
-            return self._tag(n)
+            return self._tag(self.catalog.load(name).count())
 
         if re.match(r"^MERGE\s+INTO\b", s, re.IGNORECASE):
             out = self._merge_stmt(s)
@@ -2151,8 +2148,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
     def _copy_options(opts: str | None) -> dict[str, str]:
         """Parse `(FORMAT CSV, HEADER true, DELIMITER '|')`-style COPY
         options (commands/copy.c ProcessCopyOptions). Defaults mirror
-        PG text format: tab delimiter, no header."""
-        out = {"format": "csv", "header": "false", "sep": "\t"}
+        PG: text format, no header, and a tab delimiter in text format
+        but a comma in csv format."""
+        out = {"format": "text", "header": "false"}
         for item in _split_exprs(opts or ""):
             kv = item.strip().split(None, 1)
             key = kv[0].lower()
@@ -2163,6 +2161,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 out["header"] = "true" if val.lower() in ("true", "on", "") else "false"
             elif key == "delimiter":
                 out["sep"] = val
+        out.setdefault("sep", "," if out["format"] == "csv" else "\t")
         return out
 
     def _copy_to(
@@ -2560,7 +2559,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         t.read().createOrReplaceTempView(name)
 
     def _tag(self, n: int) -> DataFrame:
-        return self.spark.createDataFrame([(n,)], "rows_affected BIGINT")
+        return local_frame(self.spark, [(n,)], "rows_affected BIGINT")
 
     # ------------------------------------------------------------- catalog
     def attach_fixtures(self, sf_dir: str) -> None:
@@ -2657,7 +2656,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         df = self.sql(sql)
         df.write.mode("overwrite").parquet(path)
         self._matviews[name] = MaterializedView(name, sql, path)
-        self.spark.read.parquet(path).createOrReplaceTempView(name)
+        read_parquet_table(self.spark, path).createOrReplaceTempView(name)
         return self.spark.table(name)
 
     def refresh_materialized_view(self, name: str) -> DataFrame:
@@ -2683,15 +2682,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                     "spark.sql.warehouse.dir", "spark-warehouse"
                 )
                 path = os.path.join(warehouse.removeprefix("file:"), name)
-            n_bytes, n_files = 0, 0
-            if os.path.isdir(path):
-                for root, _dirs, files in os.walk(path):
-                    for f in files:
-                        if not f.startswith(("_", ".")):
-                            n_files += 1
-                            n_bytes += os.path.getsize(os.path.join(root, f))
-            elif os.path.exists(path):
-                n_files, n_bytes = 1, os.path.getsize(path)
+            files = data_files(path)
+            n_files, n_bytes = len(files), sum(st.st_size for _, st in files)
             try:
                 n_rows = (
                     self.catalog.load(name) if info.path else self.spark.table(name)
@@ -2705,8 +2697,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 continue
             policy, keys = info.distribution
             rows.append((name, n_rows, n_bytes, n_files, policy, list(keys)))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "table_name string, n_rows long, n_bytes long, n_files long, "
             "distribution string, dist_keys array<string>",
         )

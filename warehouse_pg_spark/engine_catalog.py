@@ -31,6 +31,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from warehouse_pg_spark.session import local_frame
+
 # public pg_type.dat oid assignments for the types the engine emits
 _PG_TYPE_OIDS: dict[str, int] = {
     "bool": 16, "bytea": 17, "char": 18, "name": 19, "int8": 20,
@@ -161,8 +163,8 @@ class CatalogViewsMixin:
                     ns_rows.append((_obj_oid("ns", db.name), db.name))
         except Exception:
             pass
-        spark.createDataFrame(
-            sorted(ns_rows), "oid BIGINT, nspname STRING"
+        local_frame(
+            spark, sorted(ns_rows), "oid BIGINT, nspname STRING"
         ).createOrReplaceTempView("pg_namespace")
 
         cls_rows, att_rows = [], []
@@ -187,15 +189,15 @@ class CatalogViewsMixin:
                     oid, name, f.name.lower(), i,
                     _PG_TYPE_OIDS.get(pg_t, 25), pg_t,
                     not f.nullable, False, -1))
-        spark.createDataFrame(
-            cls_rows,
+        local_frame(
+            spark, cls_rows,
             "oid BIGINT, relname STRING, relnamespace BIGINT, "
             "relkind STRING, relpersistence STRING, relfilenode BIGINT, "
             "reltablespace BIGINT, relpages BIGINT, reltuples DOUBLE, "
             "relnatts INT, relhasindex BOOLEAN, relispartition BOOLEAN",
         ).createOrReplaceTempView("pg_class")
-        spark.createDataFrame(
-            att_rows,
+        local_frame(
+            spark, att_rows,
             "attrelid BIGINT, relname STRING, attname STRING, "
             "attnum INT, atttypid BIGINT, atttypname STRING, "
             "attnotnull BOOLEAN, attisdropped BOOLEAN, atttypmod INT",
@@ -214,8 +216,8 @@ class CatalogViewsMixin:
             typ_rows.append((_obj_oid("typ", n), n, 2200, "c", "c"))
         for n in ut.ranges:
             typ_rows.append((_obj_oid("typ", n), n, 2200, "r", "r"))
-        spark.createDataFrame(
-            sorted(typ_rows),
+        local_frame(
+            spark, sorted(typ_rows),
             "oid BIGINT, typname STRING, typnamespace BIGINT, "
             "typtype STRING, typcategory STRING",
         ).createOrReplaceTempView("pg_type")
@@ -230,14 +232,14 @@ class CatalogViewsMixin:
              "a" if n in getattr(self, "_sql_aggregates", {}) else "f")
             for n in sorted(fn_names)
         ]
-        spark.createDataFrame(
-            proc_rows or [(0, "", 0, "f")],
+        local_frame(
+            spark, proc_rows or [(0, "", 0, "f")],
             "oid BIGINT, proname STRING, pronamespace BIGINT, "
             "prokind STRING",
         ).createOrReplaceTempView("pg_proc")
 
         for vname, schema in _EMPTY_CATALOG_VIEWS.items():
-            spark.createDataFrame([], schema).createOrReplaceTempView(
+            local_frame(spark, [], schema).createOrReplaceTempView(
                 vname)
 
         # dbsize.c filenode accessors: this engine has no physical

@@ -1868,10 +1868,10 @@ def _arrow_batched(fn, ret: str, arity: int):
     return pandas_udf(w, ret)
 
 
-def register_pg_functions(spark: SparkSession, force: bool = False) -> list[str]:
+def register_pg_functions(spark: SparkSession) -> list[str]:
     """Register PG-name SQL scalar functions (idempotent per session)."""
     key = id(spark)
-    if key in _REGISTERED_SESSIONS and not force:
+    if key in _REGISTERED_SESSIONS:
         return sorted(_SQL_FUNCTIONS)
     for name, (sig, ret, body) in _SQL_FUNCTIONS.items():
         spark.sql(

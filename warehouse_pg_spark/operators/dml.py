@@ -21,6 +21,8 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from warehouse_pg_spark import catalog
+
 
 class ParquetTable:
     """A writable parquet-backed table with copy-on-write DML."""
@@ -30,7 +32,8 @@ class ParquetTable:
         self.path = path
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        # a module-attribute call, so a tracer wrapping it sees DML reads
+        return catalog.read_parquet_table(self.spark, self.path)
 
     def insert(self, df: DataFrame) -> None:
         """INSERT = append new files (no rewrite)."""
@@ -53,35 +56,25 @@ class ParquetTable:
         One read → repartition(ceil(bytes/target)) → atomic swap."""
         import math
 
-        n_bytes = 0
-        files_before = 0
-        for root, _dirs, files in os.walk(self.path):
-            for f in files:
-                if not f.startswith(("_", ".")):
-                    files_before += 1
-                    n_bytes += os.path.getsize(os.path.join(root, f))
+        before = catalog.data_files(self.path)
+        n_bytes = sum(st.st_size for _, st in before)
         n_out = max(1, math.ceil(n_bytes / target_file_bytes))
         self._swap_in(self.read().repartition(n_out))
-        files_after = sum(
-            1
-            for _root, _dirs, files in os.walk(self.path)
-            for f in files
-            if not f.startswith(("_", "."))
-        )
         return {
-            "files_before": files_before,
-            "files_after": files_after,
+            "files_before": len(before),
+            "files_after": len(catalog.data_files(self.path)),
             "bytes": n_bytes,
         }
 
     def delete(self, where: Column) -> int:
-        """DELETE WHERE → keep non-matching rows. Returns rows deleted."""
+        """DELETE WHERE → keep every row `where` is not true for (a NULL
+        predicate keeps the row, as in PG). Returns rows deleted."""
+        import pyspark.sql.functions as F
+
         df = self.read()
-        total = df.count()
-        kept = df.filter(~where)
-        kept_count = kept.count()
-        self._swap_in(kept)
-        return total - kept_count
+        n_deleted = df.filter(where).count()
+        self._swap_in(df.filter(~F.coalesce(where, F.lit(False))))
+        return n_deleted
 
     def update(self, assignments: dict[str, Column], where: Column) -> int:
         """UPDATE SET col=expr WHERE → rewrite matching rows in place.

@@ -164,8 +164,6 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (TIMESTAMP(NANOS) → µs; see catalog.read_parquet_table)."""
     from warehouse_pg_spark.catalog import read_parquet_table
 
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
 
 

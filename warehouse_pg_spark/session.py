@@ -20,7 +20,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _default_parallelism() -> int:
@@ -105,3 +105,21 @@ def get_spark(config: SessionConfig | None = None) -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A driver-side result (command tag, SHOW, catalog view) as a
+    LocalTableScan over an Arrow table with the DDL schema.
+    createDataFrame(list) would scan a Python RDD instead, whose collect
+    costs a Spark job and Python-worker start-up."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

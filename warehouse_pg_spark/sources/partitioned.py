@@ -23,7 +23,7 @@ buckets a range.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -62,7 +62,3 @@ def write_partitioned(
     otherwise `partition_col` must already exist."""
     out = df.withColumn(partition_col, expr) if expr is not None else df
     out.write.mode(mode).partitionBy(partition_col).parquet(path)
-
-
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
