@@ -23,11 +23,6 @@ def spark():
             extra={"spark.sql.shuffle.partitions": "8"},
         )
     )
-    # dialect rewrite output may reference the pg_* shim UDFs (engine.sql
-    # registers them on every call; mirror that for bare-session tests)
-    from warehouse_pg_spark.functions.pg import register_pg_functions
-
-    register_pg_functions(spark)
     yield spark
 
 

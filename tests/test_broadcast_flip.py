@@ -54,6 +54,16 @@ def test_flip_replans_to_shuffle_join_with_same_results(
     compare(q.fn(spark, sf_dir), q.oracle, sf_dir, name=f"{name}[no-bcast]")
 
 
+def test_q3_obeys_disabled_broadcast_threshold(spark, sf_dir, no_broadcast):
+    """With autoBroadcastJoinThreshold = -1, q3's own broadcast of the
+    orders⋈customer side is skipped too, at any input size."""
+    name = "tpch_q3_shipping_priority"
+    plan = plan_of(spark, sf_dir, name)
+    assert "Broadcast" not in plan, plan
+    q = REGISTRY[name]
+    compare(q.fn(spark, sf_dir), q.oracle, sf_dir, name=f"{name}[threshold=-1]")
+
+
 def test_default_plan_still_broadcasts_small_dims(spark, sf_dir):
     """Sanity inverse: with the default threshold the same joins DO
     broadcast at test SF — proving the flip test actually flipped."""

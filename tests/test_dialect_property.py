@@ -11,6 +11,15 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from warehouse_pg_spark import sql_dialect
+from warehouse_pg_spark.functions.pg import bind_functions
+
+
+def _sql(spark, lowered: str):
+    """spark.sql over dialect output on the bare session, with the PG
+    functions it calls bound first, as Engine.sql binds them."""
+    bind_functions(spark, lowered)
+    return spark.sql(lowered)
+
 
 _IDENT = st.from_regex(r"[a-z][a-z0-9_]{0,10}", fullmatch=True)
 _PG_TYPES = st.sampled_from(
@@ -186,18 +195,18 @@ def test_jsonpath_predicates_execute(spark):
         [('{"k": 3, "tags": ["a", "b"]}',), ('{"k": 99}',), ("{}",)],
         ["j"],
     ).createOrReplaceTempView("jp_t")
-    got = spark.sql(
+    got = _sql(spark,
         rewrite("SELECT count(*) AS n FROM jp_t WHERE j @? '$.k ? (@ > 50)'")
     ).collect()[0].n
     assert got == 1
-    got = spark.sql(
+    got = _sql(spark,
         rewrite(
             "SELECT count(*) AS n FROM jp_t "
             "WHERE j @? '$.tags[*] ? (@ == \"b\")'"
         )
     ).collect()[0].n
     assert got == 1
-    got = spark.sql(
+    got = _sql(spark,
         rewrite("SELECT count(*) AS n FROM jp_t WHERE j @@ '$.k <= 3'")
     ).collect()[0].n
     assert got == 1
@@ -226,7 +235,7 @@ def test_is_distinct_from_and_similar_to_lowering():
 def test_is_distinct_from_executes(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
-    rows = spark.sql(
+    rows = _sql(spark,
         rewrite(
             "SELECT x IS DISTINCT FROM y AS d, x IS NOT DISTINCT FROM y AS nd "
             "FROM VALUES (1, 1), (1, NULL), (CAST(NULL AS INT), NULL) t(x, y)"
@@ -247,7 +256,7 @@ def test_overlaps_rewrite():
     from warehouse_pg_spark.session import SessionConfig, get_spark
 
     spark = get_spark(SessionConfig())
-    r = spark.sql(
+    r = _sql(spark,
         rewrite(
             "SELECT (DATE '2020-01-10', DATE '2020-01-01') "
             "OVERLAPS (DATE '2020-01-05', DATE '2020-01-20') AS o"
@@ -293,14 +302,14 @@ def test_with_ties_and_row_compare(spark):
     # no longer Spark struct comparison (which orders NULLs)
     assert "((a) > (1)) OR (((a) = (1)) AND ((b) > (2)))" in out
     # executes: ties survive, keyset resumes
-    rows = spark.sql(
+    rows = _sql(spark,
         rewrite(
             "SELECT x FROM VALUES (1),(2),(2),(3) t(x) "
             "ORDER BY x FETCH FIRST 2 ROWS WITH TIES"
         )
     ).collect()
     assert sorted(r.x for r in rows) == [1, 2, 2]
-    rows = spark.sql(
+    rows = _sql(spark,
         rewrite(
             "SELECT a, b FROM VALUES (1,1),(1,2),(2,1) t(a, b) "
             "WHERE (a, b) > (1, 1) ORDER BY a, b"
@@ -321,7 +330,7 @@ def test_tablesample_and_escape_strings(spark):
     # E'' prefix drops; Spark's non-ANSI literal keeps the escapes
     out = rewrite(r"SELECT E'a\nb' AS s, E'it''s' AS t")
     assert "E'" not in out
-    row = spark.sql(out).collect()[0]
+    row = _sql(spark, out).collect()[0]
     assert row.s == "a\nb" and row.t == "it's"
     # a column named E... must not lose its E
     assert "Extra" in rewrite("SELECT Extra FROM t")
@@ -333,7 +342,7 @@ def test_overlaps_point_intervals(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].o
+        return _sql(spark, rewrite(q)).collect()[0].o
 
     # point vs containing interval
     assert run(
@@ -371,7 +380,7 @@ def test_overlaps_null_endpoints(spark):
     def run(a, b, c, e):
         g = lambda x: d.get(x, "NULL")
         q = (f"SELECT ({g(a)}, {g(b)}) OVERLAPS ({g(c)}, {g(e)}) AS o")
-        return spark.sql(rewrite(q)).collect()[0].o
+        return _sql(spark, rewrite(q)).collect()[0].o
 
     cases = [
         ((None, None, 1, 10), None),   # both endpoints NULL
@@ -398,7 +407,7 @@ def test_similar_to_escapes_execute(spark):
 
     def match(s, pat):
         q = f"SELECT '{s}' SIMILAR TO '{pat}' AS o"
-        return spark.sql(rewrite(q)).collect()[0].o
+        return _sql(spark, rewrite(q)).collect()[0].o
 
     assert match("a7b", r"a\db") is True          # \d = digit class
     assert match("adb", r"a\db") is False
@@ -415,7 +424,7 @@ def test_scalar_array_any_all(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT 2 = ANY(ARRAY[1,2,3]) AS v") is True
     assert run("SELECT 9 = ANY(ARRAY[1,2,3]) AS v") is False
@@ -442,7 +451,7 @@ def test_extract_dow_isodow_pg_numbering(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     # 2026-08-14 is a Friday; 2026-08-16 a Sunday
     assert run("SELECT extract(dow FROM DATE '2026-08-14') AS v") == 5
@@ -458,7 +467,7 @@ def test_between_symmetric_collate_like_any(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT 5 BETWEEN SYMMETRIC 10 AND 1 AS v") is True
     assert run("SELECT 0 BETWEEN SYMMETRIC 10 AND 1 AS v") is False
@@ -489,7 +498,7 @@ def test_dollar_quotes_and_wide_extract(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT $$it's fine$$ AS v") == "it's fine"
     assert run("SELECT $q$has $$ inside$q$ AS v") == "has $$ inside"
@@ -511,17 +520,17 @@ def test_srf_with_ordinality_and_rows_from(spark):
     collapses to a plain function scan."""
     from warehouse_pg_spark.sql_dialect import rewrite
 
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT x.v, x.ord FROM unnest(ARRAY['a','b']) "
         "WITH ORDINALITY AS x(v, ord) ORDER BY ord"
     )).collect()
     assert [(r.v, r.ord) for r in rows] == [("a", 1), ("b", 2)]
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT t.g, t.o FROM generate_series(5, 7) "
         "WITH ORDINALITY AS t(g, o) ORDER BY o"
     )).collect()
     assert [(r.g, r.o) for r in rows] == [(5, 1), (6, 2), (7, 3)]
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT a.n FROM ROWS FROM (generate_series(1,2)) AS a(n) ORDER BY n"
     )).collect()
     assert [r.n for r in rows] == [1, 2]
@@ -534,7 +543,7 @@ def test_pg_math_operators(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT 2 ^ 3 AS v") == 8.0
     assert run("SELECT 2 ^ 2 ^ 3 AS v") == 64.0  # (2^2)^3, PG left-assoc
@@ -562,7 +571,7 @@ def test_substring_regex_form(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT substring('hello' FROM 'l+') AS v") == "ll"
     assert run("SELECT substring('a12b' FROM '([0-9]+)') AS v") == "12"
@@ -610,16 +619,16 @@ def test_lock_clause_and_only_strip(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     spark.range(5).createOrReplaceTempView("lk_t")
-    assert spark.sql(rewrite(
+    assert _sql(spark, rewrite(
         "SELECT * FROM lk_t WHERE id = 1 FOR UPDATE"
     )).count() == 1
-    assert spark.sql(rewrite(
+    assert _sql(spark, rewrite(
         "SELECT * FROM lk_t FOR NO KEY UPDATE SKIP LOCKED"
     )).count() == 5
-    assert spark.sql(rewrite(
+    assert _sql(spark, rewrite(
         "SELECT * FROM lk_t FOR SHARE OF lk_t NOWAIT"
     )).count() == 5
-    assert spark.sql(rewrite(
+    assert _sql(spark, rewrite(
         "SELECT id FROM ONLY lk_t WHERE id < 2"
     )).count() == 2
     # FOR inside window frames / loops must not strip
@@ -635,7 +644,7 @@ def test_pg_misc_function_spellings(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT ROW(1,2) < ROW(1,3) AS v") is True
     assert run("SELECT ROW(2,0) <= ROW(1,9) AS v") is False
@@ -663,7 +672,7 @@ def test_pg_misc_function_spellings(spark):
     ) == "2026-01-01 17:00:00"
     assert run("SELECT ||/ -27.0 AS v") == -3.0
     # SRF form: one row per 1-based subscript
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT generate_subscripts(ARRAY[10,20], 1) AS i"
     )).collect()
     assert [r.i for r in rows] == [1, 2]
@@ -678,16 +687,16 @@ def test_array_select_subquery_ctor(spark):
     spark.createDataFrame(
         [(1, "b"), (2, "a"), (3, "c")], ["id", "s"]
     ).createOrReplaceTempView("arr_t")
-    out = spark.sql(rewrite(
+    out = _sql(spark, rewrite(
         "SELECT ARRAY(SELECT s FROM arr_t ORDER BY s) AS v"
     )).collect()[0].v
     assert out == ["a", "b", "c"]
-    out = spark.sql(rewrite(
+    out = _sql(spark, rewrite(
         "SELECT ARRAY(SELECT s FROM arr_t ORDER BY s DESC) AS v"
     )).collect()[0].v
     assert out == ["c", "b", "a"]
     # unordered form: compare as a set
-    out = spark.sql(rewrite(
+    out = _sql(spark, rewrite(
         "SELECT ARRAY(SELECT id FROM arr_t WHERE id > 1) AS v"
     )).collect()[0].v
     assert sorted(out) == [2, 3]
@@ -733,7 +742,7 @@ def test_to_char_sql_text_matches_column_builders(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT to_char(1234.5, 'FM9,999.00') AS v") == "1,234.50"
     assert run("SELECT to_char(-42, 'FM0000') AS v") == "-0042"
@@ -753,22 +762,22 @@ def test_unnest_in_from_and_lateral(spark):
 
     spark.createDataFrame([(1, [10, 20]), (2, [30])], ["id", "arr"]) \
         .createOrReplaceTempView("un_t")
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT x FROM unnest(ARRAY[3,1,2]) AS t(x) ORDER BY x"
     )).collect()
     assert [r.x for r in rows] == [1, 2, 3]
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT id, x FROM un_t, LATERAL unnest(arr) AS t(x) "
         "ORDER BY id, x"
     )).collect()
     assert [(r.id, r.x) for r in rows] == [(1, 10), (1, 20), (2, 30)]
     # comma form without LATERAL keyword (implicit in PG)
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT id, x FROM un_t, unnest(arr) AS t(x) ORDER BY id, x"
     )).collect()
     assert len(rows) == 3
     # two parallel arrays, NULL-padded to the longest
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT a, b FROM unnest(ARRAY[1,2], ARRAY['x','y','z']) "
         "AS t(a, b) ORDER BY b"
     )).collect()
@@ -783,7 +792,7 @@ def test_to_date_pg_patterns_and_misc(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert str(run(
         "SELECT to_date('14 Aug 2026', 'DD Mon YYYY') AS v"
@@ -816,7 +825,7 @@ def test_json_constructors_and_srf_forms(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT row_to_json(ROW(1, 'a')) AS v") == '{"f1":1,"f2":"a"}'
     assert run("SELECT json_build_object('a', 1, 'b', 'x') AS v") \
@@ -830,15 +839,15 @@ def test_json_constructors_and_srf_forms(spark):
     )
     got = run("SELECT json_object_agg(k, n) AS v FROM ja_t")
     assert '"k1":1' in got and '"k2":2' in got
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT x FROM json_array_elements('[1,2,3]') AS t(x)"
     )).collect()
     assert [r.x for r in rows] == ["1", "2", "3"]
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT k FROM json_object_keys('{\"a\":1,\"b\":2}') AS t(k)"
     )).collect()
     assert sorted(r.k for r in rows) == ["a", "b"]
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT n, g FROM ja_t, LATERAL generate_series(1, n) AS s(g) "
         "ORDER BY n, g"
     )).collect()
@@ -854,14 +863,14 @@ def test_array_subscripts_one_based_and_json_each(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT (ARRAY[10,20,30])[2] AS v") == 20
     assert run("SELECT (ARRAY[1,2,3,4])[2:3] AS v") == [2, 3]
     assert run("SELECT split('a-b-c', '-')[1] AS v") == "a"
     assert run("SELECT map('a', 1)['a'] AS v") == 1  # untouched
     assert run("SELECT substring('hello' FOR 3) AS v") == "hel"
-    rows = spark.sql(rewrite(
+    rows = _sql(spark, rewrite(
         "SELECT k, v FROM json_each('{\"a\":1,\"b\":2}') AS t(k, v) "
         "ORDER BY k"
     )).collect()
@@ -876,7 +885,7 @@ def test_log_trunc_interval_spellings(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT log(100) AS v") == 2.0
     assert run("SELECT round(log(2, 8), 6) AS v") == 3.0  # 2-arg agrees
@@ -903,7 +912,7 @@ def test_jsonb_operators_typeof_regexp_matches(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("""SELECT '{"a":1,"b":null}'::jsonb ? 'b' AS v""") is True
     assert run("""SELECT '{"a":1}'::jsonb ? 'z' AS v""") is False
@@ -936,7 +945,7 @@ def test_hash_path_time_literal_make_timestamptz(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run(
         """SELECT '{"a":{"b":7}}'::jsonb #> '{a,b}' AS v"""
@@ -962,7 +971,7 @@ def test_braced_array_literals_and_typed_scalars(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT '{1,2,3}'::int4[] AS v") == [1, 2, 3]
     assert run("SELECT '{a,b}'::text[] AS v") == ["a", "b"]
@@ -983,7 +992,7 @@ def test_spelled_out_timestamp_and_time_literals(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert str(run(
         "SELECT timestamp without time zone '1999-12-01 10:00:00' AS v"
@@ -1008,7 +1017,7 @@ def test_array_type_casts_on_expressions(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT ARRAY[1,2,3]::text[] AS v") == ["1", "2", "3"]
     assert run("SELECT ARRAY['1','2']::int4[] AS v") == [1, 2]
@@ -1073,7 +1082,7 @@ def test_plan_time_validation_executes(spark):
     from warehouse_pg_spark.sql_dialect import rewrite
 
     def run(q):
-        return spark.sql(rewrite(q)).collect()[0].v
+        return _sql(spark, rewrite(q)).collect()[0].v
 
     assert run("SELECT bool 'of' AS v") is False
     assert run("SELECT 'true'::jsonb::boolean AS v") is True

@@ -73,6 +73,23 @@ def test_asof_tolerance(spark, asof_frames):
     assert rows[(1, 6)] == 101.0
 
 
+def test_asof_without_keys_matches_one_constant_key(spark, asof_frames):
+    """An empty `on` is one window over all rows (no PARTITION BY)."""
+    trades, quotes = asof_frames
+    out = asof_join(
+        trades, quotes, on=[], left_ts="tts", right_ts="qts",
+        right_values=["price"],
+    )
+    keyed = asof_join(
+        trades.withColumn("k0", F.lit(0)), quotes.withColumn("k0", F.lit(0)),
+        on=["k0"], left_ts="tts", right_ts="qts", right_values=["price"],
+    )
+    rows = {r.qty: r.asof_price for r in out.collect()}
+    assert rows == {r.qty: r.asof_price for r in keyed.collect()}
+    # 10:03 trade of key 1 takes key 2's 10:01 quote once keys are ignored
+    assert rows == {5: 200.0, 6: 101.0, 7: 100.0, 8: 100.0}
+
+
 def test_recursive_union_all_semantics(spark):
     base = spark.createDataFrame([(1,)], ["n"])
     out = recursive_union(
@@ -476,6 +493,21 @@ def test_shingle_rows_unique_by_construction(spark):
     assert total == distinct, (total, distinct)
     # and the degenerate repeat-doc really did collapse to one shingle
     assert sh.filter("doc_id = 4").count() == 1
+
+
+def test_shingles_quote_the_column_name(spark):
+    from warehouse_pg_spark.queries.dedup import _shingles
+
+    d = spark.createDataFrame([(1, "a b c d")], "doc_id long, `body text` string")
+    got = d.select(F.sort_array(_shingles("body text")).alias("s")).first().s
+    assert got == ["a b c", "b c d"]
+
+
+def test_fts_occurrence_count_escapes_quotes(spark):
+    from warehouse_pg_spark.queries.fts_q import _n_occ
+
+    d = spark.createDataFrame([("don't stop don't",)], "text string")
+    assert d.selectExpr(_n_occ("don't") + " AS n").first().n == 2
 
 
 def test_label_propagation_cap_exhaustion_raises(spark):

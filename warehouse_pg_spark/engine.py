@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from warehouse_pg_spark import sql_dialect
 from warehouse_pg_spark.catalog import Catalog, data_files, read_parquet_table
-from warehouse_pg_spark.functions.pg import register_pg_functions
+from warehouse_pg_spark.functions.pg import bind_functions
 from warehouse_pg_spark.operators.dml import ParquetTable
 from warehouse_pg_spark.session import SessionConfig, get_spark, local_frame
 
@@ -418,7 +418,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         # calling one executes the statements (functions.c SQL-function
         # execution) and yields the void (NULL) result
         self._void_procs: dict[str, tuple[list[str], list[str]]] = {}
-        register_pg_functions(self.spark)
 
     # ---------------------------------------------------------------- query
     def sql(self, text: str, **named_args) -> DataFrame:
@@ -492,7 +491,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 text,
                 flags=re.IGNORECASE,
             )
-        lowered = sql_dialect.rewrite(text)
+        lowered = self._rewrite(text)
         ddl = self._maybe_ddl(lowered)
         if ddl is not None:
             return ddl
@@ -506,6 +505,16 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         # Calendar/YM interval result columns render as PG interval text
         # (interval_out) — PySpark cannot collect() those types at all
         return present_intervals(self._sql_autoschema(lowered))
+
+    def _rewrite(self, text: str) -> str:
+        """Dialect-rewrite `text` and bind the PG functions it calls.
+        Every statement-derived text Spark parses comes from here: the
+        lowered statement (and the DML fragments cut from it),
+        CREATE FUNCTION bodies, column defaults, EXPLAIN and COPY
+        queries."""
+        lowered = sql_dialect.rewrite(text)
+        bind_functions(self.spark, lowered)
+        return lowered
 
     def _sql_autoschema(self, lowered: str) -> DataFrame:
         """spark.sql with on-demand namespace creation: PG contexts
@@ -614,7 +623,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         """EXPLAIN (commands/explain.c; psql's main introspection UX):
         return the physical plan for a PG-dialect SQL string without
         executing it. mode: simple|extended|codegen|cost|formatted."""
-        df = self.spark.sql(sql_dialect.rewrite(text))
+        df = self.spark.sql(self._rewrite(text))
         return df._jdf.queryExecution().explainString(
             self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                 mode
@@ -629,7 +638,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         PG's instrumented actual plan."""
         import time
 
-        df = self.spark.sql(sql_dialect.rewrite(body))
+        df = self.spark.sql(self._rewrite(body))
         t0 = time.perf_counter()
         n_rows = df.count()
         elapsed_ms = (time.perf_counter() - t0) * 1000.0
@@ -675,7 +684,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _CREATE_FUNC_HEAD_RE.match(s)
         if m is None:
             return None
-        from warehouse_pg_spark import sql_dialect
         from warehouse_pg_spark.plpgsql import compile_plpgsql
 
         map_decl_type = self._decl_type
@@ -772,7 +780,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 # `IN b int DEFAULT 1` and unnamed `int DEFAULT 1`
                 # both carry their default.
                 a = dm.group(1).strip()
-                default_expr = sql_dialect.rewrite(dm.group(2).strip())
+                default_expr = self._rewrite(dm.group(2).strip())
             toks = a.split()
             # gram.y func_arg also allows param_name BEFORE the mode
             # (`a inout int`, `a variadic int[]`): normalize to
@@ -1049,7 +1057,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         else:
             raise NotImplementedError(f"LANGUAGE {lang} is not supported")
         expr = self._user_types.rewrite(expr)
-        expr = sql_dialect.rewrite(expr)
+        expr = self._rewrite(expr)
         if strict and params:
             null_any = " OR ".join(f"{p} IS NULL" for p, _t in params)
             expr = (
@@ -1116,7 +1124,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         PG STRICT on an SRF yields ZERO rows for a NULL argument
         (fmgr strict short-circuit + empty SRF protocol) — compiled
         as a WHERE gate over the body."""
-        from warehouse_pg_spark import sql_dialect
         from warehouse_pg_spark.sql_dialect import map_decl_type
 
         cols: list[tuple[str, str]]
@@ -1175,7 +1182,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                     compile_plpgsql_outrow,
                 )
 
-                expr = sql_dialect.rewrite(
+                expr = self._rewrite(
                     compile_plpgsql_outrow(
                         params, cols, body,
                         composites=self._user_types.composites,
@@ -1194,7 +1201,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                     compile_plpgsql_setof,
                 )
 
-                arr = sql_dialect.rewrite(
+                arr = self._rewrite(
                     compile_plpgsql_setof(
                         params, cols, body,
                         bare_next=bool(
@@ -1220,7 +1227,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 raise NotImplementedError(
                     "SETOF SQL function bodies must end in a query"
                 )
-            q = sql_dialect.rewrite(last)
+            q = self._rewrite(last)
         if strict and params:
             null_any = " OR ".join(f"{p} IS NULL" for p, _t in params)
             q = f"SELECT * FROM ({q}) WHERE NOT coalesce({null_any}, false)"
@@ -2173,7 +2180,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         unloads its slice), which is the only shape that scales; a
         single-file unload would serialize 100 TB through one writer."""
         df = (
-            self.spark.sql(sql_dialect.rewrite(select))
+            self.spark.sql(self._rewrite(select))
             if select
             else self.spark.table(name.split(".")[-1])
         )
@@ -2597,16 +2604,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         self.spark.sql(
             f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({signature}) "
             f"RETURNS {returns} RETURN {body}"
-        )
-
-    def create_pandas_aggregate(self, name: str, fn, return_type) -> None:
-        """CREATE AGGREGATE via vectorized pandas GROUPED_AGG UDF
-        (reference commands/aggregatecmds.c; partial-merge caveat
-        documented in SURVEY §7.5)."""
-        from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-        self.spark.udf.register(
-            name, pandas_udf(fn, return_type, PandasUDFType.GROUPED_AGG)
         )
 
     # ----------------------------------------------------------------- DML

@@ -1969,10 +1969,6 @@ def querytree(q: TSQuery) -> str:
     return TSQuery(stripped).text()
 
 
-def _nodes_equal(a, b) -> bool:
-    return a == b
-
-
 # --- QTN machinery (tsquery_util.c): ts_rewrite works on an n-ary
 # tree whose child arrays are in STORAGE order (tsquery items are
 # prefix-serialized with the RIGHT operand first, so QT2QTN's

@@ -1,6 +1,7 @@
 """PG-dialect function library.
 
-Registers PostgreSQL/Greenplum function spellings that Spark lacks as
+PostgreSQL/Greenplum function spellings that Spark lacks, in one table
+(PG_FUNCTIONS) that bind_functions defines in a session on first call:
 SQL scalar UDFs (Spark 4 `CREATE FUNCTION ... RETURN <expr>` — pure
 Catalyst expressions, codegen'd, no Python in the hot path), plus
 Column-level helpers for the DataFrame API.
@@ -13,9 +14,15 @@ numeric.c (width_bucket), pivot.c:31 (pivot helpers).
 
 from __future__ import annotations
 
+import re
+import weakref
+
 import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
+
+from warehouse_pg_spark.functions import fts_sql as _fts
+from warehouse_pg_spark.functions.ranges import RANGE_FUNCTIONS
 
 # ---------------------------------------------------------------------------
 # DataFrame-API helpers
@@ -29,11 +36,6 @@ def string_agg(col: Column | str, sep: str = ",", order: bool = True) -> Column:
     if order:
         lst = F.sort_array(lst)
     return F.array_join(lst, sep)
-
-
-def array_agg_ordered(col: Column | str) -> Column:
-    """PG array_agg(x ORDER BY x)."""
-    return F.sort_array(F.collect_list(col))
 
 
 def median(col: Column | str) -> Column:
@@ -52,11 +54,6 @@ def linear_interpolate(
     )
 
 
-def age_months(a: Column, b: Column) -> Column:
-    """PG age() at month grain."""
-    return F.floor(F.months_between(a, b)).cast("long")
-
-
 def array_replace(arr: Column | str, frm, to) -> Column:
     """PG array_replace(arr, from, to) (arrayfuncs.c array_replace):
     every element equal to `from` (NULL-safely — a NULL `from` replaces
@@ -70,7 +67,7 @@ def array_replace(arr: Column | str, frm, to) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# SQL scalar UDF registration (PG spellings valid inside engine.sql())
+# SQL scalar functions (PG spellings valid inside engine.sql())
 # ---------------------------------------------------------------------------
 
 # name -> (typed signature, return type, body in Spark SQL)
@@ -386,9 +383,6 @@ _SQL_FUNCTIONS: dict[str, tuple[str, str, str]] = {
         "date_bin(width, ts, TIMESTAMP '1970-01-01 00:00:00')",
     ),
 }
-
-_REGISTERED_SESSIONS: set[int] = set()
-
 
 def _jsonb_contains_py(a: str | None, b: str | None):
     """PG jsonb containment `a @> b` (reference
@@ -1868,116 +1862,126 @@ def _arrow_batched(fn, ret: str, arity: int):
     return pandas_udf(w, ret)
 
 
-def register_pg_functions(spark: SparkSession) -> list[str]:
-    """Register PG-name SQL scalar functions (idempotent per session)."""
-    key = id(spark)
-    if key in _REGISTERED_SESSIONS:
-        return sorted(_SQL_FUNCTIONS)
-    for name, (sig, ret, body) in _SQL_FUNCTIONS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
-            f"RETURNS {ret} RETURN {body}"
-        )
-    # Arrow-batched pandas UDFs — dialect-breadth slow path for
-    # operators whose recursive semantics have no Spark built-in
-    # (jsonb @> / <@ containment, jsonpath value queries, jsonb
-    # mutation, XML well-formedness). The per-element Python loop is
-    # unavoidable (the semantics are recursive over parsed JSON/XML),
-    # but the data crosses the JVM↔Python boundary in Arrow record
-    # batches, not per-row pickled tuples — ~10-50× less transfer
-    # overhead on a wide scan, and the plan shows ArrowEvalPython,
-    # never BatchEvalPython (gated in tests/test_plans.py).
-    for _name, _fn, _ret, _arity in (
-        ("jsonb_contains", _jsonb_contains_py, "BOOLEAN", 2),
-        ("jsonb_path_query_list", _jsonpath_query_py, "ARRAY<STRING>", 2),
-        # vars/silent forms (jsonpath_exec.c executeJsonPath with
-        # vars): $name references substitute from a jsonb object
-        ("jsonb_path_query_list_vars", _jsonpath_query_py,
-         "ARRAY<STRING>", 3),
-        ("jsonb_path_query_list_silent", _jsonpath_query_silent_py,
-         "ARRAY<STRING>", 3),
-        ("jsonb_concat", _jsonb_concat_py, "STRING", 2),
-        ("jsonb_path_match_vars", _jsonpath_match_py, "BOOLEAN", 3),
-        ("jsonb_path_exists_vars", _jsonpath_exists_py, "BOOLEAN", 3),
-        ("jsonb_path_match_loud", _jsonpath_match_loud_py,
-         "BOOLEAN", 3),
-        ("jsonb_path_exists_loud", _jsonpath_exists_loud_py,
-         "BOOLEAN", 3),
-        ("json_strip_nulls", _json_strip_nulls_py, "STRING", 1),
-        ("jsonb_strip_nulls", _json_strip_nulls_py, "STRING", 1),
-        ("xml_is_well_formed_document", _xml_wf_document_py, "BOOLEAN", 1),
-        ("xml_is_well_formed_content", _xml_wf_content_py, "BOOLEAN", 1),
-        # bare form follows XMLOPTION; the engine's default is CONTENT,
-        # matching PG's default xmloption
-        ("xml_is_well_formed", _xml_wf_content_py, "BOOLEAN", 1),
-        # the dialect pads the optional 4th arg (create_missing /
-        # insert_after) so the pandas UDF arity is fixed
-        ("jsonb_set", _jsonb_set_py, "STRING", 4),
-        ("jsonb_insert", _jsonb_insert_py, "STRING", 4),
-        ("jsonb_delete_path", _jsonb_delete_path_py, "STRING", 2),
-        ("jsonb_minus_keys", _jsonb_minus_keys_py, "STRING", 2),
-        ("jsonb_minus_idx", _jsonb_minus_idx_py, "STRING", 2),
-        ("jsonb_pretty", _jsonb_pretty_py, "STRING", 1),
-        ("pg_bytea_escape_out", _bytea_escape_out_py, "STRING", 1),
-        ("pg_bytea_escape_in", _bytea_escape_in_py, "BINARY", 1),
-        ("json_object1", _json_object1_py, "STRING", 1),
-        # non-_text SRF workers: values keep JSON rendering (string
-        # leaves stay quoted) — the _text variants unwrap via the
-        # map<string,string>/array<string> from_json path instead
-        ("pg_json_each_entries", _json_each_entries_py,
-         "ARRAY<STRUCT<key:STRING, value:STRING>>", 1),
-        ("pg_json_array_elements", _json_array_elements_py,
-         "ARRAY<STRING>", 1),
-        ("json_object2", _json_object2_py, "STRING", 2),
-        ("pg_xpath", _pg_xpath_entry, "ARRAY<STRING>", 2),
-    ):
-        spark.udf.register(_name, _arrow_batched(_fn, _ret, _arity))
-    # full-text search (functions/fts.py: tsvector.c/tsquery.c/
-    # tsvector_op.c/tsrank.c semantics; canonical text forms travel as
-    # STRINGs, so every shim is a pure string/array scalar)
-    from warehouse_pg_spark.functions import fts_sql as _fts
+# One name -> definition table for every PG-name function (the
+# pg_proc.dat analogue): (signature, return type, SQL body) for a
+# codegen'd SQL function, or (Python function, return type, arity) for
+# an Arrow-batched pandas UDF. The UDFs are the slow path for recursive
+# JSON/XML semantics with no Spark built-in (jsonb @> / <@, jsonpath,
+# jsonb mutation, XML well-formedness) and for full-text search
+# (functions/fts.py, canonical text forms as STRINGs); their data
+# crosses to Python in Arrow record batches, so plans show
+# ArrowEvalPython, never BatchEvalPython (gated in tests/test_plans.py).
+PG_FUNCTIONS: dict[str, tuple] = {
+    **_SQL_FUNCTIONS,
+    **RANGE_FUNCTIONS,
+    "jsonb_contains": (_jsonb_contains_py, "BOOLEAN", 2),
+    "jsonb_path_query_list": (_jsonpath_query_py, "ARRAY<STRING>", 2),
+    # vars/silent forms (jsonpath_exec.c executeJsonPath with vars):
+    # $name references substitute from a jsonb object
+    "jsonb_path_query_list_vars": (_jsonpath_query_py, "ARRAY<STRING>", 3),
+    "jsonb_path_query_list_silent": (_jsonpath_query_silent_py, "ARRAY<STRING>", 3),
+    "jsonb_concat": (_jsonb_concat_py, "STRING", 2),
+    "jsonb_path_match_vars": (_jsonpath_match_py, "BOOLEAN", 3),
+    "jsonb_path_exists_vars": (_jsonpath_exists_py, "BOOLEAN", 3),
+    "jsonb_path_match_loud": (_jsonpath_match_loud_py, "BOOLEAN", 3),
+    "jsonb_path_exists_loud": (_jsonpath_exists_loud_py, "BOOLEAN", 3),
+    "json_strip_nulls": (_json_strip_nulls_py, "STRING", 1),
+    "jsonb_strip_nulls": (_json_strip_nulls_py, "STRING", 1),
+    "xml_is_well_formed_document": (_xml_wf_document_py, "BOOLEAN", 1),
+    "xml_is_well_formed_content": (_xml_wf_content_py, "BOOLEAN", 1),
+    # bare form follows XMLOPTION; the engine's default is CONTENT,
+    # matching PG's default xmloption
+    "xml_is_well_formed": (_xml_wf_content_py, "BOOLEAN", 1),
+    # the dialect pads the optional 4th arg (create_missing /
+    # insert_after) so the pandas UDF arity is fixed
+    "jsonb_set": (_jsonb_set_py, "STRING", 4),
+    "jsonb_insert": (_jsonb_insert_py, "STRING", 4),
+    "jsonb_delete_path": (_jsonb_delete_path_py, "STRING", 2),
+    "jsonb_minus_keys": (_jsonb_minus_keys_py, "STRING", 2),
+    "jsonb_minus_idx": (_jsonb_minus_idx_py, "STRING", 2),
+    "jsonb_pretty": (_jsonb_pretty_py, "STRING", 1),
+    "pg_bytea_escape_out": (_bytea_escape_out_py, "STRING", 1),
+    "pg_bytea_escape_in": (_bytea_escape_in_py, "BINARY", 1),
+    "json_object1": (_json_object1_py, "STRING", 1),
+    # non-_text SRF workers: values keep JSON rendering (string leaves
+    # stay quoted) — the _text variants unwrap via the
+    # map<string,string>/array<string> from_json path instead
+    "pg_json_each_entries": (
+        _json_each_entries_py, "ARRAY<STRUCT<key:STRING, value:STRING>>", 1),
+    "pg_json_array_elements": (_json_array_elements_py, "ARRAY<STRING>", 1),
+    "json_object2": (_json_object2_py, "STRING", 2),
+    "pg_xpath": (_pg_xpath_entry, "ARRAY<STRING>", 2),
+    "pg_tsvector_in": (_fts._sql_tsvector_in, "STRING", 1),
+    "pg_tsquery_in": (_fts._sql_tsquery_in, "STRING", 1),
+    "pg_to_tsvector": (_fts._sql_to_tsvector, "STRING", 2),
+    "pg_to_tsvector_json": (_fts._sql_to_tsvector_json, "STRING", 3),
+    "pg_to_tsquery": (_fts._sql_to_tsquery, "STRING", 2),
+    "pg_plainto_tsquery": (_fts._sql_plainto_tsquery, "STRING", 2),
+    "pg_phraseto_tsquery": (_fts._sql_phraseto_tsquery, "STRING", 2),
+    "pg_websearch_to_tsquery": (_fts._sql_websearch_to_tsquery, "STRING", 2),
+    "pg_ts_match": (_fts._sql_ts_match, "BOOLEAN", 2),
+    "pg_setweight": (_fts._sql_setweight, "STRING", 3),
+    "pg_tsvector_strip": (_fts._sql_strip, "STRING", 1),
+    "pg_tsvector_length": (_fts._sql_tsvector_length, "INT", 1),
+    "pg_tsquery_numnode": (_fts._sql_numnode, "INT", 1),
+    "pg_querytree": (_fts._sql_querytree, "STRING", 1),
+    "pg_ts_rank": (_fts._sql_ts_rank, "FLOAT", 4),
+    "pg_ts_rank_doc": (_fts._sql_ts_rank_doc, "FLOAT", 3),
+    "pg_ts_rank_cd": (_fts._sql_ts_rank_cd, "FLOAT", 4),
+    "pg_ts_delete": (_fts._sql_ts_delete, "STRING", 2),
+    "pg_ts_filter": (_fts._sql_ts_filter, "STRING", 2),
+    "pg_tsvector_to_array": (_fts._sql_tsvector_to_array, "ARRAY<STRING>", 1),
+    "pg_array_to_tsvector": (_fts._sql_array_to_tsvector, "STRING", 1),
+    "pg_tsvector_concat": (_fts._sql_tsvector_concat, "STRING", 2),
+    "pg_tsquery_and": (_fts._sql_tsquery_and, "STRING", 2),
+    "pg_tsquery_or": (_fts._sql_tsquery_or, "STRING", 2),
+    "pg_tsquery_not": (_fts._sql_tsquery_not, "STRING", 1),
+    "pg_tsquery_phrase": (_fts._sql_tsquery_phrase, "STRING", 3),
+    "pg_tsq_mcontains": (_fts._sql_tsq_mcontains, "BOOLEAN", 2),
+    "pg_ts_rewrite": (_fts._sql_ts_rewrite, "STRING", 3),
+    "pg_ts_lexize": (_fts._sql_ts_lexize, "ARRAY<STRING>", 2),
+    "pg_tsquery_cmp": (_fts._sql_tsquery_cmp, "INT", 2),
+    "pg_ts_headline": (_fts._sql_ts_headline, "STRING", 4),
+    "pg_ts_headline_json": (_fts._sql_ts_headline_json, "STRING", 4),
+    "pg_ts_parse": (_fts._sql_ts_parse, "ARRAY<STRUCT<tokid: INT, token: STRING>>", 1),
+}
 
-    for _name, _fn, _ret, _arity in (
-        ("pg_tsvector_in", _fts._sql_tsvector_in, "STRING", 1),
-        ("pg_tsquery_in", _fts._sql_tsquery_in, "STRING", 1),
-        ("pg_to_tsvector", _fts._sql_to_tsvector, "STRING", 2),
-        ("pg_to_tsvector_json", _fts._sql_to_tsvector_json, "STRING", 3),
-        ("pg_to_tsquery", _fts._sql_to_tsquery, "STRING", 2),
-        ("pg_plainto_tsquery", _fts._sql_plainto_tsquery, "STRING", 2),
-        ("pg_phraseto_tsquery", _fts._sql_phraseto_tsquery, "STRING", 2),
-        ("pg_websearch_to_tsquery", _fts._sql_websearch_to_tsquery,
-         "STRING", 2),
-        ("pg_ts_match", _fts._sql_ts_match, "BOOLEAN", 2),
-        ("pg_setweight", _fts._sql_setweight, "STRING", 3),
-        ("pg_tsvector_strip", _fts._sql_strip, "STRING", 1),
-        ("pg_tsvector_length", _fts._sql_tsvector_length, "INT", 1),
-        ("pg_tsquery_numnode", _fts._sql_numnode, "INT", 1),
-        ("pg_querytree", _fts._sql_querytree, "STRING", 1),
-        ("pg_ts_rank", _fts._sql_ts_rank, "FLOAT", 4),
-        ("pg_ts_rank_doc", _fts._sql_ts_rank_doc, "FLOAT", 3),
-        ("pg_ts_rank_cd", _fts._sql_ts_rank_cd, "FLOAT", 4),
-        ("pg_ts_delete", _fts._sql_ts_delete, "STRING", 2),
-        ("pg_ts_filter", _fts._sql_ts_filter, "STRING", 2),
-        ("pg_tsvector_to_array", _fts._sql_tsvector_to_array,
-         "ARRAY<STRING>", 1),
-        ("pg_array_to_tsvector", _fts._sql_array_to_tsvector, "STRING", 1),
-        ("pg_tsvector_concat", _fts._sql_tsvector_concat, "STRING", 2),
-        ("pg_tsquery_and", _fts._sql_tsquery_and, "STRING", 2),
-        ("pg_tsquery_or", _fts._sql_tsquery_or, "STRING", 2),
-        ("pg_tsquery_not", _fts._sql_tsquery_not, "STRING", 1),
-        ("pg_tsquery_phrase", _fts._sql_tsquery_phrase, "STRING", 3),
-        ("pg_tsq_mcontains", _fts._sql_tsq_mcontains, "BOOLEAN", 2),
-        ("pg_ts_rewrite", _fts._sql_ts_rewrite, "STRING", 3),
-        ("pg_ts_lexize", _fts._sql_ts_lexize, "ARRAY<STRING>", 2),
-        ("pg_tsquery_cmp", _fts._sql_tsquery_cmp, "INT", 2),
-        ("pg_ts_headline", _fts._sql_ts_headline, "STRING", 4),
-        ("pg_ts_headline_json", _fts._sql_ts_headline_json, "STRING", 4),
-        ("pg_ts_parse", _fts._sql_ts_parse,
-         "ARRAY<STRUCT<tokid: INT, token: STRING>>", 1),
-    ):
-        spark.udf.register(_name, _arrow_batched(_fn, _ret, _arity))
-    from warehouse_pg_spark.functions.ranges import register_range_functions
+_CALL_RE = re.compile(r"\b([A-Za-z_]\w*)\s*\(")
 
-    register_range_functions(spark)
-    _REGISTERED_SESSIONS.add(key)
-    return sorted(_SQL_FUNCTIONS)
+
+def _calls(text: str) -> set[str]:
+    """The PG_FUNCTIONS names `text` calls (`name(`, any case)."""
+    return {n.lower() for n in _CALL_RE.findall(text)} & PG_FUNCTIONS.keys()
+
+
+# the entries each SQL body calls: Spark resolves a body at CREATE time
+_DEPS = {n: _calls(d[2]) - {n} for n, d in PG_FUNCTIONS.items() if isinstance(d[2], str)}
+# per SparkSession, the names already settled there (two threads racing
+# on one name define it twice, which is harmless)
+_BOUND: weakref.WeakKeyDictionary[SparkSession, set[str]] = weakref.WeakKeyDictionary()
+
+
+def bind_functions(spark: SparkSession, text: str) -> None:
+    """Define in `spark` the PG_FUNCTIONS entries `text` calls, after
+    the entries their bodies call. A name the session already has a
+    function for is left alone: a user CREATE FUNCTION takes
+    precedence, as user schemas precede pg_catalog on PG's search_path
+    (no entry shares a name with a Spark built-in)."""
+    bound = _BOUND.setdefault(spark, set())
+
+    def bind(name: str) -> None:
+        if name in bound:
+            return
+        for dep in sorted(_DEPS.get(name, ())):
+            bind(dep)
+        if not spark.catalog.functionExists(name):
+            a, ret, b = PG_FUNCTIONS[name]
+            if isinstance(b, str):
+                spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({a}) "
+                          f"RETURNS {ret} RETURN {b}")
+            else:
+                spark.udf.register(name, _arrow_batched(a, ret, b))
+        bound.add(name)
+
+    for name in sorted(_calls(text)):
+        bind(name)

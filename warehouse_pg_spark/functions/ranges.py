@@ -26,8 +26,6 @@ wrong value).
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
-
 
 def _family(sfx: str, t: str) -> dict[str, tuple[str, str, str]]:
     """One complete operator family over bound type `t`, names suffixed
@@ -235,7 +233,7 @@ def _family(sfx: str, t: str) -> dict[str, tuple[str, str, str]]:
     }
 
 
-_FUNCTIONS: dict[str, tuple[str, str, str]] = {
+RANGE_FUNCTIONS: dict[str, tuple[str, str, str]] = {
     **_family("", "DOUBLE"),
     **_family("_ts", "TIMESTAMP"),
     # int8range needs exact bigint bounds: DOUBLE loses integers above
@@ -248,10 +246,3 @@ _FUNCTIONS: dict[str, tuple[str, str, str]] = {
     **_family("_str", "STRING"),
 }
 
-
-def register_range_functions(spark: SparkSession) -> None:
-    for name, (sig, ret, body) in _FUNCTIONS.items():
-        spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({sig}) "
-            f"RETURNS {ret} RETURN {body}"
-        )

@@ -96,8 +96,9 @@ def asof_join(
         # .asc()/.desc() defaults.)
         side_order = "DESC" if strict else "ASC"
         ts_order = "DESC" if ts_desc else "ASC"
+        partition = f"PARTITION BY {', '.join(f'`{k}`' for k in on)} " if on else ""
         over = (
-            f"OVER (PARTITION BY {', '.join(f'`{k}`' for k in on)} "
+            f"OVER ({partition}"
             f"ORDER BY __ts {ts_order}, __side {side_order} "
             f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
         )

@@ -27,7 +27,8 @@ def _n_occ(word: str) -> str:
     """SQL: occurrences of `word` in split(text, ' ') — a string
     expression (one py4j round-trip per selectExpr instead of ~8
     Column-API calls; r18 driver-overhead work, tree unchanged)."""
-    return f"size(filter(split(text, ' '), x -> x = '{word}'))"
+    lit = word.replace("'", "''")
+    return f"size(filter(split(text, ' '), x -> x = '{lit}'))"
 
 
 def _rank_contrib(n: str) -> str:
@@ -80,9 +81,8 @@ def fts_match_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the Arrow-batched pg_ts_rank shim (float4 engine) within
     1e-5.
     """
-    from warehouse_pg_spark.functions.pg import register_pg_functions
+    from warehouse_pg_spark.functions.pg import bind_functions
 
-    register_pg_functions(spark)
     d = table(spark, sf_dir, "documents")
     # Implied substring pre-filter: token 'data' ∈ split(text) implies
     # contains(text,'data'), so the conjunct keeps the result set
@@ -104,6 +104,11 @@ def fts_match_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank = (
         f"(({_rank_contrib('n_data')} + {_rank_contrib('n_stream')}) / 2.0D)"
     )
+    agrees = (
+        f"(abs({rank} - pg_ts_rank_doc('english', text, 'data | stream'))"
+        f" < 1e-5d) AS pg_rank_agrees"
+    )
+    bind_functions(spark, agrees)
     # Fused rank shim: to_tsvector + ts_rank in ONE Arrow UDF call
     # (same Python core as the pg_to_tsvector → pg_ts_rank chain, but
     # the tsvector skips the render-to-text → JVM → re-parse round
@@ -113,8 +118,7 @@ def fts_match_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(n_data AS BIGINT) AS n_data",
         "CAST(n_stream AS BIGINT) AS n_stream",
         f"round({rank}, 6) AS rank_or",
-        f"(abs({rank} - pg_ts_rank_doc('english', text, 'data | stream'))"
-        f" < 1e-5d) AS pg_rank_agrees",
+        agrees,
     )
 
 
@@ -154,17 +158,16 @@ def fts_tsvector_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same form independently in DuckDB from first principles
     (tokenize -> group positions -> sort lexemes bytewise), so the
     whole parse/normalize/format path is value-checked."""
-    from warehouse_pg_spark.functions.pg import register_pg_functions
+    from warehouse_pg_spark.functions.pg import bind_functions
 
-    register_pg_functions(spark)
+    tsv = "pg_to_tsvector('simple', text)"
+    weighted = f"pg_setweight({tsv}, 'A', NULL)"
+    n_lex = f"pg_tsvector_length({tsv})"
+    bind_functions(spark, f"{weighted} {n_lex}")
     d = table(spark, sf_dir, "documents").where(F.col("doc_id") < 20)
     return d.select(
         "doc_id",
-        F.expr("pg_to_tsvector('simple', text)").alias("tsv"),
-        F.expr(
-            "pg_setweight(pg_to_tsvector('simple', text), 'A', NULL)"
-        ).alias("tsv_weighted"),
-        F.expr(
-            "pg_tsvector_length(pg_to_tsvector('simple', text))"
-        ).cast("long").alias("n_lex"),
+        F.expr(tsv).alias("tsv"),
+        F.expr(weighted).alias("tsv_weighted"),
+        F.expr(n_lex).cast("long").alias("n_lex"),
     )

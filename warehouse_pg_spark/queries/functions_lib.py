@@ -367,9 +367,10 @@ def fn_strings_hash_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash/encode/format string family (cryptohashes.c, encode.c,
     oracle_compat.c translate/overlay, varlena.c format, formatting.c
     to_char numeric shim)."""
-    from warehouse_pg_spark.functions.pg import register_pg_functions
+    from warehouse_pg_spark.functions.pg import bind_functions
 
-    register_pg_functions(spark)
+    money_txt = "to_char_num(c_acctbal, 'FM999999990.00')"
+    bind_functions(spark, money_txt)
     cust = table(spark, sf_dir, "customer").filter(F.col("c_custkey") < 100)
     return cust.select(
         "c_custkey",
@@ -379,7 +380,7 @@ def fn_strings_hash_format(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.translate(F.col("c_mktsegment"), "AEIOU", "aeiou").alias("tr"),
         F.overlay(F.col("c_name"), F.lit("XX"), F.lit(3), F.lit(2)).alias("ov"),
         F.format_string("%s:%d", F.col("c_mktsegment"), F.col("c_custkey")).alias("fmt"),
-        F.expr("to_char_num(c_acctbal, 'FM999999990.00')").alias("money_txt"),
+        F.expr(money_txt).alias("money_txt"),
     ).orderBy("c_custkey")
 
 

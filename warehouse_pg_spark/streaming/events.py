@@ -69,21 +69,6 @@ class EventStream:
             )
         )
 
-    def sliding_avg(self, width: str = "10 minutes", slide: str = "5 minutes") -> DataFrame:
-        """Sliding-window average value per user."""
-        return (
-            self.df.groupBy(
-                F.window(self.ts_col, width, slide).alias("win"), "user_id"
-            )
-            .agg(F.avg("value").alias("avg_value"), F.count("*").alias("n"))
-            .select(
-                F.col("win.start").alias("window_start"),
-                "user_id",
-                "avg_value",
-                "n",
-            )
-        )
-
     def session_windows(self, gap: str = "30 minutes") -> DataFrame:
         """Session windows per user (session_window — the streaming
         twin of the batch events_sessionize query)."""
