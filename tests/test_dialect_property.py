@@ -85,6 +85,17 @@ def test_nulls_ordering_injection(a, b):
     assert "NULLS" not in out3
 
 
+def test_top_level_comma_splitter():
+    """One splitter for every top-level comma list: quotes (with the
+    '' escape), parentheses and brackets nest; empty parts drop."""
+    from warehouse_pg_spark.dialect.mask import _split_commas
+
+    parts = _split_commas("f('a,b', g(1,2)), ARRAY[1,2], 'it''s, x'")
+    assert [p.strip() for p in parts] == [
+        "f('a,b', g(1,2))", "ARRAY[1,2]", "'it''s, x'"]
+    assert _split_commas('a, "x,y", , b,') == ["a", ' "x,y"', " b"]
+
+
 def test_literal_masking_protects_contents():
     """PG-ism lookalikes inside string literals must never rewrite."""
     sql = "SELECT 'a::text' AS s, 'j->>''k''' AS t, '~ not a regex' AS u FROM t"

@@ -3279,3 +3279,169 @@ def test_update_adopts_spark_table(engine, spark):
     END $$ LANGUAGE plpgsql""")
     assert engine.sql("SELECT adoptions()").collect()[0][0] == 11
     engine.sql("DROP TABLE IF EXISTS adopt_t")
+
+
+# ------------------------------------------- partitioned CTAS writes
+def _pt_create(engine, name: str) -> str:
+    engine.sql(
+        f"CREATE TABLE {name} AS SELECT n AS k, n * 10 AS v "
+        "FROM generate_series(0, 99) AS g(n) "
+        "PARTITION BY RANGE (k) (START (0) END (100) EVERY (25))"
+    )
+    return os.path.join(engine.warehouse_dir, name)
+
+
+def test_insert_into_partitioned_ctas_computes_part(engine):
+    """INSERT into a `PARTITION BY RANGE … EVERY` CTAS table: the
+    hidden range-partition id is not a user column; it is computed
+    from the stored spec, so the row lands in its partition."""
+    path = _pt_create(engine, "pt_ins")
+    assert engine.sql("INSERT INTO pt_ins VALUES (50, 1)").collect()[0][0] == 1
+    assert engine.sql("SELECT count(*) FROM pt_ins").collect()[0][0] == 101
+    assert engine.sql(
+        "SELECT __part FROM pt_ins WHERE k = 50 AND v = 1"
+    ).collect()[0][0] == 2
+    assert sorted(d for d in os.listdir(path) if d.startswith("__part=")) == [
+        "__part=0", "__part=1", "__part=2", "__part=3"]
+
+
+def test_update_partitioned_ctas_keeps_layout(engine):
+    """UPDATE rewrites a range-partitioned CTAS table with its
+    `__part=` directories, not as flat files."""
+    path = _pt_create(engine, "pt_upd")
+    assert engine.sql(
+        "UPDATE pt_upd SET v = v + 1 WHERE k < 25").collect()[0][0] == 25
+    entries = os.listdir(path)
+    assert sorted(d for d in entries if d.startswith("__part=")) == [
+        "__part=0", "__part=1", "__part=2", "__part=3"]
+    assert not [f for f in entries if f.endswith(".parquet")]
+    assert engine.sql(
+        "SELECT count(*) FROM pt_upd WHERE k < 25").collect()[0][0] == 25
+    assert engine.sql(
+        "SELECT sum(v) FROM pt_upd WHERE k < 25").collect()[0][0] == \
+        sum(k * 10 + 1 for k in range(25))
+
+
+# ------------------------------------------------ front-end contract
+# (setup, statement, check, expected): the statement runs in five
+# spellings; its result and the check's must match across them, and
+# the check's (or, without one, the statement's) rows must equal
+# `expected` when given. Names and literals are lower case so the
+# lower-case spelling changes keywords only.
+_FRONT_END_CASES = {
+    "set": (["RESET work_mem"], "SET work_mem = '32mb'",
+            "SHOW work_mem", [("32mb",)]),
+    "reset": (["SET work_mem = '8mb'"], "RESET work_mem",
+              "SHOW work_mem", [("4MB",)]),
+    "show": (["SET work_mem = '16mb'"], "SHOW work_mem", None,
+             [("16mb",)]),
+    "prepare": (["DEALLOCATE ALL"], "PREPARE fe_p AS SELECT $1 + 1 AS v",
+                "EXECUTE fe_p(41)", [(42,)]),
+    "execute": (["DEALLOCATE ALL", "PREPARE fe_q AS SELECT $1 * 2 AS v"],
+                "EXECUTE fe_q(21)", None, [(42,)]),
+    "deallocate": (["DEALLOCATE ALL", "PREPARE fe_d AS SELECT 1"],
+                   "DEALLOCATE fe_d", "PREPARE fe_d AS SELECT 2", None),
+    "discard": (["SET work_mem = '8mb'"], "DISCARD ALL", "SHOW work_mem",
+                [("4MB",)]),
+    "vacuum": ([], "VACUUM fe_t", "SELECT count(*) FROM fe_t", [(5,)]),
+    "analyze": ([], "ANALYZE fe_t", "SELECT count(*) FROM fe_t", [(5,)]),
+    "begin": ([], "BEGIN", None, [(0,)]),
+    "commit": ([], "COMMIT", None, [(0,)]),
+    "create_sequence": (["DROP SEQUENCE IF EXISTS fe_s"],
+                        "CREATE SEQUENCE fe_s START 5",
+                        "SELECT nextval('fe_s')", [(5,)]),
+    "alter_sequence": (["DROP SEQUENCE IF EXISTS fe_s",
+                        "CREATE SEQUENCE fe_s"],
+                       "ALTER SEQUENCE fe_s RESTART WITH 7",
+                       "SELECT nextval('fe_s')", [(7,)]),
+    "create_function": (["DROP FUNCTION IF EXISTS fe_f"],
+                        "CREATE FUNCTION fe_f(x int) RETURNS int "
+                        "AS $$ SELECT x + 1 $$ LANGUAGE sql",
+                        "SELECT fe_f(1)", [(2,)]),
+    "call": (["DELETE FROM fe_log"], "CALL fe_pr(3)",
+             "SELECT x FROM fe_log", [(3,)]),
+    "create_type": (["DROP TYPE IF EXISTS fe_mood"],
+                    "CREATE TYPE fe_mood AS ENUM ('sad', 'ok')",
+                    "SELECT CAST('ok' AS fe_mood)", [("ok",)]),
+    "create_index": ([], "CREATE INDEX fe_i ON fe_t (k)", None, [(0,)]),
+    "revoke": (["GRANT SELECT ON fe_t TO public"],
+               "REVOKE SELECT ON fe_t FROM public",
+               "SELECT has_table_privilege('fe_t', 'select')", [(False,)]),
+    "comment": ([], "COMMENT ON TABLE fe_t IS 'five rows'", None, [(0,)]),
+    "create_matview": (["DROP MATERIALIZED VIEW IF EXISTS fe_mv"],
+                       "CREATE MATERIALIZED VIEW fe_mv AS SELECT k FROM fe_t",
+                       "SELECT count(*) FROM fe_mv", [(5,)]),
+    "select": ([], "SELECT k FROM fe_t ORDER BY k", None,
+               [(1,), (2,), (3,), (4,), (5,)]),
+    "values": ([], "VALUES (1), (2)", None, [(1,), (2,)]),
+    "ctas": ([], "CREATE TABLE fe_c AS SELECT k FROM fe_t WHERE k > 3",
+             "SELECT count(*) FROM fe_c", [(2,)]),
+    "insert": (["DELETE FROM fe_w"], "INSERT INTO fe_w VALUES (1, 'a')",
+               "SELECT k, s FROM fe_w", [(1, "a")]),
+    "update": (["DELETE FROM fe_w", "INSERT INTO fe_w VALUES (1, 'a')"],
+               "UPDATE fe_w SET s = 'b' WHERE k = 1",
+               "SELECT k, s FROM fe_w", [(1, "b")]),
+    "delete": (["DELETE FROM fe_w", "INSERT INTO fe_w VALUES (1, 'a'), (2, 'b')"],
+               "DELETE FROM fe_w WHERE k = 1", "SELECT k, s FROM fe_w",
+               [(2, "b")]),
+    "merge": (["DELETE FROM fe_w", "INSERT INTO fe_w VALUES (1, 'a')"],
+              "MERGE INTO fe_w t USING (SELECT 1 AS k, 'z' AS s) src "
+              "ON t.k = src.k WHEN MATCHED THEN UPDATE SET s = src.s",
+              "SELECT k, s FROM fe_w", [(1, "z")]),
+    "truncate": (["DELETE FROM fe_w", "INSERT INTO fe_w VALUES (9, 'q')"],
+                 "TRUNCATE fe_w",
+                 "SELECT count(*) FROM fe_w", [(0,)]),
+    # a name inside a comment or a literal never fires a pass
+    "comment_holds_nextval": (
+        ["DROP SEQUENCE IF EXISTS fe_s1", "CREATE SEQUENCE fe_s1",
+         "SELECT nextval('fe_s1')"],
+        "/* nextval('fe_s1') */ SELECT 1", "SELECT currval('fe_s1')",
+        [(1,)]),
+    "literal_pg_tables": ([], "SELECT 'pg_catalog.pg_tables' AS x", None,
+                          [("pg_catalog.pg_tables",)]),
+    "literal_information_schema": (
+        [], "SELECT 'information_schema.columns' AS x", None,
+        [("information_schema.columns",)]),
+    "literal_holds_from": (
+        ["DROP SEQUENCE IF EXISTS fe_sq", "CREATE SEQUENCE fe_sq",
+         "DELETE FROM fe_w"],
+        "INSERT INTO fe_w VALUES (nextval('fe_sq'), 'moved from a')",
+        "SELECT k, s FROM fe_w", [(1, "moved from a")]),
+}
+
+
+@pytest.fixture(scope="module")
+def front_end_tables(engine):
+    engine.sql("CREATE TABLE fe_t AS SELECT n AS k FROM generate_series(1, 5) AS g(n)")
+    engine.sql("CREATE TABLE fe_w AS SELECT 1 AS k, 'a' AS s")
+    engine.sql("CREATE TABLE fe_log AS SELECT 1 AS x")
+    engine.sql("CREATE OR REPLACE PROCEDURE fe_pr(n int) LANGUAGE sql "
+               "AS $$ INSERT INTO fe_log VALUES (n) $$")
+    return engine
+
+
+@pytest.mark.parametrize("case", sorted(_FRONT_END_CASES))
+def test_front_end_contract(front_end_tables, case):
+    """Every routed statement kind gives the same result bare, after a
+    leading `--` or `/* */` comment, in lower case and with a trailing
+    `;`; names inside comments and literals never trigger a rewrite."""
+    engine = front_end_tables
+    setup, stmt, check, expected = _FRONT_END_CASES[case]
+    forms = {
+        "bare": stmt,
+        "line_comment": "-- leading note\n" + stmt,
+        "block_comment": "/* leading note */ " + stmt,
+        "lower": stmt.lower(),
+        "semicolon": stmt + ";",
+    }
+    results = {}
+    for form, text in forms.items():
+        for s in setup:
+            engine.sql(s)
+        out = [tuple(r) for r in engine.sql(text).collect()]
+        after = ([tuple(r) for r in engine.sql(check).collect()]
+                 if check else out)
+        results[form] = (out, after)
+    assert all(r == results["bare"] for r in results.values()), results
+    if expected is not None:
+        assert results["bare"][1] == expected

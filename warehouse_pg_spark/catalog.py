@@ -153,6 +153,8 @@ class TableInfo:
     path: str
     distribution: tuple[str, tuple[str, ...]] = ("random", ())
     partition_cols: tuple[str, ...] = ()
+    # column -> expression every write computes it from (operators/dml)
+    derived: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -169,12 +171,14 @@ class Catalog:
         distribution: tuple[str, tuple[str, ...]] | None = None,
         partition_cols: tuple[str, ...] = (),
         create_view: bool = True,
+        derived: dict | None = None,
     ) -> TableInfo:
         info = TableInfo(
             name=name,
             path=path,
             distribution=distribution or DEFAULT_DISTRIBUTION.get(name, ("random", ())),
             partition_cols=partition_cols,
+            derived=dict(derived or {}),
         )
         self.tables[name] = info
         if create_view:

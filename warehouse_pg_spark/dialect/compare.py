@@ -12,9 +12,10 @@ from warehouse_pg_spark.dialect.mask import (
     _DISTINCT_OPERAND,
     _LIT,
     _MASK_RE,
+    _close_paren,
     _lit_value,
     _new_lit,
-    _split_args,
+    _split_commas,
 )
 from warehouse_pg_spark.dialect.typemap import _braced_to_array
 
@@ -83,9 +84,9 @@ def _rewrite_row_compare(sql: str) -> str:
     sql = _ROW_CMP_RE.sub(sub, sql)
 
     def sub_row_row(m: re.Match) -> str:
-        xs = [s.strip() for s in _split_args(m.group(1))]
+        xs = [s.strip() for s in _split_commas(m.group(1))]
         op = m.group(2)
-        ys = [s.strip() for s in _split_args(m.group(3))]
+        ys = [s.strip() for s in _split_commas(m.group(3))]
         if len(xs) != len(ys):  # arity mismatch: stay loud downstream
             return m.group(0)
         return _row_cmp_expand(xs, ys, op)
@@ -375,14 +376,8 @@ def _rewrite_op_any_all(sql: str, lits: list[str]) -> str:
         m = head_re.search(sql, pos)
         if not m:
             break
-        depth, i = 1, m.end()
-        while i < len(sql) and depth:
-            if sql[i] == "(":
-                depth += 1
-            elif sql[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:  # unbalanced: leave untouched
+        i = _close_paren(sql, m.end())
+        if i < 0:  # unbalanced: leave untouched
             pos = m.end()
             continue
 

@@ -20,8 +20,9 @@ import re
 
 from warehouse_pg_spark.dialect.mask import (
     _LIT,
+    _close_paren,
     _nested_parens,
-    _split_args,
+    _split_commas,
 )
 
 # default_text_search_config; engine SET updates this module state
@@ -64,18 +65,11 @@ def _map_calls(out: str, name: str, fn) -> str:
         m = pat.search(out)
         if not m:
             return out
-        depth = 1
-        i = m.end()
-        while i < len(out) and depth:
-            if out[i] == "(":
-                depth += 1
-            elif out[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = _close_paren(out, m.end())
+        if i < 0:
             return out  # unbalanced: leave loud for Spark
         inner = out[m.end():i - 1]
-        args = [a.strip() for a in _split_args(inner)]
+        args = [a.strip() for a in _split_commas(inner)]
         rep = fn(args, m.group(1))
         if rep is None:
             # not claimable: sentinel stops this loop rescanning it

@@ -12,7 +12,7 @@ from warehouse_pg_spark.dialect.mask import (
     _DISTINCT_OPERAND,
     _lit_value,
     _new_lit,
-    _split_args,
+    _split_commas,
 )
 
 
@@ -72,7 +72,7 @@ def _rewrite_pg_geo(out: str, lits: list[str]) -> str:
     # point(x, y) over scalars first (geo_ops.c construct_point), so
     # box/circle constructors see folded point operands
     def sub_point_ctor(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) == 2 and not any(
             geo.geo_kind(a.strip()) for a in args
         ):
@@ -85,7 +85,7 @@ def _rewrite_pg_geo(out: str, lits: list[str]) -> str:
 
     # constructors over existing geo values: box(p, p), circle(p, r)
     def sub_box_ctor(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) == 2 and all(
             geo.geo_kind(a.strip()) == "point" for a in args
         ):
@@ -93,7 +93,7 @@ def _rewrite_pg_geo(out: str, lits: list[str]) -> str:
         return m.group(0)
 
     def sub_circle_ctor(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) == 2 and geo.geo_kind(args[0].strip()) == "point":
             p = args[0].strip()
             return geo.circle_sql(

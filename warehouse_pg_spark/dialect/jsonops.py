@@ -11,6 +11,7 @@ import re
 from warehouse_pg_spark.dialect.mask import (
     _LIT,
     _MASK_RE,
+    _close_paren,
     _lit_value,
     _new_lit,
 )
@@ -130,14 +131,9 @@ def _lower_pg_json_field(sql: str) -> str:
         i = sql.find("pg_json_field(")
         if i < 0:
             return sql
-        j = i + len("pg_json_field(")
-        depth = 1
-        while j < len(sql) and depth:
-            if sql[j] == "(":
-                depth += 1
-            elif sql[j] == ")":
-                depth -= 1
-            j += 1
+        j = _close_paren(sql, i + len("pg_json_field("))
+        if j < 0:  # defensive: malformed marker stays visible
+            return sql
         content = sql[i + len("pg_json_field(") : j - 1]
         pm = re.search(rf",\s*({_LIT})\s*$", content)
         if pm is None:  # defensive: malformed marker stays visible

@@ -89,10 +89,34 @@ def _nested_parens(depth: int) -> str:
     return rf"\({p}\)"
 
 
-def _split_args(s: str) -> list[str]:
-    parts, depth, buf = [], 0, []
+def _close_paren(s: str, i: int) -> int:
+    """Index just past the `)` that closes a `(` opened before `i`
+    (quoted text skipped), or -1 when it never closes."""
+    depth, quote = 1, None
+    for j in range(i, len(s)):
+        ch = s[j]
+        if quote:
+            quote = None if ch == quote else quote
+        elif ch == "'":
+            quote = ch
+        elif ch in "()":
+            depth += 1 if ch == "(" else -1
+            if depth == 0:
+                return j + 1
+    return -1
+
+
+def _split_commas(s: str) -> list[str]:
+    """Split a comma list at its top level: quoted text ('' and ""
+    escapes included), parentheses and brackets nest. Parts keep their
+    whitespace; empty parts drop."""
+    parts, depth, buf, quote = [], 0, [], None
     for ch in s:
-        if ch in "([":
+        if quote:
+            quote = None if ch == quote else quote
+        elif ch in "'\"":
+            quote = ch
+        elif ch in "([":
             depth += 1
         elif ch in ")]":
             depth -= 1
@@ -103,19 +127,3 @@ def _split_args(s: str) -> list[str]:
         buf.append(ch)
     parts.append("".join(buf))
     return [p for p in parts if p.strip()]
-
-
-def _split_top_level_commas(s: str) -> list[str]:
-    parts, depth, buf = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf))
-    return parts

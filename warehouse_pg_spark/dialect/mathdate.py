@@ -14,7 +14,7 @@ from warehouse_pg_spark.dialect.mask import (
     _MASK_RE,
     _lit_value,
     _new_lit,
-    _split_args,
+    _split_commas,
 )
 
 
@@ -691,7 +691,7 @@ def _rewrite_to_char_to_date(sql: str, lits: list[str]) -> str:
                         break
                 j += 1
             inner = s[op + 1: j]
-            args = _split_args(inner)
+            args = _split_commas(inner)
             lm = _MASK_RE.fullmatch(args[-1].strip()) if len(args) == 2 else None
             body = lits[int(lm.group(1))][1:-1] if lm else ""
             if lm and _PG_DCH_GATE_RE.search(body):

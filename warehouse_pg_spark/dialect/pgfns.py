@@ -12,11 +12,12 @@ from warehouse_pg_spark.dialect.mask import (
     _DISTINCT_OPERAND,
     _LIT,
     _MASK_RE,
+    _close_paren,
     _lit_value,
     _nested_parens,
     _new_lit,
     _new_lit_raw,
-    _split_args,
+    _split_commas,
 )
 from warehouse_pg_spark.dialect.mathdate import (
     _gcd_sql,
@@ -405,7 +406,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         # position (rowtypes.c record_cmp). The names are PG's own
         # anonymous-record names f1, f2, ... so row_to_json(ROW(...))
         # serializes identically to PG.
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         fields = ", ".join(
             f"({a.strip()}) AS f{i + 1}" for i, a in enumerate(args)
         )
@@ -450,12 +451,9 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         m = _ARRAY_CMP_RE.search(sql, pos)
         if m is None:
             break
-        depth, j = 1, m.end()
-        while j < len(sql) and depth:
-            depth += {"(": 1, ")": -1}.get(sql[j], 0)
-            j += 1
-        args = [a.strip() for a in _split_args(sql[m.end(): j - 1])]
-        if depth or len(args) != 2:
+        j = _close_paren(sql, m.end())
+        args = [a.strip() for a in _split_commas(sql[m.end(): j - 1])]
+        if j < 0 or len(args) != 2:
             pos = m.end()
             continue
         op = _ARRAY_CMP_FNS[m.group(1).lower()]
@@ -520,7 +518,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     sql = _ARRAY_POSITIONS_RE.sub(sub_array_positions, sql)
 
     def sub_jsonb_contained(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) != 2:
             return m.group(0)
         # jsonb_contained(a, b) == b @> a (jsonb_util.c)
@@ -532,7 +530,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         # json[b]_extract_path[_text](j, VARIADIC text path): literal
         # path elements fold into ONE get_json_object path — all-digit
         # elements subscript arrays (jsonfuncs.c get_path_all)
-        args = [a.strip() for a in _split_args(m.group(2))]
+        args = [a.strip() for a in _split_commas(m.group(2))]
         if len(args) < 2:
             return m.group(0)
         j = args[0]
@@ -568,14 +566,14 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     def sub_nn(m: re.Match) -> str:
         want_null = m.group(1).lower() == "nulls"
         test = "IS NULL" if want_null else "IS NOT NULL"
-        args = _split_args(m.group(2))
+        args = _split_commas(m.group(2))
         if len(args) == 1 and re.match(r"(?is)^\s*variadic\b", args[0]):
             # VARIADIC array spelling: count over the elements
             arr = re.sub(r"(?is)^\s*variadic\s+", "", args[0]).strip()
             return f"size(filter({arr}, __x -> __x {test}))"
         parts = [
             f"(CASE WHEN ({a.strip()}) {test} THEN 1 ELSE 0 END)"
-            for a in _split_args(m.group(2))
+            for a in _split_commas(m.group(2))
         ]
         return "(" + " + ".join(parts) + ")"
 
@@ -674,7 +672,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     # the operator implementations called by name
     def sub_int_arith(m: re.Match) -> str:
         op = m.group(2).lower()
-        args = _split_args(m.group(3))
+        args = _split_commas(m.group(3))
         if len(args) != 2:
             return m.group(0)
         a, b = (x.strip() for x in args)
@@ -791,7 +789,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         return ngroups, "".join(out_s)
 
     def sub_regexp_replace(m: re.Match) -> str:
-        args = [a.strip() for a in _split_args(m.group(1))]
+        args = [a.strip() for a in _split_commas(m.group(1))]
         if len(args) not in (3, 4):
             return m.group(0)
         # the E-string prefix strip runs later in rewrite(); drop it
@@ -847,7 +845,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         # regexp_split_to_array): Spark split() is already regex-based
         # with PG's keep-trailing-empties behavior; 'i' becomes an
         # inline flag; 'g' is an error in PG too — left loud.
-        args = [a.strip() for a in _split_args(m.group(1))]
+        args = [a.strip() for a in _split_commas(m.group(1))]
 
         def wrap_empty_matching(s_expr: str, pat_tok: str) -> str:
             # a pattern that can match the EMPTY string splits between
@@ -890,7 +888,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         # the 2-arg forms take their arguments in OPPOSITE order —
         # running PG argument order through Spark silently trims the
         # wrong string (found by the value-checked regress probe).
-        args = _split_args(m.group(2))
+        args = _split_commas(m.group(2))
         if len(args) == 2:
             return f"{m.group(1).lower()}({args[1].strip()}, {args[0].strip()})"
         return m.group(0)
@@ -905,7 +903,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
             m.group(1), m.group(2), m.group(3), m.group(4), m.group(5),
             m.group(6),
         )
-        args = _split_args(args_s)
+        args = _split_commas(args_s)
         cols = [c.strip() for c in cols_s.split(",") if c.strip()]
         if fn.lower() == "generate_series":
             if len(cols) != 1:
@@ -1052,7 +1050,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         # any scalar key to text (json.c), so quote literal
         # numeric/bool keys at plan time; other non-literal keys stay
         # loud via named_struct's own error
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         for i in range(0, len(args) - 1, 2):
             k = args[i].strip()
             if re.match(
@@ -1213,7 +1211,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         stripped (typed quoting/escaping for free); `json '...'`-typed
         args splice raw. Same-type calls keep identical output to the
         old to_json(array(...)) lowering (compact ',' separator)."""
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if not args:
             return "'[]'"
         parts, kinds = [], set()
@@ -1273,7 +1271,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
             return "CAST(NULL AS STRING)"
         compiled = _pg_format_compile(
             _lit_value(tok, lits),
-            _split_args(argstr) if argstr else [],
+            _split_commas(argstr) if argstr else [],
             lits,
         )
         if compiled is not None:
@@ -1301,7 +1299,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     sql = _PG_TYPEOF_RE.sub("typeof(", sql)
 
     def sub_log(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) == 1:
             return f"log10({m.group(1)})"
         return m.group(0)
@@ -1316,7 +1314,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     # where Math.pow(1.0, NaN) returns NaN; inline the base=1 guard
     # (no registered function needed, rewrite() stays self-contained)
     def sub_power(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) != 2:
             return m.group(0)
         x, y = (a.strip() for a in args)
@@ -1345,7 +1343,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     sql = _TRUNC_N_RE.sub(sub_trunc_n, sql)
 
     def sub_trunc1(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) == 1:  # numeric trunc-to-integer (toward zero)
             return f"CAST(({m.group(1)}) AS BIGINT)"
         return m.group(0)  # 2-arg date trunc stays native
@@ -1369,7 +1367,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     def sub_hash_path_arr(m: re.Match) -> str:
         j, args_s = m.group(1), m.group(2)
         elems = []
-        for a in _split_args(args_s):
+        for a in _split_commas(args_s):
             a = a.strip()
             lm = _MASK_RE.match(a)
             if lm and a == lm.group(0):
@@ -1395,7 +1393,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         order = ("years", "months", "weeks", "days", "hours",
                  "mins", "secs")
         vals = {k: "0" for k in order}
-        for part in _split_args(m.group(1)):
+        for part in _split_commas(m.group(1)):
             nm = re.match(r"(?is)^\s*(\w+)\s*:?=>?\s*(.+)$", part)
             if nm is None or nm.group(1).lower() not in vals:
                 return m.group(0)
@@ -1645,7 +1643,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     def _mi_total(args_s: str):
         from decimal import Decimal
 
-        args = [a.strip() for a in _split_args(args_s)] \
+        args = [a.strip() for a in _split_commas(args_s)] \
             if args_s.strip() else []
         if len(args) > 7 or any(
             not re.fullmatch(r"[-+]?\d+(?:\.\d+)?", a) for a in args
@@ -1715,7 +1713,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
         # the ROW(...) ctor lowered earlier to struct((e) AS f1, ...):
         # recover (name, expr) pairs
         pairs: list[tuple[str, str]] = []
-        for i, a in enumerate(_split_args(base_args), start=1):
+        for i, a in enumerate(_split_commas(base_args), start=1):
             am = re.match(r"(?is)^(.*?)\s+AS\s+(\w+)\s*$", a.strip())
             if am:
                 pairs.append((am.group(2), am.group(1).strip()))
@@ -1919,7 +1917,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     # "any" — a per-argument null test folds to an integer sum
     def sub_num_nulls(m: re.Match) -> str:
         which = m.group(1).lower()
-        args = _split_args(m.group(2))
+        args = _split_commas(m.group(2))
         op = "IS NOT NULL" if which == "nonnulls" else "IS NULL"
         terms = " + ".join(f"CAST(({a.strip()}) {op} AS INT)"
                            for a in args)
@@ -1940,7 +1938,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     # offset or region id — translate PG's zone ABBREVIATIONS through
     # the datetime.c Default-file table before handing over
     def sub_make_tstz_zone(m: re.Match) -> str:
-        args = [a.strip() for a in _split_args(m.group(1))]
+        args = [a.strip() for a in _split_commas(m.group(1))]
         if len(args) == 7:
             zm = _MASK_RE.fullmatch(args[6])
             if zm:
@@ -2317,7 +2315,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     # parallel key/value arrays).
     def sub_jsonb_mut(m: re.Match) -> str:
         fn = m.group(1).lower()
-        args = [a.strip() for a in _split_args(m.group(2))]
+        args = [a.strip() for a in _split_commas(m.group(2))]
         if len(args) >= 2:
             args[1] = _braced_to_array(args[1], lits, null_elems=True)
         if len(args) == 3:
@@ -2336,7 +2334,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     sql = _HASH_MINUS_RE.sub(sub_hash_minus, sql)
 
     def sub_json_object(m: re.Match) -> str:
-        args = [a.strip() for a in _split_args(m.group(2))]
+        args = [a.strip() for a in _split_commas(m.group(2))]
         if len(args) not in (1, 2):
             return m.group(0)
         trees = []
@@ -2432,7 +2430,7 @@ def _rewrite_pg_misc_fns(sql: str, lits: list[str]) -> str:
     # width_bucket over all-literal arguments: numeric.c
     # width_bucket_numeric's argument checks run at plan time
     def sub_width_bucket(m: re.Match) -> str:
-        args = [a.strip() for a in _split_args(m.group(1))]
+        args = [a.strip() for a in _split_commas(m.group(1))]
         if len(args) != 4:
             return m.group(0)
         vals = []

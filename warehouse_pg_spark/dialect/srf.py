@@ -8,7 +8,7 @@ anything unrecognized passes through loud).
 from __future__ import annotations
 
 import re
-from warehouse_pg_spark.dialect.mask import _split_args
+from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas
 
 
 # FROM unnest(a)/generate_series(..) with a BARE alias or none at all
@@ -84,14 +84,8 @@ def _rewrite_nested_srf(sql: str) -> str:
     srf_open = re.compile(r"(?i)\b(generate_series|unnest)\s*\(")
     calls = []
     for cm in srf_open.finditer(head):
-        depth, j = 1, cm.end()
-        while j < len(head) and depth:
-            if head[j] == "(":
-                depth += 1
-            elif head[j] == ")":
-                depth -= 1
-            j += 1
-        if depth:
+        j = _close_paren(head, cm.end())
+        if j < 0:
             return sql
         calls.append((cm.start(), cm.end(), j, cm.group(1).lower()))
     if not any(srf_open.search(head[c[1] : c[2] - 1]) for c in calls):
@@ -109,7 +103,7 @@ def _rewrite_nested_srf(sql: str) -> str:
         if fn == "generate_series":
             arrays.append(f"sequence({body})")
         else:
-            args = _split_args(body)
+            args = _split_commas(body)
             if len(args) != 1:
                 return sql  # multi-arg unnest is FROM-only
             arrays.append(f"({args[0].strip()})")
@@ -146,7 +140,7 @@ def _rewrite_srf_from_bare(sql: str) -> str:
         if fn == "generate_series":
             gen = f"explode(sequence({args_s.strip()}))"
         else:
-            args = _split_args(args_s)
+            args = _split_commas(args_s)
             if len(args) != 1:
                 return m.group(0)  # multi-arg unnest: cols form only
             gen = f"explode({args[0].strip()})"
@@ -224,7 +218,7 @@ def _analyze_srf_item(item: str):
     if fn == "generate_series":
         arr = f"sequence({args})"
     else:
-        if len(_split_args(args)) != 1:
+        if len(_split_commas(args)) != 1:
             return None  # multi-arg unnest is FROM-only in PG
         arr = f"({args})"
     wrapper = (txt[: c.start()] + _SRF_VAR + txt[c.end():]).strip()
@@ -263,7 +257,7 @@ def _rewrite_srf_order_by(sql: str) -> str:
         ob, tail = ob[: tm.start()], " " + ob[tm.start():]
     if not re.search(r"(?i)\b(?:generate_series|unnest)\s*\(", ob):
         return sql
-    sel_items = _split_args(head)
+    sel_items = _split_commas(head)
     arrays: list[str] = []
     fields: list[str] = []
     names: list[str] = []
@@ -288,7 +282,7 @@ def _rewrite_srf_order_by(sql: str) -> str:
     if len(set(names)) != len(names):
         return sql
     ob_out: list[str] = []
-    for k, obit in enumerate(_split_args(ob)):
+    for k, obit in enumerate(_split_commas(ob)):
         expr = obit.strip()
         sfx = ""
         while True:

@@ -8,7 +8,7 @@ anything unrecognized passes through loud).
 from __future__ import annotations
 
 import re
-from warehouse_pg_spark.dialect.mask import _MASK_RE, _split_top_level_commas
+from warehouse_pg_spark.dialect.mask import _MASK_RE, _close_paren, _split_commas
 
 
 _TYPE_MAP = {
@@ -273,15 +273,12 @@ def _rewrite_create_table_defs(sql: str) -> str:
         return sql
     s = sql.strip()
     # matching close paren of the column list
-    depth, i = 1, m.end()
-    while i < len(s) and depth:
-        depth += {"(": 1, ")": -1}.get(s[i], 0)
-        i += 1
-    if depth:
+    i = _close_paren(s, m.end())
+    if i < 0:
         return sql
     head, defs, tail = s[: m.end()], s[m.end(): i - 1], s[i - 1:]
     cols = []
-    for item in _split_top_level_commas(defs):
+    for item in _split_commas(defs):
         item = item.strip()
         # SQL-standard `col int ARRAY[4]` / `col int ARRAY` spellings
         # normalize to the bracket form the column regex handles

@@ -13,7 +13,7 @@ from warehouse_pg_spark.dialect.mask import (
     _LIT,
     _MASK_RE,
     _lit_value,
-    _split_args,
+    _split_commas,
 )
 
 
@@ -115,7 +115,7 @@ def _rewrite_xml_ctors(sql: str, lits: list[str] | None = None) -> str:
 
     def build(kind: str, args_str: str) -> str | None:
         args = (
-            [a.strip() for a in _split_args(args_str)]
+            [a.strip() for a in _split_commas(args_str)]
             if args_str.strip()
             else []
         )
@@ -246,7 +246,7 @@ def _rewrite_xml_ctors(sql: str, lits: list[str] | None = None) -> str:
             if rest and re.match(r"(?is)^xmlattributes\s*\(", rest[0]):
                 inner = rest[0][rest[0].index("(") + 1 : -1]
                 a_items = named_items(
-                    [a.strip() for a in _split_args(inner)]
+                    [a.strip() for a in _split_commas(inner)]
                 )
                 if a_items is None:
                     return None
@@ -436,7 +436,7 @@ def _rewrite_xml_ctors(sql: str, lits: list[str] | None = None) -> str:
     # count()/name() scalars) also differ from Hive's text-only result.
     def sub_xpath(m: re.Match) -> str:
         fn = m.group(1).lower()
-        args = _split_args(m.group(2))
+        args = _split_commas(m.group(2))
         if len(args) != 2:
             return m.group(0)  # 3-arg namespace form stays loud
         path, doc = args[0].strip(), args[1].strip()

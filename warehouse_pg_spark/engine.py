@@ -21,6 +21,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from warehouse_pg_spark import sql_dialect
 from warehouse_pg_spark.catalog import Catalog, data_files, read_parquet_table
+from warehouse_pg_spark.dialect.mask import (
+    _close_paren,
+    _mask,
+    _split_commas,
+    _unmask,
+)
+from warehouse_pg_spark.dialect.ordering import _rewrite_dollar_quotes
 from warehouse_pg_spark.functions.pg import bind_functions
 from warehouse_pg_spark.operators.dml import ParquetTable
 from warehouse_pg_spark.session import SessionConfig, get_spark, local_frame
@@ -63,38 +70,14 @@ _CREATE_INDEX_RE = re.compile(
     r"(\w+)?\s*ON\s+([\w.]+)\s*(?:USING\s+\w+\s*)?\(([^)]*)\)\s*$",
     re.IGNORECASE,
 )
-_DROP_INDEX_RE = re.compile(
-    r"^DROP\s+INDEX\s+(?:CONCURRENTLY\s+)?(?:IF\s+EXISTS\s+)?([\w.]+)\s*$",
-    re.IGNORECASE,
-)
 _TXN_RE = re.compile(
     r"^(BEGIN(?:\s+(?:WORK|TRANSACTION))?|START\s+TRANSACTION|COMMIT(?:\s+WORK)?|END(?:\s+TRANSACTION)?)\s*$",
-    re.IGNORECASE,
-)
-_ROLLBACK_RE = re.compile(r"^ROLLBACK\b", re.IGNORECASE)
-_NOOP_DDL_RE = re.compile(
-    r"^(COMMENT\s+ON\b|GRANT\b|REVOKE\b|ALTER\s+TABLE\s+[\w.]+\s+OWNER\s+TO\b)",
     re.IGNORECASE,
 )
 # privilege kinds GRANT ALL expands to (parsenodes.h ACL_ALL_RIGHTS)
 _ALL_PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE", "TRUNCATE",
               "REFERENCES", "TRIGGER", "USAGE", "EXECUTE", "CREATE",
               "CONNECT", "TEMPORARY")
-# only the kinds whose 2-/3-arg shapes are (obj, priv) / (user, obj,
-# priv) fold; has_column/sequence/function_privilege carry extra
-# validation (wrong relkind, per-kind privilege sets) and stay loud
-_HAS_PRIV_RE = re.compile(
-    r"\bhas_(table|schema|database)_privilege\s*\(\s*"
-    r"'([^']*)'\s*,\s*'([^']*)'\s*(?:,\s*'([^']*)'\s*)?\)",
-    re.IGNORECASE,
-)
-# acl.c string_to_privilege: valid names per object kind
-_PRIV_NAMES = {
-    "table": {"SELECT", "INSERT", "UPDATE", "DELETE", "TRUNCATE",
-              "REFERENCES", "TRIGGER", "MAINTAIN", "ALL"},
-    "schema": {"CREATE", "USAGE", "ALL"},
-    "database": {"CREATE", "CONNECT", "TEMPORARY", "TEMP", "ALL"},
-}
 _COPY_TO_RE = re.compile(
     r"^COPY\s+(?:\((.+)\)|([\w.]+))\s+TO\s+'([^']+)'"
     r"\s*(?:WITH\s*)?(?:\(([^)]*)\))?\s*$",
@@ -150,9 +133,6 @@ _CLUSTER_RE = re.compile(
     r"^CLUSTER(?:\s+VERBOSE)?(?:\s+([\w.]+)(?:\s+USING\s+\w+)?)?\s*$",
     re.IGNORECASE,
 )
-_REINDEX_RE = re.compile(
-    r"^REINDEX\s+(?:INDEX|TABLE|SCHEMA|DATABASE|SYSTEM)\b", re.IGNORECASE
-)
 _DISCARD_RE = re.compile(r"^DISCARD\s+(ALL|PLANS|SEQUENCES|TEMP|TEMPORARY)\s*$", re.IGNORECASE)
 _VACUUM_RE = re.compile(
     r"^VACUUM(?:\s+(FULL|FREEZE|ANALYZE|VERBOSE))*(?:\s+([\w.]+))?\s*$",
@@ -173,40 +153,31 @@ _RETURNS_CLAUSE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_FUNC_RE = re.compile(
-    r"^DROP\s+FUNCTION\s+(IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
+    r"^DROP\s+(?:FUNCTION|PROCEDURE)\s+(IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
     re.IGNORECASE,
 )
 _CALL_RE = re.compile(
-    r"^\s*CALL\s+([\w.]+)\s*\((.*)\)\s*;?\s*$",
-    re.IGNORECASE | re.DOTALL,
+    r"^CALL\s+([\w.]+)\s*\((.*)\)$", re.IGNORECASE | re.DOTALL
 )
 
 
 def _lower_procedure_ddl(text: str) -> str:
-    """CREATE/DROP PROCEDURE (functioncmds.c, PG 11 procedures) lower
+    """CREATE PROCEDURE (functioncmds.c, PG 11 procedures) lowers
     onto the function machinery: a procedure is a RETURNS VOID
     function here (transaction control inside bodies stays out of
     scope — such bodies reject downstream, loudly)."""
     m = re.match(
-        r"(?is)^(\s*CREATE\s+(?:OR\s+REPLACE\s+)?)PROCEDURE\b(.*)$",
+        r"(?is)^(CREATE\s+(?:OR\s+REPLACE\s+)?)PROCEDURE\b(.*)$",
         text)
     if m:
         rest = m.group(2)
         pm = re.match(r'(?s)^(\s*[\w."]+\s*)\(', rest)
-        if pm:
-            depth, i = 1, pm.end()
-            while i < len(rest) and depth:
-                if rest[i] == "(":
-                    depth += 1
-                elif rest[i] == ")":
-                    depth -= 1
-                i += 1
+        i = _close_paren(rest, pm.end()) if pm else -1
+        if i > 0:
             return (f"{m.group(1)}FUNCTION{rest[:i]} RETURNS VOID"
                     f"{rest[i:]}")
-    dm = re.match(r"(?is)^\s*DROP\s+PROCEDURE\b(.*)$", text)
-    if dm:
-        return f"DROP FUNCTION{dm.group(1)}"
     return text
+
 _SET_GUC_RE = re.compile(
     r"^SET\s+(?:SESSION\s+|LOCAL\s+)?([\w.]+)\s*(?:=|\bTO\b)\s*(.+)$",
     re.IGNORECASE,
@@ -263,63 +234,114 @@ def _toplevel_from(text: str) -> bool:
         elif depth == 0:
             return True
     return False
-_CATALOG_VIEW_RE = re.compile(
-    r"\b(pg_catalog\.pg_tables|pg_tables|information_schema\.columns)\b",
+_OWNER_TO_RE = re.compile(
+    r"^ALTER\s+TABLE\s+[\w.]+\s+OWNER\s+TO\b", re.IGNORECASE)
+_LEADING_COMMENTS_RE = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*", re.DOTALL)
+# leading keyword, then the object keyword past the CREATE modifiers
+_KIND_RE = re.compile(
+    r"\s*(\w+)(?:\s+(?:(?:OR\s+REPLACE|GLOBAL|LOCAL|TEMP|TEMPORARY"
+    r"|UNLOGGED|UNIQUE|ORDERED)\s+)*(\w+))?",
     re.IGNORECASE,
 )
-_PG_STAT_RE = re.compile(r"\bpg_stat_user_tables\b", re.IGNORECASE)
 
 
-def _split_exprs(s: str) -> list[str]:
-    """Split an expression list on top-level commas (paren/quote aware)."""
-    parts, depth, buf, quote = [], 0, [], None
-    for ch in s:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf).strip())
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf).strip())
-    return [p for p in parts if p]
+def _lex(text: str) -> tuple[str, str, list[str]]:
+    """Lex a statement once with the dialect's own lexer: its text
+    without leading comments or the trailing `;`, and that text with
+    dollar quotes turned into literals, literals masked and comments
+    dropped (plus the masked literals)."""
+    body = text[_LEADING_COMMENTS_RE.match(text).end():]
+    body = body.rstrip().rstrip(";").rstrip()
+    masked, lits = _mask(_rewrite_dollar_quotes(body))
+    return body, masked, lits
+
+
+def _kind(masked: str) -> str:
+    """A statement's kind, read off its masked text: the leading
+    keyword, two words for CREATE/DROP/ALTER <object> and EXPLAIN
+    ANALYZE, and SELECT INTO for a SELECT that writes a table."""
+    m = _KIND_RE.match(masked)
+    if m is None:
+        return ""
+    word = m.group(1).upper()
+    if word in ("CREATE", "DROP", "ALTER", "EXPLAIN") and m.group(2):
+        return f"{word} {m.group(2).upper()}"
+    if word == "SELECT" and re.search(r"(?i)\bINTO\b", masked):
+        return "SELECT INTO"
+    return word
+
+
+# The one statement router (postgres.c sends each parsed statement to
+# ProcessUtility or to the planner): kind -> (class, Engine method).
+# "utility" methods take the statement text, run only the sub-texts
+# they execute through the dialect, and hand a form they do not parse
+# to Spark as written. "dml" kinds run the expression passes and the
+# dialect rewrite like a query, then their method through _maybe_dml.
+# A kind not listed is a query. A new statement form is one entry.
+_ROUTES: dict[str, tuple[str, str]] = {
+    "SET": ("utility", "_set_stmt"),
+    "RESET": ("utility", "_reset_stmt"),
+    "SHOW": ("utility", "_show_stmt"),
+    "DISCARD": ("utility", "_discard_stmt"),
+    "PREPARE": ("utility", "_prepare_stmt"),
+    "EXECUTE": ("utility", "_execute_stmt"),
+    "DEALLOCATE": ("utility", "_deallocate_stmt"),
+    "VACUUM": ("utility", "_vacuum_stmt"),
+    "ANALYZE": ("utility", "_analyze_stmt"),
+    "CLUSTER": ("utility", "_cluster_stmt"),
+    "REFRESH": ("utility", "_refresh_matview"),
+    "EXPLAIN ANALYZE": ("utility", "_explain_analyze"),
+    "CALL": ("utility", "_call_stmt"),
+    **dict.fromkeys(("BEGIN", "START", "COMMIT", "END"),
+                    ("utility", "_txn_stmt")),
+    "ROLLBACK": ("utility", "_rollback_stmt"),
+    **dict.fromkeys(("GRANT", "REVOKE"), ("utility", "_acl_stmt")),
+    # metadata with no second user, owner or physical index behind it
+    **dict.fromkeys(("COMMENT", "REINDEX", "REASSIGN", "DROP OWNED",
+                     "DROP INDEX"), ("utility", "_noop_stmt")),
+    "CREATE INDEX": ("utility", "_create_index"),
+    "ALTER TABLE": ("utility", "_alter_table"),
+    **dict.fromkeys(("CREATE SEQUENCE", "ALTER SEQUENCE", "DROP SEQUENCE"),
+                    ("utility", "_sequence_ddl")),
+    "CREATE FUNCTION": ("utility", "_create_function"),
+    "CREATE PROCEDURE": ("utility", "_create_procedure"),
+    **dict.fromkeys(("DROP FUNCTION", "DROP PROCEDURE"),
+                    ("utility", "_drop_function")),
+    "CREATE AGGREGATE": ("utility", "_create_aggregate"),
+    "DROP AGGREGATE": ("utility", "_drop_aggregate"),
+    **{f"{verb} {obj}": ("utility", "_type_ddl")
+       for verb in ("CREATE", "ALTER", "DROP") for obj in ("TYPE", "DOMAIN")},
+    **{f"{verb} {obj}": ("utility", "_role_ddl")
+       for verb in ("CREATE", "ALTER", "DROP")
+       for obj in ("ROLE", "USER", "GROUP")},
+    "CREATE MATERIALIZED": ("utility", "_create_matview"),
+    "DROP MATERIALIZED": ("utility", "_drop_matview"),
+    "INSERT": ("dml", "_insert_stmt"),
+    "UPDATE": ("dml", "_update_stmt"),
+    "DELETE": ("dml", "_delete_stmt"),
+    "MERGE": ("dml", "_merge_stmt"),
+    "COPY": ("dml", "_copy_stmt"),
+    "TRUNCATE": ("dml", "_truncate_stmt"),
+    "CREATE TABLE": ("dml", "_create_table_stmt"),
+    "SELECT INTO": ("dml", "_select_into_stmt"),
+}
 
 
 def _split_assignments(s: str) -> list[tuple[str, str]]:
-    """Split `a = e1, b = e2` on top-level commas (paren/quote aware)."""
-    parts, depth, buf, quote = [], 0, [], None
-    for ch in s:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-            continue
-        if ch in "'\"":
-            quote = ch
-        elif ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf))
+    """`a = e1, b = e2` → [(a, e1), (b, e2)]."""
     out = []
-    for p in parts:
+    for p in _split_commas(s):
         col, _, expr = p.partition("=")
         out.append((col.strip(), expr.strip()))
     return out
+
+
+def _split_returning(s: str) -> tuple[str, str | None]:
+    """(the statement without its RETURNING clause, the RETURNING list)."""
+    rm = _RETURNING_RE.search(s)
+    if rm is None:
+        return s, None
+    return s[: rm.start()].strip(), rm.group(1).strip()
 
 
 @dataclass
@@ -329,7 +351,10 @@ class MaterializedView:
     path: str
 
 
-from warehouse_pg_spark.engine_catalog import CatalogViewsMixin  # noqa: E402
+from warehouse_pg_spark.engine_catalog import (  # noqa: E402
+    _CATALOG_VIEWS,
+    CatalogViewsMixin,
+)
 from warehouse_pg_spark.engine_fn_ddl import FunctionDDLMixin  # noqa: E402
 from warehouse_pg_spark.engine_maint import MaintenanceMixin
 from warehouse_pg_spark.engine_proc import ProcedureMixin
@@ -421,83 +446,57 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
 
     # ---------------------------------------------------------------- query
     def sql(self, text: str, **named_args) -> DataFrame:
-        """Execute SQL through the PG→Spark dialect shim."""
-        if re.search(r"(?i)\bPROCEDURE\b", text):
-            text = _lower_procedure_ddl(text)
-        cm_ = _CALL_RE.match(text)
-        if cm_ is not None:
-            # CALL proc(args) (functioncmds.c ExecuteCallStmt): the
-            # void-function invocation path runs the stored body
-            return self.sql(f"SELECT {cm_.group(1)}({cm_.group(2)})")
-        seq = self._maybe_sequence(text)
-        if seq is not None:
-            return seq
-        sess = self._maybe_session_stmt(text)
-        if sess is not None:
-            return sess
-        # pg_catalog views must exist before function DDL analyzes a
-        # body that scans them (Spark validates SQL-UDF bodies at
-        # CREATE time); the hook is a no-op otherwise
-        text = self._maybe_pg_catalog(text)
-        fn = self._maybe_create_function(text)
-        if fn is not None:
-            return fn
-        agg = self._maybe_create_aggregate(text)
-        if agg is not None:
-            return agg
-        if self._user_types.maybe_ddl(text):
-            return self._tag(0)
-        self._maybe_register_rowtype(text)
-        vp = self._maybe_call_void_proc(text)
-        if vp is not None:
-            return vp
-        text = self._substitute_interpreted_calls(text)
-        text = self._substitute_shadowed_calls(text)
-        text = self._substitute_aggregate_calls(text)
-        text = self._substitute_polymorphic_calls(text)
-        text = self._lower_typed_table(text)
-        text = self._user_types.rewrite(text)
-        text = self._lower_srf_select(text)
-        text = self._substitute_variadic_calls(text)
-        ea = _EXPLAIN_ANALYZE_RE.match(text.strip().rstrip(";"))
-        if ea:
-            return self._explain_analyze(ea.group(1))
-        text = self._substitute_sequence_calls(text)
-        text = self._substitute_setting_calls(text)
-        text = self._substitute_privilege_calls(text)
-        if _PG_STAT_RE.search(text):
-            # pg_stat_user_tables (system_views.sql; the DBA's row-count
-            # dashboard): relname + n_live_tup from the engine's
-            # metrics() introspection. Gated on its own regex because it
-            # runs a count per registered table.
-            import pyspark.sql.functions as F
+        """Execute one PG-dialect statement: lex it once, read its kind
+        off the masked text, and run the one handler `_ROUTES` names
+        for that kind (a kind it does not list runs as a query)."""
+        body, masked, lits = _lex(text)
+        kind = _kind(masked)
+        route, handler = _ROUTES.get(kind, ("query", ""))
+        if route == "utility":
+            return getattr(self, handler)(body)
+        return self._query(kind, body, masked, lits, named_args)
 
-            self.metrics().select(
-                F.lit("public").alias("schemaname"),
-                F.col("table_name").alias("relname"),
-                F.col("n_rows").alias("n_live_tup"),
-                F.col("n_bytes"),
-                F.col("n_files"),
-            ).createOrReplaceTempView("pg_stat_user_tables")
-        text = self._maybe_pg_catalog(text)
-        if _CATALOG_VIEW_RE.search(text):
-            self._ensure_catalog_views()
-            text = re.sub(
-                r"\bpg_catalog\.pg_tables\b", "pg_tables", text, flags=re.IGNORECASE
-            )
-            text = re.sub(
-                r"\binformation_schema\.columns\b",
-                "information_schema_columns",
-                text,
-                flags=re.IGNORECASE,
-            )
+    def _query(self, kind: str, body: str, masked: str, lits: list[str],
+               named_args: dict | None = None) -> DataFrame:
+        """The plannable path: user-function expansions over the text,
+        the name-gated passes over its masked form (so a name inside a
+        literal or comment never fires one), the dialect rewrite, then
+        the DML handler of a dml kind, else Spark."""
+        if kind == "SELECT":
+            vp = self._maybe_call_void_proc(body)
+            if vp is not None:
+                return vp
+        text = body
+        if kind == "CREATE TABLE":
+            self._maybe_register_rowtype(text)
+            text = self._lower_typed_table(text)
+        for expand in (
+            self._substitute_interpreted_calls,
+            self._substitute_shadowed_calls,
+            self._substitute_aggregate_calls,
+            self._substitute_polymorphic_calls,
+            self._user_types.rewrite,
+            self._lower_srf_select,
+            self._substitute_variadic_calls,
+        ):
+            text = expand(text)
+        if text != body:
+            _, masked, lits = _lex(text)
+        named = masked
+        for name_pass in (
+            self._substitute_sequence_calls,
+            self._substitute_setting_calls,
+            self._substitute_privilege_calls,
+            self._maybe_pg_catalog,
+        ):
+            named = name_pass(named, lits)
+        if named != masked:
+            text = _unmask(named, lits)
         lowered = self._rewrite(text)
-        ddl = self._maybe_ddl(lowered)
-        if ddl is not None:
-            return ddl
-        dml = self._maybe_dml(lowered)
-        if dml is not None:
-            return dml
+        if _ROUTES.get(kind, ("query",))[0] == "dml":
+            dml = self._maybe_dml(lowered, kind)
+            if dml is not None:
+                return dml
         from warehouse_pg_spark.functions.interval_out import present_intervals
 
         if named_args:
@@ -505,6 +504,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         # Calendar/YM interval result columns render as PG interval text
         # (interval_out) — PySpark cannot collect() those types at all
         return present_intervals(self._sql_autoschema(lowered))
+
+    def _spark_stmt(self, text: str) -> DataFrame:
+        """A statement form no handler parses goes to Spark as written
+        (Spark's own SET/SHOW/ANALYZE TABLE/..., or Spark's error)."""
+        return self.spark.sql(self._rewrite(text))
 
     def _rewrite(self, text: str) -> str:
         """Dialect-rewrite `text` and bind the PG functions it calls.
@@ -630,15 +634,15 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             )
         )
 
-    def _explain_analyze(self, body: str) -> DataFrame:
+    def _explain_analyze(self, text: str) -> DataFrame:
         """PG EXPLAIN ANALYZE (explain.c ExplainOnePlan): execute the
-        query, then return the plan annotated with actual row count and
-        wall time, one text row per line (PG's `QUERY PLAN` result
+        statement, then return the plan annotated with actual row count
+        and wall time, one text row per line (PG's `QUERY PLAN` result
         shape). Uses the AQE-final plan — the distributed analogue of
         PG's instrumented actual plan."""
         import time
 
-        df = self.spark.sql(self._rewrite(body))
+        df = self.sql(_EXPLAIN_ANALYZE_RE.match(text).group(1))
         t0 = time.perf_counter()
         n_rows = df.count()
         elapsed_ms = (time.perf_counter() - t0) * 1000.0
@@ -656,7 +660,29 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         )
 
     # --------------------------------------------------- CREATE FUNCTION
-    def _maybe_create_function(self, text: str) -> DataFrame | None:
+    def _drop_function(self, s: str) -> DataFrame:
+        """DROP FUNCTION | PROCEDURE: the session function goes."""
+        m = _DROP_FUNC_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        fname = m.group(2).split(".")[-1]
+        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
+        self._table_functions.pop(fname.lower(), None)
+        self._variadic_functions.pop(fname.lower(), None)
+        return self._tag(0)
+
+    def _create_procedure(self, s: str) -> DataFrame:
+        return self._create_function(_lower_procedure_ddl(s))
+
+    def _call_stmt(self, s: str) -> DataFrame:
+        """CALL proc(args) (functioncmds.c ExecuteCallStmt): the
+        void-function invocation path runs the stored body."""
+        m = _CALL_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        return self.sql(f"SELECT {m.group(1)}({m.group(2)})")
+
+    def _create_function(self, s: str) -> DataFrame:
         """SQL-text CREATE FUNCTION (commands/functioncmds.c;
         pl/plpgsql for LANGUAGE plpgsql bodies). Runs BEFORE the dialect
         rewrite so dollar-quoted bodies survive intact; the compiled
@@ -670,40 +696,19 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         assignments become substitutions, IF becomes CASE, constant
         FOR loops unroll. STRICT / RETURNS NULL ON NULL INPUT wraps the
         expression in a null-gate, matching fmgr's strict-call
-        short-circuit."""
-        s = text.strip().rstrip(";").strip()
-        m = _DROP_FUNC_RE.match(s)
-        if m:
-            fname = m.group(2).split(".")[-1]
-            self.spark.sql(
-                f"DROP TEMPORARY FUNCTION IF EXISTS {fname}"
-            )
-            self._table_functions.pop(fname.lower(), None)
-            self._variadic_functions.pop(fname.lower(), None)
-            return self._tag(0)
+        short-circuit. The catalog relations the body names are built
+        first: Spark analyzes a SQL-function body at CREATE time."""
         m = _CREATE_FUNC_HEAD_RE.match(s)
         if m is None:
-            return None
+            return self._spark_stmt(s)
         from warehouse_pg_spark.plpgsql import compile_plpgsql
 
         map_decl_type = self._decl_type
         name = m.group(1).split(".")[-1].strip('"')
         # arg list ends at the MATCHING close paren (types like
         # numeric(10,2) nest)
-        depth, i, quote = 1, m.end(), None
-        while i < len(s) and depth:
-            ch = s[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch == "'":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = _close_paren(s, m.end())
+        if i < 0:
             raise ValueError("CREATE FUNCTION: unbalanced parameter list")
         rawargs = s[m.end(): i - 1]
         rm = _RETURNS_CLAUSE_RE.match(s[i:])
@@ -743,14 +748,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         table_cols_raw: str | None = None
         if rettype.upper() == "TABLE":
             tm = re.match(r"(?s)\s*\(", tail)
-            if tm:
-                depth2, j = 1, tm.end()
-                while j < len(tail) and depth2:
-                    if tail[j] == "(":
-                        depth2 += 1
-                    elif tail[j] == ")":
-                        depth2 -= 1
-                    j += 1
+            j = _close_paren(tail, tm.end()) if tm else -1
+            if j > 0:
                 table_cols_raw = tail[tm.end(): j - 1]
                 tail = tail[j:]
         params: list[tuple[str, str]] = []
@@ -765,7 +764,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         defaults: dict[str, str] = {}
         variadic_at: int | None = None
         for i, a in enumerate(
-            (x.strip() for x in _split_exprs(rawargs) if x.strip()),
+            (x.strip() for x in _split_commas(rawargs)),
             start=1,
         ):
             dm = re.match(
@@ -914,9 +913,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             return params[k - 1][0] if 1 <= k <= len(params) \
                 else m2.group(0)
 
-        from warehouse_pg_spark.sql_dialect import _mask, _unmask
-
         _masked_b, _lits_b = _mask(body)
+        _masked_b = self._maybe_pg_catalog(_masked_b, _lits_b)
         body = _unmask(
             re.sub(r"\$(\d+)\b", _dollar_ref, _masked_b), _lits_b)
         if setof_m or table_cols_raw is not None or out_params:
@@ -1133,7 +1131,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             cols = list(out_cols)
         elif table_cols_raw is not None:
             cols = []
-            for item in _split_exprs(table_cols_raw):
+            for item in _split_commas(table_cols_raw):
                 toks = item.strip().split()
                 if len(toks) < 2:
                     raise ValueError(
@@ -1245,13 +1243,13 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         return self._tag(0)
 
     # ------------------------------------------- prepared statements / GUCs
-    def _maybe_session_stmt(self, text: str) -> DataFrame | None:
-        """PREPARE/EXECUTE/DEALLOCATE (commands/prepare.c), SET/SHOW/
-        RESET session GUCs (utils/misc/guc.c), DISCARD (commands/
-        discard.c), and the maintenance statements VACUUM/ANALYZE
-        (commands/vacuum.c, analyze.c) — the session-protocol surface
-        every PG client and pg_dump script drives."""
-        s = text.strip().rstrip(";").strip()
+    # The session-protocol surface every PG client and pg_dump script
+    # drives: SET/SHOW/RESET session GUCs (utils/misc/guc.c), DISCARD
+    # (commands/discard.c), PREPARE/EXECUTE/DEALLOCATE
+    # (commands/prepare.c) and VACUUM/ANALYZE/CLUSTER (commands/
+    # vacuum.c, analyze.c, cluster.c). spark.* keys and Spark's own
+    # forms (SHOW TABLES, ANALYZE TABLE, ...) go to Spark.
+    def _set_stmt(self, s: str) -> DataFrame:
         m = re.match(
             r"(?is)^SET\s+(?:(?:SESSION|LOCAL)\s+)?"
             r"(ROLE|SESSION\s+AUTHORIZATION)\s+(\w+|'[^']*')$", s)
@@ -1265,189 +1263,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             self._gucs[key] = ("none" if who.upper() in
                                ("NONE", "DEFAULT") else who.lower())
             return self._tag(0)
-        m = _RESET_RE.match(s)
-        if m:
-            key = m.group(1).lower()
-            if key == "all":
-                self._gucs.clear()
-                self._gucs.update(_GUC_DEFAULTS)
-                self.spark.conf.set(
-                    "spark.sql.session.timeZone", self._default_timezone
-                )
-                self.spark.conf.set("spark.sql.ansi.enabled", "false")
-                from warehouse_pg_spark.dialect.fts import (
-                    set_default_config,
-                )
-                set_default_config("english")
-            else:
-                self._gucs.pop(key, None)
-                if key in _GUC_DEFAULTS:
-                    self._gucs[key] = _GUC_DEFAULTS[key]
-                if key in ("timezone", "time zone"):
-                    self.spark.conf.set(
-                        "spark.sql.session.timeZone", self._default_timezone
-                    )
-                elif key == "strict_errors":
-                    self.spark.conf.set("spark.sql.ansi.enabled", "false")
-                elif key == "xmlbinary":
-                    sql_dialect.set_xmlbinary("base64")
-                elif key == "default_text_search_config":
-                    from warehouse_pg_spark.dialect.fts import (
-                        set_default_config,
-                    )
-                    set_default_config("english")
-            return self._tag(0)
-        dm_ = _DISCARD_RE.match(s)
-        if dm_:
-            # DISCARD ALL/SEQUENCES (commands/discard.c): sequence
-            # session state (currval's "last value") resets — a
-            # following currval errors as unset, as in PG
-            if dm_.group(1).upper() in ("ALL", "SEQUENCES"):
-                for _sq in self._sequences.values():
-                    _sq.pop("last", None)
-            if dm_.group(1).upper() != "ALL":
-                return self._tag(0)
-            # DISCARD ALL: session back to pristine
-            self._prepared.clear()
-            self._gucs.clear()
-            self._gucs.update(_GUC_DEFAULTS)
-            sql_dialect.set_xmlbinary("base64")
-            self.spark.conf.set(
-                "spark.sql.session.timeZone", self._default_timezone
-            )
-            self.spark.conf.set("spark.sql.ansi.enabled", "false")
-            return self._tag(0)
-        m = _VACUUM_RE.match(s)
-        if m:
-            name = (m.group(2) or "").split(".")[-1]
-            # table-less VACUUM (whole database) and VACUUM on
-            # non-writable relations are advisory no-ops here
-            if name and self._writable_by_name(name) is not None:
-                self.vacuum(name)
-            return self._tag(0)
-        m = _ANALYZE_RE.match(s)
-        if m:
-            name = (m.group(1) or "").split(".")[-1]
-            cols = tuple(
-                c.strip() for c in (m.group(2) or "").split(",") if c.strip()
-            )
-            if name:
-                try:
-                    self.analyze(name, cols)
-                except Exception:
-                    # stats are advisory: temp views / attached parquet
-                    # have no catalog entry for Spark's ANALYZE TABLE
-                    pass
-            return self._tag(0)
-        m = _CREATE_MV_RE.match(s)
-        if m:
-            # CREATE MATERIALIZED VIEW ... AS SELECT (commands/matview.c)
-            if m.group(1) and m.group(2).split(".")[-1] in self._matviews:
-                return self._tag(0)  # IF NOT EXISTS
-            self.create_materialized_view(m.group(2).split(".")[-1], m.group(3))
-            return self._tag(0)
-        m = _REFRESH_MV_RE.match(s)
-        if m:
-            # REFRESH MATERIALIZED VIEW [CONCURRENTLY] — re-runs the
-            # stored query; CONCURRENTLY is moot (temp-view swap is
-            # atomic to readers of the name)
-            self.refresh_materialized_view(m.group(1).split(".")[-1])
-            return self._tag(0)
-        m = _DROP_MV_RE.match(s)
-        if m:
-            name = m.group(2).split(".")[-1]
-            mv = self._matviews.pop(name, None)
-            if mv is None and not m.group(1):
-                raise KeyError(f'materialized view "{name}" does not exist')
-            if mv is not None:
-                self.spark.catalog.dropTempView(name)
-                import shutil
-
-                shutil.rmtree(mv.path, ignore_errors=True)
-            return self._tag(0)
-        m = _CLUSTER_RE.match(s)
-        if m:
-            # CLUSTER tbl [USING idx] (commands/cluster.c): physically
-            # reorder by the advisory index (CREATE INDEX records its
-            # columns); our layout analogue is the Z-order rewrite.
-            # No recorded index, or a non-writable relation → no-op.
-            name = (m.group(1) or "").split(".")[-1]
-            hints = self._index_hints.get(name, [])
-            if name and hints and self._writable_by_name(name) is not None:
-                self.cluster_zorder(name, hints[-1])
-            return self._tag(0)
-        if _REINDEX_RE.match(s):
-            # REINDEX (indexcmds.c): indexes are advisory scan hints
-            # here, nothing to rebuild
-            return self._tag(0)
-        m = _PREPARE_RE.match(s)
-        if m:
-            name = m.group(1).lower()
-            # PG: re-PREPARE of a live name is an error (prepare.c)
-            if name in self._prepared:
-                raise ValueError(f'prepared statement "{name}" already exists')
-            declared = m.group(2)
-            nparams = (
-                len([p for p in declared.split(",") if p.strip()])
-                if declared is not None
-                else None
-            )
-            self._prepared[name] = (m.group(3).strip(), nparams)
-            return self._tag(0)
-        m = _DEALLOCATE_RE.match(s)
-        if m:
-            name = m.group(1).lower()
-            if name == "all":
-                self._prepared.clear()
-            else:
-                self._prepared.pop(name, None)
-            return self._tag(0)
-        m = _EXECUTE_STMT_RE.match(s)
-        if m:
-            name = m.group(1).lower()
-            if name not in self._prepared:
-                # EXECUTE of an unknown name may be Spark's own EXECUTE
-                # IMMEDIATE etc. — only claim names we prepared.
-                if m.group(2) is None:
-                    return None
-                raise KeyError(f'prepared statement "{name}" does not exist')
-            body, nparams = self._prepared[name]
-            args = self._split_args(m.group(2) or "")
-            # Single-pass \$(\d+) substitution over the literal-masked
-            # body: $12 never half-matches as $1, $n inside string
-            # literals is untouched, and out-of-range indexes error as
-            # PG does (prepare.c EvaluateParams).
-            from warehouse_pg_spark.sql_dialect import _mask, _unmask
-
-            masked, lits = _mask(body)
-            # EvaluateParams (prepare.c): supplied count must equal the
-            # declared count (or, when PREPARE declared no types, the
-            # highest $n the body references).
-            refs = [int(x) for x in re.findall(r"\$(\d+)", masked)]
-            expected = nparams if nparams is not None else (
-                max(refs) if refs else 0
-            )
-            if len(args) != expected:
-                raise ValueError(
-                    "wrong number of parameters for prepared statement "
-                    f'"{name}": expected {expected}, got {len(args)}'
-                )
-
-            def _param(pm: re.Match) -> str:
-                idx = int(pm.group(1))
-                if not 1 <= idx <= len(args):
-                    raise IndexError(
-                        f"there is no parameter ${idx} "
-                        f"(statement has {len(args)} arguments)"
-                    )
-                return args[idx - 1]
-
-            body = _unmask(re.sub(r"\$(\d+)", _param, masked), lits)
-            return self.sql(body)
         m = _SET_GUC_RE.match(s)
         if m and not m.group(1).lower().startswith("spark."):
-            # spark.* keys fall through to Spark's own SET statement
-            key, val = m.group(1).lower(), m.group(2).strip().rstrip(";")
+            key, val = m.group(1).lower(), m.group(2).strip()
             if key == "timezone" and val.upper() in ("DEFAULT", "LOCAL"):
                 val = self._default_timezone
             else:
@@ -1485,63 +1303,337 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             self._gucs["timezone"] = val
             self.spark.conf.set("spark.sql.session.timeZone", val)
             return self._tag(0)
+        return self._spark_stmt(s)
+
+    def _reset_stmt(self, s: str) -> DataFrame:
+        m = _RESET_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        key = m.group(1).lower()
+        if key == "all":
+            self._gucs.clear()
+            self._gucs.update(_GUC_DEFAULTS)
+            self.spark.conf.set(
+                "spark.sql.session.timeZone", self._default_timezone
+            )
+            self.spark.conf.set("spark.sql.ansi.enabled", "false")
+            from warehouse_pg_spark.dialect.fts import set_default_config
+            set_default_config("english")
+            return self._tag(0)
+        self._gucs.pop(key, None)
+        if key in _GUC_DEFAULTS:
+            self._gucs[key] = _GUC_DEFAULTS[key]
+        if key in ("timezone", "time zone"):
+            self.spark.conf.set(
+                "spark.sql.session.timeZone", self._default_timezone
+            )
+        elif key == "strict_errors":
+            self.spark.conf.set("spark.sql.ansi.enabled", "false")
+        elif key == "xmlbinary":
+            sql_dialect.set_xmlbinary("base64")
+        elif key == "default_text_search_config":
+            from warehouse_pg_spark.dialect.fts import set_default_config
+            set_default_config("english")
+        return self._tag(0)
+
+    def _show_stmt(self, s: str) -> DataFrame:
         m = _SHOW_GUC_RE.match(s)
-        if m and m.group(1).upper() not in (
+        if m is None or m.group(1).upper() in (
             "TABLES", "DATABASES", "SCHEMAS", "NAMESPACES", "CATALOGS",
             "VIEWS", "FUNCTIONS", "PARTITIONS", "COLUMNS", "TBLPROPERTIES",
-        ) and not m.group(1).lower().startswith("spark."):
-            key = re.sub(r"\s+", " ", m.group(1).lower())
-            if key == "all":
-                return local_frame(
-                    self.spark, sorted(self._gucs.items()),
-                    "name STRING, setting STRING",
+        ) or m.group(1).lower().startswith("spark."):
+            return self._spark_stmt(s)
+        key = re.sub(r"\s+", " ", m.group(1).lower())
+        if key == "all":
+            return local_frame(
+                self.spark, sorted(self._gucs.items()),
+                "name STRING, setting STRING",
+            )
+        if key in ("timezone", "time zone"):
+            val = self.spark.conf.get("spark.sql.session.timeZone")
+            key = "timezone"
+        else:
+            val = self._gucs.get(key)
+            if val is None:
+                raise KeyError(f'unrecognized configuration parameter "{key}"')
+        return local_frame(self.spark, [(val,)], f"{key} STRING")
+
+    def _discard_stmt(self, s: str) -> DataFrame:
+        m = _DISCARD_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        # DISCARD ALL/SEQUENCES (commands/discard.c): sequence session
+        # state (currval's "last value") resets — a following currval
+        # errors as unset, as in PG
+        if m.group(1).upper() in ("ALL", "SEQUENCES"):
+            for _sq in self._sequences.values():
+                _sq.pop("last", None)
+        if m.group(1).upper() != "ALL":
+            return self._tag(0)
+        # DISCARD ALL: session back to pristine
+        self._prepared.clear()
+        self._gucs.clear()
+        self._gucs.update(_GUC_DEFAULTS)
+        sql_dialect.set_xmlbinary("base64")
+        self.spark.conf.set(
+            "spark.sql.session.timeZone", self._default_timezone
+        )
+        self.spark.conf.set("spark.sql.ansi.enabled", "false")
+        return self._tag(0)
+
+    def _vacuum_stmt(self, s: str) -> DataFrame:
+        m = _VACUUM_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = (m.group(2) or "").split(".")[-1]
+        # table-less VACUUM (whole database) and VACUUM on
+        # non-writable relations are advisory no-ops here
+        if name and self._writable_by_name(name) is not None:
+            self.vacuum(name)
+        return self._tag(0)
+
+    def _analyze_stmt(self, s: str) -> DataFrame:
+        m = _ANALYZE_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = (m.group(1) or "").split(".")[-1]
+        cols = tuple(
+            c.strip() for c in (m.group(2) or "").split(",") if c.strip()
+        )
+        if name:
+            try:
+                self.analyze(name, cols)
+            except Exception:
+                # stats are advisory: temp views / attached parquet
+                # have no catalog entry for Spark's ANALYZE TABLE
+                pass
+        return self._tag(0)
+
+    def _cluster_stmt(self, s: str) -> DataFrame:
+        # CLUSTER tbl [USING idx] (commands/cluster.c): physically
+        # reorder by the advisory index (CREATE INDEX records its
+        # columns); our layout analogue is the Z-order rewrite.
+        # No recorded index, or a non-writable relation → no-op.
+        m = _CLUSTER_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = (m.group(1) or "").split(".")[-1]
+        hints = self._index_hints.get(name, [])
+        if name and hints and self._writable_by_name(name) is not None:
+            self.cluster_zorder(name, hints[-1])
+        return self._tag(0)
+
+    def _prepare_stmt(self, s: str) -> DataFrame:
+        m = _PREPARE_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = m.group(1).lower()
+        # PG: re-PREPARE of a live name is an error (prepare.c)
+        if name in self._prepared:
+            raise ValueError(f'prepared statement "{name}" already exists')
+        declared = m.group(2)
+        nparams = (
+            len([p for p in declared.split(",") if p.strip()])
+            if declared is not None
+            else None
+        )
+        self._prepared[name] = (m.group(3).strip(), nparams)
+        return self._tag(0)
+
+    def _deallocate_stmt(self, s: str) -> DataFrame:
+        m = _DEALLOCATE_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = m.group(1).lower()
+        if name == "all":
+            self._prepared.clear()
+        else:
+            self._prepared.pop(name, None)
+        return self._tag(0)
+
+    def _execute_stmt(self, s: str) -> DataFrame:
+        m = _EXECUTE_STMT_RE.match(s)
+        name = m.group(1).lower() if m else ""
+        if name not in self._prepared:
+            # EXECUTE of an unknown name may be Spark's own EXECUTE
+            # IMMEDIATE etc. — only claim names we prepared.
+            if m is None or m.group(2) is None:
+                return self._spark_stmt(s)
+            raise KeyError(f'prepared statement "{name}" does not exist')
+        body, nparams = self._prepared[name]
+        args = [a.strip() for a in _split_commas(m.group(2) or "")]
+        # Single-pass \$(\d+) substitution over the literal-masked
+        # body: $12 never half-matches as $1, $n inside string
+        # literals is untouched, and out-of-range indexes error as
+        # PG does (prepare.c EvaluateParams).
+        masked, lits = _mask(body)
+        # EvaluateParams (prepare.c): supplied count must equal the
+        # declared count (or, when PREPARE declared no types, the
+        # highest $n the body references).
+        refs = [int(x) for x in re.findall(r"\$(\d+)", masked)]
+        expected = nparams if nparams is not None else (
+            max(refs) if refs else 0
+        )
+        if len(args) != expected:
+            raise ValueError(
+                "wrong number of parameters for prepared statement "
+                f'"{name}": expected {expected}, got {len(args)}'
+            )
+
+        def _param(pm: re.Match) -> str:
+            idx = int(pm.group(1))
+            if not 1 <= idx <= len(args):
+                raise IndexError(
+                    f"there is no parameter ${idx} "
+                    f"(statement has {len(args)} arguments)"
                 )
-            if key in ("timezone", "time zone"):
-                val = self.spark.conf.get("spark.sql.session.timeZone")
-                key = "timezone"
-            else:
-                val = self._gucs.get(key)
-                if val is None:
-                    raise KeyError(f'unrecognized configuration parameter "{key}"')
-            return local_frame(self.spark, [(val,)], f"{key} STRING")
-        return None
+            return args[idx - 1]
 
-    @staticmethod
-    def _split_args(raw: str) -> list[str]:
-        """Split EXECUTE argument list on top-level commas (quote- and
-        paren-aware)."""
-        args, buf, depth, q = [], [], 0, False
-        i, n = 0, len(raw)
-        while i < n:
-            ch = raw[i]
-            if q:
-                buf.append(ch)
-                if ch == "'":
-                    if i + 1 < n and raw[i + 1] == "'":
-                        buf.append("'")
-                        i += 1
-                    else:
-                        q = False
-            elif ch == "'":
-                q = True
-                buf.append(ch)
-            elif ch == "(":
-                depth += 1
-                buf.append(ch)
-            elif ch == ")":
-                depth -= 1
-                buf.append(ch)
-            elif ch == "," and depth == 0:
-                args.append("".join(buf).strip())
-                buf = []
-            else:
-                buf.append(ch)
-            i += 1
-        tail = "".join(buf).strip()
-        if tail:
-            args.append(tail)
-        return args
+        return self.sql(_unmask(re.sub(r"\$(\d+)", _param, masked), lits))
 
+    # ------------------------------------------------ utility statements
+    def _noop_stmt(self, s: str) -> DataFrame:
+        return self._tag(0)
+
+    def _txn_stmt(self, s: str) -> DataFrame:
+        # BEGIN/COMMIT accepted as no-ops: the engine is auto-commit
+        # (each DML's copy-on-write swap is the atomic unit — SURVEY
+        # §1.1; there is no multi-statement snapshot), so scripts
+        # wrapped in transactions run unchanged.
+        return self._tag(0) if _TXN_RE.match(s) else self._spark_stmt(s)
+
+    def _rollback_stmt(self, s: str) -> DataFrame:
+        raise NotImplementedError(
+            "ROLLBACK: no multi-statement transactions — each DML "
+            "commits atomically via its copy-on-write table swap"
+        )
+
+    def _acl_stmt(self, s: str) -> DataFrame:
+        """GRANT / REVOKE (aclchk.c): there is no second user to
+        enforce against, but the privileges record into the ACL ledger
+        so has_*_privilege() answers match (pg_class_aclcheck; the
+        ledger starts all-granted)."""
+        gm = re.match(
+            r"(?is)^(GRANT|REVOKE)\s+(?:GRANT\s+OPTION\s+FOR\s+)?"
+            r"(.+?)\s+ON\s+(?:TABLE\s+|SEQUENCE\s+|SCHEMA\s+|"
+            r"DATABASE\s+|FUNCTION\s+)?(.+?)\s+(?:TO|FROM)\s+"
+            r"(?:GROUP\s+)?([\w\",.\s]+?)(?:\s+WITH\s+GRANT\s+"
+            r"OPTION|\s+CASCADE|\s+RESTRICT)?\s*$", s)
+        if gm is None:
+            return self._tag(0)
+        revoke = gm.group(1).upper() == "REVOKE"
+        privs = [p.strip().upper().split()[0]
+                 for p in gm.group(2).split(",") if p.strip()]
+        objs = [re.sub(r"\(.*\)", "", o).strip().strip('"')
+                .split(".")[-1].lower()
+                for o in gm.group(3).split(",") if o.strip()]
+        whos = [w.strip().strip('"').lower()
+                for w in gm.group(4).split(",") if w.strip()]
+        for ob in objs:
+            for who in whos:
+                for pr in privs:
+                    for k in ([(who, ob, pr)] if pr != "ALL"
+                              else [(who, ob, p) for p in _ALL_PRIVS]):
+                        if revoke:
+                            self._acl_revoked.add(k)
+                        else:
+                            self._acl_revoked.discard(k)
+        return self._tag(0)
+
+    def _role_ddl(self, s: str) -> DataFrame:
+        """Role DDL (commands/user.c): single-user engine — roles are
+        bookkeeping names for the ACL ledger and SET ROLE, with PG's
+        existence errors."""
+        rl = re.match(
+            r"(?is)^(CREATE|DROP|ALTER)\s+(?:ROLE|USER|GROUP)\s+(.*)$", s)
+        verb, rest = rl.group(1).upper(), rl.group(2).strip()
+        if verb == "DROP":
+            ifex = False
+            mex = re.match(r"(?is)^IF\s+EXISTS\s+(.*)$", rest)
+            if mex:
+                ifex, rest = True, mex.group(1)
+            for nm in rest.split(","):
+                nm = nm.strip().strip('"').lower()
+                if nm in self._roles:
+                    self._roles.discard(nm)
+                elif nm and not ifex:
+                    raise ValueError(f'role "{nm}" does not exist')
+            return self._tag(0)
+        nm_m = re.match(r'("[^"]+"|[\w$]+)', rest)
+        name = nm_m.group(1).strip('"').lower() if nm_m else ""
+        if verb == "CREATE":
+            if name in self._roles:
+                raise ValueError(f'role "{name}" already exists')
+            self._roles.add(name)
+        elif name not in self._roles and name not in (
+                "current_user", "session_user", "public", "all"):
+            raise ValueError(f'role "{name}" does not exist')
+        return self._tag(0)
+
+    def _create_index(self, s: str) -> DataFrame:
+        # CREATE INDEX (indexcmds.c) is advisory here: Spark scans
+        # prune via parquet min/max + Z-order layout instead of
+        # b-trees. Record the indexed columns as a clustering hint
+        # so DDL scripts run unchanged.
+        m = _CREATE_INDEX_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        tname = m.group(2).split(".")[-1]
+        cols = tuple(
+            c.strip().split()[0] for c in m.group(3).split(",") if c.strip()
+        )
+        self._index_hints.setdefault(tname, []).append(cols)
+        return self._tag(0)
+
+    def _alter_table(self, s: str) -> DataFrame:
+        # OWNER TO is metadata-only in PG; the rest is Spark DDL
+        if _OWNER_TO_RE.match(s):
+            return self._tag(0)
+        _, masked, lits = _lex(s)
+        return self._query("ALTER TABLE", s, masked, lits)
+
+    def _type_ddl(self, s: str) -> DataFrame:
+        # CREATE DOMAIN / TYPE (commands/typecmds.c): session registry
+        if self._user_types.maybe_ddl(s):
+            return self._tag(0)
+        return self._spark_stmt(s)
+
+    def _create_matview(self, s: str) -> DataFrame:
+        # CREATE MATERIALIZED VIEW ... AS SELECT (commands/matview.c);
+        # a GP DISTRIBUTED tail is a placement hint
+        m = _CREATE_MV_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = m.group(2).split(".")[-1]
+        if not (m.group(1) and name in self._matviews):  # IF NOT EXISTS
+            self.create_materialized_view(
+                name, _CTAS_DIST_TAIL_RE.sub("", m.group(3)))
+        return self._tag(0)
+
+    def _refresh_matview(self, s: str) -> DataFrame:
+        # REFRESH MATERIALIZED VIEW [CONCURRENTLY] — re-runs the
+        # stored query; CONCURRENTLY is moot (temp-view swap is atomic
+        # to readers of the name)
+        m = _REFRESH_MV_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        self.refresh_materialized_view(m.group(1).split(".")[-1])
+        return self._tag(0)
+
+    def _drop_matview(self, s: str) -> DataFrame:
+        m = _DROP_MV_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        name = m.group(2).split(".")[-1]
+        mv = self._matviews.pop(name, None)
+        if mv is None and not m.group(1):
+            raise KeyError(f'materialized view "{name}" does not exist')
+        if mv is not None:
+            self.spark.catalog.dropTempView(name)
+            import shutil
+
+            shutil.rmtree(mv.path, ignore_errors=True)
+        return self._tag(0)
 
     def assign_sequence_ids(self, df: DataFrame, col: str, seq_name: str) -> DataFrame:
         """Assign one sequence value per row of `df`, distributed.
@@ -1584,47 +1676,12 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         seq["last"] = run - 1
         return out
 
-    def _ensure_catalog_views(self) -> None:
-        """System-catalog shims (pg_tables from system_views.sql,
-        information_schema.columns — the two introspection relations a
-        PG user's first `\\d`-ish query touches). Rebuilt lazily per
-        statement from the engine catalog + Spark schemas; dotted
-        `information_schema.columns` is rewritten to a flat temp-view
-        name since temp views can't live inside a Spark database."""
-        trows = [
-            ("public", name, "spark", None, False, False, False)
-            for name in sorted(self.catalog.tables)
-        ]
-        local_frame(
-            self.spark, trows,
-            "schemaname string, tablename string, tableowner string, "
-            "tablespace string, hasindexes boolean, hasrules boolean, "
-            "hastriggers boolean",
-        ).createOrReplaceTempView("pg_tables")
-        crows = []
-        for name in sorted(self.catalog.tables):
-            try:
-                schema = self.spark.table(name).schema
-            except Exception:
-                continue
-            for i, f in enumerate(schema.fields, start=1):
-                crows.append(
-                    (
-                        "spark",
-                        "public",
-                        name,
-                        f.name,
-                        i,
-                        f.dataType.simpleString(),
-                        "YES" if f.nullable else "NO",
-                    )
-                )
-        local_frame(
-            self.spark, crows,
-            "table_catalog string, table_schema string, table_name string, "
-            "column_name string, ordinal_position int, data_type string, "
-            "is_nullable string",
-        ).createOrReplaceTempView("information_schema_columns")
+    def _ensure_catalog_views(self, names: set[str]) -> None:
+        """Build the catalog relations a statement names, each by its
+        one builder (engine_catalog._CATALOG_VIEWS), from the engine
+        catalog and the live Spark schemas."""
+        for name in sorted(names):
+            getattr(self, _CATALOG_VIEWS[name])(name)
 
     # ----------------------------------------------------------------- DDL
     def _lower_typed_table(self, text: str) -> str:
@@ -1635,7 +1692,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             r"(?is)^(\s*CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?"
             r"TEMP(?:ORARY)?\s+|UNLOGGED\s+)?TABLE\s+"
             r"(?:IF\s+NOT\s+EXISTS\s+)?[\w.\"]+)\s+OF\s+"
-            r"([\w.\"]+)\b[^;]*$", text.strip().rstrip(";"))
+            r"([\w.\"]+)\b[^;]*$", text)
         if m is None:
             return text
         key = m.group(2).strip('"').split(".")[-1].lower()
@@ -1646,49 +1703,64 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             f"{f} {self._decl_type(t)}" for f, t in comp.fields)
         return f"{m.group(1)} ({cols})"
 
-    def _maybe_ddl(self, text: str) -> DataFrame | None:
-        """Handle GP DDL Spark's parser rejects: DISTRIBUTED BY and
-        PARTITION BY RANGE (col) (START .. [END ..] EVERY ..) clauses.
+    def _create_table_stmt(self, s: str) -> DataFrame | None:
+        """CREATE TABLE with the GP clauses Spark's parser rejects, and
+        CREATE TABLE AS into the engine warehouse.
 
-        `CREATE TABLE ... DISTRIBUTED BY (k)` (reference parser
-        gram.y:5597-5605, gp_distribution_policy.h) — distribution is a
-        perf hint under Spark (SURVEY §1.1): recorded in the catalog,
-        stripped from the DDL. The GP partition spec (gram.y
+        `PARTITION BY RANGE (col) (START .. [END ..] EVERY ..)` (gram.y
         OptTabPartitionSpec; partition child creation in tablecmds.c)
         maps onto directory partitioning: a CTAS with the clause
         materializes with a derived range-partition id column, so
-        partition pruning works exactly as GP's Dynamic*Scan would."""
-        if _TEMP_CTAS_RE.match(text.strip()) and not \
-                _PARTITION_RANGE_RE.search(text):
-            # TEMP CTAS materializes as a session temp view further
-            # down the chain (its handler strips the DISTRIBUTED tail
-            # itself); Spark rejects CREATE TEMPORARY TABLE AS
-            return None
-        pm = _PARTITION_RANGE_RE.search(text)
+        partition pruning works exactly as GP's Dynamic*Scan would.
+        A TEMP CTAS is a session temp view. `DISTRIBUTED BY (k)`
+        (gram.y:5597-5605, gp_distribution_policy.h) is a perf hint
+        under Spark (SURVEY §1.1): recorded in the catalog, stripped
+        from the DDL. A plain column-list CREATE returns None: Spark
+        runs it."""
+        pm = _PARTITION_RANGE_RE.search(s)
         if pm is not None:
-            return self._partitioned_ctas(text, pm)
-        m = _DISTRIBUTED_BY_RE.search(text)
-        if m is None:
-            return None
-        keys: tuple[str, ...] = ()
-        policy = "random"
-        if m.group(1):
-            policy = "hash"
-            keys = tuple(k.strip() for k in m.group(1).split(","))
-        elif m.group(2):
-            policy = m.group(2).lower()  # randomly | replicated
-            policy = {"randomly": "random", "replicated": "replicated"}[policy]
-        stripped = _DISTRIBUTED_BY_RE.sub("", text)
-        out = self._sql_autoschema(stripped)
-        name_m = re.search(r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", text, re.IGNORECASE)
-        if name_m:
-            from warehouse_pg_spark.catalog import TableInfo
+            return self._partitioned_ctas(s, pm)
+        m = _TEMP_CTAS_RE.match(s)
+        if m:
+            # PG CREATE TEMP TABLE ... AS (temp.sql): session-scoped, never
+            # durable — a Spark temp view over the materialized select.
+            # The query may be parenthesized and carry a DISTRIBUTED
+            # clause (gram.y CreateAsStmt + GP distribution suffix).
+            name, select = m.group(1).split(".")[-1], m.group(2).strip()
+            select = _CTAS_DIST_TAIL_RE.sub("", select).strip()
+            if select.endswith(")") and _paren_balance(select) < 0:
+                select = select[:-1].rstrip()
+            df = self.spark.sql(select).localCheckpoint(eager=True)
+            df.createOrReplaceTempView(name)
+            return self._tag(df.count())
+        m = _DISTRIBUTED_BY_RE.search(s)
+        if m:
+            keys: tuple[str, ...] = ()
+            policy = "random"
+            if m.group(1):
+                policy = "hash"
+                keys = tuple(k.strip() for k in m.group(1).split(","))
+            elif m.group(2):
+                policy = {"randomly": "random",
+                          "replicated": "replicated"}[m.group(2).lower()]
+            out = self._sql_autoschema(_DISTRIBUTED_BY_RE.sub("", s))
+            name_m = re.search(
+                r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", s,
+                re.IGNORECASE)
+            if name_m:
+                from warehouse_pg_spark.catalog import TableInfo
 
-            tname = name_m.group(1).split(".")[-1]
-            self.catalog.tables[tname] = TableInfo(
-                name=tname, path="", distribution=(policy, keys)
-            )
-        return out
+                tname = name_m.group(1).split(".")[-1]
+                self.catalog.tables[tname] = TableInfo(
+                    name=tname, path="", distribution=(policy, keys)
+                )
+            return out
+        m = _CTAS_RE.match(s)
+        if m:
+            name, select = m.group(1).split(".")[-1], m.group(2)
+            self.create_table_from(name, self.spark.sql(select))
+            return self._tag(self.catalog.load(name).count())
+        return None
 
     def _partitioned_ctas(self, text: str, pm: re.Match) -> DataFrame:
         """CTAS with a GP range-partition spec → directory-partitioned
@@ -1701,14 +1773,12 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
 
         col = pm.group(1)
         spec = pm.group(2)
-        stripped = (
-            text[: pm.start()] + text[pm.end():]
-        ).strip().rstrip(";")
-        stripped = _DISTRIBUTED_BY_RE.sub("", stripped)
-        cm = _CTAS_RE.match(stripped.strip())
+        stripped = _DISTRIBUTED_BY_RE.sub(
+            "", text[: pm.start()] + text[pm.end():]).strip()
+        cm = _CTAS_RE.match(stripped)
         if cm is None:
             if re.match(r"(?is)^CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE"
-                        r"\s+[\w.]+\s*\(", stripped.strip()):
+                        r"\s+[\w.]+\s*\(", stripped):
                 # plain partitioned CREATE (gram.y OptTabPartitionSpec
                 # without AS): the GP partition spec is physical
                 # layout, not semantics — the empty table creates
@@ -1744,51 +1814,135 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             expr = range_partition_expr(
                 col, start, int(em.group(1)), em.group(2).lower()
             )
-        path = os.path.join(self.warehouse_dir, name)
-        df.withColumn("__part", expr).write.mode("overwrite").partitionBy(
-            "__part"
-        ).parquet(path)
-        self.catalog.register_parquet(
-            name, path, partition_cols=("__part",)
-        )
+        # the id is derived: every later write recomputes it from the row
+        self.create_table_from(name, df, ("__part",), {"__part": expr})
         return self._tag(self.catalog.load(name).count())
 
     # ----------------------------------------------------------- SQL DML
-    def _maybe_dml(self, text: str) -> DataFrame | None:
-        """SQL-statement DML against engine-managed parquet tables —
-        the ModifyTable front-end (reference executor/nodeModifyTable.c,
-        commands/copy.c §3.3): INSERT INTO .. VALUES/SELECT, UPDATE ..
-        SET .. WHERE, DELETE FROM .. WHERE, CREATE TABLE .. AS SELECT.
-        Statements over names not registered as writable parquet tables
-        fall through to Spark (which raises its own errors). Returns a
-        1-row `rows_affected` DataFrame (the PG command tag), or — with
-        a RETURNING clause (returning.sql) — the affected rows
-        themselves, projected through the RETURNING select list."""
+    def _maybe_dml(self, text: str, kind: str) -> DataFrame | None:
+        """SQL-statement DML against engine-managed parquet tables — the
+        ModifyTable front-end (reference executor/nodeModifyTable.c,
+        commands/copy.c §3.3): runs the handler `_ROUTES` names for
+        `kind` on the lowered statement. A statement over a name that
+        is not a writable parquet table returns None and Spark runs it
+        (raising its own errors). Returns a 1-row `rows_affected`
+        DataFrame (the PG command tag), or — with a RETURNING clause
+        (returning.sql) — the affected rows themselves, projected
+        through the RETURNING select list."""
+        return getattr(self, _ROUTES[kind][1])(text.strip())
+
+    @staticmethod
+    def _returning(returning: str, image: DataFrame) -> DataFrame:
+        """Project the affected-row image through the RETURNING list,
+        materialized (localCheckpoint) before the copy-on-write swap
+        invalidates the files it was computed from."""
+        out = (image if returning == "*"
+               else image.selectExpr(*_split_commas(returning)))
+        return out.localCheckpoint(eager=True)
+
+    def _insert_stmt(self, s: str) -> DataFrame | None:
         import pyspark.sql.functions as F
 
-        s = text.strip().rstrip(";").strip()
-        returning: str | None = None
-        rm = _RETURNING_RE.search(s)
-        if rm and re.match(r"^(INSERT|UPDATE|DELETE)\b", s, re.IGNORECASE):
-            returning = rm.group(1).strip()
-            s = s[: rm.start()].strip()
-
-        def _ret(image: DataFrame) -> DataFrame:
-            """Project the affected-row image through the RETURNING list,
-            materialized (localCheckpoint) before the copy-on-write swap
-            invalidates the files it was computed from."""
-            if returning == "*":
-                out = image
+        s, returning = _split_returning(s)
+        m = _INSERT_RE.match(s)
+        if m is None:
+            return None
+        name, rest = m.group(1).split(".")[-1], m.group(2).strip()
+        t = self._writable_by_name(name)
+        if t is None:
+            return None
+        # PG INSERT ... ON CONFLICT (k) DO NOTHING | DO UPDATE SET ...
+        # (insert_conflict.sql; speculative-insert upsert) — lowered
+        # onto the MERGE machinery.
+        conflict = _ON_CONFLICT_RE.search(rest)
+        if conflict:
+            rest = rest[: conflict.start()].strip()
+        cols: list[str] | None = None
+        cm = re.match(r"^\(([^)]*)\)\s*(.*)$", rest, re.DOTALL)
+        if cm:
+            cols = [c.strip() for c in cm.group(1).split(",")]
+            rest = cm.group(2).strip()
+        target = t.read()
+        # a derived column (the range-partition id) is no user column:
+        # the write computes it
+        user_cols = [c for c in target.columns if c not in t.derived]
+        if re.match(r"^DEFAULT\s+VALUES$", rest, re.IGNORECASE):
+            # PG INSERT ... DEFAULT VALUES (gram.y insert_rest):
+            # one row of all defaults — NULLs here (no stored
+            # column defaults)
+            df = self.spark.sql(
+                "SELECT "
+                + ", ".join(
+                    f"CAST(NULL AS {target.schema[c].dataType.simpleString()})"
+                    f" AS {c}" for c in user_cols
+                )
+            )
+            cols = None
+        elif re.match(r"^VALUES\b", rest, re.IGNORECASE):
+            df = self.spark.sql(f"SELECT * FROM {rest}")
+        else:
+            df = self.spark.sql(rest)
+        names = cols or user_cols
+        df = df.toDF(*names)
+        for c in target.columns:  # missing cols → NULL, PG default-less
+            if c not in names:
+                df = df.withColumn(
+                    c, F.lit(None).cast(target.schema[c].dataType)
+                )
+        df = df.select(
+            *[
+                F.col(c).cast(target.schema[c].dataType).alias(c)
+                for c in target.columns
+            ]
+        )
+        if conflict:
+            keys = [k.strip() for k in conflict.group(1).split(",")]
+            if conflict.group(2).upper() == "NOTHING":
+                update: dict[str, Column] | None = {}  # matched rows untouched
             else:
-                out = image.selectExpr(*_split_exprs(returning))
-            return out.localCheckpoint(eager=True)
+                # EXCLUDED.col (the proposed row) → the merge source side
+                update = {
+                    col: F.expr(
+                        re.sub(r"\bEXCLUDED\.", "s.", expr, flags=re.IGNORECASE)
+                    )
+                    for col, expr in _split_assignments(conflict.group(3))
+                }
+            pre = None
+            if returning:
+                # PG returns post-image rows: inserted ones for DO
+                # NOTHING, inserted+updated for DO UPDATE
+                # (insert_conflict.sql RETURNING cases).
+                pre = (
+                    t.read().select(*keys).distinct()
+                    .localCheckpoint(eager=True)
+                )
+            stats = t.merge(df, on=keys, update=update)
+            self._refresh_view(name, t)
+            if returning:
+                src_keys = df.select(*keys).distinct()
+                if conflict.group(2).upper() == "NOTHING":
+                    src_keys = src_keys.join(pre, keys, "left_anti")
+                image = t.read().join(
+                    F.broadcast(src_keys), keys, "left_semi"
+                )
+                return self._returning(returning, image)
+            return self._tag(stats["updated"] + stats["inserted"])
+        ret = self._returning(returning, df) if returning else None
+        n = df.count()
+        t.insert(df)
+        self._refresh_view(name, t)
+        return ret if ret is not None else self._tag(n)
 
+    def _update_stmt(self, s: str) -> DataFrame | None:
+        import pyspark.sql.functions as F
+
+        s, returning = _split_returning(s)
         mm = _MULTI_SET_RE.search(s)
-        if mm and re.match(r"^UPDATE\b", s, re.IGNORECASE):
+        if mm:
             # PG multi-column assignment `SET (a, b) = (e1, e2)`
             # (gram.y set_clause multiple_set_clause) → column-wise form
             cols = [c.strip() for c in mm.group(1).split(",")]
-            vals = _split_exprs(mm.group(2))
+            vals = _split_commas(mm.group(2))
             if len(cols) != len(vals):
                 raise ValueError(
                     "number of columns does not match number of values"
@@ -1799,274 +1953,43 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 + ", ".join(f"{c} = {v}" for c, v in zip(cols, vals))
                 + s[mm.end():]
             )
-
-        rl = re.match(
-            r"(?is)^(CREATE|DROP|ALTER)\s+(?:ROLE|USER|GROUP)\s+(.*)$",
-            s)
-        if rl:
-            # role DDL (commands/user.c): single-user engine — roles
-            # are bookkeeping names for the ACL ledger and
-            # SET ROLE, with PG's existence errors
-            verb, rest = rl.group(1).upper(), rl.group(2).strip()
-            if verb == "DROP":
-                ifex = False
-                mex = re.match(r"(?is)^IF\s+EXISTS\s+(.*)$", rest)
-                if mex:
-                    ifex, rest = True, mex.group(1)
-                for nm in rest.split(","):
-                    nm = nm.strip().strip('"').lower()
-                    if nm in self._roles:
-                        self._roles.discard(nm)
-                    elif nm and not ifex:
-                        raise ValueError(
-                            f'role "{nm}" does not exist')
-            else:
-                nm_m = re.match(r'("[^"]+"|[\w$]+)', rest)
-                name = (nm_m.group(1).strip('"').lower()
-                        if nm_m else "")
-                if verb == "CREATE":
-                    if name in self._roles:
-                        raise ValueError(
-                            f'role "{name}" already exists')
-                    self._roles.add(name)
-                elif name not in self._roles and name not in (
-                        "current_user", "session_user", "public",
-                        "all"):
-                    raise ValueError(f'role "{name}" does not exist')
-            return self._tag(0)
-        if re.match(r"(?is)^(REASSIGN\s+OWNED|DROP\s+OWNED)\b", s):
-            # ownership bookkeeping over the single user: no-op
-            return self._tag(0)
-        if _NOOP_DDL_RE.match(s):
-            # COMMENT ON / GRANT / REVOKE / OWNER TO: metadata-only in
-            # PG (commands/comment.c, aclchk.c) — there is no second
-            # user to enforce against, but GRANT/REVOKE record into the
-            # ACL ledger so has_*_privilege() answers match (aclchk.c
-            # pg_class_aclcheck; the ledger starts all-granted).
-            gm = re.match(
-                r"(?is)^(GRANT|REVOKE)\s+(?:GRANT\s+OPTION\s+FOR\s+)?"
-                r"(.+?)\s+ON\s+(?:TABLE\s+|SEQUENCE\s+|SCHEMA\s+|"
-                r"DATABASE\s+|FUNCTION\s+)?(.+?)\s+(?:TO|FROM)\s+"
-                r"(?:GROUP\s+)?([\w\",.\s]+?)(?:\s+WITH\s+GRANT\s+"
-                r"OPTION|\s+CASCADE|\s+RESTRICT)?\s*$", s)
-            if gm is not None:
-                revoke = gm.group(1).upper() == "REVOKE"
-                privs = [p.strip().upper().split()[0]
-                         for p in gm.group(2).split(",") if p.strip()]
-                objs = [re.sub(r"\(.*\)", "", o).strip().strip('"')
-                        .split(".")[-1].lower()
-                        for o in gm.group(3).split(",") if o.strip()]
-                whos = [w.strip().strip('"').lower()
-                        for w in gm.group(4).split(",") if w.strip()]
-                for ob in objs:
-                    for who in whos:
-                        for pr in privs:
-                            keys = ([(who, ob, pr)] if pr != "ALL"
-                                    else [(who, ob, p) for p in
-                                          _ALL_PRIVS])
-                            for k in keys:
-                                if revoke:
-                                    self._acl_revoked.add(k)
-                                else:
-                                    self._acl_revoked.discard(k)
-            return self._tag(0)
-
-        if _TXN_RE.match(s):
-            # BEGIN/COMMIT accepted as no-ops: the engine is
-            # auto-commit (each DML's copy-on-write swap is the atomic
-            # unit — SURVEY §1.1; there is no multi-statement snapshot),
-            # so scripts wrapped in transactions run unchanged.
-            return self._tag(0)
-        if _ROLLBACK_RE.match(s):
-            raise NotImplementedError(
-                "ROLLBACK: no multi-statement transactions — each DML "
-                "commits atomically via its copy-on-write table swap"
-            )
-
-        m = _CREATE_INDEX_RE.match(s)
-        if m:
-            # CREATE INDEX (indexcmds.c) is advisory here: Spark scans
-            # prune via parquet min/max + Z-order layout instead of
-            # b-trees. Record the indexed columns as a clustering hint
-            # so DDL scripts run unchanged.
-            tname = m.group(2).split(".")[-1]
-            cols = tuple(
-                c.strip().split()[0] for c in m.group(3).split(",") if c.strip()
-            )
-            self._index_hints.setdefault(tname, []).append(cols)
-            return self._tag(0)
-        if _DROP_INDEX_RE.match(s):
-            return self._tag(0)
-
-        m = _COPY_TO_RE.match(s)
-        if m:
-            return self._copy_to(m.group(1), m.group(2), m.group(3), m.group(4))
-
-        m = _COPY_FROM_RE.match(s)
-        if m:
-            return self._copy_from(m.group(1), m.group(2), m.group(3))
-
-        m = _TEMP_CTAS_RE.match(s)
-        if m:
-            # PG CREATE TEMP TABLE ... AS (temp.sql): session-scoped, never
-            # durable — a Spark temp view over the materialized select.
-            # The query may be parenthesized and carry a DISTRIBUTED
-            # clause (gram.y CreateAsStmt + GP distribution suffix).
-            name, select = m.group(1).split(".")[-1], m.group(2).strip()
-            select = _CTAS_DIST_TAIL_RE.sub("", select).strip()
-            if select.endswith(")") and _paren_balance(select) < 0:
-                select = select[:-1].rstrip()
-            df = self.spark.sql(select).localCheckpoint(eager=True)
-            df.createOrReplaceTempView(name)
-            return self._tag(df.count())
-
-        m = _TRUNCATE_RE.match(s)
-        if m:
-            # PG TRUNCATE (tablecmds.c ExecuteTruncate): empty the
-            # relation(s), keep the schema. RESTART/CONTINUE IDENTITY
-            # and CASCADE/RESTRICT are accepted (sequences restart via
-            # ALTER SEQUENCE; there are no FK cascades to chase).
-            names = [r.strip().split(".")[-1] for r in m.group(1).split(",")]
-            resolved = [(n, self._writable_by_name(n)) for n in names]
-            if all(t is None for _, t in resolved):
-                return None  # nothing engine-managed: not ours to handle
-            # PG errors on ANY missing relation (tablecmds.c
-            # ExecuteTruncate → RangeVarGetRelid), same as single-table
-            # DML — no partial truncate-and-report-success.
-            missing = [n for n, t in resolved if t is None]
-            if missing:
-                raise KeyError(
-                    f"TRUNCATE: relation(s) do not exist: "
-                    f"{', '.join(missing)}"
-                )
-            total = 0
-            for name, t in resolved:
-                total += t.delete(F.lit(True))
-                self._refresh_view(name, t)
-            return self._tag(total)
-
-        m = _SELECT_INTO_RE.match(s)
-        if m:
-            # PG SELECT ... INTO [TEMP] tbl [FROM ...] (gram.y
-            # into_clause — the pre-CTAS spelling): same
-            # materialization as CTAS; the FROM-less form holds one
-            # computed row. Like CREATE TABLE AS, an existing target
-            # errors (execMain.c CreateIntoRelDestReceiver).
-            tgt = m.group(2).split(".")[-1].lower()
-            exists = tgt in self.catalog.tables
-            if not exists:
-                try:
-                    exists = self.spark.catalog.tableExists(tgt)
-                except Exception:  # noqa: BLE001
-                    exists = False
-            if exists:
-                raise ValueError(
-                    f'relation "{tgt}" already exists')
-            s = (f"CREATE TABLE {m.group(2)} AS {m.group(1)} "
-                 f"{m.group(3) or ''}").strip()
-
-        m = _CTAS_RE.match(s)
-        if m:
-            name, select = m.group(1).split(".")[-1], m.group(2)
-            df = self.spark.sql(select)
-            self.create_table_from(name, df)
-            return self._tag(self.catalog.load(name).count())
-
-        if re.match(r"^MERGE\s+INTO\b", s, re.IGNORECASE):
-            out = self._merge_stmt(s)
-            if out is not None:
-                return out
-
-        m = _INSERT_RE.match(s)
-        if m:
-            name, rest = m.group(1).split(".")[-1], m.group(2).strip()
-            t = self._writable_by_name(name)
-            if t is None:
-                return None
-            # PG INSERT ... ON CONFLICT (k) DO NOTHING | DO UPDATE SET ...
-            # (insert_conflict.sql; speculative-insert upsert) — lowered
-            # onto the MERGE machinery.
-            conflict = _ON_CONFLICT_RE.search(rest)
-            if conflict:
-                rest = rest[: conflict.start()].strip()
-            cols: list[str] | None = None
-            cm = re.match(r"^\(([^)]*)\)\s*(.*)$", rest, re.DOTALL)
-            if cm:
-                cols = [c.strip() for c in cm.group(1).split(",")]
-                rest = cm.group(2).strip()
-            if re.match(r"^DEFAULT\s+VALUES$", rest, re.IGNORECASE):
-                # PG INSERT ... DEFAULT VALUES (gram.y insert_rest):
-                # one row of all defaults — NULLs here (no stored
-                # column defaults)
-                target0 = t.read()
-                df = self.spark.sql(
-                    "SELECT "
-                    + ", ".join(
-                        f"CAST(NULL AS {f.dataType.simpleString()}) AS {f.name}"
-                        for f in target0.schema.fields
-                    )
-                )
-                cols = None
-            elif re.match(r"^VALUES\b", rest, re.IGNORECASE):
-                df = self.spark.sql(f"SELECT * FROM {rest}")
-            else:
-                df = self.spark.sql(rest)
-            target = t.read()
-            names = cols or target.columns
-            df = df.toDF(*names)
-            for c in target.columns:  # missing cols → NULL, PG default-less
-                if c not in names:
-                    df = df.withColumn(
-                        c, F.lit(None).cast(target.schema[c].dataType)
-                    )
-            df = df.select(
-                *[
-                    F.col(c).cast(target.schema[c].dataType).alias(c)
-                    for c in target.columns
-                ]
-            )
-            if conflict:
-                keys = [k.strip() for k in conflict.group(1).split(",")]
-                if conflict.group(2).upper() == "NOTHING":
-                    update: dict[str, Column] | None = {}  # matched rows untouched
-                else:
-                    # EXCLUDED.col (the proposed row) → the merge source side
-                    update = {
-                        col: F.expr(
-                            re.sub(r"\bEXCLUDED\.", "s.", expr, flags=re.IGNORECASE)
-                        )
-                        for col, expr in _split_assignments(conflict.group(3))
-                    }
-                pre = None
-                if returning:
-                    # PG returns post-image rows: inserted ones for DO
-                    # NOTHING, inserted+updated for DO UPDATE
-                    # (insert_conflict.sql RETURNING cases).
-                    pre = (
-                        t.read().select(*keys).distinct()
-                        .localCheckpoint(eager=True)
-                    )
-                stats = t.merge(df, on=keys, update=update)
-                self._refresh_view(name, t)
-                if returning:
-                    src_keys = df.select(*keys).distinct()
-                    if conflict.group(2).upper() == "NOTHING":
-                        src_keys = src_keys.join(pre, keys, "left_anti")
-                    image = t.read().join(
-                        F.broadcast(src_keys), keys, "left_semi"
-                    )
-                    return _ret(image)
-                return self._tag(stats["updated"] + stats["inserted"])
-            ret = _ret(df) if returning else None
-            n = df.count()
-            t.insert(df)
-            self._refresh_view(name, t)
-            return ret if ret is not None else self._tag(n)
-
         m = _UPDATE_FROM_RE.match(s)
         if m:
-            return self._update_from(*m.groups(), returning=returning, _ret=_ret)
+            return self._update_from(*m.groups(), returning=returning)
+        m = _UPDATE_RE.match(s)
+        if m is None:
+            return None
+        name = m.group(1).split(".")[-1]
+        t = self._writable_by_name(name)
+        if t is None:
+            return None
+        if m.group(3) and _SUBQUERY_RE.search(m.group(3)):
+            return self._update_subquery(
+                name, t, m.group(2), m.group(3), returning
+            )
+        assigns = {
+            col: F.expr(expr)
+            for col, expr in _split_assignments(m.group(2))
+        }
+        where = F.expr(m.group(3)) if m.group(3) else F.lit(True)
+        ret = None
+        if returning:
+            tgt = t.read()
+            image = tgt.filter(where).select(
+                *[
+                    (assigns[c].cast(tgt.schema[c].dataType) if c in assigns else F.col(c)).alias(c)
+                    for c in tgt.columns
+                ]
+            )
+            ret = self._returning(returning, image)
+        n = t.update(assigns, where)
+        self._refresh_view(name, t)
+        return ret if ret is not None else self._tag(n)
 
+    def _delete_stmt(self, s: str) -> DataFrame | None:
+        import pyspark.sql.functions as F
+
+        s, returning = _split_returning(s)
         m = _DELETE_USING_RE.match(s)
         if m:
             # PG `DELETE FROM t USING s WHERE cond` (gram.y DeleteStmt
@@ -2083,7 +2006,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 f"JOIN {src}{alias} ON ({m.group(4)})"
             )
             ret = (
-                _ret(base.join(matched, "__rid", "left_semi").drop("__rid"))
+                self._returning(returning, base.join(matched, "__rid", "left_semi").drop("__rid"))
                 if returning
                 else None
             )
@@ -2092,64 +2015,95 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             self._refresh_view(name, t)
             return ret if ret is not None else self._tag(n)
 
-        m = _UPDATE_RE.match(s)
-        if m:
-            name = m.group(1).split(".")[-1]
-            t = self._writable_by_name(name)
-            if t is None:
-                return None
-            if m.group(3) and _SUBQUERY_RE.search(m.group(3)):
-                return self._update_subquery(
-                    name, t, m.group(2), m.group(3), returning, _ret
-                )
-            assigns = {
-                col: F.expr(expr)
-                for col, expr in _split_assignments(m.group(2))
-            }
-            where = F.expr(m.group(3)) if m.group(3) else F.lit(True)
-            ret = None
-            if returning:
-                tgt = t.read()
-                image = tgt.filter(where).select(
-                    *[
-                        (assigns[c].cast(tgt.schema[c].dataType) if c in assigns else F.col(c)).alias(c)
-                        for c in tgt.columns
-                    ]
-                )
-                ret = _ret(image)
-            n = t.update(assigns, where)
-            self._refresh_view(name, t)
-            return ret if ret is not None else self._tag(n)
-
         m = _DELETE_RE.match(s)
-        if m:
-            name = m.group(1).split(".")[-1]
-            t = self._writable_by_name(name)
-            if t is None:
-                return None
-            if m.group(2) and _SUBQUERY_RE.search(m.group(2)):
-                # IN/EXISTS/scalar subqueries are only legal in a filter
-                # context — resolve matches through spark.sql over a
-                # rowid-tagged snapshot, then anti-join.
-                base = self._rid_view(t, name)
-                matched = self.spark.sql(
-                    f"SELECT __rid FROM __dml_target WHERE {m.group(2)}"
-                )
-                ret = (
-                    _ret(base.join(matched, "__rid", "left_semi").drop("__rid"))
-                    if returning
-                    else None
-                )
-                n = matched.count()
-                t._swap_in(base.join(matched, "__rid", "left_anti").drop("__rid"))
-                self._refresh_view(name, t)
-                return ret if ret is not None else self._tag(n)
-            where = F.expr(m.group(2)) if m.group(2) else F.lit(True)
-            ret = _ret(t.read().filter(where)) if returning else None
-            n = t.delete(where)
+        if m is None:
+            return None
+        name = m.group(1).split(".")[-1]
+        t = self._writable_by_name(name)
+        if t is None:
+            return None
+        if m.group(2) and _SUBQUERY_RE.search(m.group(2)):
+            # IN/EXISTS/scalar subqueries are only legal in a filter
+            # context — resolve matches through spark.sql over a
+            # rowid-tagged snapshot, then anti-join.
+            base = self._rid_view(t, name)
+            matched = self.spark.sql(
+                f"SELECT __rid FROM __dml_target WHERE {m.group(2)}"
+            )
+            ret = (
+                self._returning(returning, base.join(matched, "__rid", "left_semi").drop("__rid"))
+                if returning
+                else None
+            )
+            n = matched.count()
+            t._swap_in(base.join(matched, "__rid", "left_anti").drop("__rid"))
             self._refresh_view(name, t)
             return ret if ret is not None else self._tag(n)
+        where = F.expr(m.group(2)) if m.group(2) else F.lit(True)
+        ret = self._returning(returning, t.read().filter(where)) if returning else None
+        n = t.delete(where)
+        self._refresh_view(name, t)
+        return ret if ret is not None else self._tag(n)
+
+    def _copy_stmt(self, s: str) -> DataFrame | None:
+        m = _COPY_TO_RE.match(s)
+        if m:
+            return self._copy_to(m.group(1), m.group(2), m.group(3), m.group(4))
+        m = _COPY_FROM_RE.match(s)
+        if m:
+            return self._copy_from(m.group(1), m.group(2), m.group(3))
         return None
+
+    def _truncate_stmt(self, s: str) -> DataFrame | None:
+        # PG TRUNCATE (tablecmds.c ExecuteTruncate): empty the
+        # relation(s), keep the schema. RESTART/CONTINUE IDENTITY
+        # and CASCADE/RESTRICT are accepted (sequences restart via
+        # ALTER SEQUENCE; there are no FK cascades to chase).
+        import pyspark.sql.functions as F
+
+        m = _TRUNCATE_RE.match(s)
+        if m is None:
+            return None
+        names = [r.strip().split(".")[-1] for r in m.group(1).split(",")]
+        resolved = [(n, self._writable_by_name(n)) for n in names]
+        if all(t is None for _, t in resolved):
+            return None  # nothing engine-managed: not ours to handle
+        # PG errors on ANY missing relation (tablecmds.c
+        # ExecuteTruncate → RangeVarGetRelid), same as single-table
+        # DML — no partial truncate-and-report-success.
+        missing = [n for n, t in resolved if t is None]
+        if missing:
+            raise KeyError(
+                f"TRUNCATE: relation(s) do not exist: "
+                f"{', '.join(missing)}"
+            )
+        total = 0
+        for name, t in resolved:
+            total += t.delete(F.lit(True))
+            self._refresh_view(name, t)
+        return self._tag(total)
+
+    def _select_into_stmt(self, s: str) -> DataFrame | None:
+        # PG SELECT ... INTO [TEMP] tbl [FROM ...] (gram.y
+        # into_clause — the pre-CTAS spelling): same
+        # materialization as CTAS; the FROM-less form holds one
+        # computed row. Like CREATE TABLE AS, an existing target
+        # errors (execMain.c CreateIntoRelDestReceiver).
+        m = _SELECT_INTO_RE.match(s)
+        if m is None:
+            return None
+        tgt = m.group(2).split(".")[-1].lower()
+        exists = tgt in self.catalog.tables
+        if not exists:
+            try:
+                exists = self.spark.catalog.tableExists(tgt)
+            except Exception:  # noqa: BLE001
+                exists = False
+        if exists:
+            raise ValueError(f'relation "{tgt}" already exists')
+        return self._create_table_stmt(
+            f"CREATE TABLE {m.group(2)} AS {m.group(1)} "
+            f"{m.group(3) or ''}".strip())
 
     @staticmethod
     def _copy_options(opts: str | None) -> dict[str, str]:
@@ -2158,7 +2112,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         PG: text format, no header, and a tab delimiter in text format
         but a comma in csv format."""
         out = {"format": "text", "header": "false"}
-        for item in _split_exprs(opts or ""):
+        for item in _split_commas(opts or ""):
             kv = item.strip().split(None, 1)
             key = kv[0].lower()
             val = kv[1].strip().strip("'") if len(kv) > 1 else "true"
@@ -2242,8 +2196,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         """
         import pyspark.sql.functions as F
 
-        from warehouse_pg_spark.sql_dialect import _mask, _unmask
-
         masked, lits = _mask(s)
         parts = re.split(
             r"\bWHEN\s+(?=MATCHED\b|NOT\s+MATCHED\b)", masked,
@@ -2266,10 +2218,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         ta = hm.group(2) or name
         rest = header[hm.end():].strip()
         if rest.startswith("("):
-            depth, i = 1, 1
-            while i < len(rest) and depth:
-                depth += {"(": 1, ")": -1}.get(rest[i], 0)
-                i += 1
+            i = _close_paren(rest, 1)
+            if i < 0:
+                raise ValueError("MERGE: unbalanced USING subquery")
             src_sql, rest = _unmask(rest[1: i - 1], lits), rest[i:].strip()
             src_df = self.spark.sql(src_sql)
             sa = None
@@ -2327,7 +2278,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                     if im.group(1)
                     else None
                 )
-                vals = [_unmask(v, lits) for v in _split_exprs(im.group(2))]
+                vals = [_unmask(v, lits) for v in _split_commas(im.group(2))]
                 clauses.append((is_matched, cond, "insert", (target_cols, vals)))
             elif re.match(r"^DO\s+NOTHING\s*$", action, re.IGNORECASE):
                 clauses.append((is_matched, cond, "nothing", None))
@@ -2423,7 +2374,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         set_clause: str,
         where: str,
         returning: str | None,
-        _ret,
     ) -> DataFrame:
         """UPDATE whose WHERE carries a subquery (IN/EXISTS/scalar —
         regress update.sql): match rowids via spark.sql, apply SET to
@@ -2448,7 +2398,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 for c in schema.fieldNames()
             ],
         )
-        ret = _ret(updated.drop("__rid")) if returning else None
+        ret = (self._returning(returning, updated.drop("__rid"))
+               if returning else None)
         n = matched.count()
         rest = base.join(matched, "__rid", "left_anti")
         t._swap_in(updated.unionByName(rest).drop("__rid"))
@@ -2463,7 +2414,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         src_alias: str | None,
         where: str,
         returning: str | None = None,
-        _ret=None,
     ) -> DataFrame | None:
         """PG `UPDATE t SET c = expr FROM s WHERE join_cond` (gram.y
         UpdateStmt from_clause; planner turns it into a join whose inner
@@ -2513,7 +2463,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 out_cols.append(F.col(f"{tname}.{c}").alias(c))
         n = picked.filter(matched).count()
         ret = (
-            _ret(picked.filter(matched).select(*out_cols))
+            self._returning(returning, picked.filter(matched).select(*out_cols))
             if returning
             else None
         )
@@ -2560,7 +2510,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             if info is None or not info.path or not os.path.isdir(
                     info.path):
                 return None
-        return ParquetTable(self.spark, info.path)
+        return ParquetTable(self.spark, info.path, info.partition_cols,
+                            info.derived)
 
     def _refresh_view(self, name: str, t: ParquetTable) -> None:
         t.read().createOrReplaceTempView(name)
@@ -2610,15 +2561,18 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
     def writable(self, path: str) -> ParquetTable:
         return ParquetTable(self.spark, path)
 
-    def create_table_from(self, name: str, df: DataFrame, partition_by: tuple[str, ...] = ()) -> ParquetTable:
-        """CTAS into the warehouse dir; registers a view."""
-        path = os.path.join(self.warehouse_dir, name)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-        self.catalog.register_parquet(name, path, partition_cols=partition_by)
-        return ParquetTable(self.spark, path)
+    def create_table_from(
+        self, name: str, df: DataFrame, partition_by: tuple[str, ...] = (),
+        derived: dict[str, Column] | None = None,
+    ) -> ParquetTable:
+        """CTAS into the warehouse dir; registers a view. `derived`
+        columns are computed from the row on every write."""
+        t = ParquetTable(self.spark, os.path.join(self.warehouse_dir, name),
+                         partition_by, derived)
+        t.write(df, "overwrite")
+        self.catalog.register_parquet(
+            name, t.path, partition_cols=partition_by, derived=derived)
+        return t
 
     def create_bucketed_table(
         self,

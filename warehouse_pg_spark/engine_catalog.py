@@ -31,6 +31,7 @@ from __future__ import annotations
 import re
 import zlib
 
+from warehouse_pg_spark.dialect.mask import _LIT, _lit_value
 from warehouse_pg_spark.session import local_frame
 
 # public pg_type.dat oid assignments for the types the engine emits
@@ -74,14 +75,6 @@ def _pg_type_of(spark_type: str) -> str:
     return "text"
 
 
-_PG_CATALOG_RE = re.compile(
-    r"\b(?:pg_catalog\.)?(pg_class|pg_attribute|pg_type|pg_namespace|"
-    r"pg_proc|pg_trigger|pg_index|pg_constraint|pg_inherits|"
-    r"pg_stat_activity|gp_stat_activity|gp_stat_replication|"
-    r"pg_partition_tree|pg_partition_root|pg_relation_filenode|"
-    r"pg_filenode_relation)\b",
-    re.IGNORECASE)
-
 # catalog relations that exist but hold nothing in this engine —
 # no triggers/b-tree indexes/table constraints/inheritance links are
 # materialized (constraints drop at CREATE, CREATE INDEX is advisory),
@@ -108,25 +101,69 @@ _EMPTY_CATALOG_VIEWS: dict[str, str] = {
                             "state STRING, sync_state STRING, "
                             "application_name STRING"),
 }
+# dbsize.c filenode accessors: this engine has no physical
+# relfilenode, so filenode ≡ oid (matching pg_class, which reports
+# relfilenode = oid) and the pair round-trips. Partition
+# introspection (partitioning/partdesc.c): GP partition specs are
+# layout hints here (README deviations) — every relation is its own
+# single-node partition tree.
+_CATALOG_FUNCTIONS: dict[str, str] = {
+    "pg_relation_filenode": "(rel BIGINT) RETURNS BIGINT RETURN rel",
+    "pg_filenode_relation": "(ts BIGINT, fn BIGINT) RETURNS BIGINT RETURN fn",
+    "pg_partition_root": "(rel STRING) RETURNS STRING RETURN rel",
+    "pg_partition_tree": (
+        "(rel STRING) RETURNS TABLE(relid STRING, parentrelid STRING, "
+        "isleaf BOOLEAN, level INT) "
+        "RETURN SELECT rel, CAST(NULL AS STRING), true, 0"),
+}
+
+# The one catalog-view table: relation name -> builder. A statement
+# builds only the relations it names, each from the engine catalog and
+# the live Spark schemas at that moment.
+_CATALOG_VIEWS: dict[str, str] = {
+    "pg_namespace": "_build_pg_namespace",
+    "pg_class": "_build_pg_class",
+    "pg_attribute": "_build_pg_attribute",
+    "pg_type": "_build_pg_type",
+    "pg_proc": "_build_pg_proc",
+    "pg_tables": "_build_pg_tables",
+    "information_schema_columns": "_build_information_schema_columns",
+    "pg_stat_user_tables": "_build_pg_stat_user_tables",
+    **dict.fromkeys(_EMPTY_CATALOG_VIEWS, "_build_empty_view"),
+    **dict.fromkeys(_CATALOG_FUNCTIONS, "_build_catalog_function"),
+}
+# a catalog name in masked text, `pg_catalog.`-qualified or not;
+# information_schema.columns is flat (temp views live in no database)
+_CATALOG_NAME_RE = re.compile(
+    r"\b(?:pg_catalog\.)?("
+    + "|".join(n for n in _CATALOG_VIEWS if n != "information_schema_columns")
+    + r")\b|\binformation_schema[._]columns\b",
+    re.IGNORECASE)
 _GP_DIST_RANDOM_RE = re.compile(
-    r"\bgp_dist_random\s*\(\s*'([\w.]+)'\s*\)", re.IGNORECASE)
+    rf"\bgp_dist_random\s*\(\s*({_LIT})\s*\)", re.IGNORECASE)
 
 
 class CatalogViewsMixin:
-    def _maybe_pg_catalog(self, text: str) -> str:
-        """Front-door hook: when a statement references a pg_catalog
-        relation, (re)build the views and strip the schema
-        qualification (temp views cannot live inside a database)."""
-        if _GP_DIST_RANDOM_RE.search(text):
-            # one logical "segment" under Spark: the per-segment scan
-            # is the relation itself (gp_segment_id references lower
-            # to spark_partition_id() in sql_dialect)
-            text = _GP_DIST_RANDOM_RE.sub(
-                lambda m: m.group(1).split(".")[-1], text)
-        if not _PG_CATALOG_RE.search(text):
-            return text
-        self._ensure_pg_catalog_views()
-        return _PG_CATALOG_RE.sub(lambda m: m.group(1).lower(), text)
+    def _maybe_pg_catalog(self, masked: str, lits: list[str]) -> str:
+        """The catalog pass over a statement's masked text: build the
+        catalog relations it names and strip their schema
+        qualification. gp_dist_random('tbl') (GP: read a relation from
+        every segment) is the relation itself under one logical
+        segment; gp_segment_id lowers to spark_partition_id() in
+        sql_dialect."""
+        masked = _GP_DIST_RANDOM_RE.sub(
+            lambda m: _lit_value(m.group(1), lits).split(".")[-1], masked)
+        names: set[str] = set()
+
+        def flat(m: re.Match) -> str:
+            name = (m.group(1) or "information_schema_columns").lower()
+            names.add(name)
+            return name
+
+        masked = _CATALOG_NAME_RE.sub(flat, masked)
+        if names:
+            self._ensure_catalog_views(names)
+        return masked
 
     def _catalog_relations(self) -> list[tuple[str, str]]:
         """(name, relkind) for every relation the session can see:
@@ -152,76 +189,79 @@ class CatalogViewsMixin:
             rels[name] = "v"
         return sorted(rels.items())
 
-    def _ensure_pg_catalog_views(self) -> None:
-        spark = self.spark
-        rels = self._catalog_relations()
+    def _relation_fields(self):
+        """(name, relkind, oid, schema fields) per visible relation."""
+        for name, kind in self._catalog_relations():
+            fields = []
+            if kind != "S":
+                try:
+                    fields = self.spark.table(name).schema.fields
+                except Exception:
+                    if not name.startswith("pg_"):
+                        continue
+                    # a catalog view not built yet this session still
+                    # gets its pg_class row
+            yield name, kind, _obj_oid("rel", name), fields
 
+    def _build_pg_namespace(self, name: str) -> None:
         ns_rows = [(oid, n) for n, oid in _NS_OIDS.items()]
         try:
-            for db in spark.catalog.listDatabases():
+            for db in self.spark.catalog.listDatabases():
                 if db.name not in _NS_OIDS:
                     ns_rows.append((_obj_oid("ns", db.name), db.name))
         except Exception:
             pass
         local_frame(
-            spark, sorted(ns_rows), "oid BIGINT, nspname STRING"
-        ).createOrReplaceTempView("pg_namespace")
+            self.spark, sorted(ns_rows), "oid BIGINT, nspname STRING"
+        ).createOrReplaceTempView(name)
 
-        cls_rows, att_rows = [], []
-        for name, kind in rels:
-            oid = _obj_oid("rel", name)
-            fields = []
-            if kind != "S":
-                try:
-                    fields = spark.table(name).schema.fields
-                except Exception:
-                    if not name.startswith("pg_"):
-                        continue
-                    # a catalog view not built yet this session still
-                    # gets its pg_class row (attribute rows follow on
-                    # the next rebuild)
-            cls_rows.append((
-                oid, name, 2200, kind, "p", oid, 0, 0,
-                float(len(fields)), len(fields), False, False))
-            for i, f in enumerate(fields, start=1):
-                pg_t = _pg_type_of(f.dataType.simpleString())
-                att_rows.append((
-                    oid, name, f.name.lower(), i,
-                    _PG_TYPE_OIDS.get(pg_t, 25), pg_t,
-                    not f.nullable, False, -1))
+    def _build_pg_class(self, name: str) -> None:
+        rows = [
+            (oid, rel, 2200, kind, "p", oid, 0, 0,
+             float(len(fields)), len(fields), False, False)
+            for rel, kind, oid, fields in self._relation_fields()
+        ]
         local_frame(
-            spark, cls_rows,
+            self.spark, rows,
             "oid BIGINT, relname STRING, relnamespace BIGINT, "
             "relkind STRING, relpersistence STRING, relfilenode BIGINT, "
             "reltablespace BIGINT, relpages BIGINT, reltuples DOUBLE, "
             "relnatts INT, relhasindex BOOLEAN, relispartition BOOLEAN",
-        ).createOrReplaceTempView("pg_class")
+        ).createOrReplaceTempView(name)
+
+    def _build_pg_attribute(self, name: str) -> None:
+        rows = []
+        for rel, _kind, oid, fields in self._relation_fields():
+            for i, f in enumerate(fields, start=1):
+                pg_t = _pg_type_of(f.dataType.simpleString())
+                rows.append((
+                    oid, rel, f.name.lower(), i,
+                    _PG_TYPE_OIDS.get(pg_t, 25), pg_t,
+                    not f.nullable, False, -1))
         local_frame(
-            spark, att_rows,
+            self.spark, rows,
             "attrelid BIGINT, relname STRING, attname STRING, "
             "attnum INT, atttypid BIGINT, atttypname STRING, "
             "attnotnull BOOLEAN, attisdropped BOOLEAN, atttypmod INT",
-        ).createOrReplaceTempView("pg_attribute")
+        ).createOrReplaceTempView(name)
 
+    def _build_pg_type(self, name: str) -> None:
         typ_rows = [
             (oid, n, 11, "b", "b" if n != "record" else "p")
             for n, oid in _PG_TYPE_OIDS.items()
         ]
         ut = self._user_types
-        for n in ut.enums:
-            typ_rows.append((_obj_oid("typ", n), n, 2200, "e", "e"))
-        for n in ut.domains:
-            typ_rows.append((_obj_oid("typ", n), n, 2200, "d", "d"))
-        for n in ut.composites:
-            typ_rows.append((_obj_oid("typ", n), n, 2200, "c", "c"))
-        for n in ut.ranges:
-            typ_rows.append((_obj_oid("typ", n), n, 2200, "r", "r"))
+        for store, kind in ((ut.enums, "e"), (ut.domains, "d"),
+                            (ut.composites, "c"), (ut.ranges, "r")):
+            for n in store:
+                typ_rows.append((_obj_oid("typ", n), n, 2200, kind, kind))
         local_frame(
-            spark, sorted(typ_rows),
+            self.spark, sorted(typ_rows),
             "oid BIGINT, typname STRING, typnamespace BIGINT, "
             "typtype STRING, typcategory STRING",
-        ).createOrReplaceTempView("pg_type")
+        ).createOrReplaceTempView(name)
 
+    def _build_pg_proc(self, name: str) -> None:
         fn_names: set[str] = set()
         for reg in ("_table_functions", "_scalar_fn_exprs",
                     "_poly_functions", "_sql_aggregates",
@@ -233,32 +273,65 @@ class CatalogViewsMixin:
             for n in sorted(fn_names)
         ]
         local_frame(
-            spark, proc_rows or [(0, "", 0, "f")],
+            self.spark, proc_rows or [(0, "", 0, "f")],
             "oid BIGINT, proname STRING, pronamespace BIGINT, "
             "prokind STRING",
-        ).createOrReplaceTempView("pg_proc")
+        ).createOrReplaceTempView(name)
 
-        for vname, schema in _EMPTY_CATALOG_VIEWS.items():
-            local_frame(spark, [], schema).createOrReplaceTempView(
-                vname)
+    def _build_empty_view(self, name: str) -> None:
+        local_frame(
+            self.spark, [], _EMPTY_CATALOG_VIEWS[name]
+        ).createOrReplaceTempView(name)
 
-        # dbsize.c filenode accessors: this engine has no physical
-        # relfilenode, so filenode ≡ oid (matching pg_class above,
-        # which reports relfilenode = oid) and the pair round-trips
-        spark.sql(
-            "CREATE OR REPLACE TEMPORARY FUNCTION pg_relation_filenode"
-            "(rel BIGINT) RETURNS BIGINT RETURN rel")
-        spark.sql(
-            "CREATE OR REPLACE TEMPORARY FUNCTION pg_filenode_relation"
-            "(ts BIGINT, fn BIGINT) RETURNS BIGINT RETURN fn")
-        # partition introspection (partitioning/partdesc.c): GP
-        # partition specs are layout hints here (README deviations) —
-        # every relation is its own single-node partition tree
-        spark.sql(
-            "CREATE OR REPLACE TEMPORARY FUNCTION pg_partition_root"
-            "(rel STRING) RETURNS STRING RETURN rel")
-        spark.sql(
-            "CREATE OR REPLACE TEMPORARY FUNCTION pg_partition_tree"
-            "(rel STRING) RETURNS TABLE(relid STRING, "
-            "parentrelid STRING, isleaf BOOLEAN, level INT) "
-            "RETURN SELECT rel, CAST(NULL AS STRING), true, 0")
+    def _build_catalog_function(self, name: str) -> None:
+        self.spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}"
+            f"{_CATALOG_FUNCTIONS[name]}")
+
+    def _build_pg_tables(self, name: str) -> None:
+        """pg_tables (system_views.sql): one row per engine table."""
+        rows = [
+            ("public", t, "spark", None, False, False, False)
+            for t in sorted(self.catalog.tables)
+        ]
+        local_frame(
+            self.spark, rows,
+            "schemaname string, tablename string, tableowner string, "
+            "tablespace string, hasindexes boolean, hasrules boolean, "
+            "hastriggers boolean",
+        ).createOrReplaceTempView(name)
+
+    def _build_information_schema_columns(self, name: str) -> None:
+        """information_schema.columns over the engine tables."""
+        rows = []
+        for t in sorted(self.catalog.tables):
+            try:
+                schema = self.spark.table(t).schema
+            except Exception:
+                continue
+            for i, f in enumerate(schema.fields, start=1):
+                rows.append((
+                    "spark", "public", t, f.name, i,
+                    f.dataType.simpleString(),
+                    "YES" if f.nullable else "NO",
+                ))
+        local_frame(
+            self.spark, rows,
+            "table_catalog string, table_schema string, table_name string, "
+            "column_name string, ordinal_position int, data_type string, "
+            "is_nullable string",
+        ).createOrReplaceTempView(name)
+
+    def _build_pg_stat_user_tables(self, name: str) -> None:
+        """pg_stat_user_tables (system_views.sql; the DBA's row-count
+        dashboard): relname + n_live_tup from the engine's metrics()
+        introspection, which counts every registered table."""
+        import pyspark.sql.functions as F
+
+        self.metrics().select(
+            F.lit("public").alias("schemaname"),
+            F.col("table_name").alias("relname"),
+            F.col("n_rows").alias("n_live_tup"),
+            F.col("n_bytes"),
+            F.col("n_files"),
+        ).createOrReplaceTempView(name)

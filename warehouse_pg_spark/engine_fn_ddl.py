@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import re
 
+from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas
+
+
 class FunctionDDLMixin:
     _CREATE_AGG_RE = re.compile(
         r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?(?:ORDERED\s+)?AGGREGATE"
@@ -29,7 +32,6 @@ class FunctionDDLMixin:
         and call sites expand by substitution, exactly the view
         inlining the planner does for SQL functions. LANGUAGE sql
         only; anything else stays loud."""
-        from warehouse_pg_spark.engine import _split_exprs
 
         lang_m = re.search(r"\bLANGUAGE\s+'?(\w+)'?", tail, re.IGNORECASE)
         if (lang_m.group(1) if lang_m else "sql").lower() != "sql":
@@ -68,7 +70,7 @@ class FunctionDDLMixin:
         pnames: list[str] = []
         ptypes: list[str] = []
         variadic_at: int | None = None
-        for i, a in enumerate(_split_exprs(rawargs)):
+        for i, a in enumerate(_split_commas(rawargs)):
             toks = a.strip().split()
             if toks and toks[0].upper() == "VARIADIC":
                 variadic_at = i
@@ -129,8 +131,7 @@ class FunctionDDLMixin:
             m = _re.match(r"(?is)^ARRAY\s*\[(.*)\]$", a.strip())
             if m is None:
                 return None
-            from warehouse_pg_spark.engine import _split_exprs
-            items = [x.strip() for x in _split_exprs(m.group(1))]
+            items = [x.strip() for x in _split_commas(m.group(1))]
             if items and all(_re.fullmatch(r"-?\d+", x)
                              for x in items):
                 return "integer"
@@ -166,7 +167,6 @@ class FunctionDDLMixin:
         resolution, done by Catalyst instead of a catalog). FROM-
         position calls become inline subqueries; scalar/sole-target
         calls become the body's single expression."""
-        from warehouse_pg_spark.engine import _split_exprs
 
         if not self._poly_functions:
             return text
@@ -176,15 +176,11 @@ class FunctionDDLMixin:
                 m = pat.search(text)
                 if m is None:
                     break
-                depth, j = 1, m.end()
-                while j < len(text) and depth:
-                    if text[j] == "(":
-                        depth += 1
-                    elif text[j] == ")":
-                        depth -= 1
-                    j += 1
+                j = _close_paren(text, m.end())
+                if j < 0:
+                    break
                 args = [a.strip() for a in
-                        _split_exprs(text[m.end(): j - 1])]
+                        _split_commas(text[m.end(): j - 1])]
                 self._check_poly_args(name, d.get("ptypes") or [],
                                       args)
                 va = d.get("variadic_at")
@@ -223,7 +219,7 @@ class FunctionDDLMixin:
                         r"(?is)^\s*SELECT\s+(.*?)\s+(FROM\s+.*)$",
                         body,
                     )
-                    if (sm and len(_split_exprs(sm.group(1))) == 1
+                    if (sm and len(_split_commas(sm.group(1))) == 1
                             and not re.search(r"(?is)\bAS\s+\w+\s*$",
                                               sm.group(1))):
                         # PG names the single result column after the
@@ -292,7 +288,16 @@ class FunctionDDLMixin:
                 return map_decl_type(t.strip())
         return f"ARRAY<{base}>" if arr else base
 
-    def _maybe_create_aggregate(self, text: str):
+    def _drop_aggregate(self, s: str):
+        m = self._DROP_AGG_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        key = m.group(2).split(".")[-1].lower()
+        if self._sql_aggregates.pop(key, None) is None and not m.group(1):
+            raise ValueError(f'aggregate "{key}" does not exist')
+        return self._tag(0)
+
+    def _create_aggregate(self, s: str):
         """CREATE AGGREGATE (commands/aggregatecmds.c DefineAggregate):
         both the modern `name(argtypes) (options)` and the old GP
         one-paren `name (basetype = X, sfunc = ...)` forms register
@@ -303,23 +308,16 @@ class FunctionDDLMixin:
         restructure into a partial/merge two-stage plan so no task
         ever buffers a whole group; without one the sequential fold
         is the semantic contract (group-size bound documented in
-        README deviations)."""
-        m = self._DROP_AGG_RE.match(text)
-        if m:
-            key = m.group(2).split(".")[-1].lower()
-            if self._sql_aggregates.pop(key, None) is None and not m.group(1):
-                raise ValueError(f'aggregate "{key}" does not exist')
-            return self._tag(0)
-        m = self._CREATE_AGG_RE.match(text)
-        if m is None:
-            return None
-        name = m.group(1).split(".")[-1].strip('"').lower()
-        first, second = m.group(2) or "", m.group(3)
+        README deviations). A form without an options list goes to
+        Spark, which rejects it."""
+        m = self._CREATE_AGG_RE.match(s)
+        first, second = (m.group(2) or "", m.group(3)) if m else ("", None)
         opts_src = second if second is not None else first
         if "=" not in opts_src:
-            return None  # not an options list: stay loud
+            return self._spark_stmt(s)
+        name = m.group(1).split(".")[-1].strip('"').lower()
         opts: dict[str, str] = {}
-        for item in self._split_args(opts_src):
+        for item in _split_commas(opts_src):
             km = re.match(r'(?s)^\s*"?(\w+)"?\s*=\s*(.+?)\s*$', item)
             if km:
                 k = km.group(1).lower()
@@ -399,7 +397,6 @@ class FunctionDDLMixin:
         across partitions instead of one task. Returns None (caller
         falls back to the single fold) for shapes outside the simple
         GROUP BY form."""
-        from warehouse_pg_spark.engine import _split_exprs
 
         if re.search(r"(?is)\b(having|union|intersect|except|over|"
                      r"window|distinct|join)\b", text):
@@ -410,7 +407,7 @@ class FunctionDDLMixin:
         keys = [k.strip() for k in m.group("keys").split(",")]
         if not all(re.fullmatch(r'[\w."]+', k) for k in keys):
             return None
-        items = _split_exprs(m.group("list"))
+        items = _split_commas(m.group("list"))
         agg_names = {n: d for n, d in self._sql_aggregates.items()
                      if d.get("combinefunc")}
         if not agg_names:
@@ -548,7 +545,6 @@ class FunctionDDLMixin:
         closest single-namespace rendering of PG's overload set)."""
         if not self._shadowed_fns:
             return text
-        from warehouse_pg_spark.engine import _split_exprs
 
         for name, arity in self._shadowed_fns.items():
             pat = re.compile(rf'(?is)(?<![\w.])"?{re.escape(name)}"?\s*\(')
@@ -557,15 +553,10 @@ class FunctionDDLMixin:
                 m = pat.search(text, pos)
                 if m is None:
                     break
-                depth, j = 1, m.end()
-                while j < len(text) and depth:
-                    if text[j] == "(":
-                        depth += 1
-                    elif text[j] == ")":
-                        depth -= 1
-                    j += 1
-                args = [a for a in _split_exprs(text[m.end(): j - 1])
-                        if a.strip()]
+                j = _close_paren(text, m.end())
+                if j < 0:
+                    break
+                args = _split_commas(text[m.end(): j - 1])
                 if len(args) == arity:
                     text = (text[: m.start()] + f"__pgudf_{name}("
                             + text[m.end(): ])
@@ -579,7 +570,6 @@ class FunctionDDLMixin:
         body is DML, not an expression)."""
         if not self._void_procs:
             return None
-        from warehouse_pg_spark.engine import _split_exprs
 
         m = re.match(
             r"(?is)^\s*SELECT\s+([\w.]+)\s*\((.*)\)\s*;?\s*$",
@@ -590,7 +580,7 @@ class FunctionDDLMixin:
         proc = self._void_procs.get(name)
         if proc is None:
             return None
-        args = [a.strip() for a in _split_exprs(m.group(2))]
+        args = [a.strip() for a in _split_commas(m.group(2))]
         if proc[0] == "plpgsql":
             if len(args) != len(proc[1]):
                 return None

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import re
 
+from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas
+
 _PROC_MAX_STEPS = 100_000
 # a cursor / query-FOR portal materializes driver-side; this is a
 # session-DDL convenience path, not a data-plane operator — stay loud
@@ -234,7 +236,6 @@ class ProcedureMixin:
                     r"(?:FUNCTION|PROCEDURE|AGGREGATE|TYPE|TRIGGER)\b",
                     text):
             return text  # never freeze call results into stored bodies
-        from warehouse_pg_spark.engine import _split_exprs
 
         for name in list(self._void_procs):
             if name not in text.lower():
@@ -245,14 +246,11 @@ class ProcedureMixin:
                 m = pat.search(text, pos)
                 if m is None:
                     break
-                depth, j = 1, m.end()
-                while j < len(text) and depth:
-                    depth += {"(": 1, ")": -1}.get(text[j], 0)
-                    j += 1
-                if depth:
+                j = _close_paren(text, m.end())
+                if j < 0:
                     break
                 raw = text[m.end(): j - 1]
-                args = ([a.strip() for a in _split_exprs(raw)]
+                args = ([a.strip() for a in _split_commas(raw)]
                         if raw.strip() else [])
                 lit = self._eval_interpreted_call(name, args)
                 if lit is None:

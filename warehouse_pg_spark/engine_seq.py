@@ -8,6 +8,14 @@ from __future__ import annotations
 
 import re
 
+from warehouse_pg_spark.dialect.mask import (
+    _LIT,
+    _close_paren,
+    _lit_value,
+    _new_lit,
+    _split_commas,
+)
+
 
 _CREATE_SEQ_RE = re.compile(
     # options (sequence.c init_params): START is honored; INCREMENT/
@@ -50,39 +58,57 @@ _ALTER_SEQ_NOOP_RE = re.compile(
     r"|INCREMENT|MINVALUE|MAXVALUE|CACHE|NO\s+|CYCLE|AS\s+)",
     re.IGNORECASE,
 )
+# The call passes below run on masked text: a quoted argument is a
+# masked-literal token, so a call inside a literal or a comment is
+# never seen.
 _NEXTVAL_RE = re.compile(
     # name may carry a ::regclass/::text decoration (sequence.c
     # nextval_oid resolves either spelling)
-    r"nextval\(\s*'([\w.]+)'\s*(?:::\s*\w+\s*)?\)", re.IGNORECASE
+    rf"nextval\(\s*({_LIT})\s*(?:::\s*\w+\s*)?\)", re.IGNORECASE
 )
 _CURRVAL_RE = re.compile(
-    r"currval\(\s*'([\w.]+)'\s*(?:::\s*\w+\s*)?\)", re.IGNORECASE
+    rf"currval\(\s*({_LIT})\s*(?:::\s*\w+\s*)?\)", re.IGNORECASE
 )
 _SETVAL_RE = re.compile(
     # name may carry a ::regclass/::text decoration; optional 3rd
     # is_called arg (sequence.c setval3_oid)
-    r"setval\(\s*'([\w.]+)'\s*(?:::\s*\w+\s*)?,\s*(\d+)\s*"
+    rf"setval\(\s*({_LIT})\s*(?:::\s*\w+\s*)?,\s*(\d+)\s*"
     r"(?:,\s*(true|false)\s*)?\)",
     re.IGNORECASE,
 )
 
 _SET_CONFIG_RE = re.compile(
-    r"set_config\(\s*'([^']+)'\s*,\s*'([^']*)'\s*,\s*(?:true|false)\s*\)",
+    rf"set_config\(\s*({_LIT})\s*,\s*({_LIT})\s*,\s*(?:true|false)\s*\)",
     re.IGNORECASE,
 )
 
 _CURRENT_SETTING_RE = re.compile(
-    r"current_setting\(\s*'([^']+)'\s*(?:,\s*(true|false)\s*)?\)",
+    rf"current_setting\(\s*({_LIT})\s*(?:,\s*(true|false)\s*)?\)",
     re.IGNORECASE,
 )
+
+# only the kinds whose 2-/3-arg shapes are (obj, priv) / (user, obj,
+# priv) fold; has_column/sequence/function_privilege carry extra
+# validation (wrong relkind, per-kind privilege sets) and stay loud
+_HAS_PRIV_RE = re.compile(
+    rf"\bhas_(table|schema|database)_privilege\s*\(\s*"
+    rf"({_LIT})\s*,\s*({_LIT})\s*(?:,\s*({_LIT})\s*)?\)",
+    re.IGNORECASE,
+)
+# acl.c string_to_privilege: valid names per object kind
+_PRIV_NAMES = {
+    "table": {"SELECT", "INSERT", "UPDATE", "DELETE", "TRUNCATE",
+              "REFERENCES", "TRIGGER", "MAINTAIN", "ALL"},
+    "schema": {"CREATE", "USAGE", "ALL"},
+    "database": {"CREATE", "CONNECT", "TEMPORARY", "TEMP", "ALL"},
+}
 
 
 class SequenceMixin:
     # ----------------------------------------------------------- sequences
-    def _maybe_sequence(self, text: str) -> DataFrame | None:
+    def _sequence_ddl(self, s: str) -> DataFrame:
         """PG sequence DDL (commands/sequence.c; regress sequence.sql):
         CREATE/DROP/ALTER ... RESTART. State is coordinator-side ints."""
-        s = text.strip().rstrip(";").strip()
         m = _CREATE_SEQ_RE.match(s)
         if m:
             name = m.group(1).split(".")[-1]
@@ -118,7 +144,7 @@ class SequenceMixin:
             return self._tag(0)
         if _ALTER_SEQ_NOOP_RE.match(s):
             return self._tag(0)
-        return None
+        return self._spark_stmt(s)
 
     def _seq(self, name: str) -> dict[str, int]:
         if name not in self._sequences:
@@ -149,24 +175,10 @@ class SequenceMixin:
         )
         if m is None:
             return
-        depth, i, quote = 1, m.end(), None
-        while i < len(text) and depth:
-            ch = text[i]
-            if quote:
-                if ch == quote:
-                    quote = None
-            elif ch == "'":
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        i = _close_paren(text, m.end())
+        if i < 0:
             return
-        from warehouse_pg_spark.user_types import (
-            Composite, _split_commas,
-        )
+        from warehouse_pg_spark.user_types import Composite
 
         fields: list[tuple[str, str]] = []
         for item in _split_commas(text[m.end(): i - 1]):
@@ -196,7 +208,6 @@ class SequenceMixin:
                         f"{key}_{col}_seq", {"next": 1, "start": 1})
 
     def _substitute_variadic_calls(self, text: str) -> str:
-        from warehouse_pg_spark.engine import _split_exprs
 
         """Rewrite calls to registered VARIADIC user functions
         (functioncmds.c / funcapi variadic spread): `f(a, x, y, z)`
@@ -213,24 +224,12 @@ class SequenceMixin:
                 m = pat.search(text, pos)
                 if m is None:
                     break
-                depth, i, quote = 1, m.end(), None
-                while i < len(text) and depth:
-                    ch = text[i]
-                    if quote:
-                        if ch == quote:
-                            quote = None
-                    elif ch == "'":
-                        quote = ch
-                    elif ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                    i += 1
-                if depth:
+                i = _close_paren(text, m.end())
+                if i < 0:
                     break
                 args = [
                     a.strip()
-                    for a in _split_exprs(text[m.end(): i - 1])
+                    for a in _split_commas(text[m.end(): i - 1])
                     if a.strip()
                 ]
                 vm = (
@@ -252,15 +251,16 @@ class SequenceMixin:
                 pos = m.start() + len(newcall)
         return text
 
-    def _substitute_setting_calls(self, text: str) -> str:
+    def _substitute_setting_calls(self, masked: str, lits: list[str]) -> str:
         """current_setting('k' [, missing_ok]) / set_config('k', 'v',
         is_local) (utils/misc/guc.c SQL accessors) as driver-side
         literal substitution: the session GUC store lives on the
         coordinator, so the value inlines as a constant and the query
         stays wholly JVM-side — and it is always the CURRENT value
         (a pickled-closure UDF would freeze registration-time state)."""
-        if "current_setting" not in text.lower() and "set_config" not in text.lower():
-            return text
+        low = masked.lower()
+        if "current_setting" not in low and "set_config" not in low:
+            return masked
 
         def _get(k: str) -> str | None:
             if k in ("timezone", "time zone"):
@@ -268,40 +268,40 @@ class SequenceMixin:
             return self._gucs.get(k)
 
         def setc(m: re.Match) -> str:
-            k, v = m.group(1).lower(), m.group(2)
+            k = _lit_value(m.group(1), lits).lower()
+            v = _lit_value(m.group(2), lits)
             self._gucs[k] = v
             if k == "timezone":
                 self.spark.conf.set("spark.sql.session.timeZone", v)
-            return "'" + v.replace("'", "''") + "'"
+            return _new_lit(v, lits)
 
         def cur(m: re.Match) -> str:
-            k = m.group(1).lower()
+            k = _lit_value(m.group(1), lits).lower()
             missing_ok = (m.group(2) or "").lower() == "true"
             v = _get(k)
             if v is None:
                 if missing_ok:
                     return "CAST(NULL AS STRING)"
                 raise KeyError(f'unrecognized configuration parameter "{k}"')
-            return "'" + v.replace("'", "''") + "'"
+            return _new_lit(v, lits)
 
-        text = _SET_CONFIG_RE.sub(setc, text)
-        return _CURRENT_SETTING_RE.sub(cur, text)
+        masked = _SET_CONFIG_RE.sub(setc, masked)
+        return _CURRENT_SETTING_RE.sub(cur, masked)
 
-    def _substitute_privilege_calls(self, text: str) -> str:
+    def _substitute_privilege_calls(self, masked: str, lits: list[str]) -> str:
         """has_*_privilege() over literal args folds driver-side from
         the GRANT/REVOKE ledger (aclchk.c has_table_privilege family):
         all-granted until a REVOKE lands; a comma list of privileges
         is true when ANY is held (aclchk.c string_to_privilege loop).
         The 2-arg form checks the current role (SET ROLE /
         SESSION AUTHORIZATION, else public)."""
-        from warehouse_pg_spark.engine import _HAS_PRIV_RE, _PRIV_NAMES
-
-        if "_privilege" not in text.lower():
-            return text
+        if "_privilege" not in masked.lower():
+            return masked
 
         def sub(m: re.Match) -> str:
             kind = m.group(1).lower()
-            a, b, c = m.group(2), m.group(3), m.group(4)
+            a, b, c = (m.group(i) and _lit_value(m.group(i), lits)
+                       for i in (2, 3, 4))
             if c is None:
                 role = self._gucs.get("role", "none")
                 who = (role if role != "none" else
@@ -326,9 +326,9 @@ class SequenceMixin:
                        for n in names)
             return "TRUE" if held else "FALSE"
 
-        return _HAS_PRIV_RE.sub(sub, text)
+        return _HAS_PRIV_RE.sub(sub, masked)
 
-    def _substitute_sequence_calls(self, text: str) -> str:
+    def _substitute_sequence_calls(self, masked: str, lits: list[str]) -> str:
         """Replace nextval/currval/setval('seq') literals in a statement.
 
         Each textual nextval occurrence allocates one value (PG evaluates
@@ -337,14 +337,17 @@ class SequenceMixin:
         driver-side substitution; those callers use assign_sequence_ids,
         which block-allocates like GP's segment value caches."""
         if not (
-            _NEXTVAL_RE.search(text)
-            or _CURRVAL_RE.search(text)
-            or _SETVAL_RE.search(text)
+            _NEXTVAL_RE.search(masked)
+            or _CURRVAL_RE.search(masked)
+            or _SETVAL_RE.search(masked)
         ):
-            return text
+            return masked
+
+        def _name(tok: str) -> str:
+            return _lit_value(tok, lits).split(".")[-1]
 
         def _setval(m: re.Match) -> str:
-            seq = self._seq(m.group(1).split(".")[-1])
+            seq = self._seq(_name(m.group(1)))
             val = int(m.group(2))
             # is_called=false: the NEXT nextval returns val itself
             is_called = (m.group(3) or "true").lower() == "true"
@@ -352,29 +355,31 @@ class SequenceMixin:
             seq["last"] = val
             return str(val)
 
-        text = _SETVAL_RE.sub(_setval, text)
+        masked = _SETVAL_RE.sub(_setval, masked)
 
-        if _NEXTVAL_RE.search(text) and re.search(r"\bFROM\b", text, re.IGNORECASE):
+        if _NEXTVAL_RE.search(masked) and re.search(
+                r"\bFROM\b", masked, re.IGNORECASE):
             raise NotImplementedError(
                 "per-row nextval() over a FROM clause: use "
                 "Engine.assign_sequence_ids(df, col, seq) for bulk allocation"
             )
 
         def _nextval(m: re.Match) -> str:
-            seq = self._seq(m.group(1).split(".")[-1])
+            seq = self._seq(_name(m.group(1)))
             val = seq["next"]
             seq["next"] = val + 1
             seq["last"] = val
             return str(val)
 
-        text = _NEXTVAL_RE.sub(_nextval, text)
+        masked = _NEXTVAL_RE.sub(_nextval, masked)
 
         def _currval(m: re.Match) -> str:
-            seq = self._seq(m.group(1).split(".")[-1])
+            seq = self._seq(_name(m.group(1)))
             if "last" not in seq:
                 raise RuntimeError(
-                    f"currval of sequence {m.group(1)!r} is not yet defined"
+                    f"currval of sequence {_name(m.group(1))!r} "
+                    "is not yet defined"
                 )
             return str(seq["last"])
 
-        return _CURRVAL_RE.sub(_currval, text)
+        return _CURRVAL_RE.sub(_currval, masked)

@@ -27,21 +27,41 @@ from warehouse_pg_spark import catalog
 class ParquetTable:
     """A writable parquet-backed table with copy-on-write DML."""
 
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        partition_cols: tuple[str, ...] = (),
+        derived: dict[str, Column] | None = None,
+    ):
         self.spark = spark
         self.path = path
+        # directory partition columns, and the columns every write
+        # computes from the row (a GP range-partition id)
+        self.partition_cols = tuple(partition_cols)
+        self.derived = dict(derived or {})
 
     def read(self) -> DataFrame:
         # a module-attribute call, so a tracer wrapping it sees DML reads
         return catalog.read_parquet_table(self.spark, self.path)
 
+    def write(self, df: DataFrame, mode: str, path: str | None = None) -> None:
+        """Write `df` in the table's layout: derived columns recomputed,
+        files under their partition directories."""
+        for col, expr in self.derived.items():
+            df = df.withColumn(col, expr)
+        writer = df.write.mode(mode)
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        writer.parquet(path or self.path)
+
     def insert(self, df: DataFrame) -> None:
         """INSERT = append new files (no rewrite)."""
-        df.write.mode("append").parquet(self.path)
+        self.write(df, "append")
 
     def _swap_in(self, df: DataFrame) -> None:
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
+        self.write(df, "overwrite", tmp)
         old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
         os.rename(self.path, old)
         os.rename(tmp, self.path)

@@ -62,6 +62,8 @@ from __future__ import annotations
 
 import re
 
+from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas
+
 __all__ = ["compile_plpgsql", "compile_plpgsql_setof", "PlpgsqlError"]
 
 
@@ -347,7 +349,7 @@ def _parse_case(s: str) -> tuple:
             sel = seg[:tpos].strip()
             if head:
                 # simple form: comma list of match values
-                vals = [v.strip() for v in _split_top_commas(sel)]
+                vals = [v.strip() for v in _split_commas(sel)]
                 cond = " OR ".join(f"(({head}) = ({v}))" for v in vals)
             else:
                 cond = sel
@@ -358,22 +360,6 @@ def _parse_case(s: str) -> tuple:
             seg = re.sub(r"^ELSE\b", "", seg, flags=re.IGNORECASE)
             else_body = _parse_stmts(_split_statements(seg))
     return ("case", cond_arms, else_body)
-
-
-def _split_top_commas(s: str) -> list[str]:
-    parts, depth, buf = [], 0, []
-    for ch in s:
-        if ch in "([":
-            depth += 1
-        elif ch in ")]":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            continue
-        buf.append(ch)
-    parts.append("".join(buf))
-    return [p for p in parts if p.strip()]
 
 
 _WHILE_RE = re.compile(r"^WHILE\s+(.+?)\s+LOOP\b", re.IGNORECASE | re.DOTALL)
@@ -416,7 +402,7 @@ def _parse_raise(s: str) -> tuple:
     opts: dict[str, str] = {}
     mu = re.search(r"(?i)\bUSING\b", _blank_parens(rest))
     if mu:
-        for item in _split_top_commas(rest[mu.end():]):
+        for item in _split_commas(rest[mu.end():]):
             om = re.match(
                 r"(?is)^\s*(MESSAGE|DETAIL|HINT|ERRCODE)\s*:?=\s*(.+)$",
                 item)
@@ -425,7 +411,7 @@ def _parse_raise(s: str) -> tuple:
                     f"unsupported RAISE USING option: {item[:40]!r}")
             opts[om.group(1).upper()] = om.group(2).strip()
         rest = rest[:mu.start()].strip()
-    parts0 = _split_top_commas(rest) if rest.strip() else []
+    parts0 = _split_commas(rest) if rest.strip() else []
     for p in parts0[1:]:
         if re.fullmatch(r"(?i)sqlstate|sqlerrm", p.strip()):
             # SQLSTATE/SQLERRM exist only inside EXCEPTION handlers
@@ -438,7 +424,7 @@ def _parse_raise(s: str) -> tuple:
                     [q.strip() for q in parts0[1:]])
     if level != "EXCEPTION":
         return ("null",)
-    parts = _split_top_commas(rest) if rest.strip() else []
+    parts = _split_commas(rest) if rest.strip() else []
     msg = parts[0].strip() if parts else opts.get("MESSAGE")
     if msg is None:
         raise PlpgsqlError("RAISE EXCEPTION requires a message")
@@ -579,7 +565,7 @@ def _parse_execute(s: str) -> tuple:
     using: list[str] = []
     mu = re.search(r"(?i)\bUSING\b", blank)
     if mu:
-        using = [x.strip() for x in _split_top_commas(body[mu.end():])]
+        using = [x.strip() for x in _split_commas(body[mu.end():])]
         body, blank = body[:mu.start()], blank[:mu.start()]
     into, strict = None, False
     mi = re.search(r"(?i)\bINTO\b", blank)
@@ -692,12 +678,9 @@ def _parse_for(s: str) -> tuple:
         # parenthesized — strip ONE balanced pair so the SELECT form
         # matches (dotted range FORs never start with a paren'd query
         # unless it is a subquery, which re-wraps identically)
-        j, depth = mp.end(), 1
-        while j < len(s) and depth:
-            depth += {"(": 1, ")": -1}.get(s[j], 0)
-            j += 1
+        j = _close_paren(s, mp.end())
         inner = s[mp.end(): j - 1].strip()
-        if depth == 0 and re.match(
+        if j > 0 and re.match(
                 r"(?is)^(SELECT|VALUES|WITH)\b", inner):
             s = s[:mp.end() - 1] + " " + inner + " " + s[j:]
     m = _FOR_RE.match(s)
@@ -888,9 +871,9 @@ def _analyze_for_query(query: str) -> tuple[str, str, list[str], list[str]]:
                 "FOR-over-query ORDER BY supports plain ASC keys only"
             )
         rest = mt.group(1).strip()
-        order_keys = [k.strip() for k in _split_top_commas(keys)]
+        order_keys = [k.strip() for k in _split_commas(keys)]
     cols: list[str] = []
-    for item in _split_top_commas(sel):
+    for item in _split_commas(sel):
         item = item.strip()
         ma = re.search(r"(?is)\s+AS\s+([A-Za-z_]\w*)\s*$", item)
         if ma:

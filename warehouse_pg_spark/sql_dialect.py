@@ -75,7 +75,7 @@ from warehouse_pg_spark.dialect.mask import (
     _mask,
     _new_lit,
     _new_lit_raw,
-    _split_args,
+    _split_commas,
     _unmask,
 )
 from warehouse_pg_spark.dialect.mathdate import (
@@ -863,7 +863,7 @@ def rewrite(sql: str) -> str:
     # which the DOUBLE-typed shim can't take — fold literal ::time
     # args to their seconds-past-midnight value
     def _fold_li_time_args(m: re.Match) -> str:
-        args = _split_args(m.group(1))
+        args = _split_commas(m.group(1))
         if len(args) != 5:
             return m.group(0)
         # interpolate.c signature checks: a text abscissa has no
@@ -1183,7 +1183,7 @@ def rewrite(sql: str) -> str:
     # design — no Spark built-in walks arbitrary jsonpath)
     def sub_jsonb_path_fn(m: re.Match) -> str:
         form = m.group(1).lower()
-        raw = [a.strip() for a in _split_args(m.group(2))]
+        raw = [a.strip() for a in _split_commas(m.group(2))]
         pos: list[str] = []
         named: dict[str, str] = {}
         for a in raw:
@@ -1259,7 +1259,7 @@ def rewrite(sql: str) -> str:
     # containment pass, whose @>/<@ would otherwise eat range operands
     def sub_range_ctor(m: re.Match) -> str:
         fn = m.group(1).lower()
-        args = [a.strip() for a in _split_args(m.group(2))]
+        args = [a.strip() for a in _split_commas(m.group(2))]
         if len(args) not in (2, 3):
             return m.group(0)
         lo, hi = args[0], args[1]

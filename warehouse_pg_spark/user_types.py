@@ -34,6 +34,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from warehouse_pg_spark.dialect.mask import _split_commas
+
 _RLIT = r"'(?:[^']|'')*'"
 # SQL keywords that may precede a parenthesized expression — never a
 # function-call name or cast operand (else `SELECT (x)::t` would
@@ -161,34 +163,6 @@ class Composite:
     fields: list[tuple[str, str]]  # (name, PG type spelling)
 
 
-def _split_commas(s: str) -> list[str]:
-    parts, depth, buf, i = [], 0, [], 0
-    while i < len(s):
-        ch = s[i]
-        if ch == "'":  # skip literal
-            j = i + 1
-            while j < len(s):
-                if s[j] == "'" and not (j + 1 < len(s) and s[j + 1] == "'"):
-                    break
-                j += 2 if s[j] == "'" else 1
-            buf.append(s[i: j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            i += 1
-            continue
-        buf.append(ch)
-        i += 1
-    parts.append("".join(buf))
-    return [p.strip() for p in parts if p.strip()]
-
-
 def _range_parse_body(body: str) -> tuple[str | None, str | None]:
     """rangetypes.c range_parse over an unquoted-literal body: the
     first char is the open flag, the last the close flag; bounds
@@ -299,10 +273,9 @@ class UserTypes:
         )
 
     # ------------------------------------------------------------ DDL
-    def maybe_ddl(self, text: str) -> bool:
+    def maybe_ddl(self, s: str) -> bool:
         """Consume a CREATE/ALTER/DROP DOMAIN|TYPE statement; True if
         handled."""
-        s = text.strip().rstrip(";").strip()
         if re.match(r"(?i)^CREATE\s+TYPE\b", s):
             # quoted attribute labels ("Internallength" = 4, "Input" =
             # fn): DefineType matches defel names case-insensitively
@@ -312,7 +285,7 @@ class UserTypes:
         m = _CREATE_ENUM_RE.match(s)
         if m:
             labels = [
-                p[1:-1].replace("''", "'")
+                p.strip()[1:-1].replace("''", "'")
                 for p in _split_commas(m.group(2))
             ]
             self.enums[self._key(m.group(1))] = labels
@@ -348,7 +321,7 @@ class UserTypes:
             flds = []
             for item in _split_commas(m.group(2)):
                 fm = re.match(r"(\w+)\s+(.+?)(?:\s+COLLATE\s+\S+)?$",
-                              item, re.IGNORECASE | re.DOTALL)
+                              item.strip(), re.IGNORECASE | re.DOTALL)
                 if not fm:
                     raise ValueError(
                         f"bad composite attribute: {item!r}")
@@ -745,7 +718,7 @@ class UserTypes:
         )
 
         def sub_ctor(m: re.Match) -> str:
-            args = _split_commas(m.group(1))
+            args = [a.strip() for a in _split_commas(m.group(1))]
             if len(args) not in (2, 3):
                 return m.group(0)
             li, hi_i = "true", "false"  # PG default '[)'
@@ -1093,9 +1066,9 @@ class UserTypes:
                 return build(args)
             if re.match(r"(?is)^ROW\s*\(", op):
                 inner = op[op.index("("): ]
-                return build(_split_commas(inner[1:-1]))
+                return build([a.strip() for a in _split_commas(inner[1:-1])])
             if op.startswith("(") and op.endswith(")"):
-                return build(_split_commas(op[1:-1]))
+                return build([a.strip() for a in _split_commas(op[1:-1])])
             if op.upper() == "NULL":
                 # typed NULL record: NULL of the struct shape
                 from warehouse_pg_spark.sql_dialect import map_decl_type
