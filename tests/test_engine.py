@@ -268,7 +268,7 @@ def test_insert_on_conflict_upsert(engine, spark, tmp_path):
         "INSERT INTO conf_t VALUES (2, 'B', 200.0), (3, 'c', 30.0) "
         "ON CONFLICT (id) DO NOTHING"
     )
-    assert out.collect()[0].rows_affected == 2  # 1 matched-kept + 1 inserted
+    assert out.collect()[0].rows_affected == 1  # PG counts only the inserted row
     rows = {r.id: (r.s, r.v) for r in engine.table("conf_t").collect()}
     assert rows[2] == ("b", 20.0)  # DO NOTHING kept the old row
     assert rows[3] == ("c", 30.0)
@@ -425,8 +425,8 @@ def test_returning_update_from_and_on_conflict(engine, spark, tmp_path):
 def test_dml_subquery_where_and_delete_using(engine, spark, tmp_path):
     """PG DML with subquery predicates (regress update.sql / delete.sql):
     DELETE WHERE IN (SELECT), DELETE USING join, UPDATE WHERE scalar
-    subquery — resolved through a rowid-tagged snapshot since Spark
-    allows IN/EXISTS subqueries only in filter context."""
+    subquery — each subquery runs inside the rewrite's own filter or
+    projection."""
     path = str(tmp_path / "subq_t")
     spark.createDataFrame(
         [(i, "grp%d" % (i % 3), float(i * 10)) for i in range(1, 10)],
@@ -3445,3 +3445,182 @@ def test_front_end_contract(front_end_tables, case):
     assert all(r == results["bare"] for r in results.values()), results
     if expected is not None:
         assert results["bare"][1] == expected
+
+
+# --------------------------------------------------- DML target naming
+def test_dml_target_by_name_or_alias_and_depth0_clauses(engine):
+    """UPDATE/DELETE read the target under its name or its AS alias,
+    so qualified references resolve; SET/FROM/WHERE are found at paren
+    depth 0, so a subquery's FROM never makes an UPDATE … FROM."""
+    engine.sql("CREATE TABLE nm_q1 AS SELECT * FROM VALUES "
+               "(1, 10), (2, 20), (3, 30) AS x(k, v)")
+    engine.sql("CREATE TABLE nm_s1 AS SELECT * FROM VALUES "
+               "(1, 100), (3, 300) AS x(k, v)")
+
+    def rows(name):
+        return sorted(tuple(r) for r in engine.sql(f"SELECT k, v FROM {name}").collect())
+
+    def tag(stmt):
+        return engine.sql(stmt).collect()[0].rows_affected
+
+    assert tag("UPDATE nm_q1 SET v = 11 WHERE nm_q1.k = 1") == 1
+    assert tag("DELETE FROM nm_q1 WHERE nm_q1.k = 2") == 1
+    assert rows("nm_q1") == [(1, 11), (3, 30)]
+    assert tag("UPDATE nm_q1 AS x SET v = 12 WHERE x.k = 1") == 1
+    assert rows("nm_q1") == [(1, 12), (3, 30)]
+    assert tag("UPDATE nm_q1 SET v = v + 1 WHERE EXISTS "
+               "(SELECT 1 FROM nm_s1 WHERE nm_s1.k = nm_q1.k)") == 2
+    assert rows("nm_q1") == [(1, 13), (3, 31)]
+    assert tag("UPDATE nm_q1 SET v = s.v FROM (SELECT k, v FROM nm_s1) s "
+               "WHERE nm_q1.k = s.k") == 2
+    assert rows("nm_q1") == [(1, 100), (3, 300)]
+
+
+def test_update_set_column_names_types_and_unknown_columns(engine):
+    """SET names a target column case-insensitively and keeps its type
+    (an assignment casts, as in PG); a column the table lacks raises."""
+    engine.sql("CREATE TABLE ci_t AS SELECT k, CAST(p AS DECIMAL(15,2)) AS p "
+               "FROM VALUES (1, 1.5) AS x(k, p)")
+    assert engine.sql("UPDATE ci_t SET P = p + 1 WHERE K = 1").collect()[0][0] == 1
+    out = engine.sql("SELECT p FROM ci_t")
+    assert out.schema["p"].dataType.simpleString() == "decimal(15,2)"
+    assert float(out.collect()[0].p) == 2.5
+    ret = engine.sql("UPDATE ci_t SET P = p * 2 RETURNING p").collect()
+    assert float(ret[0].p) == 5.0
+    with pytest.raises(ValueError, match="does not exist"):
+        engine.sql("UPDATE ci_t SET nope = 1")
+
+
+# ------------------------------------------------ DML row-count semantics
+def test_merge_keeps_first_source_match(engine):
+    """A target row matched by several source rows is rewritten once,
+    from the first matching source row by the source's columns (PG
+    raises instead), so MERGE never duplicates a target row."""
+    engine.sql("CREATE TABLE rc_m AS SELECT * FROM VALUES (1, 10), (2, 20) AS x(k, v)")
+    engine.sql("CREATE TABLE rc_msrc AS SELECT * FROM VALUES "
+               "(1, 101), (1, 100), (3, 300) AS x(k, v)")
+    out = engine.sql(
+        "MERGE INTO rc_m t USING rc_msrc s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)").collect()
+    assert out[0].rows_affected == 2
+    got = sorted(tuple(r) for r in engine.sql("SELECT k, v FROM rc_m").collect())
+    assert got == [(1, 100), (2, 20), (3, 300)]
+
+
+def test_on_conflict_counts_inserts_and_null_keys_never_conflict(engine):
+    """ON CONFLICT DO NOTHING reports only the rows it inserts, and a
+    NULL key conflicts with nothing (a unique index treats NULLs as
+    distinct), as in PG."""
+    engine.sql("CREATE TABLE rc_oc AS SELECT * FROM VALUES "
+               "(1, 10), (CAST(NULL AS INT), 0) AS x(k, v)")
+    out = engine.sql("INSERT INTO rc_oc VALUES (1, 5), (7, 70) "
+                     "ON CONFLICT (k) DO NOTHING").collect()
+    assert out[0].rows_affected == 1
+    out = engine.sql("INSERT INTO rc_oc VALUES (NULL, 9) "
+                     "ON CONFLICT (k) DO NOTHING").collect()
+    assert out[0].rows_affected == 1
+    got = sorted((tuple(r) for r in engine.sql("SELECT k, v FROM rc_oc").collect()),
+                 key=repr)
+    assert got == sorted([(1, 10), (7, 70), (None, 0), (None, 9)], key=repr)
+
+
+# ------------------------------------------------------- DML contract
+# Each form runs on the same small table through Engine.sql and through
+# DuckDB; the final table and the command tag (or the RETURNING rows)
+# must agree. `{t}` is the target, `dc_src` holds (1,100), (3,300),
+# (5,500). DuckDB 1.0 has no MERGE: those cases carry their expected
+# (tag rows, table rows).
+_DML_TABLE = [(1, 10), (2, 20), (3, 30), (4, None)]
+_DML_CONTRACT = {
+    "update_plain": "UPDATE {t} SET v = v + 1 WHERE k <= 2",
+    "update_qualified": "UPDATE {t} SET v = 11 WHERE {t}.k = 1",
+    "update_alias": "UPDATE {t} AS x SET v = 12 WHERE x.k = 1",
+    "delete_plain": "DELETE FROM {t} WHERE v > 15",
+    "delete_qualified": "DELETE FROM {t} WHERE {t}.k = 2",
+    "delete_alias": "DELETE FROM {t} AS x WHERE x.k = 2",
+    "update_in": "UPDATE {t} SET v = 0 WHERE k IN (SELECT k FROM dc_src)",
+    "update_exists": "UPDATE {t} SET v = v + 1 WHERE EXISTS "
+                     "(SELECT 1 FROM dc_src WHERE dc_src.k = {t}.k)",
+    "update_exists_alias": "UPDATE {t} AS x SET v = -v WHERE EXISTS "
+                           "(SELECT 1 FROM dc_src s WHERE s.k = x.k AND s.v > 150)",
+    "update_correlated_scalar": "UPDATE {t} SET v = (SELECT s.v FROM dc_src s "
+                                "WHERE s.k = {t}.k) WHERE k <= 2",
+    "delete_in": "DELETE FROM {t} WHERE k IN (SELECT k FROM dc_src)",
+    "delete_not_exists": "DELETE FROM {t} WHERE NOT EXISTS "
+                         "(SELECT 1 FROM dc_src s WHERE s.k = {t}.k)",
+    "delete_scalar": "DELETE FROM {t} WHERE v < (SELECT avg(v) FROM {t})",
+    "update_from_table": "UPDATE {t} SET v = s.v FROM dc_src s WHERE {t}.k = s.k",
+    "update_from_subquery": "UPDATE {t} SET v = s.v FROM "
+                            "(SELECT k, v * 2 AS v FROM dc_src) s WHERE {t}.k = s.k",
+    "delete_using": "DELETE FROM {t} USING dc_src s WHERE {t}.k = s.k",
+    "on_conflict_nothing": "INSERT INTO {t} VALUES (1, 5), (7, 70) "
+                           "ON CONFLICT (k) DO NOTHING",
+    "on_conflict_null_key": "INSERT INTO {t} VALUES (NULL, 9) "
+                            "ON CONFLICT (k) DO NOTHING",
+    "on_conflict_update": "INSERT INTO {t} VALUES (1, 5), (7, 70) "
+                          "ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v + {t}.v",
+    "on_conflict_update_bare_target": "INSERT INTO {t} VALUES (1, 5), (7, 70) "
+                                      "ON CONFLICT (k) DO UPDATE SET v = v + EXCLUDED.v",
+    "on_conflict_update_where": "INSERT INTO {t} VALUES (1, 5), (2, 70) "
+                                "ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v WHERE v < 15",
+    "returning_update": "UPDATE {t} SET v = v * 2 WHERE k >= 2 RETURNING k, v",
+    "returning_delete": "DELETE FROM {t} WHERE k = 3 RETURNING *",
+    "returning_delete_using": "DELETE FROM {t} USING dc_src s "
+                              "WHERE {t}.k = s.k RETURNING k",
+    "returning_update_from": "UPDATE {t} SET v = s.v FROM dc_src s "
+                             "WHERE {t}.k = s.k RETURNING k, v",
+    "returning_on_conflict": "INSERT INTO {t} VALUES (1, 5), (7, 70) "
+                             "ON CONFLICT (k) DO UPDATE SET v = EXCLUDED.v RETURNING k, v",
+    "merge_first_match": (
+        "MERGE INTO {t} t USING (SELECT * FROM VALUES (1, 101), (1, 100), "
+        "(5, 500) AS x(k, v)) s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v "
+        "WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)",
+        [(2,)], [(1, 100), (2, 20), (3, 30), (4, None), (5, 500)]),
+    "merge_ordered_clauses": (
+        "MERGE INTO {t} AS t USING dc_src AS s ON t.k = s.k "
+        "WHEN MATCHED AND s.v > 200 THEN DELETE "
+        "WHEN MATCHED THEN UPDATE SET v = t.v + s.v "
+        "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)",
+        [(3,)], [(1, 110), (2, 20), (4, None), (5, 500)]),
+}
+
+
+@pytest.fixture(scope="module")
+def dml_contract_src(engine):
+    engine.sql("CREATE TABLE dc_src AS SELECT * FROM VALUES "
+               "(1, 100), (3, 300), (5, 500) AS x(k, v)")
+    return engine
+
+
+@pytest.mark.parametrize("case", sorted(_DML_CONTRACT))
+def test_dml_contract(dml_contract_src, case):
+    """Every DML form — plain, target-qualified and aliased UPDATE and
+    DELETE, IN/EXISTS/correlated/scalar subqueries, UPDATE … FROM a
+    table or a subquery, DELETE … USING, ON CONFLICT and RETURNING —
+    leaves the table and answers the tag DuckDB does."""
+    import duckdb
+
+    engine = dml_contract_src
+    spec = _DML_CONTRACT[case]
+    stmt = (spec if isinstance(spec, str) else spec[0]).format(t=f"dc_{case}")
+    values = ", ".join(f"({k}, {'NULL' if v is None else v})" for k, v in _DML_TABLE)
+    engine.sql(f"CREATE TABLE dc_{case} AS SELECT k, CAST(v AS INT) AS v "
+               f"FROM VALUES {values} AS x(k, v)")
+    got = [tuple(r) for r in engine.sql(stmt).collect()]
+    table = [tuple(r) for r in engine.sql(f"SELECT k, v FROM dc_{case}").collect()]
+    if isinstance(spec, str):
+        con = duckdb.connect()
+        unique = " UNIQUE" if "ON CONFLICT" in stmt else ""
+        con.execute(f"CREATE TABLE dc_{case} (k INTEGER{unique}, v INTEGER)")
+        con.execute(f"INSERT INTO dc_{case} VALUES {values}")
+        con.execute("CREATE TABLE dc_src (k INTEGER, v INTEGER)")
+        con.execute("INSERT INTO dc_src VALUES (1, 100), (3, 300), (5, 500)")
+        want = con.execute(stmt).fetchall()
+        want_table = con.execute(f"SELECT k, v FROM dc_{case}").fetchall()
+        con.close()
+    else:
+        want, want_table = spec[1], spec[2]
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    assert sorted(table, key=repr) == sorted(want_table, key=repr)

@@ -29,7 +29,12 @@ from warehouse_pg_spark.dialect.mask import (
 )
 from warehouse_pg_spark.dialect.ordering import _rewrite_dollar_quotes
 from warehouse_pg_spark.functions.pg import bind_functions
-from warehouse_pg_spark.operators.dml import ParquetTable
+from warehouse_pg_spark.operators.dml import (
+    ParquetTable,
+    When,
+    by_column,
+    first_per_key,
+)
 from warehouse_pg_spark.session import SessionConfig, get_spark, local_frame
 
 _DISTRIBUTED_BY_RE = re.compile(
@@ -47,24 +52,11 @@ _MULTI_SET_RE = re.compile(
     r"\bSET\s*\(([^)]*)\)\s*=\s*\(((?:[^()]|\([^()]*\))*)\)",
     re.IGNORECASE,
 )
-_UPDATE_RE = re.compile(
-    r"^UPDATE\s+([\w.]+)\s+SET\s+(.*?)(?:\s+WHERE\s+(.*))?$",
-    re.IGNORECASE | re.DOTALL,
+# the target of an UPDATE or DELETE, with its optional alias
+_DML_TARGET_RE = re.compile(
+    r"^(?:UPDATE|DELETE\s+FROM)\s+(?:ONLY\s+)?([\w.]+)(?:\s+(?:AS\s+)?(\w+))?$",
+    re.IGNORECASE,
 )
-_UPDATE_FROM_RE = re.compile(
-    r"^UPDATE\s+([\w.]+)\s+SET\s+(.*?)\s+FROM\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?"
-    r"\s+WHERE\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_DELETE_RE = re.compile(
-    r"^DELETE\s+FROM\s+([\w.]+)(?:\s+WHERE\s+(.*))?$", re.IGNORECASE | re.DOTALL
-)
-_DELETE_USING_RE = re.compile(
-    r"^DELETE\s+FROM\s+([\w.]+)\s+USING\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?"
-    r"\s+WHERE\s+(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 _CREATE_INDEX_RE = re.compile(
     r"^CREATE\s+(?:UNIQUE\s+)?INDEX\s+(?:CONCURRENTLY\s+)?(?:IF\s+NOT\s+EXISTS\s+)?"
     r"(\w+)?\s*ON\s+([\w.]+)\s*(?:USING\s+\w+\s*)?\(([^)]*)\)\s*$",
@@ -99,7 +91,6 @@ _ON_CONFLICT_RE = re.compile(
     r"\sON\s+CONFLICT\s*\(([^)]*)\)\s*DO\s+(NOTHING|UPDATE)\s*(?:SET\s+(.*))?$",
     re.IGNORECASE | re.DOTALL,
 )
-_RETURNING_RE = re.compile(r"\sRETURNING\s+(.*)$", re.IGNORECASE | re.DOTALL)
 _EXPLAIN_ANALYZE_RE = re.compile(
     r"^EXPLAIN\s+ANALYZE\s+(.*)$", re.IGNORECASE | re.DOTALL
 )
@@ -336,12 +327,26 @@ def _split_assignments(s: str) -> list[tuple[str, str]]:
     return out
 
 
-def _split_returning(s: str) -> tuple[str, str | None]:
-    """(the statement without its RETURNING clause, the RETURNING list)."""
-    rm = _RETURNING_RE.search(s)
-    if rm is None:
-        return s, None
-    return s[: rm.start()].strip(), rm.group(1).strip()
+def _clauses(text: str, words: tuple[str, ...]) -> list[str | None]:
+    """Cut a statement at its clause keywords: the first occurrence of
+    each of `words`, in that order, at paren depth 0 of the masked text
+    (a keyword inside a subquery, literal or comment never cuts).
+    Returns the text before the first clause, then each clause's text
+    (None for a clause the statement lacks)."""
+    masked, lits = _mask(text)
+    cuts, depth, last = [], 0, -1
+    for m in re.finditer(rf"[()]|\b({'|'.join(words)})\b", masked, re.IGNORECASE):
+        if m.group(1) is None:
+            depth += 1 if m.group(0) == "(" else -1
+        elif depth == 0 and words.index(m.group(1).upper()) > last:
+            last = words.index(m.group(1).upper())
+            cuts.append((last, m.start(), m.end()))
+    parts: list[str | None] = [None] * len(words)
+    stops = [start for _, start, _ in cuts[1:]] + [len(masked)]
+    for (i, _, end), stop in zip(cuts, stops):
+        parts[i] = _unmask(masked[end:stop], lits).strip()
+    head = masked[: cuts[0][1]] if cuts else masked
+    return [_unmask(head, lits).strip(), *parts]
 
 
 @dataclass
@@ -1834,8 +1839,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
     @staticmethod
     def _returning(returning: str, image: DataFrame) -> DataFrame:
         """Project the affected-row image through the RETURNING list,
-        materialized (localCheckpoint) before the copy-on-write swap
-        invalidates the files it was computed from."""
+        materialized (localCheckpoint): an image read from the table's
+        files is projected before the copy-on-write swap invalidates
+        them; `ParquetTable.merge`'s image reads its own checkpoint."""
         out = (image if returning == "*"
                else image.selectExpr(*_split_commas(returning)))
         return out.localCheckpoint(eager=True)
@@ -1843,7 +1849,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
     def _insert_stmt(self, s: str) -> DataFrame | None:
         import pyspark.sql.functions as F
 
-        s, returning = _split_returning(s)
+        s, returning = _clauses(s, ("RETURNING",))
         m = _INSERT_RE.match(s)
         if m is None:
             return None
@@ -1898,35 +1904,25 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if conflict:
             keys = [k.strip() for k in conflict.group(1).split(",")]
             if conflict.group(2).upper() == "NOTHING":
-                update: dict[str, Column] | None = {}  # matched rows untouched
+                on_match = When(True, "nothing")
             else:
-                # EXCLUDED.col (the proposed row) → the merge source side
-                update = {
-                    col: F.expr(
-                        re.sub(r"\bEXCLUDED\.", "s.", expr, flags=re.IGNORECASE)
-                    )
-                    for col, expr in _split_assignments(conflict.group(3))
-                }
-            pre = None
-            if returning:
-                # PG returns post-image rows: inserted ones for DO
-                # NOTHING, inserted+updated for DO UPDATE
-                # (insert_conflict.sql RETURNING cases).
-                pre = (
-                    t.read().select(*keys).distinct()
-                    .localCheckpoint(eager=True)
-                )
-            stats = t.merge(df, on=keys, update=update)
+                # DO UPDATE SET … [WHERE …]; EXCLUDED names the proposed row
+                sets, where = _clauses(conflict.group(3), ("WHERE",))
+                on_match = When(True, "update", F.expr(where) if where else None, {
+                    col: F.expr(expr) for col, expr in _split_assignments(sets)})
+            # the proposed rows are one struct column, so `EXCLUDED.v` is
+            # its field and a bare `v` the target row's column, as in PG;
+            # a NULL key conflicts with nothing: `=`, not `<=>`
+            counts, image = t.merge(
+                first_per_key(df, keys).select(F.struct(*df.columns).alias("excluded")),
+                F.expr(" AND ".join(f"{name}.{k} = excluded.{k}" for k in keys)),
+                [on_match, When(False, "insert", values={
+                    c: F.col(f"excluded.{c}") for c in df.columns})],
+                alias=name, source_alias="excluded")
             self._refresh_view(name, t)
             if returning:
-                src_keys = df.select(*keys).distinct()
-                if conflict.group(2).upper() == "NOTHING":
-                    src_keys = src_keys.join(pre, keys, "left_anti")
-                image = t.read().join(
-                    F.broadcast(src_keys), keys, "left_semi"
-                )
                 return self._returning(returning, image)
-            return self._tag(stats["updated"] + stats["inserted"])
+            return self._tag(counts["updated"] + counts["inserted"])
         ret = self._returning(returning, df) if returning else None
         n = df.count()
         t.insert(df)
@@ -1936,7 +1932,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
     def _update_stmt(self, s: str) -> DataFrame | None:
         import pyspark.sql.functions as F
 
-        s, returning = _split_returning(s)
         mm = _MULTI_SET_RE.search(s)
         if mm:
             # PG multi-column assignment `SET (a, b) = (e1, e2)`
@@ -1953,95 +1948,62 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 + ", ".join(f"{c} = {v}" for c, v in zip(cols, vals))
                 + s[mm.end():]
             )
-        m = _UPDATE_FROM_RE.match(s)
-        if m:
-            return self._update_from(*m.groups(), returning=returning)
-        m = _UPDATE_RE.match(s)
-        if m is None:
+        head, sets, src, where, returning = _clauses(
+            s, ("SET", "FROM", "WHERE", "RETURNING"))
+        m = _DML_TARGET_RE.match(head)
+        if m is None or sets is None:
             return None
         name = m.group(1).split(".")[-1]
         t = self._writable_by_name(name)
         if t is None:
             return None
-        if m.group(3) and _SUBQUERY_RE.search(m.group(3)):
-            return self._update_subquery(
-                name, t, m.group(2), m.group(3), returning
-            )
-        assigns = {
-            col: F.expr(expr)
-            for col, expr in _split_assignments(m.group(2))
-        }
-        where = F.expr(m.group(3)) if m.group(3) else F.lit(True)
+        alias = m.group(2) or name
+        assigns = {col: F.expr(expr) for col, expr in _split_assignments(sets)}
+        cond = F.expr(where) if where else F.lit(True)
         ret = None
-        if returning:
-            tgt = t.read()
-            image = tgt.filter(where).select(
-                *[
-                    (assigns[c].cast(tgt.schema[c].dataType) if c in assigns else F.col(c)).alias(c)
-                    for c in tgt.columns
-                ]
-            )
-            ret = self._returning(returning, image)
-        n = t.update(assigns, where)
+        if src is not None:
+            # PG `UPDATE t SET … FROM s WHERE c` (gram.y UpdateStmt
+            # from_clause): a MERGE on c whose one clause updates
+            src_df, src_alias = self._source(src)
+            counts, image = t.merge(
+                src_df, cond, [When(True, "update", values=assigns)],
+                alias=alias, source_alias=src_alias)
+            n = counts["updated"]
+            if returning:
+                ret = self._returning(returning, image)
+        else:
+            if returning:
+                tgt = t.read().alias(alias)
+                values = by_column(assigns, tgt.columns)
+                ret = self._returning(returning, tgt.filter(cond).select(*[
+                    (values[c].cast(tgt.schema[c].dataType) if c in values
+                     else F.col(c)).alias(c) for c in tgt.columns]))
+            n = t.update(assigns, cond, alias)
         self._refresh_view(name, t)
         return ret if ret is not None else self._tag(n)
 
     def _delete_stmt(self, s: str) -> DataFrame | None:
         import pyspark.sql.functions as F
 
-        s, returning = _split_returning(s)
-        m = _DELETE_USING_RE.match(s)
-        if m:
-            # PG `DELETE FROM t USING s WHERE cond` (gram.y DeleteStmt
-            # using_clause): delete target rows with a join partner.
-            name = m.group(1).split(".")[-1]
-            t = self._writable_by_name(name)
-            if t is None:
-                return None
-            src = m.group(2)
-            alias = f" AS {m.group(3)}" if m.group(3) else ""
-            base = self._rid_view(t, name)
-            matched = self.spark.sql(
-                f"SELECT DISTINCT {name}.__rid FROM __dml_target AS {name} "
-                f"JOIN {src}{alias} ON ({m.group(4)})"
-            )
-            ret = (
-                self._returning(returning, base.join(matched, "__rid", "left_semi").drop("__rid"))
-                if returning
-                else None
-            )
-            n = matched.count()
-            t._swap_in(base.join(matched, "__rid", "left_anti").drop("__rid"))
-            self._refresh_view(name, t)
-            return ret if ret is not None else self._tag(n)
-
-        m = _DELETE_RE.match(s)
+        head, using, where, returning = _clauses(
+            s, ("USING", "WHERE", "RETURNING"))
+        m = _DML_TARGET_RE.match(head)
         if m is None:
             return None
         name = m.group(1).split(".")[-1]
         t = self._writable_by_name(name)
         if t is None:
             return None
-        if m.group(2) and _SUBQUERY_RE.search(m.group(2)):
-            # IN/EXISTS/scalar subqueries are only legal in a filter
-            # context — resolve matches through spark.sql over a
-            # rowid-tagged snapshot, then anti-join.
-            base = self._rid_view(t, name)
-            matched = self.spark.sql(
-                f"SELECT __rid FROM __dml_target WHERE {m.group(2)}"
-            )
-            ret = (
-                self._returning(returning, base.join(matched, "__rid", "left_semi").drop("__rid"))
-                if returning
-                else None
-            )
-            n = matched.count()
-            t._swap_in(base.join(matched, "__rid", "left_anti").drop("__rid"))
-            self._refresh_view(name, t)
-            return ret if ret is not None else self._tag(n)
-        where = F.expr(m.group(2)) if m.group(2) else F.lit(True)
-        ret = self._returning(returning, t.read().filter(where)) if returning else None
-        n = t.delete(where)
+        alias = m.group(2) or name
+        if using is not None:
+            # PG `DELETE FROM t USING s WHERE c` (gram.y DeleteStmt
+            # using_clause): delete the target rows c finds a partner for
+            where = f"EXISTS (SELECT 1 FROM {using}" + (
+                f" WHERE {where})" if where else ")")
+        cond = F.expr(where) if where else F.lit(True)
+        ret = (self._returning(returning, t.read().alias(alias).filter(cond))
+               if returning else None)
+        n = t.delete(cond, alias)
         self._refresh_view(name, t)
         return ret if ret is not None else self._tag(n)
 
@@ -2183,16 +2145,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
               WHEN NOT MATCHED [AND c] THEN
                   INSERT [(cols)] VALUES (exprs) | DO NOTHING
 
-        Lowered to ONE full-outer join on the merge condition plus an
-        action column: WHEN clauses are evaluated in order (first
-        passing clause wins, PG's semantics), actions select the output
-        image per row, DELETE/skip rows are filtered, and the result
-        swaps in copy-on-write. One shuffle on the join keys — the same
-        cost envelope as SplitUpdate redistributing affected rows.
-
+        Parsed into ordered `When` clauses for `ParquetTable.merge`,
+        where the first passing clause wins (PG's semantics).
         Deviation (documented): PG errors when one target row matches
-        multiple source rows ('MERGE command cannot affect row a second
-        time'); here each (target, source) pair is merged independently.
+        several source rows ('MERGE command cannot affect row a second
+        time'); here the first by the source's columns is used.
         """
         import pyspark.sql.functions as F
 
@@ -2203,45 +2160,20 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         )
         if len(parts) < 2:
             raise ValueError("MERGE requires at least one WHEN clause")
-        header, clause_texts = parts[0], parts[1:]
-        hm = re.match(
-            r"^MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+",
-            header,
-            re.IGNORECASE,
-        )
-        if hm is None:
-            raise ValueError(f"cannot parse MERGE header: {header[:80]!r}")
+        head, using, on = _clauses(_unmask(parts[0], lits), ("USING", "ON"))
+        hm = re.match(r"^MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?$",
+                      head, re.IGNORECASE)
+        if hm is None or using is None:
+            raise ValueError(f"cannot parse MERGE header: {parts[0][:80]!r}")
+        if on is None:
+            raise ValueError("MERGE requires ON <condition>")
         name = hm.group(1).split(".")[-1]
         t = self._writable_by_name(name)
         if t is None:
             return None
-        ta = hm.group(2) or name
-        rest = header[hm.end():].strip()
-        if rest.startswith("("):
-            i = _close_paren(rest, 1)
-            if i < 0:
-                raise ValueError("MERGE: unbalanced USING subquery")
-            src_sql, rest = _unmask(rest[1: i - 1], lits), rest[i:].strip()
-            src_df = self.spark.sql(src_sql)
-            sa = None
-        else:
-            sm = re.match(r"^([\w.]+)", rest)
-            src_name = sm.group(1).split(".")[-1]
-            src_df = self.spark.table(src_name)
-            sa, rest = src_name, rest[sm.end():].strip()
-        am = re.match(r"^(?:AS\s+)?(\w+)\s+", rest, re.IGNORECASE)
-        if am and am.group(1).upper() != "ON":
-            sa, rest = am.group(1), rest[am.end():].strip()
-        if sa is None:
-            raise ValueError("MERGE subquery source needs an alias")
-        om = re.match(r"^ON\s+(.*)$", rest, re.IGNORECASE | re.DOTALL)
-        if om is None:
-            raise ValueError("MERGE requires ON <condition>")
-        on_cond = _unmask(om.group(1).strip(), lits)
 
-        # parse WHEN clauses: (is_matched, cond|None, kind, payload)
-        clauses: list[tuple] = []
-        for cl in clause_texts:
+        whens: list[When] = []
+        for cl in parts[1:]:
             cm = re.match(
                 r"^(NOT\s+)?MATCHED\s*(?:AND\s+(.*?))?\s*THEN\s+(.*)$",
                 cl.strip(),
@@ -2250,7 +2182,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             if cm is None:
                 raise ValueError(f"cannot parse MERGE WHEN clause: {cl[:80]!r}")
             is_matched = cm.group(1) is None
-            cond = _unmask(cm.group(2), lits) if cm.group(2) else None
+            cond = F.expr(_unmask(cm.group(2), lits)) if cm.group(2) else None
             action = cm.group(3).strip()
             um = re.match(r"^UPDATE\s+SET\s+(.*)$", action, re.IGNORECASE | re.DOTALL)
             im = re.match(
@@ -2261,215 +2193,46 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             if um:
                 if not is_matched:
                     raise ValueError("WHEN NOT MATCHED cannot UPDATE")
-                assigns = {
-                    c: _unmask(e, lits)
-                    for c, e in _split_assignments(um.group(1))
-                }
-                clauses.append((is_matched, cond, "update", assigns))
+                whens.append(When(True, "update", cond, {
+                    c: F.expr(_unmask(e, lits))
+                    for c, e in _split_assignments(um.group(1))}))
             elif re.match(r"^DELETE\s*$", action, re.IGNORECASE):
                 if not is_matched:
                     raise ValueError("WHEN NOT MATCHED cannot DELETE")
-                clauses.append((is_matched, cond, "delete", None))
+                whens.append(When(True, "delete", cond))
             elif im:
                 if is_matched:
                     raise ValueError("WHEN MATCHED cannot INSERT")
-                target_cols = (
-                    [c.strip() for c in im.group(1).split(",")]
-                    if im.group(1)
-                    else None
-                )
-                vals = [_unmask(v, lits) for v in _split_commas(im.group(2))]
-                clauses.append((is_matched, cond, "insert", (target_cols, vals)))
+                cols = ([c.strip() for c in im.group(1).split(",")] if im.group(1)
+                        else [c for c in t.read().columns if c not in t.derived])
+                whens.append(When(False, "insert", cond, {
+                    c: F.expr(_unmask(v, lits))
+                    for c, v in zip(cols, _split_commas(im.group(2)))}))
             elif re.match(r"^DO\s+NOTHING\s*$", action, re.IGNORECASE):
-                clauses.append((is_matched, cond, "nothing", None))
+                whens.append(When(is_matched, "nothing", cond))
             else:
                 raise ValueError(f"unsupported MERGE action: {action[:60]!r}")
 
-        target = t.read()
-        tj = target.withColumn("__t", F.lit(1)).alias(ta)
-        sj = src_df.withColumn("__s", F.lit(1)).alias(sa)
-        joined = tj.join(sj, F.expr(on_cond), "full_outer")
-        matched = (
-            F.col(f"{ta}.__t").isNotNull() & F.col(f"{sa}.__s").isNotNull()
-        )
-        src_only = F.col(f"{ta}.__t").isNull()
-
-        act = None
-        for i, (is_m, cond, kind, _p) in enumerate(clauses):
-            c = matched if is_m else src_only
-            if cond:
-                c = c & F.expr(cond)
-            act = (act.when if act is not None else F.when)(c, F.lit(f"a{i}"))
-        act = act.when(F.col(f"{ta}.__t").isNotNull(), F.lit("keep")).otherwise(
-            F.lit("skip")
-        )
-        staged = joined.withColumn("__act", act).localCheckpoint(eager=True)
-
-        # DELETE drops its target row; DO NOTHING drops only when the
-        # row is source-only (a matched DO NOTHING keeps the target row
-        # untouched — it merely stops later clauses from firing)
-        drop_ids = ["skip"] + [
-            f"a{i}"
-            for i, cl in enumerate(clauses)
-            if cl[2] == "delete" or (cl[2] == "nothing" and not cl[0])
-        ]
-        out = staged.filter(~F.col("__act").isin(drop_ids))
-        cols = []
-        for c in target.columns:
-            dt = target.schema[c].dataType
-            w = None
-            for i, (_is_m, _cond, kind, payload) in enumerate(clauses):
-                if kind == "update":
-                    v = (
-                        F.expr(payload[c]).cast(dt)
-                        if c in payload
-                        else F.col(f"{ta}.{c}")
-                    )
-                elif kind == "insert":
-                    tcols, vals = payload
-                    order = tcols if tcols is not None else target.columns
-                    v = (
-                        F.expr(vals[order.index(c)]).cast(dt)
-                        if c in order and order.index(c) < len(vals)
-                        else F.lit(None).cast(dt)
-                    )
-                else:
-                    continue
-                w = (w.when if w is not None else F.when)(
-                    F.col("__act") == f"a{i}", v
-                )
-            base_col = F.col(f"{ta}.{c}")
-            cols.append((w.otherwise(base_col) if w is not None else base_col).alias(c))
-        result = out.select(*cols)
-        n = staged.filter(
-            F.col("__act").isin([
-                f"a{i}" for i, cl in enumerate(clauses) if cl[2] != "nothing"
-            ])
-        ).count()
-        t._swap_in(result)
+        src_df, src_alias = self._source(using)
+        counts, _ = t.merge(src_df, F.expr(on), whens,
+                            alias=hm.group(2) or name, source_alias=src_alias)
         self._refresh_view(name, t)
-        return self._tag(n)
+        return self._tag(sum(counts.values()))
 
-    def _rid_view(self, t: ParquetTable, name: str) -> DataFrame:
-        """Snapshot the target with a stable rowid and expose it as
-        `__dml_target` (plus the table's own name, so WHERE text that
-        qualifies columns keeps resolving). localCheckpoint pins the
-        snapshot — the copy-on-write swap would otherwise invalidate
-        the files mid-plan. The COW rewrite materializes the full table
-        anyway, so the checkpoint adds no asymptotic cost."""
-        import pyspark.sql.functions as F
-
-        base = (
-            t.read()
-            .withColumn("__rid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=True)
-        )
-        base.createOrReplaceTempView("__dml_target")
-        return base
-
-    def _update_subquery(
-        self,
-        name: str,
-        t: ParquetTable,
-        set_clause: str,
-        where: str,
-        returning: str | None,
-    ) -> DataFrame:
-        """UPDATE whose WHERE carries a subquery (IN/EXISTS/scalar —
-        regress update.sql): match rowids via spark.sql, apply SET to
-        the semi-joined half, union the anti-joined rest, swap."""
-        import pyspark.sql.functions as F
-
-        base = self._rid_view(t, name)
-        matched = self.spark.sql(
-            f"SELECT __rid FROM __dml_target WHERE {where}"
-        )
-        assigns = dict(_split_assignments(set_clause))
-        schema = t.read().schema
-        hit = base.join(matched, "__rid", "left_semi")
-        updated = hit.select(
-            "__rid",
-            *[
-                (
-                    F.expr(assigns[c]).cast(schema[c].dataType)
-                    if c in assigns
-                    else F.col(c)
-                ).alias(c)
-                for c in schema.fieldNames()
-            ],
-        )
-        ret = (self._returning(returning, updated.drop("__rid"))
-               if returning else None)
-        n = matched.count()
-        rest = base.join(matched, "__rid", "left_anti")
-        t._swap_in(updated.unionByName(rest).drop("__rid"))
-        self._refresh_view(name, t)
-        return ret if ret is not None else self._tag(n)
-
-    def _update_from(
-        self,
-        tname: str,
-        set_clause: str,
-        src_name: str,
-        src_alias: str | None,
-        where: str,
-        returning: str | None = None,
-    ) -> DataFrame | None:
-        """PG `UPDATE t SET c = expr FROM s WHERE join_cond` (gram.y
-        UpdateStmt from_clause; planner turns it into a join whose inner
-        is the target — same plan here): left-join the target onto the
-        source on the WHERE condition, apply SET expressions to matched
-        rows, pass unmatched rows through, rewrite copy-on-write.
-
-        PG picks an arbitrary source row when several match one target
-        row; we pick deterministically (first by the source's column
-        ordering) so the statement stays a function.
-        """
-        import pyspark.sql.functions as F
-        from pyspark.sql.window import Window
-
-        tname = tname.split(".")[-1]
-        t = self._writable_by_name(tname)
-        if t is None:
-            return None
-        salias = src_alias or src_name.split(".")[-1]
-        target = t.read()
-        src = self.spark.table(src_name).withColumn("__s", F.lit(1)).alias(salias)
-        tagged = target.withColumn(
-            "__tid", F.monotonically_increasing_id()
-        ).alias(tname)
-
-        joined = tagged.join(src, F.expr(where), "left")
-        pick_w = Window.partitionBy("__tid").orderBy(
-            *[F.col(f"{salias}.{c}") for c in self.spark.table(src_name).columns]
-        )
-        picked = (
-            joined.withColumn("__rn", F.row_number().over(pick_w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        assigns = dict(_split_assignments(set_clause))
-        matched = F.col("__s").isNotNull()
-        out_cols = []
-        for c in target.columns:
-            if c in assigns:
-                out_cols.append(
-                    F.when(matched, F.expr(assigns[c]))
-                    .otherwise(F.col(f"{tname}.{c}"))
-                    .cast(target.schema[c].dataType)
-                    .alias(c)
-                )
-            else:
-                out_cols.append(F.col(f"{tname}.{c}").alias(c))
-        n = picked.filter(matched).count()
-        ret = (
-            self._returning(returning, picked.filter(matched).select(*out_cols))
-            if returning
-            else None
-        )
-        t._swap_in(picked.select(*out_cols))
-        self._refresh_view(tname, t)
-        return ret if ret is not None else self._tag(n)
+    def _source(self, text: str) -> tuple[DataFrame, str]:
+        """A FROM/USING relation, `name [[AS] alias]` or `(query) [AS]
+        alias`: its rows and the name its columns are qualified by."""
+        m = re.match(r"^(\(.*\)|[\w.]+)(?:\s+(?:AS\s+)?(\w+))?$", text,
+                     re.IGNORECASE | re.DOTALL)
+        if m is None:
+            raise ValueError(f"cannot parse relation: {text[:80]!r}")
+        rel, alias = m.groups()
+        if rel.startswith("("):
+            if alias is None:
+                raise ValueError("a subquery source needs an alias")
+            return self.spark.sql(rel[1:-1]), alias
+        rel = rel.split(".")[-1]
+        return self.spark.table(rel), alias or rel
 
     def _writable_by_name(self, name: str) -> ParquetTable | None:
         info = self.catalog.tables.get(name)

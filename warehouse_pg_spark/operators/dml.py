@@ -1,4 +1,5 @@
-"""DML over parquet tables: INSERT / UPDATE / DELETE as copy-on-write.
+"""DML over parquet tables: INSERT / UPDATE / DELETE / MERGE as
+copy-on-write.
 
 Semantic mirror of the reference's ModifyTable + SplitUpdate
 (executor/nodeModifyTable.c, nodeSplitUpdate.c:291): a distributed
@@ -6,6 +7,11 @@ UPDATE is a DELETE + INSERT pair. On immutable Parquet that becomes a
 rewrite: read → transform (filter out / modify matching rows) → write
 new files → atomic swap. No per-row mutation, no transaction log —
 the batch-job unit of atomicity is the table version (directory).
+
+`ParquetTable` is the only code that builds a rewritten table image,
+in three shapes plus append — the split of Spark's own row-level DML:
+a filter (DELETE), a projection (UPDATE) and a join (MERGE). Every SQL
+statement form lowers onto one of them (`Engine._maybe_dml`).
 
 Scale note: UPDATE/DELETE rewrite only the files whose rows can match
 when `where` includes partition predicates (partition pruning applies
@@ -15,13 +21,58 @@ reference's SplitUpdate motion of every affected row.
 
 from __future__ import annotations
 
+import functools
+import operator
 import os
 import shutil
 import uuid
+from collections.abc import Sequence
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from warehouse_pg_spark import catalog
+
+# the count each MERGE action adds to
+_COUNTS = {"update": "updated", "insert": "inserted", "delete": "deleted"}
+
+
+@dataclass(frozen=True)
+class When:
+    """One MERGE clause, `WHEN [NOT] MATCHED [AND cond] THEN action`.
+
+    `action` is "update", "delete", "insert" or "nothing". `values`
+    maps target columns to the expressions UPDATE SET or INSERT give
+    them; a column it does not name keeps its target value on UPDATE
+    and is NULL on INSERT."""
+
+    matched: bool
+    action: str
+    cond: Column | None = None
+    values: dict[str, Column] = field(default_factory=dict)
+
+
+def first_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per key, the first by the row's columns. A row with a
+    NULL key collides with none (a unique index treats NULLs as
+    distinct), so every such row stays."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    null_key = functools.reduce(operator.or_, [F.col(k).isNull() for k in keys])
+    rank = F.row_number().over(Window.partitionBy(*keys).orderBy(*df.columns))
+    return (df.withColumn("__rn", rank)
+            .filter(null_key | (F.col("__rn") == 1)).drop("__rn"))
+
+
+def by_column(values: dict[str, Column], columns: list[str]) -> dict[str, Column]:
+    """`values` keyed by the table's own column names (SQL names are
+    case-insensitive); a column the table lacks raises, as in PG."""
+    names = {c.lower(): c for c in columns}
+    for k in values:
+        if k.lower() not in names:
+            raise ValueError(f'column "{k}" of the target table does not exist')
+    return {names[k.lower()]: v for k, v in values.items()}
 
 
 class ParquetTable:
@@ -86,114 +137,131 @@ class ParquetTable:
             "bytes": n_bytes,
         }
 
-    def delete(self, where: Column) -> int:
+    def delete(self, where: Column, alias: str | None = None) -> int:
         """DELETE WHERE → keep every row `where` is not true for (a NULL
-        predicate keeps the row, as in PG). Returns rows deleted."""
+        predicate keeps the row, as in PG). `where` sees the target
+        under `alias`. Returns rows deleted."""
         import pyspark.sql.functions as F
 
         df = self.read()
+        df = df.alias(alias) if alias else df
         n_deleted = df.filter(where).count()
         self._swap_in(df.filter(~F.coalesce(where, F.lit(False))))
         return n_deleted
 
-    def update(self, assignments: dict[str, Column], where: Column) -> int:
+    def update(self, assignments: dict[str, Column], where: Column,
+               alias: str | None = None) -> int:
         """UPDATE SET col=expr WHERE → rewrite matching rows in place.
 
         Mirrors SplitUpdate semantics: each matching row is replaced by
-        its updated image; non-matching rows pass through."""
+        its updated image (each value cast to its column's type, as a
+        PG assignment is); non-matching rows pass through. `where` and
+        the assignments see the target under `alias`."""
         import pyspark.sql.functions as F
 
         df = self.read()
+        df = df.alias(alias) if alias else df
+        assignments = by_column(assignments, df.columns)
         n_updated = df.filter(where).count()
-        cols = []
-        for c in df.columns:
-            if c in assignments:
-                cols.append(
-                    F.when(where, assignments[c]).otherwise(F.col(c)).alias(c)
-                )
-            else:
-                cols.append(F.col(c))
-        self._swap_in(df.select(*cols))
+        self._swap_in(df.select(*[
+            F.when(where, assignments[c].cast(df.schema[c].dataType))
+            .otherwise(F.col(c)).alias(c) if c in assignments else F.col(c)
+            for c in df.columns
+        ]))
         return n_updated
 
     def merge(
         self,
         source: DataFrame,
-        on: list[str],
+        on: Column | list[str],
+        whens: Sequence[When] = (),
+        *,
+        alias: str = "t",
+        source_alias: str = "s",
         update: dict[str, Column] | None = None,
         insert: bool = True,
-        delete_unmatched_source: bool = False,
-    ) -> dict[str, int]:
-        """MERGE / upsert as copy-on-write (PG `INSERT ... ON CONFLICT DO
-        UPDATE` / SQL:2003 MERGE; reference executor/nodeModifyTable.c
-        speculative-insert path).
+    ) -> tuple[dict[str, int], DataFrame] | dict[str, int]:
+        """MERGE as copy-on-write (SQL:2003 MERGE, PG `INSERT ... ON
+        CONFLICT`, UPDATE … FROM; reference executor/nodeModifyTable.c
+        ExecMerge): the one join executor.
 
-        - matched target rows: replaced by the updated image built from
-          `update` (source columns addressable via the joined source row);
-          with update=None, matched rows are replaced wholesale by the
-          source row (last-writer-wins upsert).
-        - unmatched source rows: appended when insert=True.
-        - matched-by-source deletion (`WHEN NOT MATCHED BY SOURCE THEN
-          DELETE`) when delete_unmatched_source=True.
+        The target (under `alias`) full-outer-joins the source (under
+        `source_alias`) on `on`. Each joined row takes the first of the
+        ordered `whens` that passes; a target row matched by several
+        source rows keeps the first by the source's columns (PG raises
+        instead). The joined rows are checkpointed once; the one write
+        that swaps the rewrite in fills that checkpoint and counts each
+        action on the way (an `Observation`, no count job). Returns the row
+        counts ({"updated", "inserted", "deleted"}) and the affected
+        rows' image (post-image for UPDATE/INSERT, the removed row for
+        DELETE), which reads the checkpoint and so outlives the swap.
 
-        Scale note: one shuffle on the merge keys (sort-merge or broadcast
-        if the source is small); the rewrite is a full-table pass, the
-        same worst case as SplitUpdate redistributing every affected row.
-        The source is deduplicated on the keys first (PG raises on
-        duplicate conflict rows; we keep an arbitrary-but-deterministic
-        first by key ordering to stay a function).
+        Keyed form, `merge(df, on=[keys], update=…, insert=…)`: an
+        upsert on `t.k <=> s.k` with the source first made unique on
+        its keys. Matched rows take `update` (default: the source row
+        wholesale); unmatched source rows are appended when `insert`.
+        Returns {"updated", "inserted"}.
+
+        Scale note: one shuffle on the join keys (sort-merge, or
+        broadcast when the source is small) plus one on the target row
+        id; the rewrite is a full-table pass, the same worst case as
+        SplitUpdate redistributing every affected row.
         """
         import pyspark.sql.functions as F
-        from pyspark.sql import Window
+        from pyspark.sql import Observation, Window
+
+        if not isinstance(on, Column):
+            keys = list(on)
+            src = [c for c in self.read().columns if c in source.columns]
+            values = {c: F.col(f"{source_alias}.{c}") for c in src}
+            whens = [When(True, "update", values=values if update is None else update)]
+            if insert:
+                whens.append(When(False, "insert", values=values))
+            on = functools.reduce(operator.and_, [
+                F.col(f"{alias}.{k}").eqNullSafe(F.col(f"{source_alias}.{k}"))
+                for k in keys])
+            counts, _ = self.merge(first_per_key(source, keys), on, whens,
+                                   alias=alias, source_alias=source_alias)
+            return {"updated": counts["updated"], "inserted": counts["inserted"]}
 
         target = self.read()
-        src = (
-            source.withColumn(
-                "__rn", F.row_number().over(
-                    Window.partitionBy(*on).orderBy(*[F.col(k) for k in source.columns])
-                )
-            )
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        whens = [replace(w, values=by_column(w.values, target.columns)) for w in whens]
+        joined = target.withColumn("__t", F.monotonically_increasing_id()).alias(alias).join(
+            source.withColumn("__s", F.monotonically_increasing_id()).alias(source_alias),
+            on, "full_outer")
+        in_target, in_source = F.col("__t").isNotNull(), F.col("__s").isNotNull()
+        act = None
+        for i, w in enumerate(whens):
+            hit = in_target & in_source if w.matched else ~in_target
+            if w.cond is not None:
+                hit = hit & w.cond
+            act = (act.when if act is not None else F.when)(hit, F.lit(i))
+        # a source-only row is its own group: -1 - id never meets a __t
+        first = Window.partitionBy(F.coalesce("__t", -1 - F.col("__s"))).orderBy(
+            *[F.col(f"{source_alias}.{c}") for c in source.columns])
+        staged = (joined.withColumn("__rn", F.row_number().over(first))
+                  .filter(F.col("__rn") == 1)
+                  .withColumn("__act", act)
+                  .localCheckpoint(eager=False))
 
-        t = target.withColumn("__t", F.lit(1)).alias("t")
-        s = src.withColumn("__s", F.lit(1)).alias("s")
-        cond = [F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}")) for k in on]
-        joined = t.join(s, cond, "full_outer")
-        matched = F.col("t.__t").isNotNull() & F.col("s.__s").isNotNull()
-        t_only = F.col("s.__s").isNull()
+        def acting(*actions: str) -> Column:
+            ids = [i for i, w in enumerate(whens) if w.action in actions]
+            return F.coalesce(F.col("__act").isin(ids), F.lit(False))
 
-        out_cols = []
+        cols = []
         for c in target.columns:
-            upd_expr = (
-                update[c]
-                if update is not None and c in update
-                else (F.col(f"s.{c}") if update is None and c in src.columns else F.col(f"t.{c}"))
-            )
-            ins_expr = F.col(f"s.{c}") if c in src.columns else F.lit(None).cast(target.schema[c].dataType)
-            col = (
-                F.when(matched, upd_expr)
-                .when(t_only, F.col(f"t.{c}"))
-                .otherwise(ins_expr)
-                .alias(c)
-            )
-            out_cols.append(col)
-
-        result = joined.select(*out_cols)
-        if not insert:
-            # keep exactly the target-side rows; gate on the __t marker,
-            # not on a key column — the join is eqNullSafe, so a target
-            # row with a NULL first key is a real row, not a non-match
-            result = joined.filter(F.col("t.__t").isNotNull()).select(*out_cols)
-        if delete_unmatched_source:
-            result = joined.filter(~t_only if insert else matched).select(*out_cols)
-
-        n_matched = joined.filter(matched).count()
-        n_total_src = src.count()
-        stats = {
-            "updated": n_matched,
-            "inserted": (n_total_src - n_matched) if insert else 0,
-        }
-        self._swap_in(result)
-        return stats
+            v = None
+            for i, w in enumerate(whens):
+                if c in w.values:
+                    v = (v.when if v is not None else F.when)(
+                        F.col("__act") == i, w.values[c])
+            base = F.col(f"{alias}.{c}")
+            cols.append((v.otherwise(base) if v is not None else base)
+                        .cast(target.schema[c].dataType).alias(c))
+        # written: target rows no DELETE removes, plus inserted rows; the
+        # write fills the checkpoint and counts each action on the way
+        seen = Observation()
+        self._swap_in(
+            staged.observe(seen, *[F.count_if(acting(a)).alias(n) for a, n in _COUNTS.items()])
+            .filter((in_target & ~acting("delete")) | acting("insert")).select(*cols))
+        return seen.get, staged.filter(acting(*_COUNTS)).select(*cols)
