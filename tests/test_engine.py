@@ -76,7 +76,7 @@ def test_ddl_distributed_by(engine):
         "DISTRIBUTED BY (a)"
     )
     assert engine.catalog.tables["dist_t"].distribution == ("hash", ("a",))
-    engine.spark.sql("DROP TABLE IF EXISTS dist_t")
+    engine.sql("DROP TABLE IF EXISTS dist_t")
 
 
 # ---------------------------------------------------------------------- DML
@@ -3266,9 +3266,9 @@ def test_select_into_existing_errors(engine):
 
 
 def test_update_adopts_spark_table(engine, spark):
-    """A relation living only in the Spark catalog (raw-DDL path)
-    adopts into the engine warehouse on first UPDATE/DELETE — the
-    copy-on-write heap ModifyTable needs."""
+    """A table created inside a PL/pgSQL body is an engine table from
+    its CREATE, so INSERT, UPDATE and DELETE in the same body rewrite
+    its copy-on-write parquet heap."""
     engine.sql("""CREATE OR REPLACE FUNCTION adoptions() RETURNS int AS $$
     BEGIN
       CREATE TABLE adopt_t (a int, b int);
@@ -3374,8 +3374,17 @@ _FRONT_END_CASES = {
     "select": ([], "SELECT k FROM fe_t ORDER BY k", None,
                [(1,), (2,), (3,), (4,), (5,)]),
     "values": ([], "VALUES (1), (2)", None, [(1,), (2,)]),
-    "ctas": ([], "CREATE TABLE fe_c AS SELECT k FROM fe_t WHERE k > 3",
+    "ctas": (["DROP TABLE IF EXISTS fe_c"], "CREATE TABLE fe_c AS SELECT k FROM fe_t WHERE k > 3",
              "SELECT count(*) FROM fe_c", [(2,)]),
+    "drop_table": (["CREATE TABLE IF NOT EXISTS fe_d AS SELECT 1 AS a"], "DROP TABLE fe_d",
+                   "SELECT count(*) FROM pg_tables WHERE tablename = 'fe_d'", [(0,)]),
+    "create_view": (["DROP VIEW IF EXISTS fe_v"],
+                    "CREATE VIEW fe_v AS SELECT k FROM fe_t WHERE k > 4",
+                    "SELECT k FROM fe_v", [(5,)]),
+    "alter_add_column": (["DROP TABLE IF EXISTS fe_a", "CREATE TABLE fe_a (k int)"],
+                         "ALTER TABLE fe_a ADD COLUMN v int",
+                         "SELECT count(*) FROM information_schema.columns "
+                         "WHERE table_name = 'fe_a'", [(2,)]),
     "insert": (["DELETE FROM fe_w"], "INSERT INTO fe_w VALUES (1, 'a')",
                "SELECT k, s FROM fe_w", [(1, "a")]),
     "update": (["DELETE FROM fe_w", "INSERT INTO fe_w VALUES (1, 'a')"],
@@ -3624,3 +3633,148 @@ def test_dml_contract(dml_contract_src, case):
         want, want_table = spec[1], spec[2]
     assert sorted(got, key=repr) == sorted(want, key=repr)
     assert sorted(table, key=repr) == sorted(want_table, key=repr)
+
+
+# -------------------------------------------------- table lifecycle
+# Each case runs a script through Engine.sql, then one query. Where
+# DuckDB 1.0 accepts the same script its rows are the expectation
+# (None); otherwise the case carries its rows, or the text of the
+# error the last statement raises. `check` asserts engine state.
+def _lc_dropped(engine):
+    from warehouse_pg_spark.catalog import _READER_CACHE
+
+    path = os.path.join(engine.warehouse_dir, "lc_c1")
+    assert "lc_c1" not in engine.catalog.tables
+    assert not os.path.exists(path)
+    assert path not in _READER_CACHE
+
+
+def _lc_engine_table(*names):
+    def check(engine):
+        for n in names:
+            info = engine.catalog.tables[n]
+            assert info.path == os.path.join(engine.warehouse_dir, n)
+    return check
+
+
+def _lc_distribution(name, want):
+    def check(engine):
+        assert engine.catalog.tables[name].distribution == want
+    return check
+
+
+_LIFECYCLE = {
+    "dropped_row_stays_dropped": (
+        ["CREATE TABLE lc_d (a int, b int)", "INSERT INTO lc_d VALUES (1, 2)",
+         "DROP TABLE lc_d", "CREATE TABLE lc_d (a int, b int)",
+         "DELETE FROM lc_d WHERE a = 99"],
+        "SELECT a, b FROM lc_d", None, None),
+    "drop_removes_catalog_rows": (
+        ["CREATE TABLE lc_c1 AS SELECT 1 AS a", "SELECT * FROM lc_c1", "DROP TABLE lc_c1"],
+        "SELECT tablename FROM pg_tables WHERE tablename = 'lc_c1' "
+        "UNION ALL SELECT relname FROM pg_stat_user_tables WHERE relname = 'lc_c1'",
+        [], _lc_dropped),
+    "unwritten_table_in_catalog": (
+        ["CREATE TABLE lc_p2 (a int, b text)"],
+        "SELECT t.tablename, c.column_name FROM pg_tables t JOIN "
+        "information_schema.columns c ON c.table_name = t.tablename "
+        "WHERE t.tablename = 'lc_p2'",
+        [("lc_p2", "a"), ("lc_p2", "b")], _lc_engine_table("lc_p2")),
+    "distributed_by_survives_insert": (
+        ["CREATE TABLE lc_dist (a int, b text) DISTRIBUTED BY (a)",
+         "INSERT INTO lc_dist VALUES (1, 'x')"],
+        "SELECT a, b FROM lc_dist", [(1, "x")], _lc_distribution("lc_dist", ("hash", ("a",)))),
+    "ctas_distributed_by_survives_update": (
+        ["CREATE TABLE lc_g1 AS SELECT 1 AS a, 2 AS b DISTRIBUTED BY (a)",
+         "UPDATE lc_g1 SET b = 3"],
+        "SELECT a, b FROM lc_g1", [(1, 3)], _lc_distribution("lc_g1", ("hash", ("a",)))),
+    "alter_add_column_after_write": (
+        ["CREATE TABLE lc_alt (a int, b text)", "INSERT INTO lc_alt VALUES (1, 'x')",
+         "ALTER TABLE lc_alt ADD COLUMN c int", "INSERT INTO lc_alt VALUES (2, 'y', 3)"],
+        "SELECT a, b, c FROM lc_alt", None, None),
+    "view_over_fixture": (
+        ["CREATE VIEW lc_nv AS SELECT n_name FROM nation"],
+        "SELECT count(*) FROM lc_nv", [(25,)], None),
+    "view_over_unwritten_table": (
+        ["CREATE TABLE lc_vt (a int)", "CREATE VIEW lc_vv AS SELECT a FROM lc_vt",
+         "INSERT INTO lc_vt VALUES (1)"],
+        "SELECT a FROM lc_vv", None, None),
+    "ctas_with": (
+        ["CREATE TABLE lc_w1 AS WITH x AS (SELECT 1 AS a) SELECT * FROM x"],
+        "SELECT a FROM lc_w1", None, _lc_engine_table("lc_w1")),
+    "ctas_values": (
+        ["CREATE TABLE lc_w2 AS VALUES (1, 2)"],
+        "SELECT * FROM lc_w2", [(1, 2)], _lc_engine_table("lc_w2")),
+    "ctas_parenthesized": (
+        ["CREATE TABLE lc_w3 AS (SELECT 1 AS a)"],
+        "SELECT a FROM lc_w3", None, _lc_engine_table("lc_w3")),
+    "ctas_if_not_exists": (
+        ["CREATE TABLE IF NOT EXISTS lc_w4 AS SELECT 1 AS a",
+         "CREATE TABLE IF NOT EXISTS lc_w4 AS SELECT 2 AS a"],
+        "SELECT a FROM lc_w4", None, _lc_engine_table("lc_w4")),
+    "ctas_unlogged": (
+        ["CREATE UNLOGGED TABLE lc_w5 AS SELECT 1 AS a"],
+        "SELECT a FROM lc_w5", [(1,)], _lc_engine_table("lc_w5")),
+    "ctas_over_existing_raises": (
+        ["CREATE TABLE lc_x AS SELECT 1 AS a", "CREATE TABLE lc_x AS SELECT 2 AS a"],
+        "SELECT a FROM lc_x", 'relation "lc_x" already exists', None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_LIFECYCLE))
+def test_table_lifecycle_contract(engine, case):
+    """Every table a statement creates is an engine table from CREATE
+    to DROP, whatever its spelling: DROP forgets it everywhere, an
+    unwritten table is in the catalog, a DISTRIBUTED BY hint outlives
+    writes, ADD COLUMN and views work on it, and re-creating a name
+    raises as in PG. Spark's own warehouse directory is never used."""
+    import duckdb
+
+    script, query, want, check = _LIFECYCLE[case]
+    spark_wh = engine.spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    before = set(os.listdir(spark_wh)) if os.path.isdir(spark_wh) else set()
+    if isinstance(want, str):
+        for stmt in script[:-1]:
+            engine.sql(stmt)
+        with pytest.raises(Exception, match=want):
+            engine.sql(script[-1])
+        want = [(1,)]
+    else:
+        for stmt in script:
+            engine.sql(stmt).collect()
+    got = [tuple(r) for r in engine.sql(query).collect()]
+    if want is None:
+        con = duckdb.connect()
+        for stmt in script:
+            con.execute(stmt)
+        want = con.execute(query).fetchall()
+        con.close()
+    assert sorted(got, key=repr) == sorted(want, key=repr)
+    if check is not None:
+        check(engine)
+    after = set(os.listdir(spark_wh)) if os.path.isdir(spark_wh) else set()
+    assert after == before
+
+
+def test_drop_keeps_attached_files_and_cache_bounded(engine, tmp_path):
+    """DROP TABLE of an attached table removes only the name: its files
+    stay and attach again with the same rows. CREATE/DROP cycles do not
+    grow the relation cache."""
+    from warehouse_pg_spark import catalog
+
+    path = str(tmp_path / "att")
+    engine.spark.range(3).write.parquet(path)
+    engine.attach_parquet("lc_att", path)
+    engine.sql("DROP TABLE lc_att")
+    assert "lc_att" not in engine.catalog.tables
+    assert not engine.spark.catalog.tableExists("lc_att")
+    assert catalog.data_files(path)
+    engine.attach_parquet("lc_att", path)
+    assert sorted(r.id for r in engine.sql("SELECT id FROM lc_att").collect()) == [0, 1, 2]
+    engine.sql("DROP TABLE lc_att")
+    size = len(catalog._READER_CACHE)
+    for _ in range(20):
+        engine.sql("CREATE TABLE lc_cycle AS SELECT 1 AS a")
+        engine.sql("DROP TABLE lc_cycle")
+    assert len(catalog._READER_CACHE) <= size
+

@@ -78,7 +78,8 @@ def test_prefix_plus_history_spans_every_family():
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     covered: set[str] = set(DRIVER_PREFIX)
-    for f in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+    rounds = [os.path.join(d, "CORRECTNESS_r*.json") for d in (root, os.path.join(root, "history"))]
+    for f in [f for pattern in rounds for f in glob.glob(pattern)]:
         with open(f) as fh:
             covered.update(
                 n for n, v in json.load(fh).items()

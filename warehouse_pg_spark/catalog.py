@@ -185,6 +185,15 @@ class Catalog:
             read_parquet_table(self.spark, path).createOrReplaceTempView(name)
         return info
 
+    def drop(self, name: str | None) -> TableInfo | None:
+        """Remove a table's entry, its view and its relation-cache entry
+        (its files are the caller's); None when there is no entry."""
+        info = self.tables.pop(name, None)
+        if info is not None:
+            self.spark.catalog.dropTempView(name)
+            _READER_CACHE.pop(info.path, None)
+        return info
+
     def register_fixtures(self, sf_dir: str, create_views: bool = True) -> None:
         """Register every driver fixture table found under sf_dir."""
         for name in FIXTURE_TABLES:

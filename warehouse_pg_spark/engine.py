@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -80,8 +81,29 @@ _COPY_FROM_RE = re.compile(
     r"\s*(?:WITH\s*)?(?:\(([^)]*)\))?\s*$",
     re.IGNORECASE,
 )
-_CTAS_RE = re.compile(
-    r"^CREATE\s+TABLE\s+([\w.]+)\s+AS\s+(SELECT\b.*)$", re.IGNORECASE | re.DOTALL
+# CREATE TABLE as the dialect lowers it, its GP tails cut: modifiers,
+# IF NOT EXISTS and the name, then `AS [(]SELECT|WITH|VALUES …` or the
+# column list the dialect gives `USING PARQUET`
+_CREATE_TABLE_RE = re.compile(
+    r"^CREATE\s+(?:(?:GLOBAL|LOCAL)\s+)?(?:(?:TEMP|TEMPORARY|UNLOGGED)\s+)?"
+    r"TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
+    r"(?:AS\s+(\(*\s*(?:SELECT|WITH|VALUES)\b.*)|\((.*)\)\s*USING\s+PARQUET)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_DROP_TABLE_RE = re.compile(
+    r"^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+(?:\s*,\s*[\w.]+)*)"
+    r"(?:\s+(?:CASCADE|RESTRICT))?$",
+    re.IGNORECASE,
+)
+_CREATE_VIEW_RE = re.compile(
+    r"^CREATE\s+(OR\s+REPLACE\s+)?(?:(?:TEMP|TEMPORARY)\s+)?VIEW\s+([\w.]+)(.*)$",
+    re.IGNORECASE | re.DOTALL,
+)
+_ADD_COLUMN_RE = re.compile(
+    r"^ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?:ONLY\s+)?([\w.]+)\s+"
+    r"ADD\s+(?:COLUMN\s+)?(IF\s+NOT\s+EXISTS\s+)?"
+    r"(?!(?:CONSTRAINT|PRIMARY|UNIQUE|CHECK|FOREIGN|EXCLUDE)\b)(\w+\s+.+)$",
+    re.IGNORECASE | re.DOTALL,
 )
 _SELECT_INTO_RE = re.compile(
     r"^(SELECT\b.*?)\sINTO\s+(?:(?:TEMPORARY|TEMP|UNLOGGED)\s+)?"
@@ -184,26 +206,6 @@ _TRUNCATE_RE = re.compile(
     r"(?:\s+(?:RESTART|CONTINUE)\s+IDENTITY)?(?:\s+(?:CASCADE|RESTRICT))?\s*$",
     re.IGNORECASE,
 )
-_TEMP_CTAS_RE = re.compile(
-    r"^CREATE\s+(?:TEMP|TEMPORARY)\s+TABLE\s+([\w.]+)\s+AS\s*"
-    r"\(?\s*((?:SELECT|WITH|VALUES)\b.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CTAS_DIST_TAIL_RE = re.compile(
-    r"\s+DISTRIBUTED\s+(?:BY\s*\([^)]*\)|RANDOMLY|REPLICATED)\s*;?\s*$",
-    re.IGNORECASE,
-)
-
-
-def _paren_balance(text: str) -> int:
-    """Net ( vs ) count outside single-quoted spans."""
-    bal, in_q = 0, False
-    for ch in text:
-        if ch == "'":
-            in_q = not in_q
-        elif not in_q:
-            bal += ch == "(" and 1 or (ch == ")" and -1 or 0)
-    return bal
 
 
 def _toplevel_from(text: str) -> bool:
@@ -245,6 +247,14 @@ def _lex(text: str) -> tuple[str, str, list[str]]:
     body = body.rstrip().rstrip(";").rstrip()
     masked, lits = _mask(_rewrite_dollar_quotes(body))
     return body, masked, lits
+
+
+def _table_key(name: str) -> str | None:
+    """The engine catalog key of a statement's table name: PG folds an
+    unquoted name to lower case and `public` is the engine's one
+    schema; a name qualified by another schema is Spark's (None)."""
+    schema, _, table = name.lower().rpartition(".")
+    return table if schema in ("", "public") else None
 
 
 def _kind(masked: str) -> str:
@@ -291,7 +301,7 @@ _ROUTES: dict[str, tuple[str, str]] = {
     **dict.fromkeys(("COMMENT", "REINDEX", "REASSIGN", "DROP OWNED",
                      "DROP INDEX"), ("utility", "_noop_stmt")),
     "CREATE INDEX": ("utility", "_create_index"),
-    "ALTER TABLE": ("utility", "_alter_table"),
+    "DROP TABLE": ("utility", "_drop_table_stmt"),
     **dict.fromkeys(("CREATE SEQUENCE", "ALTER SEQUENCE", "DROP SEQUENCE"),
                     ("utility", "_sequence_ddl")),
     "CREATE FUNCTION": ("utility", "_create_function"),
@@ -314,6 +324,8 @@ _ROUTES: dict[str, tuple[str, str]] = {
     "COPY": ("dml", "_copy_stmt"),
     "TRUNCATE": ("dml", "_truncate_stmt"),
     "CREATE TABLE": ("dml", "_create_table_stmt"),
+    "CREATE VIEW": ("dml", "_create_view_stmt"),
+    "ALTER TABLE": ("dml", "_alter_table"),
     "SELECT INTO": ("dml", "_select_into_stmt"),
 }
 
@@ -533,50 +545,13 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         try:
             return self.spark.sql(lowered)
         except Exception as e:  # noqa: BLE001
-            if not re.match(r"(?is)\s*CREATE\s", lowered):
-                raise
             sm = re.search(
                 r"The schema `spark_catalog`\.`(\w+)` cannot be found",
-                str(e))
-            if sm is not None:
-                self.spark.sql(
-                    f"CREATE NAMESPACE IF NOT EXISTS {sm.group(1)}")
-                return self.spark.sql(lowered)
-            # table-rowtype column (parse_type.c: a table name is a
-            # type): substitute the table's STRUCT and retry once
-            um = re.search(r'Unsupported data type "(\w+)"', str(e))
-            if um is not None:
-                key = um.group(1).lower()
-                tcols = self._table_rowtype_cols(key)
-                comp = self._user_types.composites.get(key)
-                if tcols is None and comp is not None:
-                    tcols = [(f, self._decl_type(t))
-                             for f, t in comp.fields]
-                if tcols is not None:
-                    struct = "STRUCT<" + ", ".join(
-                        f"{n}: {ty}" for n, ty in tcols) + ">"
-                    fixed = re.sub(
-                        rf"(?i)\b{um.group(1)}\b", struct, lowered)
-                    return self.spark.sql(fixed)
-            # LOCATION_ALREADY_EXISTS with no catalog entry: a stale
-            # managed-table directory from a dropped table of the
-            # same name (Spark's DROP can leave files when the
-            # catalog entry was removed through a different path).
-            # Only a path inside a *-warehouse dir is reclaimed —
-            # user data locations stay untouched.
-            lm = re.search(r"location 'file:([^']+)'", str(e)) if (
-                "LOCATION_ALREADY_EXISTS" in str(e)) else None
-            if lm is not None:
-                import shutil
-
-                p = os.path.abspath(lm.group(1))
-                parent = os.path.basename(os.path.dirname(p))
-                if parent.endswith("warehouse") or (
-                        self.warehouse_dir and p.startswith(
-                            os.path.abspath(self.warehouse_dir))):
-                    shutil.rmtree(p, ignore_errors=True)
-                    return self.spark.sql(lowered)
-            raise
+                str(e)) if re.match(r"(?is)\s*CREATE\s", lowered) else None
+            if sm is None:
+                raise
+            self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {sm.group(1)}")
+            return self.spark.sql(lowered)
 
     def _lower_srf_select(self, text: str) -> str:
         """PG SRF-in-target-list over a registered set-returning SQL
@@ -1390,7 +1365,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _VACUUM_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        name = (m.group(2) or "").split(".")[-1]
+        name = m.group(2) or ""
         # table-less VACUUM (whole database) and VACUUM on
         # non-writable relations are advisory no-ops here
         if name and self._writable_by_name(name) is not None:
@@ -1422,8 +1397,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _CLUSTER_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        name = (m.group(1) or "").split(".")[-1]
-        hints = self._index_hints.get(name, [])
+        name = m.group(1) or ""
+        hints = self._index_hints.get(name.split(".")[-1], [])
         if name and hints and self._writable_by_name(name) is not None:
             self.cluster_zorder(name, hints[-1])
         return self._tag(0)
@@ -1590,12 +1565,30 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         self._index_hints.setdefault(tname, []).append(cols)
         return self._tag(0)
 
-    def _alter_table(self, s: str) -> DataFrame:
-        # OWNER TO is metadata-only in PG; the rest is Spark DDL
+    def _alter_table(self, s: str) -> DataFrame | None:
+        """ALTER TABLE: OWNER TO is metadata only in PG. ADD [COLUMN] of
+        a plain nullable column on an engine table rewrites it with the
+        column NULL in every row (tablecmds.c ATExecAddColumn without a
+        default). Spark runs every other form, and every form on a
+        Spark table."""
         if _OWNER_TO_RE.match(s):
             return self._tag(0)
-        _, masked, lits = _lex(s)
-        return self._query("ALTER TABLE", s, masked, lits)
+        m = _ADD_COLUMN_RE.match(s)
+        t = m and self._writable_by_name(m.group(1))
+        if t is None:
+            return None
+        cols = self._column_schema(m.group(3)).fields
+        if len(cols) != 1 or not cols[0].nullable or cols[0].metadata:
+            return None  # several columns, NOT NULL or DEFAULT: Spark's error
+        col = cols[0]
+        if col.name.lower() in (c.lower() for c in t.read().columns):
+            if m.group(2):
+                return self._tag(0)
+            raise ValueError(f'column "{col.name}" of relation '
+                             f'"{_table_key(m.group(1))}" already exists')
+        t.add_column(col.name, col.dataType)
+        self._refresh_view(m.group(1), t)
+        return self._tag(0)
 
     def _type_ddl(self, s: str) -> DataFrame:
         # CREATE DOMAIN / TYPE (commands/typecmds.c): session registry
@@ -1612,7 +1605,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         name = m.group(2).split(".")[-1]
         if not (m.group(1) and name in self._matviews):  # IF NOT EXISTS
             self.create_materialized_view(
-                name, _CTAS_DIST_TAIL_RE.sub("", m.group(3)))
+                name, _DISTRIBUTED_BY_RE.sub("", m.group(3)))
         return self._tag(0)
 
     def _refresh_matview(self, s: str) -> DataFrame:
@@ -1635,8 +1628,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             raise KeyError(f'materialized view "{name}" does not exist')
         if mv is not None:
             self.spark.catalog.dropTempView(name)
-            import shutil
-
             shutil.rmtree(mv.path, ignore_errors=True)
         return self._tag(0)
 
@@ -1708,94 +1699,91 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             f"{f} {self._decl_type(t)}" for f, t in comp.fields)
         return f"{m.group(1)} ({cols})"
 
-    def _create_table_stmt(self, s: str) -> DataFrame | None:
-        """CREATE TABLE with the GP clauses Spark's parser rejects, and
-        CREATE TABLE AS into the engine warehouse.
+    def _create_table_stmt(self, s: str) -> DataFrame:
+        """CREATE TABLE (tablecmds.c DefineRelation, createas.c): every
+        spelling makes an engine table through `create_table_from`. A
+        column list gives an empty table of its lowered types; `AS
+        [(]SELECT|WITH|VALUES …` materializes the query. TEMP and
+        UNLOGGED are accepted: there is one storage kind. An existing
+        engine table raises, or is kept under IF NOT EXISTS.
 
-        `PARTITION BY RANGE (col) (START .. [END ..] EVERY ..)` (gram.y
-        OptTabPartitionSpec; partition child creation in tablecmds.c)
-        maps onto directory partitioning: a CTAS with the clause
-        materializes with a derived range-partition id column, so
-        partition pruning works exactly as GP's Dynamic*Scan would.
-        A TEMP CTAS is a session temp view. `DISTRIBUTED BY (k)`
-        (gram.y:5597-5605, gp_distribution_policy.h) is a perf hint
-        under Spark (SURVEY §1.1): recorded in the catalog, stripped
-        from the DDL. A plain column-list CREATE returns None: Spark
-        runs it."""
-        pm = _PARTITION_RANGE_RE.search(s)
+        `DISTRIBUTED BY (k)` / RANDOMLY / REPLICATED (gram.y:5597-5605,
+        gp_distribution_policy.h) is a perf hint under Spark (SURVEY
+        §1.1), recorded in the catalog. `PARTITION BY RANGE (col)
+        (START .. [END ..] EVERY ..)` on a CTAS (gram.y
+        OptTabPartitionSpec) maps onto directory partitioning by a
+        derived range-partition id, so partition pruning works as GP's
+        Dynamic*Scan would. A name qualified by another schema and the
+        Spark-native forms (USING csv, LOCATION, OPTIONS) go to Spark's
+        catalog, without the GP tails."""
+        masked, lits = _mask(s)
+        distribution = None
+        dm = _DISTRIBUTED_BY_RE.search(masked)
+        if dm is not None:
+            distribution = (
+                ("hash", tuple(k.strip() for k in dm.group(1).split(",")))
+                if dm.group(1) else
+                ({"randomly": "random", "replicated": "replicated"}[dm.group(2).lower()], ()))
+            masked = masked[: dm.start()] + masked[dm.end():]
+        pm = _PARTITION_RANGE_RE.search(masked)
         if pm is not None:
-            return self._partitioned_ctas(s, pm)
-        m = _TEMP_CTAS_RE.match(s)
-        if m:
-            # PG CREATE TEMP TABLE ... AS (temp.sql): session-scoped, never
-            # durable — a Spark temp view over the materialized select.
-            # The query may be parenthesized and carry a DISTRIBUTED
-            # clause (gram.y CreateAsStmt + GP distribution suffix).
-            name, select = m.group(1).split(".")[-1], m.group(2).strip()
-            select = _CTAS_DIST_TAIL_RE.sub("", select).strip()
-            if select.endswith(")") and _paren_balance(select) < 0:
-                select = select[:-1].rstrip()
-            df = self.spark.sql(select).localCheckpoint(eager=True)
-            df.createOrReplaceTempView(name)
-            return self._tag(df.count())
-        m = _DISTRIBUTED_BY_RE.search(s)
-        if m:
-            keys: tuple[str, ...] = ()
-            policy = "random"
+            masked = masked[: pm.start()] + masked[pm.end():]
+        m = _CREATE_TABLE_RE.match(masked.strip())
+        name = m and _table_key(m.group(2))
+        if name is None:
+            return self._sql_autoschema(_unmask(masked, lits))
+        if name in self.catalog.tables:
             if m.group(1):
-                policy = "hash"
-                keys = tuple(k.strip() for k in m.group(1).split(","))
-            elif m.group(2):
-                policy = {"randomly": "random",
-                          "replicated": "replicated"}[m.group(2).lower()]
-            out = self._sql_autoschema(_DISTRIBUTED_BY_RE.sub("", s))
-            name_m = re.search(
-                r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)", s,
-                re.IGNORECASE)
-            if name_m:
-                from warehouse_pg_spark.catalog import TableInfo
+                return self._tag(0)
+            raise ValueError(f'relation "{name}" already exists')
+        if m.group(3) is None:
+            import pyspark.sql.functions as F
 
-                tname = name_m.group(1).split(".")[-1]
-                self.catalog.tables[tname] = TableInfo(
-                    name=tname, path="", distribution=(policy, keys)
-                )
-            return out
-        m = _CTAS_RE.match(s)
-        if m:
-            name, select = m.group(1).split(".")[-1], m.group(2)
-            self.create_table_from(name, self.spark.sql(select))
-            return self._tag(self.catalog.load(name).count())
-        return None
+            df = self.spark.range(0).select(*[
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in self._column_schema(_unmask(m.group(4), lits))])
+        else:
+            df = self.spark.sql(_unmask(m.group(3), lits))
+        derived = None
+        if pm is not None and m.group(3) is not None:
+            # the id is derived: every later write recomputes it from the row
+            derived = {"__part": self._range_partition(pm.group(1), _unmask(pm.group(2), lits))}
+        t = self.create_table_from(name, df, tuple(derived or ()), derived, distribution)
+        return self._tag(0 if m.group(3) is None else t.read().count())
 
-    def _partitioned_ctas(self, text: str, pm: re.Match) -> DataFrame:
-        """CTAS with a GP range-partition spec → directory-partitioned
-        parquet. Numeric EVERY buckets by width; INTERVAL EVERY buckets
-        by year/month/day counted from START (sources/partitioned.py
-        range_partition_expr — the EVERY child-partition rule)."""
+    def _column_schema(self, cols: str):
+        """The schema of a lowered column list. A table or composite type
+        named as a column type is its rowtype STRUCT (parse_type.c: a
+        table name is a type), substituted on one retry."""
+        from pyspark.errors import ParseException
+        from pyspark.sql.types import DataType
+
+        try:
+            return DataType.fromDDL(cols)
+        except ParseException as e:
+            um = re.search(r'Unsupported data type "(\w+)"', str(e))
+            if um is None:
+                raise
+            key = um.group(1).lower()
+            tcols = self._table_rowtype_cols(key)
+            comp = self._user_types.composites.get(key)
+            if tcols is None and comp is not None:
+                tcols = [(f, self._decl_type(t)) for f, t in comp.fields]
+            if tcols is None:
+                raise
+            struct = "STRUCT<" + ", ".join(f"{n}: {ty}" for n, ty in tcols) + ">"
+            return DataType.fromDDL(re.sub(rf"(?i)\b{key}\b", struct, cols))
+
+    @staticmethod
+    def _range_partition(col: str, spec: str) -> Column:
+        """The range-partition id of a GP spec. Numeric EVERY buckets by
+        width; INTERVAL EVERY buckets by year/month/day counted from
+        START (sources/partitioned.py range_partition_expr — the EVERY
+        child-partition rule)."""
         from warehouse_pg_spark.sources.partitioned import (
             range_partition_expr,
         )
 
-        col = pm.group(1)
-        spec = pm.group(2)
-        stripped = _DISTRIBUTED_BY_RE.sub(
-            "", text[: pm.start()] + text[pm.end():]).strip()
-        cm = _CTAS_RE.match(stripped)
-        if cm is None:
-            if re.match(r"(?is)^CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE"
-                        r"\s+[\w.]+\s*\(", stripped):
-                # plain partitioned CREATE (gram.y OptTabPartitionSpec
-                # without AS): the GP partition spec is physical
-                # layout, not semantics — the empty table creates
-                # normally and the spec stays a layout hint (a later
-                # CTAS through this path materializes directories;
-                # parquet row-group pruning covers the scan side)
-                return self.sql(stripped)
-            raise NotImplementedError(
-                "PARTITION BY RANGE is supported on CREATE TABLE ... AS "
-                "SELECT (directory-partitioned materialization)"
-            )
-        name, select = cm.group(1).split(".")[-1], cm.group(2)
         sm = re.search(
             r"START\s*\(\s*'?([^')]+?)'?\s*\)", spec, re.IGNORECASE
         )
@@ -1809,19 +1797,45 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 f"cannot parse partition spec (need START/EVERY): {spec!r}"
             )
         start = sm.group(1).strip()
-        df = self.spark.sql(select)
+
         def _num(s: str) -> float | int:
             return float(s) if "." in s else int(s)
 
         if em.group(3) is not None:  # numeric width
-            expr = range_partition_expr(col, _num(start), _num(em.group(3)))
-        else:
-            expr = range_partition_expr(
-                col, start, int(em.group(1)), em.group(2).lower()
-            )
-        # the id is derived: every later write recomputes it from the row
-        self.create_table_from(name, df, ("__part",), {"__part": expr})
-        return self._tag(self.catalog.load(name).count())
+            return range_partition_expr(col, _num(start), _num(em.group(3)))
+        return range_partition_expr(
+            col, start, int(em.group(1)), em.group(2).lower()
+        )
+
+    def _drop_table_stmt(self, s: str) -> DataFrame:
+        """DROP TABLE [IF EXISTS] a[, b] [CASCADE|RESTRICT] (tablecmds.c
+        RemoveRelations, heap.c heap_drop_with_catalog): an engine table
+        loses its catalog entry, temp view, reader-cache entry and index
+        hints, and the directory `create_table_from` made for it; an
+        attached table's files stay. A name the engine does not hold,
+        or a bucketed table, is dropped by Spark."""
+        m = _DROP_TABLE_RE.match(s)
+        if m is None:
+            return self._spark_stmt(s)
+        for name in (n.strip() for n in m.group(2).split(",")):
+            info = self.catalog.drop(_table_key(name))
+            if info is None or not info.path:
+                self.spark.sql(f"DROP TABLE {m.group(1) or ''}{name}")
+                continue
+            self._index_hints.pop(info.name, None)
+            if info.path == os.path.join(self.warehouse_dir, info.name):
+                shutil.rmtree(info.path, ignore_errors=True)
+        return self._tag(0)
+
+    def _create_view_stmt(self, s: str) -> DataFrame | None:
+        """CREATE [OR REPLACE] [TEMP] VIEW (view.c DefineView) is a
+        session temp view, the only kind that may read engine tables
+        (themselves temp views). A schema-qualified view is Spark's."""
+        m = _CREATE_VIEW_RE.match(s)
+        name = m and _table_key(m.group(2))
+        if name is None:
+            return None
+        return self.spark.sql(f"CREATE {m.group(1) or ''}TEMP VIEW {name}{m.group(3)}")
 
     # ----------------------------------------------------------- SQL DML
     def _maybe_dml(self, text: str, kind: str) -> DataFrame | None:
@@ -1854,7 +1868,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if m is None:
             return None
         name, rest = m.group(1).split(".")[-1], m.group(2).strip()
-        t = self._writable_by_name(name)
+        t = self._writable_by_name(m.group(1))
         if t is None:
             return None
         # PG INSERT ... ON CONFLICT (k) DO NOTHING | DO UPDATE SET ...
@@ -1954,7 +1968,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if m is None or sets is None:
             return None
         name = m.group(1).split(".")[-1]
-        t = self._writable_by_name(name)
+        t = self._writable_by_name(m.group(1))
         if t is None:
             return None
         alias = m.group(2) or name
@@ -1991,7 +2005,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if m is None:
             return None
         name = m.group(1).split(".")[-1]
-        t = self._writable_by_name(name)
+        t = self._writable_by_name(m.group(1))
         if t is None:
             return None
         alias = m.group(2) or name
@@ -2026,7 +2040,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _TRUNCATE_RE.match(s)
         if m is None:
             return None
-        names = [r.strip().split(".")[-1] for r in m.group(1).split(",")]
+        names = [r.strip() for r in m.group(1).split(",")]
         resolved = [(n, self._writable_by_name(n)) for n in names]
         if all(t is None for _, t in resolved):
             return None  # nothing engine-managed: not ours to handle
@@ -2054,15 +2068,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _SELECT_INTO_RE.match(s)
         if m is None:
             return None
-        tgt = m.group(2).split(".")[-1].lower()
-        exists = tgt in self.catalog.tables
-        if not exists:
-            try:
-                exists = self.spark.catalog.tableExists(tgt)
-            except Exception:  # noqa: BLE001
-                exists = False
-        if exists:
-            raise ValueError(f'relation "{tgt}" already exists')
         return self._create_table_stmt(
             f"CREATE TABLE {m.group(2)} AS {m.group(1)} "
             f"{m.group(3) or ''}".strip())
@@ -2113,7 +2118,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         """COPY table FROM 'path' (commands/copy.c DoCopyFrom): read
         with the target's schema (PG casts input text through each
         column's input function), append via the table's insert path."""
-        name = name.split(".")[-1]
         t = self._writable_by_name(name)
         if t is None:
             raise KeyError(f"{name!r} is not a writable parquet table")
@@ -2168,7 +2172,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if on is None:
             raise ValueError("MERGE requires ON <condition>")
         name = hm.group(1).split(".")[-1]
-        t = self._writable_by_name(name)
+        t = self._writable_by_name(hm.group(1))
         if t is None:
             return None
 
@@ -2235,49 +2239,16 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         return self.spark.table(rel), alias or rel
 
     def _writable_by_name(self, name: str) -> ParquetTable | None:
-        info = self.catalog.tables.get(name)
-        if info is None or not info.path or not os.path.isdir(info.path):
-            # a relation living only in the Spark catalog (raw-DDL
-            # CREATE, TEMP CTAS view, DISTRIBUTED-hint create):
-            # ADOPT it — materialize into the engine warehouse and
-            # register, so UPDATE/DELETE/TRUNCATE get the
-            # copy-on-write parquet heap they mutate
-            # (nodeModifyTable.c needs a table the executor owns);
-            # the refreshed temp view shadows the original
-            if name.startswith(("pg_", "gp_")) or \
-                    name in self._matviews:
-                return None
-            try:
-                df = self.spark.table(name)
-                path = os.path.join(self.warehouse_dir, name)
-                # eager write: reads the source fully BEFORE the
-                # originals drop below
-                df.write.mode("overwrite").parquet(path)
-            except Exception:  # noqa: BLE001 — not a relation
-                return None
-            # adoption takes OWNERSHIP: the Spark-catalog original
-            # (managed table or temp view) drops BEFORE the engine
-            # view registers — otherwise Spark's DROP TABLE resolves
-            # the new shadow view and the orphaned managed table
-            # collides with a later re-CREATE
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001
-                pass
-            try:
-                self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-            except Exception:  # noqa: BLE001
-                pass
-            self.catalog.register_parquet(name, path)
-            info = self.catalog.tables.get(name)
-            if info is None or not info.path or not os.path.isdir(
-                    info.path):
-                return None
+        """The engine table a statement names, or None: Spark runs the
+        statement (a Spark-catalog table, a view, a read-only file)."""
+        info = self.catalog.tables.get(_table_key(name))
+        if info is None or not os.path.isdir(info.path):
+            return None
         return ParquetTable(self.spark, info.path, info.partition_cols,
                             info.derived)
 
     def _refresh_view(self, name: str, t: ParquetTable) -> None:
-        t.read().createOrReplaceTempView(name)
+        t.read().createOrReplaceTempView(name.split(".")[-1])
 
     def _tag(self, n: int) -> DataFrame:
         return local_frame(self.spark, [(n,)], "rows_affected BIGINT")
@@ -2327,14 +2298,17 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
     def create_table_from(
         self, name: str, df: DataFrame, partition_by: tuple[str, ...] = (),
         derived: dict[str, Column] | None = None,
+        distribution: tuple[str, tuple[str, ...]] | None = None,
     ) -> ParquetTable:
-        """CTAS into the warehouse dir; registers a view. `derived`
-        columns are computed from the row on every write."""
+        """The one way a table is created: `df` written to
+        `warehouse_dir/<name>` and registered with its view. `derived`
+        columns are computed from the row on every write;
+        `distribution` is the DISTRIBUTED BY hint."""
         t = ParquetTable(self.spark, os.path.join(self.warehouse_dir, name),
                          partition_by, derived)
         t.write(df, "overwrite")
         self.catalog.register_parquet(
-            name, t.path, partition_cols=partition_by, derived=derived)
+            name, t.path, distribution, partition_by, derived=derived)
         return t
 
     def create_bucketed_table(

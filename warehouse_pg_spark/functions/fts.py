@@ -316,7 +316,7 @@ _RE_PART = re.compile(_ALNUM_PART, re.UNICODE)
 # unconditionally, so it can be emitted without trying the ~10
 # composite regexes. Cuts parse_default's regex calls ~10x on prose
 # (the to_tsvector hot path; r17 measurement: 0.33 ms/doc -> see
-# OPTIMIZATION_r17.md).
+# history/OPTIMIZATION_r17.md).
 _RE_ASCII_RUN = re.compile(r"[A-Za-z]+")
 _UNSAFE_FOLLOW = frozenset("@.-_:/")
 

@@ -10,7 +10,8 @@ the batch-job unit of atomicity is the table version (directory).
 
 `ParquetTable` is the only code that builds a rewritten table image,
 in three shapes plus append — the split of Spark's own row-level DML:
-a filter (DELETE), a projection (UPDATE) and a join (MERGE). Every SQL
+a filter (DELETE), a projection (UPDATE, ALTER TABLE ADD COLUMN) and a
+join (MERGE). Every SQL
 statement form lowers onto one of them (`Engine._maybe_dml`).
 
 Scale note: UPDATE/DELETE rewrite only the files whose rows can match
@@ -30,6 +31,7 @@ from collections.abc import Sequence
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 from warehouse_pg_spark import catalog
 
@@ -136,6 +138,13 @@ class ParquetTable:
             "files_after": len(catalog.data_files(self.path)),
             "bytes": n_bytes,
         }
+
+    def add_column(self, name: str, data_type: DataType) -> None:
+        """ALTER TABLE ADD COLUMN → a projection giving every row a NULL
+        `name` of `data_type`."""
+        import pyspark.sql.functions as F
+
+        self._swap_in(self.read().withColumn(name, F.lit(None).cast(data_type)))
 
     def delete(self, where: Column, alias: str | None = None) -> int:
         """DELETE WHERE → keep every row `where` is not true for (a NULL

@@ -47,7 +47,7 @@ from warehouse_pg_spark.queries import (  # noqa: F401, E402
 # round the NON-ANCHOR slots rotate to queries the driver has never
 # scored, keeping one green representative per family pinned (the
 # family-coverage invariant is cumulative — tests/test_registry.py
-# checks prefix ∪ CORRECTNESS_r* history spans REQUIRED_FAMILY_TAGS).
+# checks prefix ∪ history/CORRECTNESS_r* spans REQUIRED_FAMILY_TAGS).
 # r17 rotation: the 2 NEW round-17 queries lead — pg_class/pg_attribute
 # catalog introspection (engine_catalog.py views) and the widened
 # procedure interpreter end-to-end (bound cursor FETCH loop + dynamic

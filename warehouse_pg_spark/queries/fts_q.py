@@ -112,7 +112,7 @@ def fts_match_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Fused rank shim: to_tsvector + ts_rank in ONE Arrow UDF call
     # (same Python core as the pg_to_tsvector → pg_ts_rank chain, but
     # the tsvector skips the render-to-text → JVM → re-parse round
-    # trip; plan: 2 ArrowEvalPython → 1 — see OPTIMIZATION_r17.md).
+    # trip; plan: 2 ArrowEvalPython → 1 — see history/OPTIMIZATION_r17.md).
     return base.selectExpr(
         "doc_id",
         "CAST(n_data AS BIGINT) AS n_data",

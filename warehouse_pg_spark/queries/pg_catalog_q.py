@@ -81,16 +81,6 @@ def pgsql_cursor_dynexec_proc(spark: SparkSession,
     interpreter is a session-DDL path — the cursor portal here is 5
     rows (regions), never a data-plane scan."""
     eng = _engine(spark, sf_dir)
-    # a prior session's managed-table directory survives a fresh
-    # metastore (Spark derby is per-session); clear the orphan so the
-    # CREATE below is deterministic, as the probe harness does
-    import os
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    wh = wh[5:] if wh.startswith("file:") else wh
-    eng.sql("DROP TABLE IF EXISTS region_audit")
-    shutil.rmtree(os.path.join(wh, "region_audit"), ignore_errors=True)
     eng.sql("CREATE TABLE region_audit (k int, nm varchar(32), len int)")
     eng.sql(
         """
