@@ -29,12 +29,23 @@ def no_broadcast(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+@pytest.fixture()
+def fresh_plans(spark):
+    """The plan cache cannot see a patched builder helper: no cached
+    plan serves the test, and none it builds outlives it."""
+    from warehouse_pg_spark.queries.registry import clear_plan_cache
+
+    clear_plan_cache(spark)
+    yield
+    clear_plan_cache(spark)
+
+
 @pytest.mark.parametrize(
     "name",
     ["tpch_q3_shipping_priority", "tpch_q9_product_type_profit"],
 )
 def test_flip_replans_to_shuffle_join_with_same_results(
-    spark, sf_dir, name, no_broadcast, monkeypatch
+    spark, sf_dir, name, no_broadcast, fresh_plans, monkeypatch
 ):
     # q3's explicit broadcast of the orders⋈customer join output is
     # guarded by the on-disk size of orders (its catalog-stats stand-in);

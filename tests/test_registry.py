@@ -272,3 +272,157 @@ def test_parity_channel_is_driver_faithful(spark, sf_dir):
         sf_dir,
         name="channel-fixed",
     )
+
+
+# ---------------------------------------------------------------- plan cache
+import re  # noqa: E402
+
+import duckdb  # noqa: E402
+import pyspark.sql.functions as F  # noqa: E402
+
+from perfbench.workloads import ANALYTIC_QUERIES  # noqa: E402
+from tests.parity import compare  # noqa: E402
+from warehouse_pg_spark.queries.registry import (  # noqa: E402
+    _PLAN_CACHE,
+    _canonize,
+    plan_cache_stats,
+)
+
+# every bench-tagged builder but this one (it runs 30 Spark jobs while
+# it builds) is cached; a builder change that loses the cache fails here
+_BENCH_UNCACHEABLE = {"dedup_cluster_components"}
+
+
+def _call(spark, name: str, sf_dir: str):
+    """One registry call: its DataFrame and how the plan cache served
+    it ("hits", "misses" or "uncacheable")."""
+    before = plan_cache_stats(spark)
+    df = REGISTRY[name].fn(spark, sf_dir)
+    after = plan_cache_stats(spark)
+    return df, next(k for k in after if after[k] > before[k])
+
+
+@pytest.mark.parametrize("name", ANALYTIC_QUERIES)
+def test_plan_cache_hit_matches_oracle(spark, sf_dir, name):
+    _call(spark, name, sf_dir)
+    df, served = _call(spark, name, sf_dir)
+    assert served == "hits"
+    compare(df, REGISTRY[name].oracle, sf_dir, name=f"{name}[cached plan]")
+
+
+def _q6_oracle(table_dir) -> float:
+    with duckdb.connect() as con:
+        con.execute(
+            f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{table_dir}/*.parquet')")
+        return float(con.execute(REGISTRY["tpch_q6_forecast_revenue"].oracle).fetchone()[0])
+
+
+@pytest.mark.parametrize("write", ["insert", "delete"])
+def test_plan_cache_never_serves_a_stale_listing(spark, sf_dir, tmp_path, write):
+    """A write through ParquetTable changes the table's listing
+    signature, so the next call rebuilds and sees the new files."""
+    from warehouse_pg_spark.catalog import read_parquet_table
+    from warehouse_pg_spark.operators.dml import ParquetTable
+
+    name = "tpch_q6_forecast_revenue"
+    path = str(tmp_path / "lineitem.parquet")
+    read_parquet_table(spark, f"{sf_dir}/lineitem.parquet").write.parquet(path)
+
+    def revenue():
+        df, served = _call(spark, name, str(tmp_path))
+        return df.collect()[0].revenue, served
+
+    before, _ = revenue()
+    assert before == _q6_oracle(path)
+    assert revenue() == (before, "hits")
+    t = ParquetTable(spark, path)
+    if write == "insert":
+        rows = t.read().filter(
+            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
+            & F.col("l_discount").between(0.02, 0.04) & (F.col("l_quantity") < 24)
+        ).limit(3).collect()
+        assert rows
+        t.insert(spark.createDataFrame(rows, t.read().schema))
+    else:
+        t.delete(F.col("l_quantity") < 10)
+    after, served = revenue()
+    assert served == "misses"
+    assert after == _q6_oracle(path) != before
+
+
+def test_plan_cache_invalidation(spark, sf_dir, tmp_path):
+    """A conf change (spark.conf.set) misses on its fingerprint; SET and
+    CREATE FUNCTION through Engine.sql drop the session's plans."""
+    from warehouse_pg_spark.engine import Engine
+
+    name = "tpch_q3_shipping_priority"
+
+    def served():
+        return _call(spark, name, sf_dir)[1]
+
+    served()
+    assert served() == "hits"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert served() == "misses"
+        assert served() == "hits"
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert served() == "misses"
+    eng = Engine(spark=spark, warehouse_dir=str(tmp_path / "wh"))
+    eng.sql("SET work_mem = '64MB'")
+    assert served() == "misses"
+    assert served() == "hits"
+    eng.sql("CREATE FUNCTION pc_plus_one(x int) RETURNS int "
+            "AS $$ SELECT x + 1 $$ LANGUAGE sql")
+    assert served() == "misses"
+
+
+@pytest.mark.parametrize(
+    "name",
+    # runs Spark jobs; a LogicalRDD leaf; a non-deterministic plan
+    ["dedup_cluster_components", "setop_values_scan", "udtf_python_split_words"],
+)
+def test_uncacheable_builders_are_never_cached(spark, sf_dir, name):
+    for _ in range(2):
+        assert _call(spark, name, sf_dir)[1] == "uncacheable"
+    assert name not in _PLAN_CACHE[spark].plans
+
+
+@pytest.fixture(scope="module")
+def cacheable(spark, sf_dir) -> dict[str, bool]:
+    """Every registry query built once: whether its plan is cached."""
+    out = {}
+    for name in REGISTRY:
+        out[name] = _call(spark, name, sf_dir)[1] != "uncacheable"
+    return out
+
+
+def test_bench_builders_stay_cacheable(cacheable):
+    bench = {n for n, q in REGISTRY.items() if "bench" in q.tags}
+    assert {n for n in bench if cacheable[n]} == bench - _BENCH_UNCACHEABLE
+
+
+def _plan_text(plan) -> str:
+    """An analyzed plan's text without its fresh names: expression ids
+    (`#12`), PySpark's numbered lambda variables (`lambda x_7`) and the
+    numbered internal names a compiler makes up (`__q3`)."""
+    text = re.sub(r"#\d+", "", plan.toString())
+    text = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1", text)
+    return re.sub(r"\b(__[A-Za-z]+)\d+\b", r"\1", text)
+
+
+def test_cached_plan_equals_a_fresh_build(spark, sf_dir, cacheable):
+    """A cached builder is a pure function of the conf and the tables it
+    reads: a fresh build's analyzed plan equals the cached one, up to
+    fresh names. A builder that reads Python-side state fails."""
+    differ = []
+    for name in (n for n, ok in cacheable.items() if ok):
+        _call(spark, name, sf_dir)
+        cached = _PLAN_CACHE[spark].plans[name].analyzed
+        fresh = _canonize(REGISTRY[name].fn.__wrapped__(spark, sf_dir))
+        if _plan_text(cached) != _plan_text(fresh._jdf.queryExecution().analyzed()):
+            differ.append(name)
+    assert not differ

@@ -18,6 +18,8 @@ DDL metadata and the fixture loading convention
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +37,36 @@ from pyspark.sql import functions as F
 # different listing signature; a rewrite that keeps the footer schema
 # reuses the raw schema, so the new reader skips the inference job.
 _READER_CACHE: dict[str, tuple] = {}
+
+
+@dataclass
+class BuildReads:
+    """What one registry query build read (queries/registry.py plan
+    cache): path -> listing signature of every table
+    `read_parquet_table` read, and the Spark jobs those reads started
+    (footer schema inference: the read's jobs, not the builder's)."""
+
+    tables: dict[str, tuple[int, int, int]] = field(default_factory=dict)
+    jobs: int = 0
+
+
+_BUILD_READS: list[BuildReads] = []
+
+
+@contextmanager
+def recording_reads() -> Iterator[BuildReads]:
+    """Record the reads made inside the block (records nest)."""
+    reads = BuildReads()
+    _BUILD_READS.append(reads)
+    try:
+        yield reads
+    finally:
+        _BUILD_READS.remove(reads)
+
+
+def spark_jobs_started(spark: SparkSession) -> int:
+    """Spark jobs the session's scheduler has started so far."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
 
 def data_files(path: str) -> list[tuple[str, os.stat_result]]:
@@ -57,6 +89,29 @@ def data_files(path: str) -> list[tuple[str, os.stat_result]]:
     return out
 
 
+def _signature(files: list[tuple[str, os.stat_result]]) -> tuple[int, int, int]:
+    return (
+        max((st.st_mtime_ns for _, st in files), default=0),
+        len(files),
+        sum(st.st_size for _, st in files),
+    )
+
+
+def listing_signature(path: str) -> tuple[int, int, int]:
+    """(newest mtime, file count, total bytes) of a table's data files:
+    the one staleness key of cached readers and cached query plans.
+    Every write (append, rewrite swap, new partition) changes it."""
+    return _signature(data_files(path))
+
+
+def footer_rows(path: str) -> int:
+    """A table's row count, summed from its data files' parquet
+    footers: no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(p).num_rows for p, _ in data_files(path))
+
+
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """The one read path for engine tables: spark.read.parquet behind
     the relation cache, with physical-type normalization.
@@ -77,16 +132,15 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     so normalize every timestamp_ntz column here, at the one read
     boundary every query goes through."""
     files = data_files(path)
-    sig = (
-        max((st.st_mtime_ns for _, st in files), default=0),
-        len(files),
-        sum(st.st_size for _, st in files),
-    )
+    sig = _signature(files)
+    for reads in _BUILD_READS:
+        reads.tables[path] = sig
     entry = _READER_CACHE.get(path)
     if entry is not None and entry[0] is not spark:
         entry = None
     if entry is not None and entry[1] == sig:
         return entry[4]
+    jobs = spark_jobs_started(spark) if _BUILD_READS else 0
     # imported here: Spark's Python workers import this module too
     import pyarrow.parquet as pq
 
@@ -113,6 +167,8 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
         )
     _READER_CACHE[path] = (spark, sig, footer, raw.schema, df)
+    for reads in _BUILD_READS:
+        reads.jobs += spark_jobs_started(spark) - jobs
     return df
 
 # The driver's fixture tables (TESTDATA.md).

@@ -21,7 +21,12 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from warehouse_pg_spark import sql_dialect
-from warehouse_pg_spark.catalog import Catalog, data_files, read_parquet_table
+from warehouse_pg_spark.catalog import (
+    Catalog,
+    data_files,
+    footer_rows,
+    read_parquet_table,
+)
 from warehouse_pg_spark.dialect.mask import (
     _close_paren,
     _mask,
@@ -330,6 +335,12 @@ _ROUTES: dict[str, tuple[str, str]] = {
 }
 
 
+# Statement kinds that drop the session's cached registry plans
+# (queries/registry.py): a function, view, type or setting that an
+# analyzed plan already resolved may change.
+_PLAN_INVALIDATING = ("CREATE", "DROP", "ALTER", "SET", "RESET", "DISCARD")
+
+
 def _split_assignments(s: str) -> list[tuple[str, str]]:
     """`a = e1, b = e2` → [(a, e1), (b, e2)]."""
     out = []
@@ -468,6 +479,10 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         for that kind (a kind it does not list runs as a query)."""
         body, masked, lits = _lex(text)
         kind = _kind(masked)
+        if kind.partition(" ")[0] in _PLAN_INVALIDATING:
+            from warehouse_pg_spark.queries.registry import clear_plan_cache
+
+            clear_plan_cache(self.spark)
         route, handler = _ROUTES.get(kind, ("query", ""))
         if route == "utility":
             return getattr(self, handler)(body)
@@ -1749,7 +1764,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             # the id is derived: every later write recomputes it from the row
             derived = {"__part": self._range_partition(pm.group(1), _unmask(pm.group(2), lits))}
         t = self.create_table_from(name, df, tuple(derived or ()), derived, distribution)
-        return self._tag(0 if m.group(3) is None else t.read().count())
+        return self._tag(0 if m.group(3) is None else footer_rows(t.path))
 
     def _column_schema(self, cols: str):
         """The schema of a lowered column list. A table or composite type
@@ -1938,8 +1953,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 return self._returning(returning, image)
             return self._tag(counts["updated"] + counts["inserted"])
         ret = self._returning(returning, df) if returning else None
-        n = df.count()
-        t.insert(df)
+        n = t.insert(df)
         self._refresh_view(name, t)
         return ret if ret is not None else self._tag(n)
 
@@ -2135,8 +2149,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 .option("sep", o["sep"])
                 .csv(path)
             )
-        n = df.count()
-        t.insert(df)
+        n = t.insert(df)
         self._refresh_view(name, t)
         return self._tag(n)
 
@@ -2357,8 +2370,16 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         pg_relation_size analogues, SURVEY §2.9 misc): one row per
         registered table with row count, on-disk bytes, file count, and
         the distribution hint. Sizes come from the filesystem (the
-        storage layer a DBA actually bills), row counts from a
-        metadata-only parquet count."""
+        storage layer a DBA actually bills), row counts from the
+        parquet footers (no Spark job)."""
+        return local_frame(
+            self.spark, self._table_metrics(),
+            "table_name string, n_rows long, n_bytes long, n_files long, "
+            "distribution string, dist_keys array<string>",
+        )
+
+    def _table_metrics(self) -> list[tuple]:
+        """The rows of `metrics()`."""
         rows = []
         for name, info in sorted(self.catalog.tables.items()):
             # Pathless entries are bucketed managed tables
@@ -2370,23 +2391,19 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                     "spark.sql.warehouse.dir", "spark-warehouse"
                 )
                 path = os.path.join(warehouse.removeprefix("file:"), name)
+            # Catalog entries can outlive their backing relation
+            # (DDL-registered names dropped mid-session, stale temp
+            # views): report them absent rather than failing the
+            # whole introspection sweep — pg_stat rows for dropped
+            # relations simply disappear in PG too.
+            if info.path and not os.path.exists(path):
+                continue
+            try:
+                n_rows = footer_rows(path) if info.path else self.spark.table(name).count()
+            except Exception:
+                continue
             files = data_files(path)
             n_files, n_bytes = len(files), sum(st.st_size for _, st in files)
-            try:
-                n_rows = (
-                    self.catalog.load(name) if info.path else self.spark.table(name)
-                ).count()
-            except Exception:
-                # Catalog entries can outlive their backing relation
-                # (DDL-registered names dropped mid-session, stale temp
-                # views): report them absent rather than failing the
-                # whole introspection sweep — pg_stat rows for dropped
-                # relations simply disappear in PG too.
-                continue
             policy, keys = info.distribution
             rows.append((name, n_rows, n_bytes, n_files, policy, list(keys)))
-        return local_frame(
-            self.spark, rows,
-            "table_name string, n_rows long, n_bytes long, n_files long, "
-            "distribution string, dist_keys array<string>",
-        )
+        return rows

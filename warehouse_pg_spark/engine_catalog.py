@@ -216,11 +216,15 @@ class CatalogViewsMixin:
         ).createOrReplaceTempView(name)
 
     def _build_pg_class(self, name: str) -> None:
-        rows = [
-            (oid, rel, 2200, kind, "p", oid, 0, 0,
-             float(len(fields)), len(fields), False, False)
-            for rel, kind, oid, fields in self._relation_fields()
-        ]
+        """pg_class: an engine table's reltuples is its row count and
+        relpages its bytes in 8 kB pages (`metrics()`); a relation the
+        engine holds no rows for reports -1 ("unknown", as PG 14+)."""
+        sizes = {r[0].lower(): (r[1], r[2]) for r in self._table_metrics()}
+        rows = []
+        for rel, kind, oid, fields in self._relation_fields():
+            n_rows, n_bytes = sizes.get(rel, (-1, 0))
+            rows.append((oid, rel, 2200, kind, "p", oid, 0, -(-n_bytes // 8192),
+                         float(n_rows), len(fields), False, False))
         local_frame(
             self.spark, rows,
             "oid BIGINT, relname STRING, relnamespace BIGINT, "

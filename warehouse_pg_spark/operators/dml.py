@@ -30,7 +30,7 @@ import uuid
 from collections.abc import Sequence
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import DataType
 
 from warehouse_pg_spark import catalog
@@ -108,9 +108,14 @@ class ParquetTable:
             writer = writer.partitionBy(*self.partition_cols)
         writer.parquet(path or self.path)
 
-    def insert(self, df: DataFrame) -> None:
-        """INSERT = append new files (no rewrite)."""
-        self.write(df, "append")
+    def insert(self, df: DataFrame) -> int:
+        """INSERT = append new files (no rewrite). Returns the rows
+        appended, counted on the write (an `Observation`, no count job)."""
+        import pyspark.sql.functions as F
+
+        seen = Observation()
+        self.write(df.observe(seen, F.count(F.lit(1)).alias("n")), "append")
+        return seen.get["n"]
 
     def _swap_in(self, df: DataFrame) -> None:
         tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
@@ -149,14 +154,18 @@ class ParquetTable:
     def delete(self, where: Column, alias: str | None = None) -> int:
         """DELETE WHERE → keep every row `where` is not true for (a NULL
         predicate keeps the row, as in PG). `where` sees the target
-        under `alias`. Returns rows deleted."""
+        under `alias`. Returns rows deleted: the footer row count less
+        the rows kept, counted on the write (an `Observation` below a
+        filter would vanish with it when the filter folds to false)."""
         import pyspark.sql.functions as F
 
         df = self.read()
         df = df.alias(alias) if alias else df
-        n_deleted = df.filter(where).count()
-        self._swap_in(df.filter(~F.coalesce(where, F.lit(False))))
-        return n_deleted
+        n_rows = catalog.footer_rows(self.path)
+        seen = Observation()
+        self._swap_in(df.filter(~F.coalesce(where, F.lit(False)))
+                      .observe(seen, F.count(F.lit(1)).alias("n")))
+        return n_rows - seen.get["n"]
 
     def update(self, assignments: dict[str, Column], where: Column,
                alias: str | None = None) -> int:
@@ -165,19 +174,22 @@ class ParquetTable:
         Mirrors SplitUpdate semantics: each matching row is replaced by
         its updated image (each value cast to its column's type, as a
         PG assignment is); non-matching rows pass through. `where` and
-        the assignments see the target under `alias`."""
+        the assignments see the target under `alias`. Returns rows
+        updated, counted on the write from a per-row match flag (an
+        `Observation` may not hold a subquery `where`)."""
         import pyspark.sql.functions as F
 
         df = self.read()
         df = df.alias(alias) if alias else df
         assignments = by_column(assignments, df.columns)
-        n_updated = df.filter(where).count()
-        self._swap_in(df.select(*[
-            F.when(where, assignments[c].cast(df.schema[c].dataType))
+        seen = Observation()
+        flagged = df.withColumn("__upd", F.coalesce(where, F.lit(False)))
+        self._swap_in(flagged.observe(seen, F.count_if("__upd").alias("n")).select(*[
+            F.when(F.col("__upd"), assignments[c].cast(df.schema[c].dataType))
             .otherwise(F.col(c)).alias(c) if c in assignments else F.col(c)
             for c in df.columns
         ]))
-        return n_updated
+        return seen.get["n"]
 
     def merge(
         self,
@@ -217,7 +229,7 @@ class ParquetTable:
         SplitUpdate redistributing every affected row.
         """
         import pyspark.sql.functions as F
-        from pyspark.sql import Observation, Window
+        from pyspark.sql import Window
 
         if not isinstance(on, Column):
             keys = list(on)

@@ -33,11 +33,16 @@ bit-identical between Spark and the DuckDB oracle):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from warehouse_pg_spark import catalog
 
 
 @dataclass
@@ -121,12 +126,13 @@ def register(
 
     The registered callable is wrapped with `_canonize` so no decimal /
     date / timestamp / array column ever reaches the driver's
-    pandas-channel comparison.
+    pandas-channel comparison, and goes through the session's plan
+    cache (`_planned`).
     """
 
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return _canonize(fn(spark, sf_dir))
+            return _planned(name, fn, spark, sf_dir)
 
         wrapped.__name__ = fn.__name__
         wrapped.__doc__ = fn.__doc__
@@ -140,12 +146,122 @@ def register(
     return deco
 
 
+# ---------------------------------------------------------------- plan cache
+# The reference keeps the analyzed tree of a prepared statement and
+# plans it again on each execution, dropping it when an invalidation
+# hits one of its inputs (utils/cache/plancache.c). Here: per
+# SparkSession, one entry per query name, holding the analyzed logical
+# plan of the last build. A hit wraps that plan in a fresh Dataset, so
+# optimization, physical planning, AQE and CacheManager substitution
+# run on every execution; only the Python/py4j build is skipped.
+# Never cached: optimized or physical plans, executed DataFrames (a
+# re-executed AQE plan would reuse its materialized shuffle stages),
+# results.
+
+
+@dataclass
+class _Plan:
+    sf_dir: str
+    conf: str  # the session conf after the build
+    reads: tuple[tuple[str, tuple[int, int, int]], ...]  # (path, listing signature)
+    analyzed: object  # JVM LogicalPlan
+
+
+@dataclass
+class _SessionPlans:
+    plans: dict[str, _Plan] = field(default_factory=dict)
+    hits: int = 0
+    misses: int = 0
+    uncacheable: int = 0
+
+
+_PLAN_CACHE: WeakKeyDictionary[SparkSession, _SessionPlans] = WeakKeyDictionary()
+_FREE_LEAVES = ("OneRowRelation", "Range")
+
+
+def plan_cache_stats(spark: SparkSession) -> dict[str, int]:
+    """The session's plan-cache counters: `hits`, `misses` (builds
+    whose plan was cached) and `uncacheable` (builds that were not)."""
+    st = _PLAN_CACHE.get(spark) or _SessionPlans()
+    return {"hits": st.hits, "misses": st.misses, "uncacheable": st.uncacheable}
+
+
+def clear_plan_cache(spark: SparkSession) -> None:
+    """Drop the session's cached plans (DDL, SET: a function, view or
+    type the analyzed plans resolved may have changed)."""
+    st = _PLAN_CACHE.get(spark)
+    if st is not None:
+        st.plans.clear()
+
+
+def _conf(spark: SparkSession) -> str:
+    # one JVM call; spark.conf.getAll costs ~350 py4j round trips
+    return spark._jsparkSession.sessionState().conf().getAllConfs().toString()
+
+
+def _planned(name: str, fn: Callable, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`_canonize(fn(spark, sf_dir))`, re-planned from the cached
+    analyzed plan when the entry for `name` has the same `sf_dir` and
+    session conf and every table it read has the same listing
+    signature (the `_READER_CACHE` rule: no hit serves a stale
+    listing). Otherwise build, and cache the build when it is a pure
+    function of the conf and the tables it read."""
+    st = _PLAN_CACHE.setdefault(spark, _SessionPlans())
+    hit = st.plans.get(name)
+    if (
+        hit is not None
+        and hit.sf_dir == sf_dir
+        and hit.conf == _conf(spark)
+        and all(catalog.listing_signature(p) == sig for p, sig in hit.reads)
+    ):
+        st.hits += 1
+        jvm = spark._jvm.org.apache.spark.sql.classic.Dataset
+        return DataFrame(jvm.ofRows(spark._jsparkSession, hit.analyzed), spark)
+    jobs = catalog.spark_jobs_started(spark)
+    with catalog.recording_reads() as reads:
+        df = _canonize(fn(spark, sf_dir))
+    analyzed = df._jdf.queryExecution().analyzed()
+    if (
+        catalog.spark_jobs_started(spark) - jobs == reads.jobs
+        and reads.tables
+        and analyzed.deterministic()
+        and _reads_only(analyzed, reads.tables)
+    ):
+        st.plans[name] = _Plan(sf_dir, _conf(spark), tuple(reads.tables.items()), analyzed)
+        st.misses += 1
+    else:
+        st.plans.pop(name, None)
+        st.uncacheable += 1
+    return df
+
+
+def _reads_only(analyzed, paths) -> bool:
+    """Every leaf of `analyzed` and of its subqueries is a parquet
+    relation rooted at one of `paths`, or a OneRowRelation or Range:
+    no LocalRelation, LogicalRDD or relation read outside the build."""
+    read = {os.path.abspath(p) for p in paths}
+    subs = analyzed.subqueriesAll()
+    for plan in [analyzed, *(subs.apply(i) for i in range(subs.size()))]:
+        leaves = plan.collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            kind = leaf.getClass().getSimpleName()
+            if kind in _FREE_LEAVES:
+                continue
+            if (kind != "LogicalRelation"
+                    or leaf.relation().getClass().getSimpleName() != "HadoopFsRelation"):
+                return False
+            roots = leaf.relation().location().rootPaths()
+            if any(urlparse(roots.apply(j).toString()).path not in read
+                   for j in range(roots.size())):
+                return False
+    return True
+
+
 def table_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of a fixture table (file or directory) — the
     engine's zero-cost stand-in for catalog size statistics when
     choosing a physical strategy at plan-build time."""
-    import os
-
     path = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isfile(path):
         return os.path.getsize(path)
@@ -162,9 +278,7 @@ def table_bytes(sf_dir: str, name: str) -> int:
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a fixture table, normalizing physical-type quirks
     (TIMESTAMP(NANOS) → µs; see catalog.read_parquet_table)."""
-    from warehouse_pg_spark.catalog import read_parquet_table
-
-    return read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
+    return catalog.read_parquet_table(spark, f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------- parity utils
