@@ -10,6 +10,7 @@ import uuid
 import duckdb
 import pytest
 
+from warehouse_pg_spark import catalog
 from warehouse_pg_spark.engine import Engine
 
 
@@ -97,3 +98,56 @@ def test_pg_stat_user_tables_runs_no_count_job(eng):
     tables = spark_jobs(eng.spark, lambda: eng.sql("SELECT * FROM pg_tables"))
     stats = spark_jobs(eng.spark, lambda: eng.sql("SELECT * FROM pg_stat_user_tables"))
     assert stats <= tables
+
+
+def test_reread_after_write_infers_no_schema(eng, tmp_path, monkeypatch):
+    """The table's writers give footers that differ only in REQUIRED vs
+    OPTIONAL: the CTAS from `range` writes REQUIRED columns, INSERT
+    VALUES, COPY and UPDATE write OPTIONAL ones. Spark reads every
+    column as nullable, so each re-read after a write reuses the cached
+    read schema and starts no footer-inference job, whichever data file
+    sorts first by its random name."""
+    csv = tmp_path / "in.csv"
+    csv.write_text("5000,1\n")
+    read, jobs = catalog.read_parquet_table, []
+
+    def counted(spark, path):
+        before = catalog.spark_jobs_started(spark)
+        df = read(spark, path)
+        jobs.append(catalog.spark_jobs_started(spark) - before)
+        return df
+
+    monkeypatch.setattr(catalog, "read_parquet_table", counted)
+    statements = [
+        "INSERT INTO wc VALUES (2000, 1)",
+        f"COPY wc FROM '{csv}' WITH (FORMAT csv)",
+        "UPDATE wc SET v = v + 1 WHERE k = 5",
+    ]
+    for _ in range(3):
+        for stmt in statements:
+            seen = len(jobs)
+            eng.sql(stmt)
+            assert len(jobs) > seen, stmt
+            assert jobs[seen:] == [0] * (len(jobs) - seen), stmt
+
+
+def test_pg_class_reads_no_unbuilt_catalog_view(eng, monkeypatch):
+    """Building pg_class after an Observation-counted write reads no
+    catalog view that is not built yet: each such read fails analysis,
+    and Spark's ObservationManager logs a stack trace for it."""
+    eng.sql("INSERT INTO wc VALUES (2000, 1)")
+    for view in ("pg_class", "pg_attribute", "pg_type", "pg_namespace", "pg_proc"):
+        eng.spark.catalog.dropTempView(view)
+    table, failed = eng.spark.table, []
+
+    def checked(name):
+        try:
+            return table(name)
+        except Exception:
+            failed.append(name)
+            raise
+
+    monkeypatch.setattr(eng.spark, "table", checked)
+    rows = eng.sql("SELECT relname FROM pg_class").collect()
+    assert failed == []
+    assert {"wc", "pg_class", "pg_attribute"} <= {r.relname for r in rows}

@@ -18,6 +18,7 @@ DDL metadata and the fixture loading convention
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 
 
 # Relation cache (the reference's relcache): table path -> (session,
-# listing signature, footer schema, raw read schema, reader DataFrame),
+# listing signature, footer shape, raw read schema, reader DataFrame),
 # one entry per path. A bare spark.read.parquet(path) re-lists the
 # files, re-analyzes the relation (~35 ms of py4j, measured r18) and
 # runs a footer-inference job. The cached reader is an immutable
@@ -35,8 +36,22 @@ from pyspark.sql import functions as F
 # or results are cached. The entry is replaced when its reader belongs
 # to another SparkSession or when one walk of the table's tree gives a
 # different listing signature; a rewrite that keeps the footer schema
-# reuses the raw schema, so the new reader skips the inference job.
+# (repetition aside, `_footer_shape`) reuses the raw schema, so the new
+# reader skips the inference job.
 _READER_CACHE: dict[str, tuple] = {}
+
+# the REQUIRED/OPTIONAL word that opens each field line of a footer
+_REPETITION_RE = re.compile(r"^(\s*)(?:required|optional) ", re.M)
+
+
+def _footer_shape(footer) -> str:
+    """A parquet footer schema with each field's REQUIRED/OPTIONAL
+    repetition dropped. Spark reads every parquet column as nullable,
+    so footers that differ only there read to one schema: writers of
+    the same table differ exactly there (a CTAS from `range` writes
+    REQUIRED columns, INSERT VALUES and COPY write OPTIONAL ones). The
+    text is the footer's printed tree, less its object-address line."""
+    return _REPETITION_RE.sub(r"\1", str(footer).partition("\n")[2])
 
 
 @dataclass
@@ -145,6 +160,7 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     footer = pq.read_metadata(files[0][0]).schema if files else None
+    shape = None if footer is None else _footer_shape(footer)
     nanos = [
         c.path for c in footer or ()
         if "." not in c.path and "timeUnit=nanoseconds" in str(c.logical_type)
@@ -152,7 +168,7 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     if nanos:
         # Spark also reads this conf when the scan runs: leave it set
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if entry is not None and footer is not None and footer.equals(entry[2]):
+    if entry is not None and shape is not None and shape == entry[2]:
         raw = spark.read.schema(entry[3]).parquet(path)
     else:
         raw = spark.read.parquet(path)
@@ -166,7 +182,7 @@ def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
         df = df.withColumns(
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
         )
-    _READER_CACHE[path] = (spark, sig, footer, raw.schema, df)
+    _READER_CACHE[path] = (spark, sig, shape, raw.schema, df)
     for reads in _BUILD_READS:
         reads.jobs += spark_jobs_started(spark) - jobs
     return df

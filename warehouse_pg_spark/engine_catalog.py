@@ -194,13 +194,18 @@ class CatalogViewsMixin:
         for name, kind in self._catalog_relations():
             fields = []
             if kind != "S":
+                # a catalog view not built yet this session still gets
+                # its pg_class row; it is not read, since once a session
+                # has used an Observation, Spark's ObservationManager
+                # logs a stack trace for every query that fails analysis
                 try:
-                    fields = self.spark.table(name).schema.fields
+                    exists = self.spark.catalog.tableExists(name)
+                    if exists:
+                        fields = self.spark.table(name).schema.fields
                 except Exception:
-                    if not name.startswith("pg_"):
-                        continue
-                    # a catalog view not built yet this session still
-                    # gets its pg_class row
+                    exists = False
+                if not exists and not name.startswith("pg_"):
+                    continue
             yield name, kind, _obj_oid("rel", name), fields
 
     def _build_pg_namespace(self, name: str) -> None:
