@@ -3756,6 +3756,173 @@ def test_table_lifecycle_contract(engine, case):
     assert after == before
 
 
+# -------------------------------------------------- table-name spellings
+# One route script per spelling of the same names: every route that
+# names a table must reach the engine table whose catalog key PG's
+# rules give (unquoted folds to lower case, quoted keeps its case,
+# `public` is the one engine schema). Reads use the bare name.
+_SPELLINGS = {
+    "bare": "{}".format,
+    "upper": lambda n: n.upper(),
+    "quoted": '"{}"'.format,
+    "public": "public.{}".format,
+    "quoted_public": '"public"."{}"'.format,
+}
+_SPELLING_SCRIPT = [
+    "CREATE TABLE {t} (k int, v int)",
+    "INSERT INTO {t} VALUES (1, 10), (2, 20), (3, 30)",
+    "INSERT INTO {t} SELECT k + 10, v FROM sp_src",
+    "UPDATE {t} SET v = v + 1 WHERE k = 1",
+    "DELETE FROM {t} WHERE k = 2",
+    "MERGE INTO {t} AS x USING sp_src AS s ON x.k = s.k "
+    "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.v)",
+    "CREATE TABLE sp_dst (k int, v int)",
+    "MERGE INTO sp_dst AS d USING {t} ON d.k = sp_t.k "
+    "WHEN NOT MATCHED THEN INSERT VALUES (sp_t.k, sp_t.v)",
+    "COPY {t} TO '{dir}' WITH (FORMAT csv)",
+    "TRUNCATE {t}",
+    "COPY {t} FROM '{dir}' WITH (FORMAT csv)",
+    "ALTER TABLE {t} ADD COLUMN w int",
+    "CREATE INDEX sp_ix ON {t} (v)",
+    "CLUSTER {t}",
+    "VACUUM FULL {t}",
+    "ANALYZE {t}",
+    "SELECT k, v INTO {i} FROM sp_t WHERE k < 5",
+    "CREATE VIEW {v} AS SELECT k FROM sp_t WHERE v > 100",
+]
+_SPELLING_ROWS = {
+    "sp_t": [(1, 100, None), (3, 30, None), (5, 500, None), (11, 100, None), (15, 500, None)],
+    "sp_dst": [(1, 100), (3, 30), (5, 500), (11, 100), (15, 500)],
+    "sp_i": [(1, 100), (3, 30)],
+    "sp_v": [(5,), (15,)],
+}
+
+
+def _spark_warehouse(engine):
+    path = engine.spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    return set(os.listdir(path)) if os.path.isdir(path) else set()
+
+
+def test_table_name_spellings(engine, tmp_path):
+    """Each spelling of the names runs every table-naming route
+    (CREATE, INSERT VALUES/SELECT, UPDATE, DELETE, MERGE as target and
+    source, COPY TO/FROM, TRUNCATE, ALTER ADD COLUMN, CREATE INDEX +
+    CLUSTER, VACUUM, ANALYZE, SELECT INTO, CREATE VIEW, DROP lists) and
+    ends with the bare spelling's rows under the catalog keys `sp_*`,
+    never touching Spark's warehouse."""
+    engine.sql("CREATE TABLE IF NOT EXISTS sp_src AS SELECT * FROM VALUES "
+               "(1, 100), (5, 500) AS x(k, v)")
+    before = _spark_warehouse(engine)
+    for spelling, spell in _SPELLINGS.items():
+        names = {"t": spell("sp_t"), "i": spell("sp_i"), "v": spell("sp_v"),
+                 "dir": str(tmp_path / spelling)}
+        for stmt in _SPELLING_SCRIPT:
+            engine.sql(stmt.format(**names)).collect()
+        got = {n: sorted(tuple(r) for r in engine.sql(f"SELECT * FROM {n}").collect())
+               for n in _SPELLING_ROWS}
+        assert got == _SPELLING_ROWS, spelling
+        assert {"sp_t", "sp_dst", "sp_i"} <= set(engine.catalog.tables), spelling
+        assert engine._index_hints["sp_t"] == [("v",)], spelling
+        engine.sql("DROP TABLE {t}, sp_dst, {i}".format(**names))
+        engine.sql("DROP VIEW sp_v")
+        assert not {"sp_t", "sp_dst", "sp_i"} & set(engine.catalog.tables), spelling
+        assert "sp_t" not in engine._index_hints, spelling
+        assert not os.path.exists(os.path.join(engine.warehouse_dir, "sp_t")), spelling
+        assert _spark_warehouse(engine) == before, spelling
+
+
+def test_quoted_mixed_case_table(engine):
+    """A quoted mixed-case name is an engine table keyed by its exact
+    spelling, in pg_tables too; Spark's warehouse is never used."""
+    before = _spark_warehouse(engine)
+    for stmt in ['CREATE TABLE "QFoo" (a int, b text)',
+                 "INSERT INTO \"QFoo\" VALUES (1, 'x'), (2, 'y'), (3, 'z')",
+                 "UPDATE \"QFoo\" SET b = 'w' WHERE a = 2",
+                 'DELETE FROM "QFoo" WHERE a = 1']:
+        engine.sql(stmt).collect()
+    assert sorted(tuple(r) for r in engine.sql('SELECT a, b FROM "QFoo"').collect()) == [
+        (2, "w"), (3, "z")]
+    assert engine.catalog.tables["QFoo"].path == os.path.join(engine.warehouse_dir, "QFoo")
+    assert [tuple(r) for r in engine.sql(
+        "SELECT tablename FROM pg_tables WHERE lower(tablename) = 'qfoo'").collect()] == [("QFoo",)]
+    assert _spark_warehouse(engine) == before
+    engine.sql('DROP TABLE "QFoo"')
+    assert "QFoo" not in engine.catalog.tables
+    assert not os.path.exists(os.path.join(engine.warehouse_dir, "QFoo"))
+
+
+def test_case_only_name_collision_raises(engine):
+    """Spark resolves names case-insensitively, so a table whose name
+    differs from an existing one only in case raises at CREATE instead
+    of aliasing it."""
+    engine.sql('CREATE TABLE "QBar" (a int)')
+    with pytest.raises(ValueError, match='relation "qbar" already exists'):
+        engine.sql("CREATE TABLE qbar (a int)")
+    engine.sql("CREATE TABLE qbaz AS SELECT 1 AS a")
+    with pytest.raises(ValueError, match='relation "QBaz" already exists'):
+        engine.sql('CREATE TABLE "QBaz" AS SELECT 2 AS a')
+    assert [tuple(r) for r in engine.sql("SELECT a FROM qbaz").collect()] == [(1,)]
+    engine.sql('DROP TABLE "QBar", qbaz')
+
+
+def test_unsafe_table_names_raise(engine):
+    """A table is a directory under warehouse_dir: a quoted name that is
+    empty, `.` or `..`, or holds `/`, raises at CREATE and writes
+    nothing (DROP's rmtree of `..` would delete the warehouse's
+    parent)."""
+    parent = os.path.dirname(engine.warehouse_dir)
+    listing = (set(os.listdir(engine.warehouse_dir)), set(os.listdir(parent)))
+    spark_before = _spark_warehouse(engine)
+    for name in ('""', '"."', '".."', '"a/b"'):
+        for stmt in (f"CREATE TABLE {name} (a int)", f"CREATE TABLE {name} AS SELECT 1 AS a"):
+            with pytest.raises(ValueError, match="invalid relation name"):
+                engine.sql(stmt)
+    assert (set(os.listdir(engine.warehouse_dir)), set(os.listdir(parent))) == listing
+    assert _spark_warehouse(engine) == spark_before
+    assert not os.path.exists(os.path.join(engine.warehouse_dir, "a"))
+
+
+def test_index_hint_follows_table_key(engine):
+    """CREATE INDEX records its hint under the table's key, so CLUSTER
+    in another case rewrites the table sorted by the indexed column and
+    DROP TABLE clears the hint."""
+    import pyarrow.parquet as pq
+
+    from warehouse_pg_spark.catalog import data_files
+
+    engine.sql("CREATE TABLE ix_ct AS SELECT n AS k, (n * 7919) % 1000 AS v "
+               "FROM generate_series(0, 999) AS g(n)")
+    path = os.path.join(engine.warehouse_dir, "ix_ct")
+
+    def files_sorted():
+        cols = [pq.read_table(p, columns=["v"]).column("v").to_pylist()
+                for p, _ in data_files(path)]
+        return all(c == sorted(c) for c in cols)
+
+    assert not files_sorted()
+    engine.sql("CREATE INDEX ix_v ON IX_CT (v)")
+    engine.sql("CLUSTER ix_ct")
+    assert files_sorted()
+    assert engine.sql("SELECT count(*) FROM ix_ct").collect()[0][0] == 1000
+    engine.sql("DROP TABLE ix_ct")
+    assert not any(k.lower() == "ix_ct" for k in engine._index_hints)
+
+
+def test_analyze_raises_for_unknown_and_skips_engine_tables(engine):
+    """ANALYZE of a name no catalog holds raises Spark's error; on an
+    engine table (a temp view Spark cannot analyze) it answers tag 0
+    and starts no Spark job."""
+    from warehouse_pg_spark.catalog import spark_jobs_started
+
+    with pytest.raises(Exception, match="TABLE_OR_VIEW_NOT_FOUND"):
+        engine.sql("ANALYZE an_no_such_table")
+    engine.sql("CREATE TABLE an_t AS SELECT 1 AS a")
+    jobs = spark_jobs_started(engine.spark)
+    assert engine.sql('ANALYZE "public".an_t (a)').collect()[0].rows_affected == 0
+    assert spark_jobs_started(engine.spark) == jobs
+    engine.sql("DROP TABLE an_t")
+
+
 def test_drop_keeps_attached_files_and_cache_bounded(engine, tmp_path):
     """DROP TABLE of an attached table removes only the name: its files
     stay and attach again with the same rows. CREATE/DROP cycles do not

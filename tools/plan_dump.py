@@ -25,7 +25,7 @@ from warehouse_pg_spark.session import SessionConfig, get_spark  # noqa: E402
 
 
 def main() -> None:
-    outdir = sys.argv[1] if len(sys.argv) > 1 else "plans/r17"
+    outdir = sys.argv[1] if len(sys.argv) > 1 else "history/plans/r17"
     suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     os.makedirs(outdir, exist_ok=True)

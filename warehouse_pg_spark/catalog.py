@@ -127,6 +127,12 @@ def footer_rows(path: str) -> int:
     return sum(pq.read_metadata(p).num_rows for p, _ in data_files(path))
 
 
+def view_name(key: str) -> str:
+    """A catalog key as Spark parses a view name: back-quoted, so a key
+    holding a space, a dot or a back-quote is one name."""
+    return "`" + key.replace("`", "``") + "`"
+
+
 def read_parquet_table(spark: SparkSession, path: str) -> DataFrame:
     """The one read path for engine tables: spark.read.parquet behind
     the relation cache, with physical-type normalization.
@@ -242,7 +248,6 @@ class Catalog:
         path: str,
         distribution: tuple[str, tuple[str, ...]] | None = None,
         partition_cols: tuple[str, ...] = (),
-        create_view: bool = True,
         derived: dict | None = None,
     ) -> TableInfo:
         info = TableInfo(
@@ -253,8 +258,7 @@ class Catalog:
             derived=dict(derived or {}),
         )
         self.tables[name] = info
-        if create_view:
-            read_parquet_table(self.spark, path).createOrReplaceTempView(name)
+        read_parquet_table(self.spark, path).createOrReplaceTempView(view_name(name))
         return info
 
     def drop(self, name: str | None) -> TableInfo | None:
@@ -266,12 +270,12 @@ class Catalog:
             _READER_CACHE.pop(info.path, None)
         return info
 
-    def register_fixtures(self, sf_dir: str, create_views: bool = True) -> None:
+    def register_fixtures(self, sf_dir: str) -> None:
         """Register every driver fixture table found under sf_dir."""
         for name in FIXTURE_TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if os.path.exists(path):
-                self.register_parquet(name, path, create_view=create_views)
+                self.register_parquet(name, path)
 
     def load(self, name: str) -> DataFrame:
         info = self.tables[name]

@@ -15,6 +15,12 @@ import re
 # restored at the end; comments are dropped. \x01 never occurs in SQL.
 _MASK_RE = re.compile("\x01(\\d+)\x01")
 _LIT = r"\x01\d+\x01"  # placeholder token, usable inside patterns
+# A possibly qualified table name, the one grammar every statement form
+# reads a relation name with (engine._table_key gives its catalog key):
+# each part a bare word, a "…" part with "" escapes (PG text, as utility
+# statements keep it) or a `…` part (the dialect's lowered text).
+_PART = r'(?:\w+|"(?:[^"]|"")*"|`(?:[^`]|``)*`)'
+_NAME = rf"{_PART}(?:\.{_PART})*"
 
 
 def _mask(sql: str) -> tuple[str, list[str]]:

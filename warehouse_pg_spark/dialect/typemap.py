@@ -8,7 +8,7 @@ anything unrecognized passes through loud).
 from __future__ import annotations
 
 import re
-from warehouse_pg_spark.dialect.mask import _MASK_RE, _close_paren, _split_commas
+from warehouse_pg_spark.dialect.mask import _MASK_RE, _NAME, _close_paren, _split_commas
 
 
 _TYPE_MAP = {
@@ -224,7 +224,7 @@ _SERIAL_TYPES = {
 _CREATE_TABLE_DEFS_RE = re.compile(
     r"^(CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+"
     r"|UNLOGGED\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"[\w.]+\s*)\(",
+    rf"{_NAME}\s*)\(",
     re.IGNORECASE,
 )
 

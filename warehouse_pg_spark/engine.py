@@ -26,8 +26,11 @@ from warehouse_pg_spark.catalog import (
     data_files,
     footer_rows,
     read_parquet_table,
+    view_name,
 )
 from warehouse_pg_spark.dialect.mask import (
+    _NAME,
+    _PART,
     _close_paren,
     _mask,
     _split_commas,
@@ -43,6 +46,18 @@ from warehouse_pg_spark.operators.dml import (
 )
 from warehouse_pg_spark.session import SessionConfig, get_spark, local_frame
 
+
+def _table_key(raw: str) -> str | None:
+    """The engine catalog key a table name refers to, by PG's rules
+    (scansup.c downcase_truncate_identifier, namespace.c
+    RangeVarGetRelid): a quoted part keeps its case, a bare one folds
+    to lower case, and `public` is the engine's one schema. A name in
+    any other schema is Spark's (None)."""
+    *schema, table = (p[1:-1].replace(p[0] * 2, p[0]) if p[0] in '"`' else p.lower()
+                      for p in re.findall(_PART, raw))
+    return table if schema in ([], ["public"]) else None
+
+
 _DISTRIBUTED_BY_RE = re.compile(
     r"\s+DISTRIBUTED\s+BY\s*\(([^)]*)\)|\s+DISTRIBUTED\s+(RANDOMLY|REPLICATED)",
     re.IGNORECASE,
@@ -53,19 +68,17 @@ _PARTITION_RANGE_RE = re.compile(
     re.IGNORECASE,
 )
 
-_INSERT_RE = re.compile(r"^INSERT\s+INTO\s+([\w.]+)\s+(.*)$", re.IGNORECASE | re.DOTALL)
+_INSERT_RE = re.compile(rf"^INSERT\s+INTO\s+({_NAME})\s*(.*)$", re.IGNORECASE | re.DOTALL)
 _MULTI_SET_RE = re.compile(
     r"\bSET\s*\(([^)]*)\)\s*=\s*\(((?:[^()]|\([^()]*\))*)\)",
     re.IGNORECASE,
 )
 # the target of an UPDATE or DELETE, with its optional alias
 _DML_TARGET_RE = re.compile(
-    r"^(?:UPDATE|DELETE\s+FROM)\s+(?:ONLY\s+)?([\w.]+)(?:\s+(?:AS\s+)?(\w+))?$",
-    re.IGNORECASE,
-)
+    rf"^(?:UPDATE|DELETE\s+FROM)\s+(?:ONLY\s+)?({_NAME})(?:\s+(?:AS\s+)?(\w+))?$", re.IGNORECASE)
 _CREATE_INDEX_RE = re.compile(
     r"^CREATE\s+(?:UNIQUE\s+)?INDEX\s+(?:CONCURRENTLY\s+)?(?:IF\s+NOT\s+EXISTS\s+)?"
-    r"(\w+)?\s*ON\s+([\w.]+)\s*(?:USING\s+\w+\s*)?\(([^)]*)\)\s*$",
+    rf"(\w+)?\s*ON\s+({_NAME})\s*(?:USING\s+\w+\s*)?\(([^)]*)\)\s*$",
     re.IGNORECASE,
 )
 _TXN_RE = re.compile(
@@ -77,12 +90,12 @@ _ALL_PRIVS = ("SELECT", "INSERT", "UPDATE", "DELETE", "TRUNCATE",
               "REFERENCES", "TRIGGER", "USAGE", "EXECUTE", "CREATE",
               "CONNECT", "TEMPORARY")
 _COPY_TO_RE = re.compile(
-    r"^COPY\s+(?:\((.+)\)|([\w.]+))\s+TO\s+'([^']+)'"
+    rf"^COPY\s+(?:\((.+)\)|({_NAME}))\s+TO\s+'([^']+)'"
     r"\s*(?:WITH\s*)?(?:\(([^)]*)\))?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
 _COPY_FROM_RE = re.compile(
-    r"^COPY\s+([\w.]+)\s+FROM\s+'([^']+)'"
+    rf"^COPY\s+({_NAME})\s+FROM\s+'([^']+)'"
     r"\s*(?:WITH\s*)?(?:\(([^)]*)\))?\s*$",
     re.IGNORECASE,
 )
@@ -91,28 +104,28 @@ _COPY_FROM_RE = re.compile(
 # column list the dialect gives `USING PARQUET`
 _CREATE_TABLE_RE = re.compile(
     r"^CREATE\s+(?:(?:GLOBAL|LOCAL)\s+)?(?:(?:TEMP|TEMPORARY|UNLOGGED)\s+)?"
-    r"TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
+    rf"TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_NAME})\s*"
     r"(?:AS\s+(\(*\s*(?:SELECT|WITH|VALUES)\b.*)|\((.*)\)\s*USING\s+PARQUET)$",
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_TABLE_RE = re.compile(
-    r"^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+(?:\s*,\s*[\w.]+)*)"
+    rf"^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?({_NAME}(?:\s*,\s*{_NAME})*)"
     r"(?:\s+(?:CASCADE|RESTRICT))?$",
     re.IGNORECASE,
 )
 _CREATE_VIEW_RE = re.compile(
-    r"^CREATE\s+(OR\s+REPLACE\s+)?(?:(?:TEMP|TEMPORARY)\s+)?VIEW\s+([\w.]+)(.*)$",
+    rf"^CREATE\s+(OR\s+REPLACE\s+)?(?:(?:TEMP|TEMPORARY)\s+)?VIEW\s+({_NAME})(.*)$",
     re.IGNORECASE | re.DOTALL,
 )
 _ADD_COLUMN_RE = re.compile(
-    r"^ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?:ONLY\s+)?([\w.]+)\s+"
+    rf"^ALTER\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?:ONLY\s+)?({_NAME})\s+"
     r"ADD\s+(?:COLUMN\s+)?(IF\s+NOT\s+EXISTS\s+)?"
     r"(?!(?:CONSTRAINT|PRIMARY|UNIQUE|CHECK|FOREIGN|EXCLUDE)\b)(\w+\s+.+)$",
     re.IGNORECASE | re.DOTALL,
 )
 _SELECT_INTO_RE = re.compile(
     r"^(SELECT\b.*?)\sINTO\s+(?:(?:TEMPORARY|TEMP|UNLOGGED)\s+)?"
-    r"(?:TABLE\s+)?([\w.]+)\s*(FROM\s.*)?$", re.IGNORECASE | re.DOTALL
+    rf"(?:TABLE\s+)?({_NAME})\s*(FROM\s.*)?$", re.IGNORECASE | re.DOTALL
 )
 _ON_CONFLICT_RE = re.compile(
     r"\sON\s+CONFLICT\s*\(([^)]*)\)\s*DO\s+(NOTHING|UPDATE)\s*(?:SET\s+(.*))?$",
@@ -136,30 +149,20 @@ from warehouse_pg_spark.gucs import _GUC_DEFAULTS  # noqa: E402
 
 _RESET_RE = re.compile(r"^RESET\s+(ALL|[\w.]+(?:\s+\w+)?)\s*$", re.IGNORECASE)
 _CREATE_MV_RE = re.compile(
-    r"^CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+(.+)$",
+    rf"^CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?({_NAME})\s+AS\s+(.+)$",
     re.IGNORECASE | re.DOTALL,
 )
 _REFRESH_MV_RE = re.compile(
-    r"^REFRESH\s+MATERIALIZED\s+VIEW\s+(?:CONCURRENTLY\s+)?([\w.]+)\s*$",
-    re.IGNORECASE,
-)
+    rf"^REFRESH\s+MATERIALIZED\s+VIEW\s+(?:CONCURRENTLY\s+)?({_NAME})\s*$", re.IGNORECASE)
 _DROP_MV_RE = re.compile(
-    r"^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?([\w.]+)\s*$",
-    re.IGNORECASE,
-)
+    rf"^DROP\s+MATERIALIZED\s+VIEW\s+(IF\s+EXISTS\s+)?({_NAME})\s*$", re.IGNORECASE)
 _CLUSTER_RE = re.compile(
-    r"^CLUSTER(?:\s+VERBOSE)?(?:\s+([\w.]+)(?:\s+USING\s+\w+)?)?\s*$",
-    re.IGNORECASE,
-)
+    rf"^CLUSTER(?:\s+VERBOSE)?(?:\s+({_NAME})(?:\s+USING\s+\w+)?)?\s*$", re.IGNORECASE)
 _DISCARD_RE = re.compile(r"^DISCARD\s+(ALL|PLANS|SEQUENCES|TEMP|TEMPORARY)\s*$", re.IGNORECASE)
 _VACUUM_RE = re.compile(
-    r"^VACUUM(?:\s+(FULL|FREEZE|ANALYZE|VERBOSE))*(?:\s+([\w.]+))?\s*$",
-    re.IGNORECASE,
-)
+    rf"^VACUUM(?:\s+(FULL|FREEZE|ANALYZE|VERBOSE))*(?:\s+({_NAME}))?\s*$", re.IGNORECASE)
 _ANALYZE_RE = re.compile(
-    r"^ANALYZE(?:\s+VERBOSE)?(?:\s+([\w.]+)(?:\s*\(([^)]*)\))?)?\s*$",
-    re.IGNORECASE,
-)
+    rf"^ANALYZE(?:\s+VERBOSE)?(?:\s+({_NAME})(?:\s*\(([^)]*)\))?)?\s*$", re.IGNORECASE)
 _CREATE_FUNC_HEAD_RE = re.compile(
     r"^CREATE\s+(?:OR\s+REPLACE\s+)?FUNCTION\s+"
     r'([\w.]+|"[^"]+"|[\w.]+\."[^"]+")\s*\(',
@@ -207,7 +210,7 @@ _SET_TIME_ZONE_RE = re.compile(
     r"^SET\s+(?:SESSION\s+|LOCAL\s+)?TIME\s+ZONE\s+(.+)$", re.IGNORECASE
 )
 _TRUNCATE_RE = re.compile(
-    r"^TRUNCATE\s+(?:TABLE\s+)?(?:ONLY\s+)?([\w.]+(?:\s*,\s*[\w.]+)*)"
+    rf"^TRUNCATE\s+(?:TABLE\s+)?(?:ONLY\s+)?({_NAME}(?:\s*,\s*{_NAME})*)"
     r"(?:\s+(?:RESTART|CONTINUE)\s+IDENTITY)?(?:\s+(?:CASCADE|RESTRICT))?\s*$",
     re.IGNORECASE,
 )
@@ -233,7 +236,7 @@ def _toplevel_from(text: str) -> bool:
             return True
     return False
 _OWNER_TO_RE = re.compile(
-    r"^ALTER\s+TABLE\s+[\w.]+\s+OWNER\s+TO\b", re.IGNORECASE)
+    rf"^ALTER\s+TABLE\s+{_NAME}\s+OWNER\s+TO\b", re.IGNORECASE)
 _LEADING_COMMENTS_RE = re.compile(r"(?:\s+|--[^\n]*|/\*.*?\*/)*", re.DOTALL)
 # leading keyword, then the object keyword past the CREATE modifiers
 _KIND_RE = re.compile(
@@ -252,14 +255,6 @@ def _lex(text: str) -> tuple[str, str, list[str]]:
     body = body.rstrip().rstrip(";").rstrip()
     masked, lits = _mask(_rewrite_dollar_quotes(body))
     return body, masked, lits
-
-
-def _table_key(name: str) -> str | None:
-    """The engine catalog key of a statement's table name: PG folds an
-    unquoted name to lower case and `public` is the engine's one
-    schema; a name qualified by another schema is Spark's (None)."""
-    schema, _, table = name.lower().rpartition(".")
-    return table if schema in ("", "public") else None
 
 
 def _kind(masked: str) -> str:
@@ -1380,7 +1375,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _VACUUM_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        name = m.group(2) or ""
+        name = m.group(2)
         # table-less VACUUM (whole database) and VACUUM on
         # non-writable relations are advisory no-ops here
         if name and self._writable_by_name(name) is not None:
@@ -1391,17 +1386,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _ANALYZE_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        name = (m.group(1) or "").split(".")[-1]
-        cols = tuple(
-            c.strip() for c in (m.group(2) or "").split(",") if c.strip()
-        )
-        if name:
-            try:
-                self.analyze(name, cols)
-            except Exception:
-                # stats are advisory: temp views / attached parquet
-                # have no catalog entry for Spark's ANALYZE TABLE
-                pass
+        cols = tuple(c.strip() for c in (m.group(2) or "").split(",") if c.strip())
+        if m.group(1):
+            self.analyze(m.group(1), cols)
         return self._tag(0)
 
     def _cluster_stmt(self, s: str) -> DataFrame:
@@ -1412,9 +1399,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _CLUSTER_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        name = m.group(1) or ""
-        hints = self._index_hints.get(name.split(".")[-1], [])
-        if name and hints and self._writable_by_name(name) is not None:
+        name = m.group(1)
+        hints = name and self._index_hints.get(_table_key(name))
+        if hints and self._writable_by_name(name) is not None:
             self.cluster_zorder(name, hints[-1])
         return self._tag(0)
 
@@ -1573,11 +1560,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _CREATE_INDEX_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        tname = m.group(2).split(".")[-1]
-        cols = tuple(
-            c.strip().split()[0] for c in m.group(3).split(",") if c.strip()
-        )
-        self._index_hints.setdefault(tname, []).append(cols)
+        cols = tuple(c.strip().split()[0] for c in m.group(3).split(",") if c.strip())
+        self._index_hints.setdefault(_table_key(m.group(2)), []).append(cols)
         return self._tag(0)
 
     def _alter_table(self, s: str) -> DataFrame | None:
@@ -1615,9 +1599,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         # CREATE MATERIALIZED VIEW ... AS SELECT (commands/matview.c);
         # a GP DISTRIBUTED tail is a placement hint
         m = _CREATE_MV_RE.match(s)
-        if m is None:
+        name = m and _table_key(m.group(2))
+        if name is None:
             return self._spark_stmt(s)
-        name = m.group(2).split(".")[-1]
         if not (m.group(1) and name in self._matviews):  # IF NOT EXISTS
             self.create_materialized_view(
                 name, _DISTRIBUTED_BY_RE.sub("", m.group(3)))
@@ -1630,14 +1614,14 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _REFRESH_MV_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        self.refresh_materialized_view(m.group(1).split(".")[-1])
+        self.refresh_materialized_view(_table_key(m.group(1)))
         return self._tag(0)
 
     def _drop_matview(self, s: str) -> DataFrame:
         m = _DROP_MV_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        name = m.group(2).split(".")[-1]
+        name = _table_key(m.group(2))
         mv = self._matviews.pop(name, None)
         if mv is None and not m.group(1):
             raise KeyError(f'materialized view "{name}" does not exist')
@@ -1702,7 +1686,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = re.match(
             r"(?is)^(\s*CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?"
             r"TEMP(?:ORARY)?\s+|UNLOGGED\s+)?TABLE\s+"
-            r"(?:IF\s+NOT\s+EXISTS\s+)?[\w.\"]+)\s+OF\s+"
+            rf"(?:IF\s+NOT\s+EXISTS\s+)?{_NAME})\s+OF\s+"
             r"([\w.\"]+)\b[^;]*$", text)
         if m is None:
             return text
@@ -1747,10 +1731,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         name = m and _table_key(m.group(2))
         if name is None:
             return self._sql_autoschema(_unmask(masked, lits))
-        if name in self.catalog.tables:
-            if m.group(1):
-                return self._tag(0)
-            raise ValueError(f'relation "{name}" already exists')
+        if m.group(1) and name in self.catalog.tables:
+            return self._tag(0)
         if m.group(3) is None:
             import pyspark.sql.functions as F
 
@@ -1832,10 +1814,10 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _DROP_TABLE_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        for name in (n.strip() for n in m.group(2).split(",")):
+        for name in re.findall(_NAME, m.group(2)):
             info = self.catalog.drop(_table_key(name))
             if info is None or not info.path:
-                self.spark.sql(f"DROP TABLE {m.group(1) or ''}{name}")
+                self._spark_stmt(f"DROP TABLE {m.group(1) or ''}{name}")
                 continue
             self._index_hints.pop(info.name, None)
             if info.path == os.path.join(self.warehouse_dir, info.name):
@@ -1850,7 +1832,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         name = m and _table_key(m.group(2))
         if name is None:
             return None
-        return self.spark.sql(f"CREATE {m.group(1) or ''}TEMP VIEW {name}{m.group(3)}")
+        return self.spark.sql(f"CREATE {m.group(1) or ''}TEMP VIEW {view_name(name)}{m.group(3)}")
 
     # ----------------------------------------------------------- SQL DML
     def _maybe_dml(self, text: str, kind: str) -> DataFrame | None:
@@ -1882,8 +1864,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _INSERT_RE.match(s)
         if m is None:
             return None
-        name, rest = m.group(1).split(".")[-1], m.group(2).strip()
-        t = self._writable_by_name(m.group(1))
+        name, rest = m.group(1), m.group(2).strip()
+        t = self._writable_by_name(name)
         if t is None:
             return None
         # PG INSERT ... ON CONFLICT (k) DO NOTHING | DO UPDATE SET ...
@@ -1942,12 +1924,13 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             # the proposed rows are one struct column, so `EXCLUDED.v` is
             # its field and a bare `v` the target row's column, as in PG;
             # a NULL key conflicts with nothing: `=`, not `<=>`
+            alias = _table_key(name)
             counts, image = t.merge(
                 first_per_key(df, keys).select(F.struct(*df.columns).alias("excluded")),
-                F.expr(" AND ".join(f"{name}.{k} = excluded.{k}" for k in keys)),
+                F.expr(" AND ".join(f"{view_name(alias)}.{k} = excluded.{k}" for k in keys)),
                 [on_match, When(False, "insert", values={
                     c: F.col(f"excluded.{c}") for c in df.columns})],
-                alias=name, source_alias="excluded")
+                alias=alias, source_alias="excluded")
             self._refresh_view(name, t)
             if returning:
                 return self._returning(returning, image)
@@ -1981,11 +1964,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _DML_TARGET_RE.match(head)
         if m is None or sets is None:
             return None
-        name = m.group(1).split(".")[-1]
-        t = self._writable_by_name(m.group(1))
+        name = m.group(1)
+        t = self._writable_by_name(name)
         if t is None:
             return None
-        alias = m.group(2) or name
+        alias = m.group(2) or _table_key(name)
         assigns = {col: F.expr(expr) for col, expr in _split_assignments(sets)}
         cond = F.expr(where) if where else F.lit(True)
         ret = None
@@ -2018,11 +2001,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _DML_TARGET_RE.match(head)
         if m is None:
             return None
-        name = m.group(1).split(".")[-1]
-        t = self._writable_by_name(m.group(1))
+        name = m.group(1)
+        t = self._writable_by_name(name)
         if t is None:
             return None
-        alias = m.group(2) or name
+        alias = m.group(2) or _table_key(name)
         if using is not None:
             # PG `DELETE FROM t USING s WHERE c` (gram.y DeleteStmt
             # using_clause): delete the target rows c finds a partner for
@@ -2054,8 +2037,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         m = _TRUNCATE_RE.match(s)
         if m is None:
             return None
-        names = [r.strip() for r in m.group(1).split(",")]
-        resolved = [(n, self._writable_by_name(n)) for n in names]
+        resolved = [(n, self._writable_by_name(n)) for n in re.findall(_NAME, m.group(1))]
         if all(t is None for _, t in resolved):
             return None  # nothing engine-managed: not ours to handle
         # PG errors on ANY missing relation (tablecmds.c
@@ -2114,11 +2096,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         `COPY ... TO '<file>' ON SEGMENT` semantics (each segment
         unloads its slice), which is the only shape that scales; a
         single-file unload would serialize 100 TB through one writer."""
-        df = (
-            self.spark.sql(self._rewrite(select))
-            if select
-            else self.spark.table(name.split(".")[-1])
-        )
+        df = self.spark.sql(self._rewrite(select)) if select else self._source(name)[0]
         o = self._copy_options(opts)
         n = df.count()
         w = df.write.mode("overwrite")
@@ -2178,14 +2156,14 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         if len(parts) < 2:
             raise ValueError("MERGE requires at least one WHEN clause")
         head, using, on = _clauses(_unmask(parts[0], lits), ("USING", "ON"))
-        hm = re.match(r"^MERGE\s+INTO\s+([\w.]+)(?:\s+(?:AS\s+)?(\w+))?$",
+        hm = re.match(rf"^MERGE\s+INTO\s+({_NAME})(?:\s+(?:AS\s+)?(\w+))?$",
                       head, re.IGNORECASE)
         if hm is None or using is None:
             raise ValueError(f"cannot parse MERGE header: {parts[0][:80]!r}")
         if on is None:
             raise ValueError("MERGE requires ON <condition>")
-        name = hm.group(1).split(".")[-1]
-        t = self._writable_by_name(hm.group(1))
+        name = hm.group(1)
+        t = self._writable_by_name(name)
         if t is None:
             return None
 
@@ -2232,14 +2210,14 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
 
         src_df, src_alias = self._source(using)
         counts, _ = t.merge(src_df, F.expr(on), whens,
-                            alias=hm.group(2) or name, source_alias=src_alias)
+                            alias=hm.group(2) or _table_key(name), source_alias=src_alias)
         self._refresh_view(name, t)
         return self._tag(sum(counts.values()))
 
     def _source(self, text: str) -> tuple[DataFrame, str]:
         """A FROM/USING relation, `name [[AS] alias]` or `(query) [AS]
         alias`: its rows and the name its columns are qualified by."""
-        m = re.match(r"^(\(.*\)|[\w.]+)(?:\s+(?:AS\s+)?(\w+))?$", text,
+        m = re.match(rf"^(\(.*\)|{_NAME})(?:\s+(?:AS\s+)?(\w+))?$", text,
                      re.IGNORECASE | re.DOTALL)
         if m is None:
             raise ValueError(f"cannot parse relation: {text[:80]!r}")
@@ -2248,8 +2226,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             if alias is None:
                 raise ValueError("a subquery source needs an alias")
             return self.spark.sql(rel[1:-1]), alias
-        rel = rel.split(".")[-1]
-        return self.spark.table(rel), alias or rel
+        key = _table_key(rel)  # a name in another schema: as Spark reads it
+        return self.spark.table(rel if key is None else view_name(key)), alias or key or rel
 
     def _writable_by_name(self, name: str) -> ParquetTable | None:
         """The engine table a statement names, or None: Spark runs the
@@ -2260,8 +2238,15 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         return ParquetTable(self.spark, info.path, info.partition_cols,
                             info.derived)
 
+    def _relation_dir(self, key: str, prefix: str = "") -> str:
+        """The directory of a table or matview under `warehouse_dir`; a key
+        that is no one directory name raises (DROP would rmtree `..`)."""
+        if key in ("", ".", "..") or "/" in key or "\0" in key:
+            raise ValueError(f'invalid relation name "{key}": a table is a directory')
+        return os.path.join(self.warehouse_dir, prefix + key)
+
     def _refresh_view(self, name: str, t: ParquetTable) -> None:
-        t.read().createOrReplaceTempView(name.split(".")[-1])
+        t.read().createOrReplaceTempView(view_name(_table_key(name)))
 
     def _tag(self, n: int) -> DataFrame:
         return local_frame(self.spark, [(n,)], "rows_affected BIGINT")
@@ -2316,9 +2301,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         """The one way a table is created: `df` written to
         `warehouse_dir/<name>` and registered with its view. `derived`
         columns are computed from the row on every write;
-        `distribution` is the DISTRIBUTED BY hint."""
-        t = ParquetTable(self.spark, os.path.join(self.warehouse_dir, name),
-                         partition_by, derived)
+        `distribution` is the DISTRIBUTED BY hint. Spark resolves names
+        case-insensitively: a name equal to a table's but for case raises."""
+        if any(k.lower() == name.lower() for k in self.catalog.tables):
+            raise ValueError(f'relation "{name}" already exists')
+        t = ParquetTable(self.spark, self._relation_dir(name), partition_by, derived)
         t.write(df, "overwrite")
         self.catalog.register_parquet(
             name, t.path, distribution, partition_by, derived=derived)
@@ -2337,28 +2324,29 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         return self.catalog.materialize_bucketed(name, df, keys, num_buckets)
 
     def analyze(self, name: str, columns: tuple[str, ...] = ()) -> None:
-        """ANALYZE (commands/analyze.c): compute table + column stats
-        feeding Catalyst CBO join reordering (ORCA's statistics
-        derivation analogue, SURVEY §4.1). Works on catalog tables
-        (bucketed/CTAS), not temp views."""
-        stmt = f"ANALYZE TABLE {name} COMPUTE STATISTICS"
-        self.spark.sql(stmt)
+        """ANALYZE (commands/analyze.c): table + column stats for
+        Catalyst's CBO (ORCA's statistics derivation, SURVEY §4.1) of a
+        Spark catalog (bucketed) table; Spark raises for any other name.
+        An engine table is a temp view, which Spark's ANALYZE refuses,
+        and the engine keeps no statistics yet: it starts no job."""
+        info = self.catalog.tables.get(_table_key(name))
+        if info is not None and info.path:
+            return
+        self._spark_stmt(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
         if columns:
-            self.spark.sql(
-                f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS "
-                + ", ".join(columns)
-            )
+            self._spark_stmt(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS "
+                             + ", ".join(columns))
 
     # ------------------------------------------------------------ matviews
     def create_materialized_view(self, name: str, sql: str) -> DataFrame:
         """CREATE MATERIALIZED VIEW (commands/matview.c analogue):
         results persisted as parquet + registered; refresh re-runs."""
-        path = os.path.join(self.warehouse_dir, f"_mv_{name}")
+        path = self._relation_dir(name, "_mv_")
         df = self.sql(sql)
         df.write.mode("overwrite").parquet(path)
         self._matviews[name] = MaterializedView(name, sql, path)
-        read_parquet_table(self.spark, path).createOrReplaceTempView(name)
-        return self.spark.table(name)
+        read_parquet_table(self.spark, path).createOrReplaceTempView(view_name(name))
+        return self.spark.table(view_name(name))
 
     def refresh_materialized_view(self, name: str) -> DataFrame:
         mv = self._matviews[name]

@@ -31,6 +31,7 @@ from __future__ import annotations
 import re
 import zlib
 
+from warehouse_pg_spark.catalog import view_name
 from warehouse_pg_spark.dialect.mask import _LIT, _lit_value
 from warehouse_pg_spark.session import local_frame
 
@@ -315,7 +316,7 @@ class CatalogViewsMixin:
         rows = []
         for t in sorted(self.catalog.tables):
             try:
-                schema = self.spark.table(t).schema
+                schema = self.spark.table(view_name(t)).schema
             except Exception:
                 continue
             for i, f in enumerate(schema.fields, start=1):

@@ -71,6 +71,7 @@ from warehouse_pg_spark.dialect.mask import (
     _DISTINCT_OPERAND,
     _LIT,
     _MASK_RE,
+    _NAME,
     _lit_value,
     _mask,
     _new_lit,
@@ -397,8 +398,8 @@ def rewrite(sql: str) -> str:
     # to schema clones; bound routing is not modeled (README)
     sql = re.sub(
         r"(?is)^\s*CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+"
-        r"|UNLOGGED\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s+"
-        r"PARTITION\s+OF\s+([\w.\"]+)\b.*$",
+        rf"|UNLOGGED\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_NAME})\s+"
+        rf"PARTITION\s+OF\s+({_NAME}).*$",
         lambda m: (
             f"CREATE TABLE {m.group(1) or ''}{m.group(2)} "
             f"AS SELECT * FROM {m.group(3)} LIMIT 0"
@@ -411,8 +412,8 @@ def rewrite(sql: str) -> str:
     # no engine surface, so the whole form is a schema clone
     sql = re.sub(
         r"(?is)^\s*CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+"
-        r"|UNLOGGED\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*"
-        r"\(\s*LIKE\s+([\w.\"]+)"
+        rf"|UNLOGGED\s+)?TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_NAME})\s*"
+        rf"\(\s*LIKE\s+({_NAME})"
         r"(?:\s+(?:INCLUDING|EXCLUDING)\s+\w+)*\s*"
         r"(?:,\s*CONSTRAINT\s+(?:[^()]|\([^()]*\))*)?\)"
         r"(?:\s+PARTITION\s+BY\b[^;]*)?\s*;?\s*$",
@@ -428,10 +429,10 @@ def rewrite(sql: str) -> str:
     # constraints (single-store engine, README deviations)
     sql = re.sub(
         r"(?is)^\s*CREATE\s+((?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+"
-        r"|UNLOGGED\s+)?)TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*"
+        rf"|UNLOGGED\s+)?)TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_NAME})\s*"
         r"\(\s*(?:CONSTRAINT\s+[\w\"]+\s+)?CHECK\s*"
         r"\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)\s*\)\s*"
-        r"INHERITS\s*\(\s*([\w.\"]+)[^)]*\)[^;]*;?\s*$",
+        rf"INHERITS\s*\(\s*({_NAME})[^)]*\)[^;]*;?\s*$",
         lambda m: (
             f"CREATE TABLE {m.group(2) or ''}{m.group(3)} "
             f"AS SELECT * FROM {m.group(4)} LIMIT 0"
@@ -445,8 +446,8 @@ def rewrite(sql: str) -> str:
     # works as in PG)
     sql = re.sub(
         r"(?is)^\s*CREATE\s+((?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+"
-        r"|UNLOGGED\s+)?)TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.\"]+)\s*"
-        r"\(\s*\)\s*INHERITS\s*\(\s*([\w.\"]+)[^)]*\)[^;]*;?\s*$",
+        rf"|UNLOGGED\s+)?)TABLE\s+(IF\s+NOT\s+EXISTS\s+)?({_NAME})\s*"
+        rf"\(\s*\)\s*INHERITS\s*\(\s*({_NAME})[^)]*\)[^;]*;?\s*$",
         lambda m: (
             f"CREATE TABLE {m.group(2) or ''}{m.group(3)} "
             f"AS SELECT * FROM {m.group(4)} LIMIT 0"
@@ -455,7 +456,7 @@ def rewrite(sql: str) -> str:
     )
     sql = re.sub(
         r"(?is)^(\s*CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?TEMP(?:ORARY)?\s+"
-        r"|UNLOGGED\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[\w.\"]+\s*)"
+        rf"|UNLOGGED\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_NAME}\s*)"
         r"\(\s*\)",
         r"\1(__pg_zero_col BOOLEAN)",
         sql,
@@ -478,7 +479,7 @@ def rewrite(sql: str) -> str:
     sql = re.sub(
         r"(?is)^(\s*CREATE\s+(?:(?:GLOBAL\s+|LOCAL\s+)?"
         r"TEMP(?:ORARY)?\s+|UNLOGGED\s+)?TABLE\s+"
-        r"(?:IF\s+NOT\s+EXISTS\s+)?[\w.\"]+)\s*"
+        rf"(?:IF\s+NOT\s+EXISTS\s+)?{_NAME})\s*"
         r"\(\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)\s*"
         r"AS\s+(SELECT\b.*)$",
         lambda m: (f"{m.group(1)} AS SELECT * FROM ({m.group(3).rstrip().rstrip(';')}) "
@@ -490,7 +491,7 @@ def rewrite(sql: str) -> str:
     # SELECT — GP reloptions with no Spark parse form (the column-def
     # rewriter above only sees tables WITH column lists)
     sql = re.sub(
-        r"(?is)(CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?[\w.]+\s*)"
+        rf"(?is)(CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_NAME}\s*)"
         r"WITH\s*\((?:[^()]|\([^()]*\))*\)\s*(AS\b)",
         r"\1\2",
         sql,
