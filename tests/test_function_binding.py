@@ -52,6 +52,9 @@ def test_user_function_with_a_table_name_takes_precedence(fresh):
     assert eng.sql("SELECT quote_ident('x') AS v").collect()[0].v == "user:x"
     assert eng.sql("SELECT quote_ident('y') AS v").collect()[0].v == "user:y"
     assert _user_functions(session) == {"quote_ident"}
+    # once the user's function is dropped, the PG function answers again
+    eng.sql("DROP FUNCTION quote_ident(text)")
+    assert eng.sql("SELECT quote_ident('a b') AS v").collect()[0].v == '"a b"'
 
 
 def test_dialect_emitted_names_bind_through_engine_sql(fresh):

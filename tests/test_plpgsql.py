@@ -370,6 +370,134 @@ def test_drop_function(engine, spark):
     engine.sql("DROP FUNCTION IF EXISTS gone")  # idempotent
 
 
+def test_drop_unknown_function_raises(engine):
+    """DROP FUNCTION / PROCEDURE of a name that is no user function and
+    no Spark temporary function raises, as PG does; IF EXISTS does not."""
+    for stmt in ("DROP FUNCTION nosuch_fn(int)", "DROP PROCEDURE nosuch_fn()"):
+        with pytest.raises(ValueError, match='"nosuch_fn" does not exist'):
+            engine.sql(stmt)
+    engine.sql("DROP FUNCTION IF EXISTS nosuch_fn(int)")
+    engine.sql("DROP PROCEDURE IF EXISTS nosuch_fn()")
+
+
+# ------------------------------------------- one user-function table
+# One function of each kind: (CREATE statements, a call, the FROM tail
+# of a query around it, that query's rows, the DROP). `uf_log` counts
+# the rows interpreted bodies insert.
+_UF_KINDS = {
+    "scalar": (["CREATE FUNCTION uf_scalar(x int) RETURNS int RETURN x * 10"],
+               "uf_scalar(3)", "", [(30,)], "DROP FUNCTION uf_scalar(int)"),
+    "variadic": (["CREATE FUNCTION uf_vsum(VARIADIC xs int[]) RETURNS int AS $$ "
+                  "SELECT aggregate(xs, 0, (a, b) -> a + b) $$ LANGUAGE sql"],
+                 "uf_vsum(1, 2, 3)", "", [(6,)], "DROP FUNCTION uf_vsum(int[])"),
+    "setof": (["CREATE FUNCTION uf_srf(n int) RETURNS SETOF int AS $$ "
+               "SELECT generate_series(1, n) $$ LANGUAGE sql"],
+              "uf_srf(2)", "", [(1,), (2,)], "DROP FUNCTION uf_srf(int)"),
+    "template": (["CREATE FUNCTION uf_first(anyarray) RETURNS anyelement AS $$ "
+                  "SELECT $1[1] $$ LANGUAGE sql"],
+                 "uf_first(array[7, 8])", "", [(7,)], "DROP FUNCTION uf_first(anyarray)"),
+    "aggregate": (["CREATE FUNCTION uf_step(a bigint, b int) RETURNS bigint AS $$ "
+                   "SELECT coalesce(a, 0) + b $$ LANGUAGE sql",
+                   "CREATE AGGREGATE uf_sum(int) (sfunc = uf_step, stype = bigint)"],
+                  "uf_sum(v)", " FROM (VALUES (1), (2), (3)) AS t(v)", [(6,)],
+                  "DROP AGGREGATE uf_sum(int)"),
+    "interpreted": (["CREATE FUNCTION uf_twice(x int) RETURNS int AS $$ BEGIN "
+                     "INSERT INTO uf_log VALUES (x); RETURN x * 2; END $$ LANGUAGE plpgsql"],
+                    "uf_twice(5)", "", [(10,)], "DROP FUNCTION uf_twice(int)"),
+    "procedure": (["CREATE PROCEDURE uf_proc(x int) LANGUAGE plpgsql AS $$ BEGIN "
+                   "INSERT INTO uf_log VALUES (x); END $$"],
+                  "uf_proc(4)", "", [(None,)], "DROP PROCEDURE uf_proc(int)"),
+    "shadowing": (["CREATE FUNCTION upper(x text) RETURNS text AS $$ "
+                   "SELECT 'U:' || x $$ LANGUAGE sql"],
+                  "upper('a')", "", [("U:a",)], "DROP FUNCTION upper(text)"),
+}
+
+
+@pytest.fixture()
+def fresh(spark, tmp_path):
+    """An engine on a new SparkSession (its own temporary functions),
+    with the empty table `uf_log`."""
+    from warehouse_pg_spark.engine import Engine
+
+    eng = Engine(spark=spark.newSession(), warehouse_dir=str(tmp_path))
+    eng.sql("CREATE TABLE uf_log (v int)")
+    return eng
+
+
+def _rows(engine, sql):
+    return [tuple(r) for r in engine.sql(sql).collect()]
+
+
+def _pg_proc(engine):
+    return {r.proname for r in engine.sql("SELECT proname FROM pg_proc").collect()}
+
+
+@pytest.mark.parametrize("kind", ["variadic", "template", "aggregate", "interpreted"])
+def test_call_in_literal_or_comment_stays_text(fresh, kind):
+    """A function named only inside a string literal or a comment is
+    never expanded or run: the call-site pass reads masked text."""
+    creates, call, _tail, _rows_, _drop = _UF_KINDS[kind]
+    for stmt in creates:
+        fresh.sql(stmt)
+    assert _rows(fresh, f"SELECT '{call}' AS s") == [(call,)]
+    assert _rows(fresh, f"SELECT 1 /* {call} */ AS s") == [(1,)]
+    assert _rows(fresh, "SELECT count(*) FROM uf_log") == [(0,)]
+
+
+@pytest.mark.parametrize("kind", list(_UF_KINDS))
+def test_drop_removes_the_one_record(fresh, kind):
+    """DROP FUNCTION / PROCEDURE / AGGREGATE removes the function's one
+    record and its Spark function: a call raises (a shadowing function
+    gives the builtin back), CALL raises, and pg_proc drops the name."""
+    creates, call, tail, rows, drop = _UF_KINDS[kind]
+    name = call.partition("(")[0]
+    for stmt in creates:
+        fresh.sql(stmt)
+    query = f"SELECT {call} AS v{tail}"
+    assert sorted(_rows(fresh, query), key=repr) == rows
+    if kind != "setof":  # `public` is the schema of every user function
+        assert _rows(fresh, f"SELECT public.{call} AS v{tail}") == rows
+    assert name in _pg_proc(fresh)
+    fresh.sql(drop)
+    if kind == "shadowing":
+        assert _rows(fresh, query) == [("A",)]
+    else:
+        with pytest.raises(Exception, match=name):
+            fresh.sql(query).collect()
+    if kind == "procedure":
+        with pytest.raises(Exception, match=name):
+            fresh.sql(f"CALL {call}").collect()
+    assert name not in _pg_proc(fresh)
+
+
+def test_aggregate_argument_may_nest(fresh):
+    """The call-site pass cuts a call's arguments at its closing
+    parenthesis, so an aggregate over a nested expression lowers."""
+    for stmt in _UF_KINDS["aggregate"][0]:
+        fresh.sql(stmt)
+    assert _rows(fresh, "SELECT uf_sum(abs(v) * 2) AS s "
+                        "FROM (VALUES (1), (-2), (3)) AS t(v)") == [(12,)]
+
+
+def test_replace_changes_the_function_kind(fresh):
+    """CREATE OR REPLACE rewrites the one record: a DML-bodied void
+    function replaced by a scalar SQL function computes and writes
+    nothing, and replaced back it writes again with no Spark function
+    left behind."""
+    void_dml = ("CREATE OR REPLACE FUNCTION uf_logit(x int) RETURNS void AS $$ "
+                "INSERT INTO uf_log VALUES (x) $$ LANGUAGE sql")
+    fresh.sql(void_dml)
+    assert _rows(fresh, "SELECT uf_logit(1)") == [(None,)]
+    fresh.sql("CREATE OR REPLACE FUNCTION uf_logit(x int) RETURNS int AS $$ "
+              "SELECT x * 10 $$ LANGUAGE sql")
+    assert _rows(fresh, "SELECT uf_logit(3)") == [(30,)]
+    assert _rows(fresh, "SELECT count(*) FROM uf_log") == [(1,)]
+    fresh.sql(void_dml)
+    assert not fresh.spark.catalog.functionExists("uf_logit")
+    assert _rows(fresh, "SELECT uf_logit(5)") == [(None,)]
+    assert _rows(fresh, "SELECT v FROM uf_log ORDER BY v") == [(1,), (5,)]
+
+
 def test_numeric_param_types(engine, spark):
     engine.sql(
         "CREATE FUNCTION pct(part numeric(10,2), whole numeric(10,2)) "

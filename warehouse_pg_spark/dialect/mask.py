@@ -58,6 +58,15 @@ def _unmask(sql: str, lits: list[str]) -> str:
     return _MASK_RE.sub(lambda m: lits[int(m.group(1))], sql)
 
 
+def _mask_into(sql: str, lits: list[str]) -> str:
+    """`sql` masked with its literals appended to `lits`: text spliced
+    into an already masked statement stays masked."""
+    masked, own = _mask(sql)
+    base = len(lits)
+    lits.extend(own)
+    return _MASK_RE.sub(lambda m: f"\x01{int(m.group(1)) + base}\x01", masked)
+
+
 def _lit_value(tok: str, lits: list[str]) -> str:
     """Unquoted content of a masked literal token."""
     raw = lits[int(_MASK_RE.match(tok).group(1))]

@@ -33,11 +33,12 @@ from warehouse_pg_spark.dialect.mask import (
     _PART,
     _close_paren,
     _mask,
+    _new_lit,
     _split_commas,
     _unmask,
 )
 from warehouse_pg_spark.dialect.ordering import _rewrite_dollar_quotes
-from warehouse_pg_spark.functions.pg import bind_functions
+from warehouse_pg_spark.functions.pg import bind_functions, unbind
 from warehouse_pg_spark.operators.dml import (
     ParquetTable,
     When,
@@ -56,6 +57,10 @@ def _table_key(raw: str) -> str | None:
     *schema, table = (p[1:-1].replace(p[0] * 2, p[0]) if p[0] in '"`' else p.lower()
                       for p in re.findall(_PART, raw))
     return table if schema in ([], ["public"]) else None
+
+
+# a two-part name that is not a call, e.g. `public.t` in a query
+_QUALIFIED_NAME_RE = re.compile(rf'(?<![\w."`]){_PART}\.{_PART}(?![\w"`]|\s*\()')
 
 
 _DISTRIBUTED_BY_RE = re.compile(
@@ -174,8 +179,9 @@ _RETURNS_CLAUSE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_FUNC_RE = re.compile(
-    r"^DROP\s+(?:FUNCTION|PROCEDURE)\s+(IF\s+EXISTS\s+)?([\w.]+)\s*(?:\([^)]*\))?\s*$",
-    re.IGNORECASE,
+    rf"^DROP\s+(FUNCTION|PROCEDURE|AGGREGATE)\s+(IF\s+EXISTS\s+)?({_NAME})\s*"
+    r"(?:\(.*\))?(?:\s+(?:CASCADE|RESTRICT))?$",
+    re.IGNORECASE | re.DOTALL,
 )
 _CALL_RE = re.compile(
     r"^CALL\s+([\w.]+)\s*\((.*)\)$", re.IGNORECASE | re.DOTALL
@@ -306,10 +312,9 @@ _ROUTES: dict[str, tuple[str, str]] = {
                     ("utility", "_sequence_ddl")),
     "CREATE FUNCTION": ("utility", "_create_function"),
     "CREATE PROCEDURE": ("utility", "_create_procedure"),
-    **dict.fromkeys(("DROP FUNCTION", "DROP PROCEDURE"),
+    **dict.fromkeys(("DROP FUNCTION", "DROP PROCEDURE", "DROP AGGREGATE"),
                     ("utility", "_drop_function")),
     "CREATE AGGREGATE": ("utility", "_create_aggregate"),
-    "DROP AGGREGATE": ("utility", "_drop_aggregate"),
     **{f"{verb} {obj}": ("utility", "_type_ddl")
        for verb in ("CREATE", "ALTER", "DROP") for obj in ("TYPE", "DOMAIN")},
     **{f"{verb} {obj}": ("utility", "_role_ddl")
@@ -378,7 +383,11 @@ from warehouse_pg_spark.engine_catalog import (  # noqa: E402
     _CATALOG_VIEWS,
     CatalogViewsMixin,
 )
-from warehouse_pg_spark.engine_fn_ddl import FunctionDDLMixin  # noqa: E402
+from warehouse_pg_spark.engine_fn_ddl import (  # noqa: E402
+    FunctionDDLMixin,
+    UserFunction,
+    _fn_key,
+)
 from warehouse_pg_spark.engine_maint import MaintenanceMixin
 from warehouse_pg_spark.engine_proc import ProcedureMixin
 from warehouse_pg_spark.engine_seq import SequenceMixin  # noqa: E402
@@ -438,34 +447,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         from warehouse_pg_spark.user_types import UserTypes
 
         self._user_types = UserTypes()
-        # set-returning SQL functions registered as Spark SQL table
-        # functions: name -> result column names (for the PG
-        # SRF-in-select-list lowering)
-        self._table_functions: dict[str, list[str]] = {}
-        # VARIADIC user functions: name -> 0-based index of the
-        # variadic (array-typed) parameter; call sites pack spread
-        # arguments / strip the VARIADIC keyword before Spark sees them
-        self._variadic_functions: dict[str, int] = {}
-        # CREATE AGGREGATE definitions (aggregatecmds.c): name ->
-        # {sfunc, stype, finalfunc, initcond}; call sites lower to a
-        # fold over collect_list (see _substitute_aggregate_calls)
-        self._sql_aggregates: dict[str, dict[str, str | None]] = {}
-        # scalar SQL-function bodies kept for manual inlining where
-        # Spark's own SQL-UDF inliner can't go (inside HOF lambdas in
-        # aggregate position — the CREATE AGGREGATE fold needs it)
-        self._scalar_fn_exprs: dict[str, tuple[list[str], str]] = {}
-        # polymorphic SQL-function templates (anyarray/anyelement):
-        # name -> {params, body, setof}; calls inline by substitution
-        self._poly_functions: dict[str, dict] = {}
-        # user functions that shadow Spark builtins (namespace.c:
-        # search_path puts user schemas before pg_catalog, so the user
-        # "decode" wins) — registered under a prefix, call sites with
-        # a matching arity rewrite to it
-        self._shadowed_fns: dict[str, int] = {}
-        # RETURNS VOID functions whose bodies are DML statements:
-        # calling one executes the statements (functions.c SQL-function
-        # execution) and yields the void (NULL) result
-        self._void_procs: dict[str, tuple[list[str], list[str]]] = {}
+        # user functions (pg_proc): folded name -> the one record that
+        # CREATE writes, DROP removes and every call site reads
+        self._functions: dict[str, UserFunction] = {}
 
     # ---------------------------------------------------------------- query
     def sql(self, text: str, **named_args) -> DataFrame:
@@ -485,39 +469,39 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
 
     def _query(self, kind: str, body: str, masked: str, lits: list[str],
                named_args: dict | None = None) -> DataFrame:
-        """The plannable path: user-function expansions over the text,
-        the name-gated passes over its masked form (so a name inside a
-        literal or comment never fires one), the dialect rewrite, then
-        the DML handler of a dml kind, else Spark."""
+        """The plannable path: the user-function pass and the name-gated
+        passes over the statement's masked text (so a name inside a
+        literal or comment never fires one), the user-type casts, the
+        dialect rewrite, then the DML handler of a dml kind, else
+        Spark."""
         if kind == "SELECT":
-            vp = self._maybe_call_void_proc(body)
+            vp = self._maybe_call_void_proc(masked, lits)
             if vp is not None:
                 return vp
         text = body
         if kind == "CREATE TABLE":
             self._maybe_register_rowtype(text)
             text = self._lower_typed_table(text)
-        for expand in (
-            self._substitute_interpreted_calls,
-            self._substitute_shadowed_calls,
-            self._substitute_aggregate_calls,
-            self._substitute_polymorphic_calls,
-            self._user_types.rewrite,
-            self._lower_srf_select,
-            self._substitute_variadic_calls,
-        ):
-            text = expand(text)
-        if text != body:
-            _, masked, lits = _lex(text)
-        named = masked
+            if text != body:
+                _, masked, lits = _lex(text)
+        expanded = self._lower_srf_select(
+            self._expand_user_calls(kind, masked, lits), lits)
+        if expanded != masked:
+            text = _unmask(expanded, lits)
+        typed = self._user_types.rewrite(text)
+        if typed != text:
+            text = typed
+            _, expanded, lits = _lex(text)
+        named = expanded
         for name_pass in (
             self._substitute_sequence_calls,
             self._substitute_setting_calls,
             self._substitute_privilege_calls,
+            self._resolve_public_names,
             self._maybe_pg_catalog,
         ):
             named = name_pass(named, lits)
-        if named != masked:
+        if named != expanded:
             text = _unmask(named, lits)
         lowered = self._rewrite(text)
         if _ROUTES.get(kind, ("query",))[0] == "dml":
@@ -563,52 +547,60 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             self.spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {sm.group(1)}")
             return self.spark.sql(lowered)
 
-    def _lower_srf_select(self, text: str) -> str:
-        """PG SRF-in-target-list over a registered set-returning SQL
-        function: `SELECT f(args) [AS alias]` (sole target, no FROM)
+    def _resolve_public_names(self, masked: str, lits: list[str]) -> str:
+        """A relation named in `public` is the engine's (`_table_key`):
+        `public.t`, `"public"."t"` and `public."QFoo"` read the table
+        under its catalog key (namespace.c RangeVarGetRelid), where
+        Spark would look for a schema `public`."""
+        if "public" not in masked.lower():
+            return masked
+
+        def resolve(m: re.Match) -> str:
+            key = _table_key(m.group(0))
+            return m.group(0) if key is None else view_name(key)
+
+        return _QUALIFIED_NAME_RE.sub(resolve, masked)
+
+    def _lower_srf_select(self, masked: str, lits: list[str]) -> str:
+        """PG SRF-in-target-list over a set-returning user function:
+        `SELECT f(args) [AS alias]` (sole target, no FROM; masked text)
         becomes `SELECT col AS alias FROM f(args)` — the same
         ProjectSet→FunctionScan flattening the planner does
         (src/backend/optimizer/util/clauses.c). Only the sole-target
         FROM-less shape lowers; anything else passes through to
         Spark's native TVF-in-FROM support."""
-        if not self._table_functions:
-            return text
+        if not self._functions:
+            return masked
+
+        def setof(name: str) -> UserFunction | None:
+            rec = self._functions.get(name.lower())
+            return rec if rec is not None and rec.kind == "setof" else None
+
         # `SELECT (f(args)).*` (parse_target.c ExpandRowReference over
         # a composite-returning call): every result column expands
         m = re.match(
-            r"(?is)^\s*SELECT\s+\(\s*(\w+)\s*\((.*)\)\s*\)\s*\.\s*\*"
-            r"\s*;?\s*$",
-            text,
+            r"(?is)^\s*SELECT\s+\(\s*(\w+)\s*\((.*)\)\s*\)\s*\.\s*\*\s*$",
+            masked,
         )
-        if (
-            m
-            and m.group(1).lower() in self._table_functions
-            and m.group(2).count("(") == m.group(2).count(")")
-        ):
+        if m and setof(m.group(1)) and m.group(2).count("(") == m.group(2).count(")"):
             return f"SELECT * FROM {m.group(1)}({m.group(2)})"
         m = re.match(
-            r"(?is)^\s*SELECT\s+(\w+)\s*\((.*)\)\s*"
-            r"(?:AS\s+(\w+))?\s*;?\s*$",
-            text,
+            r"(?is)^\s*SELECT\s+(\w+)\s*\((.*)\)\s*(?:AS\s+(\w+))?\s*$",
+            masked,
         )
-        if not m or m.group(1).lower() not in self._table_functions:
-            return text
+        rec = setof(m.group(1)) if m else None
         # args must be balanced (the .* above is greedy past nesting)
-        args = m.group(2)
-        if args.count("(") != args.count(")"):
-            return text
-        cols = self._table_functions[m.group(1).lower()]
+        if rec is None or m.group(2).count("(") != m.group(2).count(")"):
+            return masked
+        cols = rec.columns
         if len(cols) == 1:
             out = f"{cols[0]} AS {m.group(3) or cols[0]}"
         else:
             # composite-valued SRF call in a target list yields one
             # record column (PG prints a row value)
-            inner = ", ".join(f"'{c}', {c}" for c in cols)
-            out = (
-                f"named_struct({inner}) AS "
-                f"{m.group(3) or m.group(1)}"
-            )
-        return f"SELECT {out} FROM {m.group(1)}({args})"
+            inner = ", ".join(f"{_new_lit(c, lits)}, {c}" for c in cols)
+            out = f"named_struct({inner}) AS {m.group(3) or m.group(1)}"
+        return f"SELECT {out} FROM {m.group(1)}({m.group(2)})"
 
     def table(self, name: str) -> DataFrame:
         return self.spark.table(name)
@@ -651,14 +643,33 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
 
     # --------------------------------------------------- CREATE FUNCTION
     def _drop_function(self, s: str) -> DataFrame:
-        """DROP FUNCTION | PROCEDURE: the session function goes."""
+        """DROP FUNCTION | PROCEDURE | AGGREGATE (functioncmds.c
+        RemoveFunctionById): the function's one record goes, with the
+        Spark function it registered. A name with no record drops a
+        Spark temporary function of that name; with neither, it
+        raises unless IF EXISTS."""
         m = _DROP_FUNC_RE.match(s)
         if m is None:
             return self._spark_stmt(s)
-        fname = m.group(2).split(".")[-1]
-        self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fname}")
-        self._table_functions.pop(fname.lower(), None)
-        self._variadic_functions.pop(fname.lower(), None)
+        what, key = m.group(1).lower(), _fn_key(m.group(3))
+        unbind(self.spark, key)  # a PG function of the name answers again
+        rec = self._functions.get(key)
+        if rec is None:
+            try:  # a Spark temporary function with no record
+                if what != "aggregate":
+                    self.spark.sql(f"DROP TEMPORARY FUNCTION {key}")
+                    return self._tag(0)
+            except Exception:  # noqa: BLE001 — no such function, or a builtin
+                pass
+            if m.group(2):
+                return self._tag(0)
+            raise ValueError(f'{what} "{key}" does not exist')
+        if (rec.kind == "aggregate") != (what == "aggregate"):
+            raise ValueError(f'function "{key}" is '
+                             f'{"not " if what == "aggregate" else ""}an aggregate')
+        del self._functions[key]
+        if rec.spark_name:
+            self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {rec.spark_name}")
         return self._tag(0)
 
     def _create_procedure(self, s: str) -> DataFrame:
@@ -811,7 +822,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 if toks[0].upper() == "VARIADIC":
                     # functioncmds.c variadic: the parameter IS the
                     # declared array type; callers' spread arguments
-                    # are packed by _substitute_variadic_calls
+                    # are packed at the call site (_pack_variadic)
                     variadic_at = len(params)
                 elif toks[0].upper() == "INOUT":
                     # INOUT: an argument AND a result column
@@ -908,22 +919,15 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         body = _unmask(
             re.sub(r"\$(\d+)\b", _dollar_ref, _masked_b), _lits_b)
         if setof_m or table_cols_raw is not None or out_params:
-            res = self._register_table_function(
+            return self._register_table_function(
                 name, params, defaults, setof_m.group(1).strip()
                 if setof_m else None, table_cols_raw, lang, body, strict,
-                out_cols=out_params or None,
+                out_cols=out_params or None, variadic_at=variadic_at,
             )
-            # record ONLY after a successful registration: a regress
-            # script's `CREATE FUNCTION concat(text, VARIADIC ...)`
-            # (PG overloads the builtin; Spark refuses the shadow)
-            # must not leave a stale entry that repacks every builtin
-            # concat call afterwards
-            if variadic_at is not None:
-                self._variadic_functions[name.lower()] = variadic_at
-            return res
         if lang == "plpgsql" and rettype.lower() == "void" and re.search(
             r"(?i)\b(INSERT|UPDATE|DELETE|TRUNCATE|EXCEPTION)\b", body
-        ) and self._register_plpgsql_proc(name, params, body):
+        ) and self._register_plpgsql_proc(name, params, body, rettype,
+                                          fn_config):
             # DML-bodied void procedure: interpreted at call time
             # (engine_proc.py); nothing compiles
             return self._tag(0)
@@ -942,7 +946,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 # back to the driver-side interpreter — callable at
                 # top-level SELECT f(args) / CALL only
                 if self._register_plpgsql_proc(name, params, body,
-                                               rettype=rettype):
+                                               rettype, fn_config):
                     return self._tag(0)
                 raise
         elif lang == "internal" and re.fullmatch(
@@ -968,15 +972,16 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             # supported subset is expression-bodied SELECTs.
             all_stmts = [x.strip() for x in body.split(";") if x.strip()]
             last = all_stmts[-1]
-            if len(all_stmts) > 1 and any(
-                re.match(r"(?is)^(INSERT|UPDATE|DELETE|TRUNCATE|CREATE|"
-                         r"DROP|ALTER|COPY)\b", x)
-                for x in all_stmts[:-1]
-            ) and self._register_sqlbody_proc(
-                    name, params, body, rettype, fn_config):
-                # earlier statements carry side effects functions.c
-                # would run — a Spark SQL UDF holds only the last
-                # expression, so the whole body interprets driver-side
+            if (any(re.match(r"(?is)^(INSERT|UPDATE|DELETE|TRUNCATE|CREATE|"
+                             r"DROP|ALTER|COPY)\b", x) for x in all_stmts[:-1])
+                    or rettype.lower() == "void" and re.match(
+                        r"(?is)(INSERT|UPDATE|DELETE|TRUNCATE)\b", last)
+                    ) and self._register_sqlbody_proc(
+                        name, params, body, rettype, fn_config):
+                # statements with side effects functions.c would run
+                # (a DML-bodied void function keeps only those) — a
+                # Spark SQL UDF holds only the last expression, so the
+                # whole body interprets driver-side
                 return self._tag(0)
             if re.match(r"(?is)^SELECT\b", last) and _toplevel_from(last):
                 # a FROM-clause body is a whole query; a scalar SQL
@@ -1020,18 +1025,6 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                         # the trailing identifier follows a complete
                         # operand: it is the bare column alias
                         expr = pre
-            if rettype.lower() == "void" and re.match(
-                    r"(?is)\s*(INSERT|UPDATE|DELETE|TRUNCATE)\b", last):
-                # DML-bodied void function: store the statements; a
-                # call executes them (functions.c runs every statement
-                # of a SQL function, returning the last — void keeps
-                # side effects only). RETURNING clauses are discarded.
-                stmts = [x.strip() for x in body.split(";") if x.strip()]
-                stmts = [re.sub(r"(?is)\s+RETURNING\s+.*$", "", x)
-                         for x in stmts]
-                self._void_procs[name.lower()] = (
-                    [p for p, _t in params], stmts)
-                return self._tag(0)
             if rettype.lower() == "void":
                 # functions.c: a void SQL function evaluates its body
                 # and discards the result (SELECT f(x) shows empty)
@@ -1057,9 +1050,10 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             + (f" DEFAULT ({defaults[p]})" if p in defaults else "")
             for p, t in params
         )
+        spark_name = name.lower()
         try:
             self.spark.sql(
-                f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({arglist}) "
+                f"CREATE OR REPLACE TEMPORARY FUNCTION {spark_name}({arglist}) "
                 f"RETURNS {ret_spark} RETURN {expr}"
             )
         except Exception as e:  # noqa: BLE001
@@ -1068,11 +1062,11 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 # replace: register under a prefix; same-arity call
                 # sites rewrite to it (PG search_path semantics put
                 # the user fn first)
+                spark_name = f"__pgudf_{spark_name}"
                 self.spark.sql(
-                    f"CREATE OR REPLACE TEMPORARY FUNCTION __pgudf_{name}"
+                    f"CREATE OR REPLACE TEMPORARY FUNCTION {spark_name}"
                     f"({arglist}) RETURNS {ret_spark} RETURN {expr}"
                 )
-                self._shadowed_fns[name.lower()] = len(params)
             elif lang == "sql" and self._register_sqlbody_proc(
                     name, params, body, rettype, fn_config):
                 # bodies Spark's SQL-UDF surface cannot hold (a
@@ -1084,11 +1078,12 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
                 return self._tag(0)
             else:
                 raise
-        if variadic_at is not None:  # only after Spark accepted it
-            self._variadic_functions[name.lower()] = variadic_at
-        self._scalar_fn_exprs[name.lower()] = (
-            [p for p, _t in params], expr
-        )
+        # written only after Spark accepted the function: a refused
+        # `CREATE FUNCTION concat(text, VARIADIC ...)` (PG overloads
+        # the builtin) must leave no record that repacks concat calls
+        self._define(name.lower(), UserFunction(
+            "scalar", params=[p for p, _t in params], variadic_at=variadic_at,
+            spark_name=spark_name, expr=expr))
         return self._tag(0)
 
     def _register_table_function(
@@ -1102,6 +1097,7 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         body: str,
         strict: bool,
         out_cols: list[tuple[str, str]] | None = None,
+        variadic_at: int | None = None,
     ) -> DataFrame:
         """RETURNS SETOF / RETURNS TABLE for LANGUAGE sql bodies
         (functioncmds.c set-returning functions; regress
@@ -1226,10 +1222,12 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
         )
         collist = ", ".join(f"{c} {t}" for c, t in cols)
         self.spark.sql(
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({arglist}) "
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name.lower()}({arglist}) "
             f"RETURNS TABLE ({collist}) RETURN {q}"
         )
-        self._table_functions[name.lower()] = [c for c, _t in cols]
+        self._define(name.lower(), UserFunction(
+            "setof", params=[p for p, _t in params], variadic_at=variadic_at,
+            spark_name=name.lower(), columns=[c for c, _t in cols]))
         return self._tag(0)
 
     # ------------------------------------------- prepared statements / GUCs

@@ -168,27 +168,29 @@ class CatalogViewsMixin:
 
     def _catalog_relations(self) -> list[tuple[str, str]]:
         """(name, relkind) for every relation the session can see:
-        engine-registered parquet tables, Spark catalog tables/views,
-        and engine sequences (pg_class.relkind: r/v/S)."""
-        rels: dict[str, str] = {}
+        engine-registered parquet tables (under their catalog key),
+        Spark catalog tables/views, and engine sequences
+        (pg_class.relkind: r/v/S). Spark resolves names
+        case-insensitively, so its listing dedupes that way."""
+        rels: dict[str, tuple[str, str]] = {}
         for name in self.catalog.tables:
-            rels[name.lower()] = "r"
+            rels[name.lower()] = (name, "r")
         try:
             for t in self.spark.catalog.listTables():
                 kind = "v" if (t.tableType or "").upper() in (
                     "VIEW", "TEMPORARY") or t.isTemporary else "r"
-                rels.setdefault(t.name.lower(), kind)
+                rels.setdefault(t.name.lower(), (t.name.lower(), kind))
         except Exception:
             pass
         for name in getattr(self, "_sequences", {}):
-            rels[name.lower()] = "S"
+            rels[name.lower()] = (name.lower(), "S")
         # the catalog lists itself (pg_class.dat: bootstrap relations
         # are rows of pg_class) — deterministic from the first build,
         # not only once the views exist in the Spark catalog
         for name in ("pg_class", "pg_attribute", "pg_type",
                      "pg_namespace", "pg_proc"):
-            rels[name] = "v"
-        return sorted(rels.items())
+            rels[name] = (name, "v")
+        return sorted(rels.values())
 
     def _relation_fields(self):
         """(name, relkind, oid, schema fields) per visible relation."""
@@ -200,9 +202,9 @@ class CatalogViewsMixin:
                 # has used an Observation, Spark's ObservationManager
                 # logs a stack trace for every query that fails analysis
                 try:
-                    exists = self.spark.catalog.tableExists(name)
+                    exists = self.spark.catalog.tableExists(view_name(name))
                     if exists:
-                        fields = self.spark.table(name).schema.fields
+                        fields = self.spark.table(view_name(name)).schema.fields
                 except Exception:
                     exists = False
                 if not exists and not name.startswith("pg_"):
@@ -225,7 +227,7 @@ class CatalogViewsMixin:
         """pg_class: an engine table's reltuples is its row count and
         relpages its bytes in 8 kB pages (`metrics()`); a relation the
         engine holds no rows for reports -1 ("unknown", as PG 14+)."""
-        sizes = {r[0].lower(): (r[1], r[2]) for r in self._table_metrics()}
+        sizes = {r[0]: (r[1], r[2]) for r in self._table_metrics()}
         rows = []
         for rel, kind, oid, fields in self._relation_fields():
             n_rows, n_bytes = sizes.get(rel, (-1, 0))
@@ -272,15 +274,9 @@ class CatalogViewsMixin:
         ).createOrReplaceTempView(name)
 
     def _build_pg_proc(self, name: str) -> None:
-        fn_names: set[str] = set()
-        for reg in ("_table_functions", "_scalar_fn_exprs",
-                    "_poly_functions", "_sql_aggregates",
-                    "_void_procs", "_variadic_functions"):
-            fn_names |= set(getattr(self, reg, {}) or {})
         proc_rows = [
-            (_obj_oid("proc", n), n, 2200,
-             "a" if n in getattr(self, "_sql_aggregates", {}) else "f")
-            for n in sorted(fn_names)
+            (_obj_oid("proc", n), n, 2200, "a" if f.kind == "aggregate" else "f")
+            for n, f in sorted(self._functions.items())
         ]
         local_frame(
             self.spark, proc_rows or [(0, "", 0, "f")],

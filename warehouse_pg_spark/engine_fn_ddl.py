@@ -1,14 +1,114 @@
-"""Function-DDL surface split out of engine.py (r15): CREATE
-AGGREGATE lowering, polymorphic SQL-function templates, and the
-user-type-aware declared-type resolver. Mixed into Engine — the
-methods share its session state (_sql_aggregates, _poly_functions,
-_scalar_fn_exprs, _user_types)."""
+"""User functions: the one function table, its call-site pass,
+CREATE AGGREGATE lowering, polymorphic SQL-function templates, and
+the user-type-aware declared-type resolver. Mixed into Engine — the
+methods share its session state (_functions, _user_types)."""
 
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass, field
 
-from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas
+from warehouse_pg_spark.dialect.mask import (
+    _PART,
+    _close_paren,
+    _mask_into,
+    _new_lit,
+    _split_commas,
+    _unmask,
+)
+
+
+@dataclass
+class UserFunction:
+    """One user function: the record CREATE writes, DROP removes and
+    every call site reads, as PG keeps one pg_proc row per function.
+    `kind` says how a call expands (`_expand_user_calls`):
+
+    scalar       a Spark temporary SQL function `spark_name`, which is
+                 `__pgudf_<name>` beside a Spark builtin Spark will not
+                 replace (calls of the function's own arity go to it);
+                 `expr` keeps the compiled body for aggregate folds
+    setof        a Spark SQL table function `spark_name` returning
+                 `columns`
+    template     a polymorphic `body` inlined at each call; `ptypes` are
+                 the declared parameter types, `setof` a set result
+    aggregate    a transition fold of `sfunc` over `stype` from
+                 `initcond`, then `finalfunc`; `combinefunc` merges
+                 partial states
+    interpreted  masked `stmts` (over `lits`) run driver-side at a call
+                 with constant arguments: every statement of a `sql`
+                 body, or a `plpgsql` program with its `declared`
+                 variables, bound `cursors` and EXCEPTION `handlers`;
+                 `config` is the call's SET overlay and `ret_spark` the
+                 result type (None for void)
+
+    `params` are the parameter names, `variadic_at` the index of the
+    VARIADIC array parameter, whose spread arguments a call packs."""
+
+    kind: str
+    params: list[str] = field(default_factory=list)
+    variadic_at: int | None = None
+    spark_name: str | None = None
+    expr: str = ""
+    columns: list[str] = field(default_factory=list)
+    body: str = ""
+    ptypes: list[str] = field(default_factory=list)
+    setof: bool = False
+    sfunc: str = ""
+    stype: str = ""
+    finalfunc: str | None = None
+    combinefunc: str | None = None
+    initcond: str | None = None
+    lang: str = "sql"
+    stmts: list = field(default_factory=list)
+    lits: list[str] = field(default_factory=list)
+    ret_spark: str | None = None
+    config: dict[str, str] = field(default_factory=dict)
+    declared: list = field(default_factory=list)
+    cursors: dict[str, str] = field(default_factory=dict)
+    handlers: list = field(default_factory=list)
+
+
+def _fn_key(raw: str) -> str:
+    """A function name's table key: its last part, unquoted and folded
+    (Spark resolves function names case-insensitively)."""
+    part = re.findall(_PART, raw)[-1]
+    if part[0] in '"`':
+        part = part[1:-1].replace(part[0] * 2, part[0])
+    return part.lower()
+
+
+# a function name at a call: a bare or "…" part, `public.`-qualified
+# or not (another schema's function is never a user function)
+_FN_NAME = r'(?:(?:public|"public")\s*\.\s*)?(\w+|"(?:[^"]|"")+")'
+_CALL_SITE_RE = re.compile(rf'(?<![\w.$"`]){_FN_NAME}\s*\(', re.IGNORECASE)
+# a template argument that substitutes without parentheses, so later
+# array/SRF rewrites still match it: a name, masked literal, call,
+# ARRAY[...] or template hole, optionally cast
+_ATOMIC_ARG_RE = re.compile(
+    r"(?is)(?:[\w.$]+|\x01\d+\x01|\x02\d+\x02"
+    r"|[\w.]+\s*\((?:[^()]|\([^()]*\))*\)|array\s*\[[^\[\]]*\])"
+    r"(?:\s*::\s*[\w ]+(?:\[\s*\])?)?")
+_HOLE_RE = re.compile("\x02(\\d+)\x02")
+# templates inlined inside templates deeper than this raise (PG's
+# stack-depth limit for a function that calls itself)
+_MAX_INLINE_DEPTH = 32
+# statement objects whose bodies store calls: an interpreted call
+# inside one is never run, so no result freezes into a stored body
+_STORED_BODY_OBJECTS = ("FUNCTION", "PROCEDURE", "AGGREGATE", "TRIGGER")
+
+
+def _pack_variadic(args: list[str], at: int | None) -> list[str]:
+    """A VARIADIC call's arguments (funcapi variadic spread): those from
+    `at` on pack into one array, and `VARIADIC arr` passes its array as
+    is. Spark SQL functions are fixed-arity, so this runs before Spark
+    parses the call."""
+    if at is None or len(args) <= at:
+        return args
+    vm = re.match(r"(?is)^VARIADIC\s+(.*)$", args[-1])
+    if vm:
+        return args[:-1] + [vm.group(1)]
+    return args[:at] + ["array(" + ", ".join(args[at:]) + ")"]
 
 
 class FunctionDDLMixin:
@@ -18,12 +118,82 @@ class FunctionDDLMixin:
         r"\(((?:[^()]|\([^()]*\))*)\)\s*(?:\((.*)\))?\s*;?\s*$",
         re.IGNORECASE | re.DOTALL,
     )
-    _DROP_AGG_RE = re.compile(
-        r"^\s*DROP\s+AGGREGATE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*"
-        r"\([^()]*\)\s*(?:CASCADE|RESTRICT)?\s*;?\s*$",
-        re.IGNORECASE,
-    )
 
+    def _define(self, key: str, rec: UserFunction) -> None:
+        """Write `key`'s one record. A Spark function that an earlier
+        record of the name registered, and this one does not reuse,
+        is dropped."""
+        old = self._functions.get(key)
+        if old is not None and old.spark_name not in (None, rec.spark_name):
+            self.spark.sql(
+                f"DROP TEMPORARY FUNCTION IF EXISTS {old.spark_name}")
+        self._functions[key] = rec
+
+    # ------------------------------------------------ the call-site pass
+    def _expand_user_calls(self, kind: str, masked: str,
+                           lits: list[str]) -> str:
+        """The one call-site pass over a statement's masked text, so a
+        name inside a literal or comment never fires (parse_func.c
+        resolves each call through pg_proc): every call of a user
+        function expands by its record's kind, inner calls first."""
+        if not self._functions:
+            return masked
+        if any(r.combinefunc for r in self._functions.values()):
+            masked = self._lower_combinefunc_aggregate(masked, lits) or masked
+        interpret = kind.rpartition(" ")[2] not in _STORED_BODY_OBJECTS
+        return self._expand_calls(masked, lits, interpret, 0)
+
+    def _expand_calls(self, text: str, lits: list[str], interpret: bool,
+                      depth: int) -> str:
+        out, pos = [], 0
+        for m in _CALL_SITE_RE.finditer(text):
+            key = _fn_key(m.group(1))
+            if m.start() < pos or key not in self._functions:
+                continue
+            j = _close_paren(text, m.end())
+            if j < 0:
+                break
+            parts = [self._expand_calls(p, lits, interpret, depth)
+                     for p in _split_commas(text[m.end(): j - 1])]
+            out += [text[pos: m.start()],
+                    self._expand_call(key, text, m, j, parts, lits,
+                                      interpret, depth)]
+            pos = j
+        return "".join(out) + text[pos:]
+
+    def _expand_call(self, key: str, text: str, m: re.Match, j: int,
+                     parts: list[str], lits: list[str], interpret: bool,
+                     depth: int) -> str:
+        """One call `text[m.start():j]` with its arguments already
+        expanded: an interpreted call with constant arguments becomes
+        its result, an aggregate its transition fold, a template its
+        inlined body; a shadowing function takes the calls of its own
+        arity; VARIADIC arguments pack. Anything else stays as written
+        (Spark resolves it, or raises)."""
+        rec = self._functions[key]
+        args = [p.strip() for p in parts]
+        if rec.kind == "interpreted" and interpret:
+            lit = self._interpreted_literal(
+                rec, [_unmask(a, lits) for a in args])
+            if lit is not None:
+                return _mask_into(lit, lits)
+        elif rec.kind == "aggregate":
+            call = self._aggregate_call(rec, args, lits)
+            if call is not None:
+                return call
+        elif rec.kind == "template":
+            return self._inline_template(key, rec, args, text, m.start(), j,
+                                         lits, interpret, depth)
+        elif rec.spark_name not in (None, key):
+            if len(args) == len(rec.params):
+                packed = _pack_variadic(args, rec.variadic_at)
+                return f"{rec.spark_name}({', '.join(packed)})"
+        elif rec.variadic_at is not None:
+            packed = _pack_variadic(args, rec.variadic_at)
+            return f"{m.group(0)}{', '.join(packed)})"
+        return f"{m.group(0)}{','.join(parts)})"
+
+    # ------------------------------------------------------- templates
     def _register_polymorphic(self, name, rawargs, rettype, tail):
         """Polymorphic SQL functions (parse_coerce.c
         check_generic_type_consistency: anyarray/anyelement &c): the
@@ -54,8 +224,11 @@ class FunctionDDLMixin:
             body = body_m.group(2 if body_m.re.groups == 2 else 1)
             if body.startswith("'"):
                 body = body[1:-1].replace("''", "'")
+        key = name.lower()
+        old = self._functions.get(key)
         try:
-            if self.spark.catalog.functionExists(name.lower()):
+            if (self.spark.catalog.functionExists(key)
+                    and (old is None or old.spark_name != key)):
                 # a template would SHADOW a builtin for every call
                 # (PG overloads by signature; the single-name
                 # registry cannot) — the regress concat(text,
@@ -90,14 +263,10 @@ class FunctionDDLMixin:
             body,
         )
         last = [x for x in body.split(";") if x.strip()][-1].strip()
-        self._poly_functions[name.lower()] = {
-            "params": pnames,
-            "ptypes": ptypes,
-            "body": last,
-            "setof": bool(re.match(r"(?is)^\s*SETOF\b|^\s*TABLE\b",
-                                   rettype)),
-            "variadic_at": variadic_at,
-        }
+        self._define(key, UserFunction(
+            "template", params=pnames, ptypes=ptypes, body=last,
+            setof=bool(re.match(r"(?is)^\s*SETOF\b|^\s*TABLE\b", rettype)),
+            variadic_at=variadic_at))
         return self._tag(0)
 
     _RANGE_SUBTYPES = {
@@ -159,94 +328,53 @@ class FunctionDDLMixin:
                 "exist — argument declared anyarray is not consistent "
                 "with argument declared anyrange")
 
-    def _substitute_polymorphic_calls(self, text: str) -> str:
-        """Expand calls to registered polymorphic templates: the
-        argument expressions substitute into the body text (per-call
-        view inlining — the concrete anyelement type is whatever the
-        argument's type is, which is precisely parse_coerce.c's
-        resolution, done by Catalyst instead of a catalog). FROM-
-        position calls become inline subqueries; scalar/sole-target
-        calls become the body's single expression."""
-
-        if not self._poly_functions:
-            return text
-        for name, d in self._poly_functions.items():
-            pat = re.compile(rf"(?is)\b{re.escape(name)}\s*\(")
-            while True:
-                m = pat.search(text)
-                if m is None:
-                    break
-                j = _close_paren(text, m.end())
-                if j < 0:
-                    break
-                args = [a.strip() for a in
-                        _split_commas(text[m.end(): j - 1])]
-                self._check_poly_args(name, d.get("ptypes") or [],
-                                      args)
-                va = d.get("variadic_at")
-                if va is not None and len(args) >= va:
-                    # spread arguments pack into the one array param
-                    # (funcapi variadic), unless spelled VARIADIC arr
-                    tailargs = args[va:]
-                    if len(tailargs) == 1 and re.match(
-                        r"(?is)^VARIADIC\b", tailargs[0]
-                    ):
-                        packed = re.sub(r"(?is)^VARIADIC\s+", "",
-                                        tailargs[0])
-                    else:
-                        packed = "array(" + ", ".join(tailargs) + ")"
-                    args = args[:va] + [packed]
-
-                def _atomic(a: str) -> bool:
-                    # an already-atomic argument substitutes bare so
-                    # downstream SRF/array rewrites still pattern-match
-                    return bool(re.fullmatch(
-                        r"(?is)(?:[\w.$]+|'(?:[^']|'')*'"
-                        r"|[\w.]+\s*\((?:[^()]|\([^()]*\))*\)"
-                        r"|array\s*\[[^\[\]]*\])"
-                        r"(?:\s*::\s*[\w ]+(?:\[\s*\])?)?", a))
-
-                body = d["body"]
-                for pn, av in zip(d["params"], args):
-                    sub = av if _atomic(av) else f"({av})"
-                    body = re.sub(rf"\b{re.escape(pn)}\b",
-                                  sub.replace("\\", "\\\\"), body)
-                before = text[: m.start()].rstrip()
-                in_from = bool(re.search(
-                    r"(?is)(?:\bFROM|\bJOIN|\bLATERAL|,)\s*$", before))
-                if d["setof"]:
-                    sm = re.match(
-                        r"(?is)^\s*SELECT\s+(.*?)\s+(FROM\s+.*)$",
-                        body,
-                    )
-                    if (sm and len(_split_commas(sm.group(1))) == 1
-                            and not re.search(r"(?is)\bAS\s+\w+\s*$",
-                                              sm.group(1))):
-                        # PG names the single result column after the
-                        # function (funcapi.c)
-                        body = (f"SELECT {sm.group(1)} AS {name} "
-                                f"{sm.group(2)}")
-                    has_alias = bool(re.match(
-                        r"(?is)\s+(?:AS\s+)?[A-Za-z_]\w*", text[j:]
-                    ) and not re.match(
-                        r"(?is)\s+(?:WHERE|GROUP|ORDER|LIMIT|HAVING"
-                        r"|UNION|INTERSECT|EXCEPT|JOIN|ON|LEFT|RIGHT"
-                        r"|FULL|INNER|CROSS)\b", text[j:]))
-                    repl = (
-                        f"({body})" if (in_from and has_alias)
-                        else f"({body}) AS {name}" if in_from
-                        else f"({body})"
-                    )
-                else:
-                    sm = re.match(r"(?is)^\s*SELECT\s+(.+)$", body)
-                    inner = sm.group(1).strip() if sm else body
-                    repl = (
-                        f"({inner})"
-                        if sm and not re.search(r"(?i)\bFROM\b", inner)
-                        else f"({body})"
-                    )
-                text = text[: m.start()] + repl + text[j:]
-        return text
+    def _inline_template(self, key: str, rec: UserFunction,
+                         args: list[str], text: str, start: int, end: int,
+                         lits: list[str], interpret: bool,
+                         depth: int) -> str:
+        """A template call `text[start:end]` inlined: the argument
+        expressions substitute into the body (per-call view inlining —
+        the concrete anyelement type is whatever the argument's type
+        is, which is precisely parse_coerce.c's resolution, done by
+        Catalyst instead of a catalog). The body is re-scanned with the
+        arguments behind holes, so a user function it calls expands
+        and an argument never expands twice. FROM-position calls become
+        inline subqueries; scalar/sole-target calls become the body's
+        single expression."""
+        if depth >= _MAX_INLINE_DEPTH:
+            raise ValueError(
+                f"function {key}: templates nest more than "
+                f"{_MAX_INLINE_DEPTH} deep")
+        self._check_poly_args(key, rec.ptypes,
+                              [_unmask(a, lits) for a in args])
+        args = _pack_variadic(args, rec.variadic_at)
+        subs = [a if _ATOMIC_ARG_RE.fullmatch(a) else f"({a})" for a in args]
+        body = _mask_into(rec.body, lits)
+        for i, pn in enumerate(rec.params[: len(subs)]):
+            body = re.sub(rf"\b{re.escape(pn)}\b", f"\x02{i}\x02", body)
+        body = self._expand_calls(body, lits, interpret, depth + 1)
+        body = _HOLE_RE.sub(lambda h: subs[int(h.group(1))], body)
+        if not rec.setof:
+            sm = re.match(r"(?is)^\s*SELECT\s+(.+)$", body)
+            inner = sm.group(1).strip() if sm else body
+            if sm and not re.search(r"(?i)\bFROM\b", inner):
+                return f"({inner})"
+            return f"({body})"
+        sm = re.match(r"(?is)^\s*SELECT\s+(.*?)\s+(FROM\s+.*)$", body)
+        if (sm and len(_split_commas(sm.group(1))) == 1
+                and not re.search(r"(?is)\bAS\s+\w+\s*$", sm.group(1))):
+            # PG names the single result column after the function
+            # (funcapi.c)
+            body = f"SELECT {sm.group(1)} AS {key} {sm.group(2)}"
+        in_from = bool(re.search(r"(?is)(?:\bFROM|\bJOIN|\bLATERAL|,)\s*$",
+                                 text[:start].rstrip()))
+        has_alias = bool(re.match(
+            r"(?is)\s+(?:AS\s+)?[A-Za-z_]\w*", text[end:]
+        ) and not re.match(
+            r"(?is)\s+(?:WHERE|GROUP|ORDER|LIMIT|HAVING"
+            r"|UNION|INTERSECT|EXCEPT|JOIN|ON|LEFT|RIGHT"
+            r"|FULL|INNER|CROSS)\b", text[end:]))
+        return f"({body}) AS {key}" if in_from and not has_alias else f"({body})"
 
     def _decl_type(self, t: str) -> str:
         """map_decl_type with the session's user types resolved first
@@ -288,22 +416,14 @@ class FunctionDDLMixin:
                 return map_decl_type(t.strip())
         return f"ARRAY<{base}>" if arr else base
 
-    def _drop_aggregate(self, s: str):
-        m = self._DROP_AGG_RE.match(s)
-        if m is None:
-            return self._spark_stmt(s)
-        key = m.group(2).split(".")[-1].lower()
-        if self._sql_aggregates.pop(key, None) is None and not m.group(1):
-            raise ValueError(f'aggregate "{key}" does not exist')
-        return self._tag(0)
-
+    # ------------------------------------------------------ aggregates
     def _create_aggregate(self, s: str):
         """CREATE AGGREGATE (commands/aggregatecmds.c DefineAggregate):
         both the modern `name(argtypes) (options)` and the old GP
-        one-paren `name (basetype = X, sfunc = ...)` forms register
-        {sfunc, stype, finalfunc, combinefunc, initcond}; call sites
-        then lower via _substitute_aggregate_calls. When the DDL
-        declares combinefunc/prelimfunc (GP's multi-stage contract,
+        one-paren `name (basetype = X, sfunc = ...)` forms write an
+        aggregate record {sfunc, stype, finalfunc, combinefunc,
+        initcond}; call sites lower to its transition fold. When the
+        DDL declares combinefunc/prelimfunc (GP's multi-stage contract,
         cdb/cdbgroupingpaths.c:258), simple GROUP BY statements
         restructure into a partial/merge two-stage plan so no task
         ever buffers a whole group; without one the sequential fold
@@ -337,39 +457,49 @@ class FunctionDDLMixin:
             init = init.strip()
             if init.startswith("'") and init.endswith("'"):
                 init = init[1:-1].replace("''", "'")
-        self._sql_aggregates[name] = {
-            "sfunc": sfunc.split(".")[-1],
-            "stype": stype,
-            "finalfunc": (opts.get("finalfunc") or "").split(".")[-1]
-            or None,
+        self._define(name, UserFunction(
+            "aggregate", sfunc=sfunc.split(".")[-1], stype=stype,
+            finalfunc=(opts.get("finalfunc") or "").split(".")[-1] or None,
             # GP spells the merge step combinefunc (PG 9.6+) or
             # prelimfunc (legacy); either enables the two-stage plan
-            "combinefunc": (opts.get("combinefunc")
-                            or opts.get("prelimfunc")
-                            or "").split(".")[-1] or None,
-            "initcond": init,
-        }
+            combinefunc=(opts.get("combinefunc") or opts.get("prelimfunc")
+                         or "").split(".")[-1] or None,
+            initcond=init))
         return self._tag(0)
 
-    def _agg_fold_expr(self, d: dict, arg: str) -> str | None:
-        """The nodeAgg.c transition fold for one aggregate over `arg`:
-        finalless aggregate(collect_list(arg), init, sfunc) with the
-        retained SQL body inlined (Spark's SQL-UDF inliner can't reach
-        inside a HOF lambda under an Aggregate)."""
-        sf = self._scalar_fn_exprs.get(d["sfunc"].lower())
-        if sf is None or len(sf[0]) != 2:
-            return None  # non-SQL sfunc: stay loud
-        stype = d["stype"]
-        if d["initcond"] is not None:
-            esc = d["initcond"].replace("'", "''")
-            init = f"'{esc}'::{stype}"
-        else:
-            init = f"NULL::{stype}"
-        step = sf[1]
-        for pn, var in zip(sf[0], ("__acc", "__v")):
+    def _fold(self, arg: str, rec: UserFunction, step_fn: str | None,
+              lits: list[str]) -> str | None:
+        """The nodeAgg.c transition fold of the two-argument SQL
+        function `step_fn` over `arg`, from the aggregate's initcond:
+        aggregate(collect_list(arg), init, (__acc, __v) -> step), with
+        the function's retained body inlined (Spark's SQL-function
+        inliner cannot reach into a lambda under an Aggregate). None
+        for a step function with no retained body: the call stays,
+        loudly."""
+        fn = self._functions.get((step_fn or "").lower())
+        if fn is None or fn.kind != "scalar" or len(fn.params) != 2:
+            return None
+        step = _mask_into(fn.expr, lits)
+        for pn, var in zip(fn.params, ("__acc", "__v")):
             step = re.sub(rf"\b{re.escape(pn)}\b", var, step)
-        return (f"aggregate(collect_list({arg}), {init}, "
+        init = "NULL" if rec.initcond is None else _new_lit(rec.initcond, lits)
+        return (f"aggregate(collect_list({arg}), {init}::{rec.stype}, "
                 f"(__acc, __v) -> {step})")
+
+    def _aggregate_call(self, rec: UserFunction, args: list[str],
+                        lits: list[str]) -> str | None:
+        """`my_agg(x)` as finalfunc(fold of sfunc over x) — the
+        transition fold nodeAgg.c runs, with Spark's aggregate() HOF,
+        so the state type and the transition function stay
+        JVM-resolved. Multi-arg / `*` / DISTINCT / ORDER BY call shapes
+        stay as written (loud)."""
+        if (len(args) != 1 or args[0] == "*"
+                or re.search(r"(?i)\bdistinct\b|\border\s+by\b", args[0])):
+            return None
+        fold = self._fold(args[0], rec, rec.sfunc, lits)
+        if fold is None:
+            return None
+        return f"({rec.finalfunc}({fold}))" if rec.finalfunc else f"({fold})"
 
     _SIMPLE_GROUPBY_RE = re.compile(
         r"(?is)^\s*SELECT\s+(?P<list>.*?)\s+FROM\s+"
@@ -378,11 +508,12 @@ class FunctionDDLMixin:
         r"(?P<tail>\s+ORDER\s+BY\b.*|\s+LIMIT\b.*)?\s*;?\s*$"
     )
 
-    def _lower_combinefunc_aggregate(self, text: str) -> str | None:
+    def _lower_combinefunc_aggregate(self, text: str,
+                                     lits: list[str]) -> str | None:
         """Two-stage lowering for combinefunc aggregates
         (cdb/cdbgroupingpaths.c:258 multi-stage agg): a simple
         `SELECT keys, my_agg(x)[, builtin aggs] FROM t GROUP BY keys`
-        restructures to
+        (masked text) restructures to
 
             SELECT keys, final(aggregate(collect_list(__st), init,
                                          combinefunc))
@@ -408,10 +539,6 @@ class FunctionDDLMixin:
         if not all(re.fullmatch(r'[\w."]+', k) for k in keys):
             return None
         items = _split_commas(m.group("list"))
-        agg_names = {n: d for n, d in self._sql_aggregates.items()
-                     if d.get("combinefunc")}
-        if not agg_names:
-            return None
         inner, outer = [], []
         n_aux = 0
         saw_uda = False
@@ -430,28 +557,18 @@ class FunctionDDLMixin:
                 return None
             fn, arg = cm.group(1).lower(), cm.group(2).strip()
             out_alias = f" AS {alias}" if alias else f" AS {fn}"
-            if fn in agg_names:
-                d = agg_names[fn]
-                cf = self._scalar_fn_exprs.get(d["combinefunc"].lower())
-                fold = self._agg_fold_expr(d, arg)
-                if (cf is None or len(cf[0]) != 2 or fold is None
-                        or "," in arg or not arg or arg == "*"):
+            rec = self._functions.get(fn)
+            if rec is not None and rec.combinefunc:
+                if "," in arg or not arg or arg == "*":
+                    return None
+                fold = self._fold(arg, rec, rec.sfunc, lits)
+                o = self._fold(f"__st{n_aux}", rec, rec.combinefunc, lits)
+                if fold is None or o is None:
                     return None
                 saw_uda = True
                 inner.append(f"{fold} AS __st{n_aux}")
-                merge = cf[1]
-                for pn, var in zip(cf[0], ("__acc", "__v")):
-                    merge = re.sub(rf"\b{re.escape(pn)}\b", var, merge)
-                stype = d["stype"]
-                if d["initcond"] is not None:
-                    esc = d["initcond"].replace("'", "''")
-                    init = f"'{esc}'::{stype}"
-                else:
-                    init = f"NULL::{stype}"
-                o = (f"aggregate(collect_list(__st{n_aux}), {init}, "
-                     f"(__acc, __v) -> {merge})")
-                if d["finalfunc"]:
-                    o = f"{d['finalfunc']}({o})"
+                if rec.finalfunc:
+                    o = f"{rec.finalfunc}({o})"
                 outer.append(f"{o}{out_alias}")
             elif fn == "count":
                 inner.append(f"count({arg or '*'}) AS __c{n_aux}")
@@ -473,59 +590,6 @@ class FunctionDDLMixin:
             f"__partial GROUP BY {', '.join(keys)}{tail}"
         )
 
-    def _substitute_aggregate_calls(self, text: str) -> str:
-        """Lower calls to CREATE AGGREGATE-defined aggregates:
-        `my_agg(x)` becomes finalfunc(aggregate(collect_list(x),
-        initcond::stype, (acc, v) -> sfunc(acc, v))) — the same
-        transition-function fold nodeAgg.c runs, expressed with
-        Spark's aggregate() HOF so the state type and the transition
-        function (a registered SQL/PL-pgSQL-compiled function) stay
-        JVM-resolved. Multi-arg / DISTINCT / ORDER BY call shapes are
-        left untouched (loud)."""
-        if not self._sql_aggregates:
-            return text
-        restructured = self._lower_combinefunc_aggregate(text)
-        if restructured is not None:
-            text = restructured
-        for name, d in self._sql_aggregates.items():
-            if not re.search(rf"(?i)\b{re.escape(name)}\s*\(", text):
-                continue
-
-            def repl(m: re.Match, d=d) -> str:
-                arg = m.group(1).strip()
-                if (not arg or arg == "*" or "," in arg
-                        or re.search(r"(?i)\bdistinct\b|\border\s+by\b",
-                                     arg)):
-                    return m.group(0)
-                stype = d["stype"]
-                if d["initcond"] is not None:
-                    esc = d["initcond"].replace("'", "''")
-                    init = f"'{esc}'::{stype}"
-                else:
-                    init = f"NULL::{stype}"
-                # Spark's SQL-UDF inliner can't reach inside a HOF
-                # lambda under an Aggregate — inline the transition
-                # function's retained body by hand
-                sf = self._scalar_fn_exprs.get(d["sfunc"].lower())
-                if sf is None or len(sf[0]) != 2:
-                    return m.group(0)  # non-SQL sfunc: stay loud
-                step = sf[1]
-                for pn, var in zip(sf[0], ("__acc", "__v")):
-                    step = re.sub(rf"\b{re.escape(pn)}\b", var, step)
-                inner = (
-                    f"aggregate(collect_list({arg}), {init}, "
-                    f"(__acc, __v) -> {step})"
-                )
-                if d["finalfunc"]:
-                    inner = f"{d['finalfunc']}({inner})"
-                return f"({inner})"
-
-            text = re.sub(
-                rf"(?i)\b{re.escape(name)}\s*\(([^()]*)\)", repl, text
-            )
-        return text
-
-
     def _table_rowtype_cols(self, typename: str):
         """A table name used as a type is its rowtype
         (parse_type.c typenameType over a relation): resolve to the
@@ -538,72 +602,3 @@ class FunctionDDLMixin:
                     for f in self.spark.table(key).schema.fields]
         except Exception:
             return None
-
-    def _substitute_shadowed_calls(self, text: str) -> str:
-        """Rewrite calls to user functions that shadow Spark builtins
-        (same arity only — other arities stay on the builtin, the
-        closest single-namespace rendering of PG's overload set)."""
-        if not self._shadowed_fns:
-            return text
-
-        for name, arity in self._shadowed_fns.items():
-            pat = re.compile(rf'(?is)(?<![\w.])"?{re.escape(name)}"?\s*\(')
-            pos = 0
-            while True:
-                m = pat.search(text, pos)
-                if m is None:
-                    break
-                j = _close_paren(text, m.end())
-                if j < 0:
-                    break
-                args = _split_commas(text[m.end(): j - 1])
-                if len(args) == arity:
-                    text = (text[: m.start()] + f"__pgudf_{name}("
-                            + text[m.end(): ])
-                pos = m.start() + len(f"__pgudf_{name}")
-        return text
-
-    def _maybe_call_void_proc(self, text: str):
-        """`SELECT voidfn(args)` over a DML-bodied void function:
-        execute the stored statements with the arguments substituted
-        (the planner's SQL-function execution, driver-side because the
-        body is DML, not an expression)."""
-        if not self._void_procs:
-            return None
-
-        m = re.match(
-            r"(?is)^\s*SELECT\s+([\w.]+)\s*\((.*)\)\s*;?\s*$",
-            text.strip())
-        if m is None:
-            return None
-        name = m.group(1).split(".")[-1].lower()
-        proc = self._void_procs.get(name)
-        if proc is None:
-            return None
-        args = [a.strip() for a in _split_commas(m.group(2))]
-        if proc[0] == "plpgsql":
-            if len(args) != len(proc[1]):
-                return None
-            retval = self._run_plpgsql_proc(proc, args)
-            ret_spark = proc[7]
-            if ret_spark is None:
-                return self.spark.sql(
-                    f"SELECT CAST(NULL AS STRING) AS {name}")
-            from warehouse_pg_spark.engine_proc import _sql_lit
-
-            return self.spark.sql(
-                f"SELECT CAST({_sql_lit(retval)} AS {ret_spark}) "
-                f"AS {name}")
-        if proc[0] == "sqlbody":
-            if len(args) != len(proc[1]):
-                return None
-            return self._run_sqlbody_proc(name, proc, args)
-        pnames, stmts = proc
-        if len(args) != len(pnames):
-            return None
-        for stmt in stmts:
-            for pn, av in zip(pnames, args):
-                stmt = re.sub(rf"\b{re.escape(pn)}\b", f"({av})", stmt)
-            self.sql(stmt)
-        return self.spark.sql(
-            f"SELECT CAST(NULL AS STRING) AS {name}")

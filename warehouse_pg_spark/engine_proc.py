@@ -1,5 +1,5 @@
-"""Interpreted void procedures (split surface, r16; widened r17):
-RETURNS VOID PL/pgSQL functions whose bodies perform DML.
+"""Interpreted user functions: bodies that perform DML (or that
+Spark's SQL-function surface cannot hold) run driver-side at the call.
 
 The compiled-expression model (plpgsql.py) cannot hold side effects,
 but pl_exec.c's semantics for these bodies are a small imperative
@@ -26,7 +26,8 @@ from __future__ import annotations
 
 import re
 
-from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas
+from warehouse_pg_spark.dialect.mask import _close_paren, _split_commas, _unmask
+from warehouse_pg_spark.engine_fn_ddl import _FN_NAME, UserFunction, _fn_key
 
 _PROC_MAX_STEPS = 100_000
 # a cursor / query-FOR portal materializes driver-side; this is a
@@ -34,6 +35,8 @@ _PROC_MAX_STEPS = 100_000
 # rather than absorb an unbounded collect
 _PROC_MAX_PORTAL_ROWS = 200_000
 
+# `SELECT f(args)`, the whole statement
+_SOLE_CALL_RE = re.compile(rf"(?is)^SELECT\s+{_FN_NAME}\s*\(")
 _CURSOR_DECL_RE = re.compile(
     r"(?is)^\s*([A-Za-z_]\w*)\s+(?:NO\s+SCROLL\s+|SCROLL\s+)?"
     r"CURSOR\s+(?:IS|FOR)\s+(.+)$")
@@ -73,12 +76,11 @@ class ProcedureMixin:
                                body: str, rettype: str,
                                config: dict[str, str]) -> bool:
         """LANGUAGE sql bodies Spark's SQL-UDF surface cannot hold
-        (a recursive CTE over a parameter, DML followed by a result
-        query, current_setting over a runtime key): functions.c runs
-        every statement and returns the last one's first row —
-        interpreted driver-side at top-level `SELECT f(args)` call
-        sites, with proconfig SET overlays applied for the call's
-        duration (functioncmds.c proconfig / guc.c)."""
+        (DML statements, a recursive CTE over a parameter,
+        current_setting over a runtime key): functions.c runs every
+        statement and returns the last one's first row — interpreted
+        driver-side at the call, with proconfig SET overlays applied
+        for the call's duration (functioncmds.c proconfig / guc.c)."""
         from warehouse_pg_spark import plpgsql as P
         from warehouse_pg_spark.sql_dialect import map_decl_type
 
@@ -86,17 +88,17 @@ class ProcedureMixin:
         stmts = [x.strip() for x in masked.split(";") if x.strip()]
         if not stmts:
             return False
-        ret_spark = (None if rettype.lower() == "void"
-                     else map_decl_type(rettype))
-        self._void_procs[name.lower()] = (
-            "sqlbody", [p for p, _t in params], stmts, lits,
-            ret_spark, dict(config))
+        self._define(name.lower(), UserFunction(
+            "interpreted", params=[p for p, _t in params], stmts=stmts,
+            lits=lits, config=dict(config),
+            ret_spark=(None if rettype.lower() == "void"
+                       else map_decl_type(rettype))))
         return True
 
     def _register_plpgsql_proc(self, name: str,
                                params: list[tuple[str, str]],
-                               body: str,
-                               rettype: str = "void") -> bool:
+                               body: str, rettype: str,
+                               config: dict[str, str]) -> bool:
         """Accept a plpgsql body containing DML / cursors / dynamic
         EXECUTE / EXCEPTION handlers for the interpreter; returns
         False when the body uses statements the subset cannot
@@ -152,11 +154,12 @@ class ProcedureMixin:
             declared.append((dm.group(1).lower(), dm.group(2)))
         from warehouse_pg_spark.sql_dialect import map_decl_type
 
-        ret_spark = (None if rettype.lower() == "void"
-                     else map_decl_type(rettype))
-        self._void_procs[name.lower()] = (
-            "plpgsql", [p for p, _t in params], declared, stmts, lits,
-            cursors, handlers, ret_spark)
+        self._define(name.lower(), UserFunction(
+            "interpreted", params=[p for p, _t in params], lang="plpgsql",
+            declared=declared, stmts=stmts, lits=lits, cursors=cursors,
+            handlers=handlers, config=dict(config),
+            ret_spark=(None if rettype.lower() == "void"
+                       else map_decl_type(rettype))))
         return True
 
     @classmethod
@@ -222,127 +225,96 @@ class ProcedureMixin:
 
         return walk(stmts)
 
-    def _substitute_interpreted_calls(self, text: str) -> str:
-        """An interpreted function (sqlbody / driver-side plpgsql)
-        embedded in a larger statement: when every argument is a
-        CONSTANT expression the call evaluates driver-side and its
-        result substitutes as a typed literal — one evaluation per
-        occurrence, matching PG's per-call execution. Calls with
-        column references stay unresolved, loudly (the interpreter
-        cannot run per row)."""
-        if not self._void_procs:
-            return text
-        if re.match(r"(?is)\s*(?:CREATE|ALTER)\s+(?:OR\s+REPLACE\s+)?"
-                    r"(?:FUNCTION|PROCEDURE|AGGREGATE|TYPE|TRIGGER)\b",
-                    text):
-            return text  # never freeze call results into stored bodies
+    def _maybe_call_void_proc(self, masked: str, lits: list[str]):
+        """`SELECT f(args)`, the whole statement, over an interpreted
+        function: run it and return its one result row, named after
+        the function."""
+        m = _SOLE_CALL_RE.match(masked) if self._functions else None
+        key = _fn_key(m.group(1)) if m else ""
+        rec = self._functions.get(key)
+        if rec is None or rec.kind != "interpreted":
+            return None
+        j = _close_paren(masked, m.end())
+        if j < 0 or masked[j:].strip():
+            return None
+        lit = self._interpreted_literal(rec, [
+            _unmask(a, lits).strip() for a in _split_commas(masked[m.end(): j - 1])])
+        return None if lit is None else self.spark.sql(f"SELECT {lit} AS {key}")
 
-        for name in list(self._void_procs):
-            if name not in text.lower():
-                continue
-            pat = re.compile(rf"(?is)\b{re.escape(name)}\s*\(")
-            pos = 0
-            while True:
-                m = pat.search(text, pos)
-                if m is None:
-                    break
-                j = _close_paren(text, m.end())
-                if j < 0:
-                    break
-                raw = text[m.end(): j - 1]
-                args = ([a.strip() for a in _split_commas(raw)]
-                        if raw.strip() else [])
-                lit = self._eval_interpreted_call(name, args)
-                if lit is None:
-                    pos = j
-                    continue
-                text = text[: m.start()] + lit + text[j:]
-                pos = m.start() + len(lit)
-        return text
-
-    def _eval_interpreted_call(self, name: str,
-                               args: list[str]) -> str | None:
-        """Run one interpreted call over constant args; returns the
-        SQL literal to splice, or None when not substitutable."""
-        proc = self._void_procs[name]
+    def _interpreted_literal(self, rec: UserFunction,
+                             args: list[str]) -> str | None:
+        """An interpreted call: when every argument is a CONSTANT
+        expression the call runs driver-side and its result is a typed
+        literal — one run per occurrence, matching PG's per-call
+        execution. A call with column references (the interpreter
+        cannot run per row) or of another arity gives None and stays,
+        loudly."""
+        if len(args) != len(rec.params):
+            return None
         try:
-            for a in args:
-                self._proc_eval_raw(a)
+            vals = [self._proc_eval_raw(a) for a in args]
         except Exception:  # noqa: BLE001 — column refs / non-constant
             return None
-        if proc[0] == "sqlbody":
-            if len(args) != len(proc[1]):
-                return None
-            df = self._run_sqlbody_proc(name, proc, args)
-            typ = df.schema[0].dataType.simpleString()
-            return f"CAST({_sql_lit(df.collect()[0][0])} AS {typ})"
-        if proc[0] == "plpgsql":
-            if len(args) != len(proc[1]):
-                return None
-            return _sql_lit(self._run_plpgsql_proc(proc, args))
-        return None
+        val = self._run_interpreted(rec, vals)
+        return f"CAST({_sql_lit(val)} AS {rec.ret_spark or 'STRING'})"
 
     # ------------------------------------------------------ execution
-    def _run_sqlbody_proc(self, name: str, proc, arg_exprs: list[str]):
-        """Run an interpreted LANGUAGE sql body: every statement
-        executes with parameters bound as literals (substituted on
-        masked text), the last statement's first row is the result
-        (functions.c postquel_get_single_result). SET overlays apply
-        for the call's duration, then restore (guc.c proconfig)."""
+    def _run_interpreted(self, rec: UserFunction, vals: list):
+        """Run an interpreted function over its argument values, its
+        SET overlay applied for the call's duration, then restored
+        (guc.c proconfig); returns the result value (None for void).
+        A sql body runs every statement with the parameters bound as
+        literals (substituted on masked text); the last statement's
+        first value is the result (functions.c
+        postquel_get_single_result)."""
         from warehouse_pg_spark import plpgsql as P
 
-        _kind, pnames, stmts, lits, ret_spark, config = proc
-        vals = [self._proc_eval_raw(a) for a in arg_exprs]
-        env: dict[str, object] = {
-            pn.lower(): v for pn, v in zip(pnames, vals)}
-        saved = {k: self._gucs.get(k) for k in config}
-        self._gucs.update(config)
+        saved = {k: self._gucs.get(k) for k in rec.config}
+        self._gucs.update(rec.config)
         try:
+            if rec.lang == "plpgsql":
+                return self._run_plpgsql(rec, vals)
+            env: dict[str, object] = {
+                pn.lower(): v for pn, v in zip(rec.params, vals)}
             last_df = None
-            for stmt in stmts:
-                sql = P._unmask(self._proc_sub(stmt, env), lits)
-                last_df = self.sql(sql)
+            for stmt in rec.stmts:
+                last_df = self.sql(
+                    P._unmask(self._proc_sub(stmt, env), rec.lits))
+            if rec.ret_spark is None or last_df is None:
+                return None
+            rows = last_df.limit(1).collect()
+            return rows[0][0] if rows else None
         finally:
             for k, v in saved.items():
                 if v is None:
                     self._gucs.pop(k, None)
                 else:
                     self._gucs[k] = v
-        if ret_spark is None:
-            return self.spark.sql(
-                f"SELECT CAST(NULL AS STRING) AS {name}")
-        rows = last_df.limit(1).collect() if last_df is not None else []
-        val = rows[0][0] if rows else None
-        return self.spark.sql(
-            f"SELECT CAST({_sql_lit(val)} AS {ret_spark}) AS {name}")
 
-    def _run_plpgsql_proc(self, proc, arg_exprs: list[str]):
-        """Execute an interpreted body; returns the RETURN value
-        (None for void / fall-through)."""
-        (_kind, pnames, declared, stmts, lits, cursors, handlers,
-         _ret_spark) = proc
-        args = [self._proc_eval_raw(a) for a in arg_exprs]
+    def _run_plpgsql(self, rec: UserFunction, args: list):
+        """Execute an interpreted plpgsql body; returns the RETURN
+        value (None for void / fall-through)."""
         env: dict[str, object] = {}
         for i, v in enumerate(args, start=1):
             env[f"${i}"] = v
-            if i <= len(pnames):
-                env[pnames[i - 1].lower()] = v
-        for n, init in declared:
-            env[n] = (self._proc_eval_m(init, env, lits)
+            if i <= len(rec.params):
+                env[rec.params[i - 1].lower()] = v
+        for n, init in rec.declared:
+            env[n] = (self._proc_eval_m(init, env, rec.lits)
                       if init else None)
         # exec_stmt_execsql sets FOUND after every SQL statement;
         # it starts false on function entry (pl_exec.c plpgsql_estate)
         env.setdefault("found", False)
         st = {"fuel": _PROC_MAX_STEPS, "row_count": 0,
-              "cursors": {}, "bound": cursors, "lits": lits,
+              "cursors": {}, "bound": rec.cursors, "lits": rec.lits,
               "retval": None}
-        if not handlers:
-            self._proc_run_seq(stmts, env, st)
+        if not rec.handlers:
+            self._proc_run_seq(rec.stmts, env, st)
             return st["retval"]
         try:
-            self._proc_run_seq(stmts, env, st)
+            self._proc_run_seq(rec.stmts, env, st)
         except Exception as e:  # noqa: BLE001 — exec_stmt_block
-            hs = self._proc_match_handler(handlers, e)
+            hs = self._proc_match_handler(rec.handlers, e)
             if hs is None:
                 raise
             # the handler scope binds SQLERRM/SQLSTATE (pl_exec.c)

@@ -1,8 +1,6 @@
-"""Session-statement substitutions split from engine.py (r16 size
-pass): sequence DDL + nextval/currval/setval (commands/sequence.c),
-current_setting()/set_config() folding (guc.c), and variadic call
-packing (functioncmds.c). Mixed into Engine — shares its session
-state (_sequences, _gucs, _variadic_functions, _tag)."""
+"""Session-statement substitutions split from engine.py: sequence
+DDL + nextval/currval/setval (commands/sequence.c) and
+current_setting()/set_config() folding (guc.c). Mixed into Engine."""
 
 from __future__ import annotations
 
@@ -206,50 +204,6 @@ class SequenceMixin:
                             typ):
                     self._sequences.setdefault(
                         f"{key}_{col}_seq", {"next": 1, "start": 1})
-
-    def _substitute_variadic_calls(self, text: str) -> str:
-
-        """Rewrite calls to registered VARIADIC user functions
-        (functioncmds.c / funcapi variadic spread): `f(a, x, y, z)`
-        packs the spread tail into one array argument, and the
-        explicit `f(a, VARIADIC arr)` spelling passes the array
-        through — Spark SQL UDFs are fixed-arity, so the packing must
-        happen before Spark parses the call."""
-        if not self._variadic_functions:
-            return text
-        for fname, vidx in self._variadic_functions.items():
-            pat = re.compile(rf"(?i)\b{re.escape(fname)}\s*\(")
-            pos = 0
-            while True:
-                m = pat.search(text, pos)
-                if m is None:
-                    break
-                i = _close_paren(text, m.end())
-                if i < 0:
-                    break
-                args = [
-                    a.strip()
-                    for a in _split_commas(text[m.end(): i - 1])
-                    if a.strip()
-                ]
-                vm = (
-                    re.match(r"(?is)^VARIADIC\s+(.*)$", args[-1])
-                    if args
-                    else None
-                )
-                if vm:
-                    args[-1] = vm.group(1).strip()
-                elif len(args) > vidx:
-                    args = args[:vidx] + [
-                        "array(" + ", ".join(args[vidx:]) + ")"
-                    ]
-                else:
-                    pos = i
-                    continue
-                newcall = f"{fname}(" + ", ".join(args) + ")"
-                text = text[: m.start()] + newcall + text[i:]
-                pos = m.start() + len(newcall)
-        return text
 
     def _substitute_setting_calls(self, masked: str, lits: list[str]) -> str:
         """current_setting('k' [, missing_ok]) / set_config('k', 'v',

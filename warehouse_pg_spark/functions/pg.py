@@ -1961,6 +1961,13 @@ _DEPS = {n: _calls(d[2]) - {n} for n, d in PG_FUNCTIONS.items() if isinstance(d[
 _BOUND: weakref.WeakKeyDictionary[SparkSession, set[str]] = weakref.WeakKeyDictionary()
 
 
+def unbind(spark: SparkSession, name: str) -> None:
+    """Forget that `name` is settled in `spark`: once a user function of
+    that name is dropped, the next statement that calls it binds the
+    PG_FUNCTIONS entry again."""
+    _BOUND.get(spark, set()).discard(name)
+
+
 def bind_functions(spark: SparkSession, text: str) -> None:
     """Define in `spark` the PG_FUNCTIONS entries `text` calls, after
     the entries their bodies call. A name the session already has a
