@@ -3760,7 +3760,8 @@ def test_table_lifecycle_contract(engine, case):
 # One route script per spelling of the same names: every route that
 # names a table must reach the engine table whose catalog key PG's
 # rules give (unquoted folds to lower case, quoted keeps its case,
-# `public` is the one engine schema). Reads use the same spelling.
+# `public` is the one engine schema). Reads use the bare name and the
+# same spelling.
 _SPELLINGS = {
     "bare": "{}".format,
     "upper": lambda n: n.upper(),
@@ -3808,8 +3809,9 @@ def test_table_name_spellings(engine, tmp_path):
     (CREATE, INSERT VALUES/SELECT, UPDATE, DELETE, MERGE as target and
     source, COPY TO/FROM, TRUNCATE, ALTER ADD COLUMN, CREATE INDEX +
     CLUSTER, VACUUM, ANALYZE, SELECT INTO, CREATE VIEW, DROP lists) and
-    reads back, through the same spelling, the bare spelling's rows
-    under the catalog keys `sp_*`, never touching Spark's warehouse."""
+    ends with the bare spelling's rows under the catalog keys `sp_*`,
+    read through the bare name and through the same spelling, never
+    touching Spark's warehouse."""
     engine.sql("CREATE TABLE IF NOT EXISTS sp_src AS SELECT * FROM VALUES "
                "(1, 100), (5, 500) AS x(k, v)")
     before = _spark_warehouse(engine)
@@ -3818,6 +3820,9 @@ def test_table_name_spellings(engine, tmp_path):
                  "dir": str(tmp_path / spelling)}
         for stmt in _SPELLING_SCRIPT:
             engine.sql(stmt.format(**names)).collect()
+        got = {n: sorted(tuple(r) for r in engine.sql(f"SELECT * FROM {n}").collect())
+               for n in _SPELLING_ROWS}
+        assert got == _SPELLING_ROWS, spelling
         got = {n: sorted(tuple(r) for r in engine.sql(f"SELECT * FROM {spell(n)}").collect())
                for n in _SPELLING_ROWS}
         assert got == _SPELLING_ROWS, spelling
@@ -3843,10 +3848,12 @@ def test_quoted_mixed_case_table(engine):
     assert sorted(tuple(r) for r in engine.sql('SELECT a, b FROM "QFoo"').collect()) == [
         (2, "w"), (3, "z")]
     assert engine.catalog.tables["QFoo"].path == os.path.join(engine.warehouse_dir, "QFoo")
-    for view, col in (("pg_tables", "tablename"), ("pg_class", "relname"),
-                      ("pg_attribute", "relname")):
-        assert {tuple(r) for r in engine.sql(
-            f"SELECT {col} FROM {view} WHERE lower({col}) = 'qfoo'").collect()} == {("QFoo",)}
+    assert [tuple(r) for r in engine.sql(
+        "SELECT tablename FROM pg_tables WHERE lower(tablename) = 'qfoo'").collect()] == [("QFoo",)]
+    # pg_class holds one row for the table, pg_attribute one per column.
+    for view, rows in (("pg_class", [("QFoo",)]), ("pg_attribute", [("QFoo",)] * 2)):
+        assert sorted(tuple(r) for r in engine.sql(
+            f"SELECT relname FROM {view} WHERE lower(relname) = 'qfoo'").collect()) == rows, view
     assert _spark_warehouse(engine) == before
     engine.sql('DROP TABLE "QFoo"')
     assert "QFoo" not in engine.catalog.tables

@@ -380,6 +380,31 @@ def test_drop_unknown_function_raises(engine):
     engine.sql("DROP PROCEDURE IF EXISTS nosuch_fn()")
 
 
+def test_drop_function_list(engine, spark):
+    """DROP FUNCTION takes a comma list, each name with its own
+    parameter list, and drops every name in it."""
+    engine.sql("CREATE FUNCTION dl_a(x int) RETURNS int RETURN x + 1")
+    engine.sql("CREATE FUNCTION dl_b(x int) RETURNS int RETURN x + 2")
+    engine.sql("DROP FUNCTION dl_a(int), dl_b(int)")
+    for name in ("dl_a", "dl_b"):
+        with pytest.raises(Exception, match=name):
+            engine.sql(f"SELECT {name}(1) AS v").collect()
+    with pytest.raises(ValueError, match='"dl_a" does not exist'):
+        engine.sql("DROP FUNCTION dl_a(int), dl_b(int)")
+    engine.sql("DROP FUNCTION IF EXISTS dl_a(int), dl_b(int) CASCADE")
+
+
+def test_trigger_function_create_then_drop(engine):
+    """A trigger function is a record like any other: pg_proc lists it
+    and DROP FUNCTION (without IF EXISTS) removes it."""
+    engine.sql("CREATE FUNCTION trg_fn() RETURNS trigger AS $$ BEGIN "
+               "RETURN NEW; END $$ LANGUAGE plpgsql")
+    procs = lambda: {r.proname for r in engine.sql("SELECT proname FROM pg_proc").collect()}
+    assert "trg_fn" in procs()
+    engine.sql("DROP FUNCTION trg_fn()")
+    assert "trg_fn" not in procs()
+
+
 # ------------------------------------------- one user-function table
 # One function of each kind: (CREATE statements, a call, the FROM tail
 # of a query around it, that query's rows, the DROP). `uf_log` counts
@@ -455,8 +480,7 @@ def test_drop_removes_the_one_record(fresh, kind):
         fresh.sql(stmt)
     query = f"SELECT {call} AS v{tail}"
     assert sorted(_rows(fresh, query), key=repr) == rows
-    if kind != "setof":  # `public` is the schema of every user function
-        assert _rows(fresh, f"SELECT public.{call} AS v{tail}") == rows
+    assert sorted(_rows(fresh, f"SELECT public.{call} AS v{tail}"), key=repr) == rows
     assert name in _pg_proc(fresh)
     fresh.sql(drop)
     if kind == "shadowing":

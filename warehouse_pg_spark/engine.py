@@ -179,13 +179,28 @@ _RETURNS_CLAUSE_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _DROP_FUNC_RE = re.compile(
-    rf"^DROP\s+(FUNCTION|PROCEDURE|AGGREGATE)\s+(IF\s+EXISTS\s+)?({_NAME})\s*"
-    r"(?:\(.*\))?(?:\s+(?:CASCADE|RESTRICT))?$",
+    r"^DROP\s+(FUNCTION|PROCEDURE|AGGREGATE)\s+(IF\s+EXISTS\s+)?(.+?)"
+    r"(?:\s+(?:CASCADE|RESTRICT))?$",
     re.IGNORECASE | re.DOTALL,
 )
+_DROP_FUNC_ITEM_RE = re.compile(rf"^\s*({_NAME})\s*")
 _CALL_RE = re.compile(
     r"^CALL\s+([\w.]+)\s*\((.*)\)$", re.IGNORECASE | re.DOTALL
 )
+
+
+def _drop_func_names(items: str) -> list[str] | None:
+    """The names of DROP FUNCTION's list `a(int), b, ...`: each item is
+    a name and at most one balanced parameter list, or the list is
+    None."""
+    names = []
+    for item in _split_commas(items):
+        m = _DROP_FUNC_ITEM_RE.match(item)
+        rest = item[m.end():].rstrip() if m else "("
+        if rest and not (rest[0] == "(" and _close_paren(rest, 1) == len(rest)):
+            return None
+        names.append(m.group(1))
+    return names
 
 
 def _lower_procedure_ddl(text: str) -> str:
@@ -386,6 +401,7 @@ from warehouse_pg_spark.engine_catalog import (  # noqa: E402
 from warehouse_pg_spark.engine_fn_ddl import (  # noqa: E402
     FunctionDDLMixin,
     UserFunction,
+    _FN_NAME,
     _fn_key,
 )
 from warehouse_pg_spark.engine_maint import MaintenanceMixin
@@ -573,19 +589,20 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             return masked
 
         def setof(name: str) -> UserFunction | None:
-            rec = self._functions.get(name.lower())
+            rec = self._functions.get(_fn_key(name))
             return rec if rec is not None and rec.kind == "setof" else None
 
         # `SELECT (f(args)).*` (parse_target.c ExpandRowReference over
         # a composite-returning call): every result column expands
         m = re.match(
-            r"(?is)^\s*SELECT\s+\(\s*(\w+)\s*\((.*)\)\s*\)\s*\.\s*\*\s*$",
+            rf"(?is)^\s*SELECT\s+\(\s*{_FN_NAME}\s*\((.*)\)\s*\)\s*\.\s*\*\s*$",
             masked,
         )
-        if m and setof(m.group(1)) and m.group(2).count("(") == m.group(2).count(")"):
-            return f"SELECT * FROM {m.group(1)}({m.group(2)})"
+        rec = setof(m.group(1)) if m else None
+        if rec and m.group(2).count("(") == m.group(2).count(")"):
+            return f"SELECT * FROM {rec.spark_name}({m.group(2)})"
         m = re.match(
-            r"(?is)^\s*SELECT\s+(\w+)\s*\((.*)\)\s*(?:AS\s+(\w+))?\s*$",
+            rf"(?is)^\s*SELECT\s+{_FN_NAME}\s*\((.*)\)\s*(?:AS\s+(\w+))?\s*$",
             masked,
         )
         rec = setof(m.group(1)) if m else None
@@ -599,8 +616,8 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             # composite-valued SRF call in a target list yields one
             # record column (PG prints a row value)
             inner = ", ".join(f"{_new_lit(c, lits)}, {c}" for c in cols)
-            out = f"named_struct({inner}) AS {m.group(3) or m.group(1)}"
-        return f"SELECT {out} FROM {m.group(1)}({m.group(2)})"
+            out = f"named_struct({inner}) AS {m.group(3) or rec.spark_name}"
+        return f"SELECT {out} FROM {rec.spark_name}({m.group(2)})"
 
     def table(self, name: str) -> DataFrame:
         return self.spark.table(name)
@@ -643,33 +660,35 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
 
     # --------------------------------------------------- CREATE FUNCTION
     def _drop_function(self, s: str) -> DataFrame:
-        """DROP FUNCTION | PROCEDURE | AGGREGATE (functioncmds.c
-        RemoveFunctionById): the function's one record goes, with the
-        Spark function it registered. A name with no record drops a
-        Spark temporary function of that name; with neither, it
-        raises unless IF EXISTS."""
+        """DROP FUNCTION | PROCEDURE | AGGREGATE [IF EXISTS] a[(types)][,
+        b ...] (functioncmds.c RemoveFunctionById): each function's one
+        record goes, with the Spark function it registered. A name with
+        no record drops a Spark temporary function of that name; with
+        neither, it raises unless IF EXISTS."""
         m = _DROP_FUNC_RE.match(s)
-        if m is None:
+        names = _drop_func_names(m.group(3)) if m else None
+        if not names:
             return self._spark_stmt(s)
-        what, key = m.group(1).lower(), _fn_key(m.group(3))
-        unbind(self.spark, key)  # a PG function of the name answers again
-        rec = self._functions.get(key)
-        if rec is None:
-            try:  # a Spark temporary function with no record
-                if what != "aggregate":
-                    self.spark.sql(f"DROP TEMPORARY FUNCTION {key}")
-                    return self._tag(0)
-            except Exception:  # noqa: BLE001 — no such function, or a builtin
-                pass
-            if m.group(2):
-                return self._tag(0)
-            raise ValueError(f'{what} "{key}" does not exist')
-        if (rec.kind == "aggregate") != (what == "aggregate"):
-            raise ValueError(f'function "{key}" is '
-                             f'{"not " if what == "aggregate" else ""}an aggregate')
-        del self._functions[key]
-        if rec.spark_name:
-            self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {rec.spark_name}")
+        what = m.group(1).lower()
+        for key in map(_fn_key, names):
+            unbind(self.spark, key)  # a PG function of the name answers again
+            rec = self._functions.get(key)
+            if rec is None:
+                try:  # a Spark temporary function with no record
+                    if what != "aggregate":
+                        self.spark.sql(f"DROP TEMPORARY FUNCTION {key}")
+                        continue
+                except Exception:  # noqa: BLE001 — no such function, or a builtin
+                    pass
+                if m.group(2):
+                    continue
+                raise ValueError(f'{what} "{key}" does not exist')
+            if (rec.kind == "aggregate") != (what == "aggregate"):
+                raise ValueError(f'function "{key}" is '
+                                 f'{"not " if what == "aggregate" else ""}an aggregate')
+            del self._functions[key]
+            if rec.spark_name:
+                self.spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {rec.spark_name}")
         return self._tag(0)
 
     def _create_procedure(self, s: str) -> DataFrame:
@@ -728,8 +747,9 @@ class Engine(FunctionDDLMixin, MaintenanceMixin, SequenceMixin,
             rettype, tail = rm.group(1).strip(), rm.group(2)
         if rettype.lower() in ("trigger", "event_trigger"):
             # trigger functions (trigger.c) are never directly
-            # callable — the DDL succeeds and registers nothing (the
-            # engine has no trigger execution surface; README)
+            # callable: the record lists and drops, and registers no
+            # Spark function (the engine runs no triggers; README)
+            self._define(name.lower(), UserFunction("trigger"))
             return self._tag(0)
         if re.search(
             r"(?i)\bany(?:array|element|nonarray|enum|range"

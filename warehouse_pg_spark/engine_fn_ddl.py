@@ -41,6 +41,8 @@ class UserFunction:
                  variables, bound `cursors` and EXCEPTION `handlers`;
                  `config` is the call's SET overlay and `ret_spark` the
                  result type (None for void)
+    trigger      a trigger function: listed and dropped, never called
+                 (the engine runs no triggers)
 
     `params` are the parameter names, `variadic_at` the index of the
     VARIADIC array parameter, whose spread arguments a call packs."""
